@@ -9,8 +9,9 @@ workload's registry keys for ``--seconds``, check every key's output
 against its DuckDB twin, and print the metrics. The last line of stdout is
 one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``.
 
-``--trace 0`` reports the end-to-end metrics; ``--trace 1`` alternates
-untraced and traced passes and reports the per-layer metrics, writing the
+``--trace 0`` reports the end-to-end metrics. They are CPU seconds (see
+``cputime.py`` for why); the wall times are printed beside them. ``--trace 1``
+alternates untraced and traced passes and reports the per-layer metrics, writing the
 spans and per-call counters to ``.perfbench_work/trace/``.
 
 Everything the run writes stays under ``.perfbench_work/`` in the
@@ -45,8 +46,8 @@ DERIVED_PREFIXES = ("stream_", "graft_")
 
 END_TO_END = (
     ("setup_s", "s"),
-    ("pass_s", "s"),
-    ("key_s_geomean", "s"),
+    ("pass_cpu_s", "s"),
+    ("key_cpu_s_geomean", "s"),
 )
 PER_LAYER = (
     ("operators.build_s", "s"),
@@ -101,7 +102,16 @@ PER_LAYER_EXTRA = (
 
 def session_env(work: str, tmp: str) -> dict[str, str]:
     """Size the engine's session to this machine through its own env vars:
-    every core, and a driver heap well below physical memory."""
+    every core, and a driver heap well below physical memory.
+
+    The JVM compiles with C1 only. A run lives for about a minute, and with
+    the default tiered compiler C2 was still compiling after seven passes:
+    compiler threads used 3-8 CPU s of every 6-7 s pass and the engine's
+    own CPU time per pass fell by half over those passes. With C1 only the
+    second pass is already as fast as the seventh. Code cache flushing is
+    off: about a minute into the process it evicted compiled methods and
+    the pass that recompiled them used twice the CPU time of its
+    neighbours."""
     cpus = len(os.sched_getaffinity(0))
     phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
     mem_gib = max(1, min(4, int(phys_gib // 4)))
@@ -115,7 +125,10 @@ def session_env(work: str, tmp: str) -> dict[str, str]:
             "PYSPARK_PYTHON": sys.executable,
             "PYSPARK_DRIVER_PYTHON": sys.executable,
             # keep the JVM's temp files in the work dir too
-            "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+            "JAVA_TOOL_OPTIONS": (
+                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:TieredStopAtLevel=1 "
+                "-XX:-UseCodeCacheFlushing"
+            ),
         }
     )
     return env
@@ -130,6 +143,10 @@ def format_tail(samples: list[float], unit: str) -> str:
         return f"n/a ({len(xs)} samples)"
     return f"{xs[i]:.4f} {unit} (p{100.0 * (i + 1) / len(xs):.0f} of {len(xs)} samples)"
 
+
+
+def median_of(ops: list[dict], key: str, field: str) -> float:
+    return statistics.median(o[field] for o in ops if o["key"] == key)
 
 
 def emit(attempted: int, failed: int, metrics: dict) -> None:
@@ -214,6 +231,8 @@ def main() -> int:
         os.remove(out)
     input_bytes = write_corpus(data_dir, args.seed, wl.sf)
     env = session_env(work, tmp)
+    # this process's CPU up to here (imports, corpus) is set-up too
+    corpus_cpu_s = time.process_time()
 
     error = run_worker(args, data_dir, out, env, work, t0)
     if error:
@@ -251,7 +270,7 @@ def main() -> int:
     for f in failures:
         last_line = f["error"].strip().splitlines()[-1]
         print(f"FAILED {f['key']} [{f['phase']}]: {last_line}", file=sys.stderr)
-    if not ops:
+    if not {o["key"] for o in ops} >= set(wl.keys):
         emit(attempted, failed, {})
         return 0
 
@@ -261,18 +280,20 @@ def main() -> int:
         f"SPARK_GRAFT_CPUS={env['SPARK_GRAFT_CPUS']} "
         f"SPARK_GRAFT_DRIVER_MEM={env['SPARK_GRAFT_DRIVER_MEM']}"
     )
+    # per key, the median over the run's calls; a pass is one call of each
+    key_cpu = [median_of(ops, k, "cpu_s") for k in wl.keys]
     e2e = {
-        "setup_s": res["setup_s"],
-        "pass_s": statistics.median(untraced),
-        "key_s_geomean": statistics.geometric_mean(
-            statistics.median(o["s"] for o in ops if o["key"] == k)
-            for k in {o["key"] for o in ops}
-        ),
+        "setup_s": corpus_cpu_s + res["setup_cpu_s"],
+        "pass_cpu_s": sum(key_cpu),
+        "key_cpu_s_geomean": statistics.geometric_mean(key_cpu),
     }
     for name, unit in END_TO_END:
-        print(f"  {name} = {e2e[name]:.4f} {unit}")
+        print(f"  {name} = {e2e[name]:.4f} {unit} (CPU)")
     print(f"  driver_heap_mib = {res['driver_heap_mib']:.1f} MiB (after System.gc())")
+    print(f"  setup_wall_s = {res['setup_s']:.4f} s")
     print("    setup: " + ", ".join(f"{k} {v:.2f}" for k, v in res["setup"].items()))
+    print(f"  pass_s = {sum(median_of(ops, k, 's') for k in wl.keys):.4f} s (wall)")
+    print(f"  pass_s_each = {' '.join(f'{s:.2f}' for s in untraced)} s (wall)")
     print(f"  op_s_p50 = {statistics.median(o['s'] for o in ops):.4f} s ({len(ops)} ops)")
     print(f"  op_s_tail = {format_tail([o['s'] for o in ops], 's')}")
     if res["batch_ms"]:
@@ -296,9 +317,10 @@ def main() -> int:
         print(f"traced passes: {len(traced)}; per-pass medians:")
         for name, unit in PER_LAYER + PER_LAYER_EXTRA:
             print(f"  {name} = {layers[name]:.4f} {unit}")
+        untraced_pass = statistics.median(untraced)
         print(
-            f"  trace.overhead_s = {traced_pass - e2e['pass_s']:+.4f} s "
-            f"(traced pass_s {traced_pass:.4f} - untraced {e2e['pass_s']:.4f})"
+            f"  trace.overhead_s = {traced_pass - untraced_pass:+.4f} s "
+            f"(traced pass_s {traced_pass:.4f} - untraced {untraced_pass:.4f})"
         )
         trace_dir = os.path.join(work, "trace")
         os.makedirs(trace_dir, exist_ok=True)

@@ -33,9 +33,9 @@ from pyspark.sql.streaming import StreamingQueryListener
 # attribute wraps every call.
 LAYER_FUNCS = {
     "streaming.drain": (
-        ("flink_streaming_gnn_spark.streaming.replay", "run_complete_spooled"),
+        ("flink_streaming_gnn_spark.streaming.replay", "run_append_spooled"),
     ),
-    "graph.kernel": (("flink_streaming_gnn_spark.graph.ppr", "ppr_ranks"),),
+    "graph.kernel": (("flink_streaming_gnn_spark.graph.components", "hash_min_cc"),),
 }
 
 _PYTHON_METRICS = {

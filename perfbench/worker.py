@@ -2,11 +2,13 @@
 
 Started by ``run.py``; never run by hand. Builds the session from the
 engine's own factory (sized by ``SPARK_GRAFT_CPUS`` and
-``SPARK_GRAFT_DRIVER_MEM``, which ``run.py`` sets), makes one untimed
-warm-up pass that also collects each key's output hash for the oracle
-check, then runs timed passes as a single closed-loop client until the
-time budget is spent. With ``--trace 1`` untraced and traced passes
-alternate, and the traced ones record spans and per-call counters.
+``SPARK_GRAFT_DRIVER_MEM``, which ``run.py`` sets), makes untimed warm-up
+passes, the first of which also collects each key's output hash for the
+oracle check, then runs timed passes as a single closed-loop client until the
+time budget is spent. Every call records its wall time and the CPU seconds
+of this process session (``cputime.SessionCpu``). With ``--trace 1``
+untraced and traced passes alternate, and the traced ones record spans and
+per-call counters.
 
 Writes one JSON document to ``--out``.
 """
@@ -29,6 +31,7 @@ sys.path.insert(0, ROOT)
 from flink_streaming_gnn_spark import registry  # noqa: E402
 from flink_streaming_gnn_spark.session import get_spark  # noqa: E402
 
+from cputime import SessionCpu  # noqa: E402
 from oracle import canon  # noqa: E402
 from tracing import Spans, StreamRecorder, Tracer  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
@@ -77,6 +80,7 @@ def main() -> int:
     args = ap.parse_args()
 
     wl = WORKLOADS[args.workload]
+    cpu = SessionCpu()
     setup = {"start_s": time.time() - args.t0}
     queries = registry.all_queries()
     oracle_sql = registry.all_oracle_sql()
@@ -91,16 +95,24 @@ def main() -> int:
     failures: list[dict] = []
     hashes: dict[str, list] = {}
 
-    # untimed warm-up pass, in declared order: first-call costs (class
-    # loading, JIT, the per-process scratch builds, Python worker start)
-    # and the outputs the oracle check compares
+    # untimed warm-up passes, in declared order: first-call costs (class
+    # loading, JIT, the per-process scratch builds, Python worker start);
+    # the first one also collects the outputs the oracle check compares
     for key in wl.keys:
         t = time.time()
         try:
             hashes[key] = canon(queries[key](spark, args.data).toPandas())
             setup[f"warmup.{key}_s"] = time.time() - t
+            cpu.sample()  # see the processes this key started while they live
         except Exception:  # noqa: BLE001 — a failed key is counted, not fatal
             failures.append({"key": key, "phase": "warmup", "error": traceback.format_exc()})
+    for _ in range(wl.warmup_passes - 1):
+        for key in [k for k in wl.keys if k in hashes]:
+            try:
+                _materialize(queries[key](spark, args.data))
+                cpu.sample()
+            except Exception:  # noqa: BLE001
+                failures.append({"key": key, "phase": "warmup", "error": traceback.format_exc()})
 
     spans = Spans()
     tracer = Tracer(spark, spans) if args.trace else None
@@ -110,11 +122,11 @@ def main() -> int:
     passes: list[dict] = []
     t_first = time.time()
     setup_s = t_first - args.t0
+    setup_cpu_s = cpu.sample()
     t_start = time.perf_counter()
     with spans.span("workload", workload=args.workload) as workload_rec:
         while True:
             index = len(passes)
-            pass_start = time.perf_counter() - t_start
             traced = bool(tracer) and index % 2 == 1
             order = rng.sample(wl.keys, len(wl.keys))
             layer_sums: dict[str, float] = {}
@@ -127,6 +139,7 @@ def main() -> int:
                     if traced:
                         sc.setJobGroup(group, key)
                     mark = recorder.mark()
+                    c0 = cpu.sample()
                     w0 = time.time()
                     t0 = time.perf_counter()
                     try:
@@ -146,13 +159,14 @@ def main() -> int:
                         continue
                     dt = time.perf_counter() - t0
                     w1 = time.time()
+                    dc = cpu.sample() - c0
                     pass_ops.append(dt)
                     try:
                         runs = recorder.wait_closed(mark)
                     except TimeoutError as exc:
                         failures.append({"key": key, "phase": f"pass{index}", "error": str(exc)})
                         runs = []
-                    op = {"key": key, "pass": index, "traced": traced, "s": dt}
+                    op = {"key": key, "pass": index, "traced": traced, "s": dt, "cpu_s": dc}
                     if traced:
                         tracer.drain_listeners()
                         self_s = spans.self_times(op_rec["id"])
@@ -173,12 +187,10 @@ def main() -> int:
             passes.append(
                 {"index": index, "traced": traced, "s": sum(pass_ops), "layers": layer_sums}
             )
-            # start another pass only if it should end within the budget, so a
-            # run lasts about --seconds whatever the pass length; a traced run
-            # needs one untraced and one traced pass
-            elapsed = time.perf_counter() - t_start
-            last = elapsed - pass_start
-            if elapsed + last > args.seconds and len(passes) >= (2 if tracer else 1):
+            # whole passes until --seconds are spent, and at least two, so
+            # every key has two samples (and a traced run one untraced and
+            # one traced pass)
+            if time.perf_counter() - t_start >= args.seconds and len(passes) >= 2:
                 break
         workload_rec["passes"] = len(passes)
 
@@ -192,6 +204,7 @@ def main() -> int:
 
     result = {
         "setup_s": setup_s,
+        "setup_cpu_s": setup_cpu_s,
         "setup": setup,
         "cores": cores,
         "passes": passes,
