@@ -11,97 +11,28 @@ each lineitem row is one edge event with a weight and an event time.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.sources.scratch import ephemeral_dir
-from flink_streaming_gnn_spark.sources.tables import load_table, table_path
+from flink_streaming_gnn_spark.sources.tables import load_table
 
 # vertex-id space used for tensor fixtures: embeddings keyed by pmod(id, 500)
 EMB_MOD = 500
-
-# Bucket count must MATCH the target scan parallelism: a bucketed read
-# caps the scan+join stage at one task per bucket, so 8 buckets on a
-# 32-core box THROTTLES the stage 4× — the first ×10 A/B (round 9,
-# tools/ab_r9_bucketed_edges.log rounds 1–2) measured the 8-bucket
-# layout LOSING to the plain join for exactly this reason. Tunable so a
-# cluster deployment sizes it to executor-core count.
-EDGE_BUCKETS = int(os.environ.get("SPARK_GRAFT_EDGE_BUCKETS", "32"))
-
-
-# per-(process, fixture generation) bucketed layout registry — uuid'd
-# names, warehouse removed at interpreter exit (same discipline and
-# rationale as operators/bucketing.py: nothing on disk keyed on fixture
-# identity, nothing outlives the process — built INSIDE the run even
-# when the opt-in is on)
-_BEDGES_DBS: dict[str, tuple[str, str]] = {}
-
-
-def _bucketed_edge_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """One-time-per-process bucketed layout of the edge-derivation join
-    inputs (lineitem WITH l_shipdate, orders), bucketed + sorted on
-    orderkey — the ingest-time layout a 100 TB deployment would persist
-    so the recurring lineitem ⋈ orders edge join runs with NO exchange
-    on either side (operators/bucketing.py proves the plan shape; this
-    wires it under every graph key). Same catalog discipline as
-    sink_bucketed_join."""
-    sig = ":".join(
-        f"{t}:{os.stat(table_path(sf_dir, t)).st_mtime_ns}"
-        for t in ("lineitem", "orders")
-    )
-    memo_key = f"v2:b{EDGE_BUCKETS}:{sf_dir}:{sig}"
-    entry = _BEDGES_DBS.get(memo_key)
-    if entry is None:
-        tag = uuid.uuid4().hex[:12]
-        entry = (f"graft_bedges_{tag}", ephemeral_dir(f"bedges_wh_{tag}"))
-        _BEDGES_DBS[memo_key] = entry
-    db, wh = entry
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{wh}'")
-    catalog = spark.catalog
-    if not catalog.tableExists(f"{db}.lineitem_e"):
-        shutil.rmtree(os.path.join(wh, "lineitem_e"), ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate")
-            .write.mode("overwrite")
-            .bucketBy(EDGE_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(f"{db}.lineitem_e")
-        )
-    if not catalog.tableExists(f"{db}.orders_e"):
-        shutil.rmtree(os.path.join(wh, "orders_e"), ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey")
-            .write.mode("overwrite")
-            .bucketBy(EDGE_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(f"{db}.orders_e")
-        )
-    return spark.table(f"{db}.lineitem_e"), spark.table(f"{db}.orders_e")
 
 
 def derive_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bipartite customer→supplier multigraph (one edge per lineitem).
 
-    Default path: one shuffle (lineitem ⋈ orders on orderkey). Opt-in
-    ``SPARK_GRAFT_BUCKETED_EDGES=1`` (VERDICT r8 "Next round" #8) reads
-    both sides from a bucketed-on-orderkey layout instead, so the join
-    is co-located and the exchange disappears from EVERY graph key's
-    plan — the ingest-time layout a cluster deployment would persist.
-    Results are identical either way (same join, same rows; pinned in
-    tests/test_bucketing.py)."""
-    if os.environ.get("SPARK_GRAFT_BUCKETED_EDGES") == "1":
-        li, o = _bucketed_edge_tables(spark, sf_dir)
-    else:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate"
-        )
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    One shuffle: lineitem ⋈ orders on orderkey. A bucketed-on-orderkey
+    layout makes the join exchange-free (operators/bucketing.py shows the
+    plan), but building that layout inside a run costs 8–15 s at ×10
+    while each later graph key saves only 0–7 s
+    (tools/ab_r10_bucketed_edges_inrun.log). It is an ingest-time choice
+    for a deployment that persists the layout, not a per-run one."""
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate"
+    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("src"),
         F.col("l_suppkey").alias("dst"),

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.pagerank import _is_verify_scale
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ROUNDS = 8
@@ -95,16 +96,6 @@ def graph_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = top.collect()  # ≤100 rows — summary, not data path
     x.unpersist()
     return spark.createDataFrame(rows, schema="v long, score double")
-
-
-def _is_verify_scale(sf_dir: str) -> bool:
-    import re
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    try:
-        return bool(m) and float(m.group(1).rstrip(".")) <= 0.01
-    except ValueError:
-        return False
 
 
 def _eigenvector_oracle_sql(rounds: int = ROUNDS // 2) -> str:

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import functools
 import gc
-import os
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame
@@ -60,11 +59,7 @@ def release_superseded_checkpoints(fn: _F) -> _F:
         try:
             return fn(*args, **kwargs)
         finally:
-            # probe switch: lets tools/probe_r10.py measure the
-            # retention this release prevents without checking out
-            # pre-fix code (before/after arms from one tree)
-            if not os.environ.get("SPARK_GRAFT_DISABLE_KERNEL_GC"):
-                gc.collect()
+            gc.collect()
 
     return wrapper  # type: ignore[return-value]
 

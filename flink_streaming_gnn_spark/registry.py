@@ -21,9 +21,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # records exactly the first 50 registration-ordered keys per round (VERDICT
 # round 2 confirmed the mechanism). Module order below is load order only;
 # the attestation window is controlled precisely by _PRIORITY_KEYS — the
-# final queries/oracle dicts are rebuilt with those keys first, so the
-# round-3 window is spent entirely on never-attested keys. Semantics are
-# order-independent (keys are unique).
+# final queries/oracle dicts are rebuilt with those keys first. Semantics
+# are order-independent (keys are unique).
 _MODULES = (
     # --- round-1 core, sim-passed but never driver-attested (the gap) ---
     "flink_streaming_gnn_spark.graph.ops",
@@ -156,422 +155,19 @@ _MODULES = (
 )
 
 
-# Round-4 attestation window (VERDICT r3 "Next round" #1): exactly the 50
-# never-attested keys the judge named, in the priority the judge ranked —
-# the round-3 flagships (bloom prefilter, the new centrality/decomposition
-# algorithms, MSF, BPE, k-means, stream_dedup_e2e, corrupt-record ingest,
-# VARIANT/collation/try_*/metadata, decimal/moments, the CUSUM/MAD/Holt/
-# periodogram anomaly tier, PMI/Gopher, asof-nearest/null-safe joins,
-# IGNORE NULLS, entropy, whitening, count-min) plus the round-2
-# timeseries/OLAP/analytics tail. All 50 were green in the judge's own
-# oracle run (tools/judge_check_r3_results.json). After this window lands,
-# 34 keys remain — the full r5 window is pinned in _PRIORITY_KEYS_R5 below
-# so round 5 is mechanical.
-_PRIORITY_KEYS_R4 = (
-    # round-3 flagships: graph algorithms + learned components
-    "join_bloom_prefilter",
-    "graph_eigenvector_centrality",
-    "graph_ktruss",
-    "graph_coreness_hindex",
-    "graph_betweenness_landmark",
-    "graph_mst_boruvka",
-    "tokenizer_bpe_train",
-    "ml_kmeans_lloyd",
-    # round-3 streaming / sources
-    "stream_dedup_e2e",
-    "source_jsonl_corrupt_records",
-    # round-3 SQL-surface functions + metadata
-    "fn_variant_json",
-    "fn_try_arithmetic",
-    "fn_collation_group",
-    "scan_file_metadata",
-    # round-3 aggregates
-    "agg_decimal_exact",
-    "agg_higher_moments",
-    "agg_count_min_sketch",
-    # round-3 anomaly / spectral timeseries
-    "ts_cusum_changepoint",
-    "ts_anomaly_mad",
-    "ts_holt_filter",
-    "ts_periodogram",
-    # round-3 text quality
-    "text_bigram_pmi",
-    "text_quality_gopher",
-    # round-3 joins / windows / profiling / embeddings
-    "join_asof_nearest",
-    "join_null_safe",
-    "win_ignore_nulls",
-    "profile_column_entropy",
-    "emb_whitening",
-    # round-2 timeseries tail
-    "ts_gapfill_resample",
-    "ts_linear_interpolate",
-    "ts_downsample_ohlc",
-    "ts_autocorrelation",
-    "ts_interarrival_stats",
-    "ts_ewma",
-    "ts_anomaly_zscore",
-    "ts_seasonal_profile",
-    "ts_active_streaks",
-    # round-2 OLAP aggregates
-    "agg_mode",
-    "agg_histogram",
-    "agg_cube",
-    # round-2 analytics
-    "cohort_retention",
-    "funnel_conversion",
-    "abc_pareto_class",
-    "market_basket_lift",
-    "unpivot_melt",
-    "scd2_intervals",
-    # round-2 profiling / data quality
-    "profile_table_stats",
-    "dq_constraint_check",
-    # round-2 embedding prep
-    "emb_l2_normalize",
-    "emb_quantize_int8",
-)
-
-# Round-5 window (VERDICT r4 "Next round" #1): exactly the 72 keys never
-# attested across CORRECTNESS_r01..r04 (34 carried from the r4 plan + 38
-# round-4 additions = 72; verified against the artifacts by
-# tools/check_keys.py). The driver records the FIRST 50, so the tail past
-# position 50 (22 keys) rolls into the round-6 window, joined by the 13
-# round-5 additions (attribution, Theil–Sen, temporal wedge, butterflies,
-# containment, unigram ×2, KS drift, CEP absence, TTL/SCD2/CC streams,
-# then the 5c batch: skyline, Benford, JSD, Bollinger/RSI, DSIR, stump,
-# binaryFile, position attribution, funnel TTC, MMR, aHash, multiple
-# regression, path mining, Matryoshka, image-hamming groups, PACF,
-# motif census, A-ES, Theil, vocab richness, Holt–Winters,
-# trimmed/winsorized, vocab overlap, NB eval, FK audit — 39 total).
-# Post-r5 recount at the final registry size of 323 keys: 250 attested
-# r1–r5, leaving 73 never-attested → round 6 takes 50, the final 23 roll
-# to round 7 (rounds run to 20; the window math is regenerated per round
-# by tools/attestation_ledger.py — see _PRIORITY_KEYS_R6 below).
-# The three keys with no DuckDB oracle (multimodal_decode_stub,
-# agg_hll_sketch_rollup, agg_approx_quantile) are pinned at the very end
-# so no round-5 window slot is spent on a rows-only row.
-_PRIORITY_KEYS_R5 = (
-    "multimodal_audio_chunk",
-    "multimodal_binary_meta",
-    "multimodal_frame_sample",
-    "sample_deterministic",
-    "text_chunk",
-    "apply_in_pandas",
-    "udtf_explode_like",
-    "udtf_python_chunks",
-    "rollup_hypertable_events",
-    "cdc_latest_snapshot",
-    "fuzzy_match_levenshtein",
-    "agg_corr_covar",
-    "win_distribution",
-    "text_pii_redact",
-    "text_repetition_stats",
-    "text_span_corruption",
-    "agg_linear_regression",
-    "multimodal_asset_manifest",
-    "corpus_stats_report",
-    "agg_bitmap_distinct",
-    "sink_bucketed_join",
-    "join_cross_bounded",
-    "agg_string_agg",
-    "agg_boolean",
-    "win_frame_range_interval",
-    "sink_compact_small_files",
-    "scan_schema_evolution",
-    "scan_partition_pruning",
-    "join_salted_skew",
-    "fn_regexp_family",
-    "fn_bitwise",
-    # round-4 additions
-    "graph_reciprocity",
-    "graph_bipartite_projection",
-    "ts_rolling_median",
-    "agg_weighted_median",
-    "ts_sax_symbolize",
-    "event_transition_matrix",
-    "user_rfm_segments",
-    "sink_zorder_layout",
-    "join_band_epsilon",
-    "sample_priority_hash",
-    "text_winnowing_fingerprint",
-    "fn_url_parse",
-    # round-4b additions
-    "cep_window_funnel",
-    "cep_pattern_vshape",
-    "gnn_appnp_propagate",
-    "graph_gatv2_layer",
-    "emb_random_projection",
-    "ts_hampel_filter",
-    "agg_heavy_hitters",
-    "stream_cep_funnel_e2e",
-    "ml_nb_train",
-    "ml_nb_score",
-    "ts_decompose_ma",
-    "stream_tumbling_append_e2e",
-    "graph_condensation_dag",
-    "stream_outer_join_e2e",
-    "tokenizer_bpe_encode",
-    "ml_knn_classify",
-    "ts_spectral_entropy",
-    "graph_rich_club",
-    "simsearch_binary_hamming",
-    "fn_url_canonicalize",
-    "fn_hash_digests",
-    "dedup_priority_survivor",
-    "olap_period_over_period",
-    "agg_gini_coefficient",
-    "text_zipf_fit",
-    "ts_cross_correlation",
-    # no-oracle (rows-only) keys last — round-6 remainder territory
-    "multimodal_decode_stub",
-    "agg_hll_sketch_rollup",
-    "agg_approx_quantile",
-)
-
-# Round-6 window (VERDICT r5 "Next round" #1): exactly the 73 keys never
-# attested across CORRECTNESS_r01..r05 — the 18-key tail of the r5 window
-# past position 50, plus the 51 round-5 additions, minus the r5-window
-# double-counts; recomputed from the artifacts by
-# tools/attestation_ledger.py and tools/check_keys.py. The driver records
-# the FIRST 50, so after round 6 the official ledger reads 300/323 and the
-# final 23 (18 oracle-checkable + the 5 rows-only keys pinned at the very
-# end: multimodal_decode_stub, agg_hll_sketch_rollup, agg_approx_quantile,
-# tokenizer_unigram_train, tokenizer_unigram_encode) roll to round 7.
-# The two round-5 `weak` keys (dedup_containment — group-level output
-# contract rewrite this round — and stream_scd2_e2e — closed-rows-only
-# emission diet) sit inside the first 50 deliberately, so the REWRITTEN
-# versions are what gets officially attested.
-_PRIORITY_KEYS_R6 = (
-    "stream_cep_funnel_e2e",
-    "ml_nb_train",
-    "ml_nb_score",
-    "ts_decompose_ma",
-    "stream_tumbling_append_e2e",
-    "graph_condensation_dag",
-    "stream_outer_join_e2e",
-    "tokenizer_bpe_encode",
-    "ml_knn_classify",
-    "ts_spectral_entropy",
-    "graph_rich_club",
-    "simsearch_binary_hamming",
-    "fn_url_canonicalize",
-    "fn_hash_digests",
-    "dedup_priority_survivor",
-    "olap_period_over_period",
-    "agg_gini_coefficient",
-    "text_zipf_fit",
-    "ts_cross_correlation",
-    "text_vocab_richness",
-    "text_source_vocab_overlap",
-    "text_ngram_novelty",
-    "multimodal_image_ahash",
-    "stream_dedup_ttl_e2e",
-    "dq_referential_integrity",
-    "set_symmetric_difference",
-    "ts_theil_sen_trend",
-    "agg_trimmed_winsorized_mean",
-    "olap_attribution_last_touch",
-    "olap_attribution_position",
-    "sample_weighted_ares",
-    "cep_absence_timeout",
-    "ml_eval_confusion",
-    "ml_calibration_bins",
-    "agg_theil_index",
-    "agg_hhi_concentration",
-    "agg_lorenz_deciles",
-    "graph_butterfly_count",
-    "graph_butterfly_per_vertex",
-    "dedup_containment",
-    "stream_scd2_e2e",
-    "dq_ks_drift",
-    "graph_temporal_wedge",
-    "stream_cc_e2e",
-    "olap_skyline_pareto",
-    "dq_benford_firstdigit",
-    "dq_js_divergence",
-    "ts_bollinger_bands",
-    "ts_rsi",
-    "ts_holt_winters",
-    # ---- position 50 boundary: keys below roll to the round-7 window ----
-    "mix_dsir_importance",
-    "ml_decision_stump",
-    "source_binaryfile_ingest",
-    "funnel_time_to_convert",
-    "simsearch_mmr_diversify",
-    "agg_multiple_regression",
-    "event_path_mining",
-    "emb_matryoshka_recall",
-    "dedup_image_hamming_pairs",
-    "ts_pacf_durbin_levinson",
-    "graph_motif_ffl_cycle",
-    "graph_dyad_census",
-    "dq_mann_whitney",
-    "dq_chi2_independence",
-    "ts_runs_test",
-    "agg_bootstrap_ci_poisson",
-    "olap_top_movers",
-    "olap_new_vs_returning",
-    # no-oracle (rows-only) keys last — round-7 remainder territory
-    "multimodal_decode_stub",
-    "agg_hll_sketch_rollup",
-    "agg_approx_quantile",
-    "tokenizer_unigram_train",
-    "tokenizer_unigram_encode",
-)
-
-# Round-7 window (VERDICT r6 "Next round" #1): the final 23 never-attested
-# keys (18 oracle-checkable first, the 5 rows-only pinned at the very end)
-# plus re-attestation slots for the 8 VERDICT-named re-keyed/re-tiered
-# round-6 rewrites (`dedup_embedding_cosine`, `graph_triangle_count`,
-# `graph_clustering_coefficient`, `graph_pagerank`,
-# `graph_eigenvector_centrality`, `dedup_containment` oracle-checkable;
-# `dedup_minhash` and `simsearch_lsh` in the rows-only tail; containment
-# was already re-attested in the r6 window on its new contract, refreshed
-# anyway) and four more refreshed keys: `stream_scd2_e2e` (touched again
-# in round 7 — state-store opens readout), `dedup_cluster_canonical` +
-# `dedup_ngram_jaccard` (r2 attestations predating the round-6 lineage
-# fix in their shared helpers), and `text_ngram_novelty` (re-measured
-# this round). The spare slots
-# refresh sibling keys living in the round-6-rewritten modules (dedup.py,
-# simsearch.py — their r2 attestations predate the shared-helper rewrites)
-# and the round-1 bench headliners. After this window lands, every key in
-# the registry has appeared in an official driver artifact on (or after)
-# its current implementation: cumulative 323/323.
-_PRIORITY_KEYS_R7 = (
-    # --- never-attested, oracle-checkable (18) ---
-    "mix_dsir_importance",
-    "ml_decision_stump",
-    "source_binaryfile_ingest",
-    "funnel_time_to_convert",
-    "simsearch_mmr_diversify",
-    "agg_multiple_regression",
-    "event_path_mining",
-    "emb_matryoshka_recall",
-    "dedup_image_hamming_pairs",
-    "ts_pacf_durbin_levinson",
-    "graph_motif_ffl_cycle",
-    "graph_dyad_census",
-    "dq_mann_whitney",
-    "dq_chi2_independence",
-    "ts_runs_test",
-    "agg_bootstrap_ci_poisson",
-    "olap_top_movers",
-    "olap_new_vs_returning",
-    # --- re-keyed/re-tiered in round 6 (or touched in round 7), oracle ---
-    "dedup_embedding_cosine",
-    "graph_triangle_count",
-    "graph_clustering_coefficient",
-    "graph_pagerank",
-    "graph_eigenvector_centrality",
-    "dedup_containment",
-    "stream_scd2_e2e",
-    "dedup_cluster_canonical",
-    "dedup_ngram_jaccard",
-    "text_ngram_novelty",
-    # --- sibling refreshes in round-6-rewritten modules (r2 attestations) ---
-    "dedup_exact",
-    "dedup_exact_hash",
-    "dedup_simhash",
-    "dedup_repeated_spans",
-    "simsearch_cosine_knn",
-    "simsearch_ivf",
-    "simsearch_range_cosine",
-    "vector_knn_cosine",
-    "emb_centroid_per_label",
-    # --- oldest (round-1) bench-headliner refreshes ---
-    "agg_pricing_summary",
-    "join_3way_revenue",
-    "graph_2hop_neighbor_agg",
-    "agg_incremental_neighbor",
-    "topk_per_group",
-    # --- rows-only keys last (recorded as no_oracle rows checks) ---
-    "dedup_minhash",
-    "simsearch_lsh",
-    "simsearch_pq",
-    "multimodal_decode_stub",
-    "agg_hll_sketch_rollup",
-    "agg_approx_quantile",
-    "tokenizer_unigram_train",
-    "tokenizer_unigram_encode",
-)
-
-# Round-8 window: the round's NEW/RE-KEYED contracts first — the planted
-# embedding-dedup companion (non-vacuous oracle, VERDICT r7 "What's
-# wrong" #1), the EXACTIFIED unigram tokenizer pair (rows-only → full
-# hash-match via per-round 6-dp EM rounding + product-space Viterbi,
-# VERDICT r7 "Next round" #4), the new deterministic rate source
-# (VERDICT #7), plus re-attestation slots for the round-8-touched
-# machinery (`dedup_embedding_cosine` — shares the refactored pipeline
-# core; `stream_scd2_e2e` — spooled-drain call-site refactor;
-# `source_kafka_roundtrip` — module sibling of the rate source). The
-# remaining slots refresh the OLDEST attestations in the ledger: 43
-# round-1 keys whose green rows predate every later hardening round —
-# freshness rotation now that zero keys are unattested.
-_PRIORITY_KEYS_R8 = (
-    # --- new / re-keyed this round ---
-    "dedup_embedding_cosine_planted",
-    "tokenizer_unigram_train",
-    "tokenizer_unigram_encode",
-    "source_rate_ingest",
-    # --- round-8-touched machinery, re-attested ---
-    "dedup_embedding_cosine",
-    "stream_scd2_e2e",
-    "source_kafka_roundtrip",
-    "graph_closeness_centrality",  # MS-BFS rewrite (×100 probe catch)
-    "graph_triangle_count",  # component-blocked tier (×100 probe catch)
-    "graph_clustering_coefficient",  # shares the component-blocked tier
-    "stream_session_e2e",  # complete-mode spool drain (×100 probe catch)
-    # --- oldest (round-1) attestation refreshes ---
-    "agg_hash_group",
-    "agg_distinct",
-    "agg_filtered",
-    "agg_grouping_sets",
-    "agg_percentile",
-    "agg_pivot",
-    "agg_salted_skew",
-    "case_when",
-    "filter_pred",
-    "fn_array",
-    "fn_array_dot",
-    "fn_date",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_string",
-    "join_anti",
-    "join_asof",
-    "join_broadcast",
-    "join_full",
-    "join_inner_hash",
-    "join_left",
-    "join_multiway_star",
-    "join_range_interval",
-    "join_right",
-    "join_semi",
-    "join_theta_nl",
-    "limit_topk",
-    "project_compute",
-    "scan_parquet",
-    "scan_projection_pushdown",
-    "semi_anti",
-    "set_except",
-    "set_except_all",
-    "set_intersect",
-    "set_union_all",
-    "set_union_distinct",
-    "sort_multi",
-    "udaf_grouped_agg",
-)
-
-# Round-9 window (VERDICT r8 #1 + ADVICE r8 #1): the four e2e keys
-# re-drained through the parquet spools this round, the two rows-only
-# keys upgraded to exact oracles, then EVERY stateful/streaming key whose
-# green ledger row predates the round-8 RocksDB state-store default (the
-# r8 window only re-attested scd2/session — ADVICE flagged that the rest
-# still carry HDFSBacked-era rows), then the stalest r1/r2 attestations
-# as freshness rotation.
-_PRIORITY_KEYS_R9 = (
+# Attestation window: the round-9 set, frozen since. Round 9 chose the four
+# e2e keys re-drained through the parquet spools, the two rows-only keys
+# upgraded to exact oracles, then EVERY stateful/streaming key whose green
+# ledger row predated the round-8 RocksDB state-store default, then the
+# stalest r1/r2 attestations as freshness rotation. It is deliberately NOT
+# rotated: every key has been officially attested at least once
+# (attestation ledger: never-attested = 0), rotation made the round-9 PERF
+# artifact's prev/now comparison uncomputable (n_common=0, the "49 dropped
+# / 50 newly passing" sampling artifact VERDICT r9 had to explain away),
+# and this window already contains the keys round 10 touched most (the
+# re-drained topk/cdc sinks, the per-batch-idempotent spool keys,
+# graph_2hop_agg). A stable window = a comparable artifact.
+_PRIORITY_KEYS = (
     # --- changed this round: memory-sink → parquet-spool drains ---
     "stream_gnn_sage_e2e",
     "stream_decayed_memory_e2e",
@@ -628,15 +224,6 @@ _PRIORITY_KEYS_R9 = (
     "multimodal_wav_decode",
 )
 
-# Active attestation order for rounds 9 AND 10 — deliberately NOT
-# rotated for round 10: every key has been officially attested at least
-# once (attestation ledger: never-attested = 0), rotation made the
-# round-9 PERF artifact's prev/now comparison uncomputable (n_common=0,
-# the "49 dropped / 50 newly passing" sampling artifact VERDICT r9 had
-# to explain away), and this window already contains the keys round 10
-# touched most (the re-drained topk/cdc sinks, the per-batch-idempotent
-# spool keys, graph_2hop_agg). A stable window = a comparable artifact.
-_PRIORITY_KEYS = _PRIORITY_KEYS_R9
 
 
 def _reorder(d: dict, priority: tuple[str, ...]) -> dict:
@@ -651,10 +238,7 @@ def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracle: dict[str, str] = {}
     for mod_name in _MODULES:
-        try:
-            mod = import_module(mod_name)
-        except ModuleNotFoundError:
-            continue  # module not built yet (incremental rounds)
+        mod = import_module(mod_name)
         q = getattr(mod, "QUERIES", {})
         o = getattr(mod, "ORACLE", {})
         dup = set(q) & set(queries)

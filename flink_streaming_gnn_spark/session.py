@@ -19,7 +19,6 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def get_spark(
     app_name: str = "flink_streaming_gnn_spark",
     cpus: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -27,6 +26,7 @@ def get_spark(
     no-op override via spark-submit. Every config here survives a 1000-
     executor deployment: AQE handles skew/coalescing at runtime, Arrow
     keeps the Python boundary vectorized, UTC keeps event-time math stable.
+    The SQL confs stay settable per session through ``spark.conf.set``.
     """
     n = cpus or DEFAULT_CPUS
     builder = (
@@ -41,14 +41,10 @@ def get_spark(
         # Scan-split size follows the same sizing rule as shuffle
         # partitions: fixtures here are ~100 MB, so the 128 MB default
         # collapses scans to one task and starves the other 31 cores —
-        # 16 MB keeps every core fed. On a 1000-executor/100 TB deployment
-        # set SPARK_GRAFT_MAX_PARTITION_BYTES back to 128 MB+ (fewer,
-        # fuller tasks; the scheduler, not the split size, is the
-        # parallelism source there).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
-        )
+        # 16 MB keeps every core fed. A 100 TB deployment raises it back
+        # to 128 MB+ with spark.conf.set (fewer, fuller tasks; the
+        # scheduler, not the split size, is the parallelism source there).
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # ContextCleaner only releases per-query broadcast/shuffle state
         # after a driver GC processes the weak references; with a 24g heap
         # a session can go MANY queries between collections and later
@@ -57,78 +53,36 @@ def get_spark(
         # 30min is tuned for clusters, not a 200-query single-JVM session;
         # 2min keeps the cleaner fed with negligible pause cost.
         .config("spark.cleaner.periodicGC.interval", "2min")
-        # RocksDB state store (round 8 — the ×100 probe killed
-        # stream_windowed_topk at 100M events: the default HDFSBacked
-        # provider keeps EVERY partition's state map in JVM heap, and
-        # ~50M (window, user) entries plus retained versions took the
-        # whole 24g JVM down mid-query). RocksDB holds state off-heap
-        # and disk-backed — the production choice for large keyed state;
-        # per-query memory becomes a bounded block-cache, so state size
-        # scales with DISK, not heap, exactly the 100 TB posture.
-        # Override with SPARK_GRAFT_STATESTORE=hdfs to A/B the default.
+        # RocksDB state store: at 100M events the default HDFSBacked
+        # provider killed the whole 24 GiB JVM under stream_windowed_topk —
+        # it keeps EVERY partition's state map in heap, and ~50M
+        # (window, user) entries plus retained versions exceed it. RocksDB
+        # holds state off-heap and disk-backed, so per-query memory is a
+        # bounded block cache and state size scales with disk, not heap;
+        # the re-run finished topk at ×100 in 263 s.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-            if os.environ.get("SPARK_GRAFT_STATESTORE") == "hdfs"
-            else "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        # Round-9 join-strategy knob (guide §3.1): SPARK_GRAFT_PREFER_SHJ=1
-        # lets the planner (and AQE's runtime rewrite) pick shuffled-hash
-        # over sort-merge when a per-partition build side fits. A/B'd at
-        # ×10 (tools/ab_r9_prefer_shj.log): no separation — at bench
-        # scales every probed join is already a broadcast join, so the
-        # preference never engages. Default stays Spark's; the knob is a
-        # cluster-tuning parameter, to be decided with cluster numbers.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "false" if os.environ.get("SPARK_GRAFT_PREFER_SHJ") == "1" else "true",
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            "64MB" if os.environ.get("SPARK_GRAFT_PREFER_SHJ") == "1" else "0",
-        )
-        # Shuffle codec knob (guide §2.3): zstd trades CPU for ratio — a
-        # likely win on a NIC/disk-bound cluster, pure CPU overhead on a
-        # page-cache local shuffle. Three round-9 A/Bs (tools/ab_r9_zstd*
-        # .log) found NO codec signal at ×10: the apparent zstd win
-        # reversed exactly under an order-reversal control (arm-order bias
-        # from transient host noise). lz4 default stays; re-measure on the
-        # target cluster before flipping.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
         # Parquet codec for everything the engine WRITES (spools, sinks,
-        # scratch, blown corpora): zstd per guide §6/§9 — smaller than
-        # snappy at similar read speed. Unlike the SHUFFLE codec (E3:
-        # no signal on a page-cache shuffle, lz4 kept), parquet output
-        # hits disk and is re-read; on the disk-bound ×1000 ladder the
-        # ratio is the difference between fitting the run in the sandbox
-        # disk budget and ENOSPC (round-9 rung attempt). No timed
-        # headline query writes parquet (noop sink), so the bench is
-        # unaffected; results are codec-independent.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
-        # Single-JVM large-state robustness (round-9 ×100 soak catch): at
-        # 10⁸-row streaming state a >10 s full-GC (24g heap) or transient
-        # host stall blows the IN-PROCESS executor heartbeat
-        # (spark.executor.heartbeatInterval default 10s → RpcTimeout →
-        # executor declared dead → SparkContext shuts down mid-stream;
-        # tools/probe_r9_soak_x100.log, first attempt). 30s/600s are the
-        # standard large-heap settings; timeouts change no plan and are
-        # inert at bench scale.
-        .config(
-            "spark.executor.heartbeatInterval",
-            os.environ.get("SPARK_GRAFT_HEARTBEAT_INTERVAL", "30s"),
-        )
-        .config(
-            "spark.network.timeout",
-            os.environ.get("SPARK_GRAFT_NETWORK_TIMEOUT", "600s"),
-        )
+        # scratch, blown corpora): zstd is smaller than snappy at similar
+        # read speed, and on the disk-bound ×1000 ladder the ratio is the
+        # difference between fitting the sandbox disk budget and ENOSPC.
+        # No timed headline query writes parquet (noop sink); results are
+        # codec-independent. The SHUFFLE codec stays Spark's lz4: shuffle
+        # bytes sit in page cache here, and an order-reversed ×10 A/B
+        # (tools/ab_r9_zstd_reversed.log) had lz4 win or tie every pairing
+        # (pagerank lz4 29.6/31.6 s vs zstd 39.5/33.1 s).
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        # Single-JVM large-state robustness: at 10⁸-row streaming state a
+        # >10 s full GC (24g heap) or a host stall missed the 10s default
+        # executor heartbeat (RpcTimeout → executor declared dead →
+        # SparkContext shut down mid-stream; tools/probe_r9_soak_x100.log,
+        # first attempt). 30s/600s are the standard large-heap settings;
+        # timeouts change no plan.
+        .config("spark.executor.heartbeatInterval", "30s")
+        .config("spark.network.timeout", "600s")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # ANSI mode off: engine follows classic Spark SQL null-on-error
@@ -137,9 +91,6 @@ def get_spark(
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{n}]")
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -13,6 +13,8 @@ at construction; SF_SMOKE keeps that bounded).
 
 from __future__ import annotations
 
+import pytest
+
 from flink_streaming_gnn_spark import registry
 from tests.conftest import SF_SMOKE
 
@@ -27,3 +29,13 @@ def test_every_registry_key_analyzes(spark):
         except Exception as exc:  # noqa: BLE001 — collect all failures
             failed.append(f"{name}: {type(exc).__name__}: {str(exc)[:160]}")
     assert not failed, "analysis failures:\n" + "\n".join(failed)
+
+
+def test_missing_module_fails_loudly(monkeypatch):
+    """A module that cannot be imported must raise, not silently drop
+    its keys from the driver surface."""
+    monkeypatch.setattr(
+        registry, "_MODULES", (*registry._MODULES, "flink_streaming_gnn_spark.no_such_module")
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        registry.all_queries()

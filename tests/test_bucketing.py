@@ -104,32 +104,3 @@ def test_rate_source_smoke(spark):
         q.awaitTermination()
     got = spark.sql("SELECT * FROM rate_smoke").collect()
     assert len(got) == 1 and got[0]["n"] >= 0
-
-
-def test_bucketed_edges_flag_equivalence_and_plan(spark, monkeypatch):
-    """SPARK_GRAFT_BUCKETED_EDGES=1 (round 9, VERDICT r8 #8): the
-    env-gated bucketed edge derivation must (a) produce exactly the
-    default path's edge multiset and (b) run the lineitem ⋈ orders join
-    with NO shuffle exchange (broadcast disabled so the strategy must
-    exploit the bucketed layout)."""
-    from flink_streaming_gnn_spark.graph.edges import derive_edges
-
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_EDGES", raising=False)
-    base = derive_edges(spark, SF).groupBy("src", "dst").agg(
-        F.count("*").alias("n"), F.round(F.sum("w"), 2).alias("sw")
-    )
-    base_rows = {tuple(r) for r in base.collect()}
-
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EDGES", "1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bucketed = derive_edges(spark, SF)
-        plan = bucketed._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed edge join still shuffles:\n{plan}"
-        got = bucketed.groupBy("src", "dst").agg(
-            F.count("*").alias("n"), F.round(F.sum("w"), 2).alias("sw")
-        )
-        got_rows = {tuple(r) for r in got.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    assert got_rows == base_rows

@@ -92,11 +92,11 @@ def run_batch_soak(sf_dir: str | None) -> int:
             # uncollected garbage from structural retention; HERE the
             # uncollected py4j proxy cycles ARE the thing under test
             # (a real multi-query session never gc's between queries).
-            # With the kernel-exit release in place the kernel itself
-            # collected before returning, so the ledger stays clean;
-            # with SPARK_GRAFT_DISABLE_KERNEL_GC=1 the superseded
-            # checkpoint block sets pile up across keys and the JVM gc
-            # cannot free them (py4j still pins them).
+            # The kernel-exit release collects inside the kernel before
+            # it returns, so the ledger stays clean; without it the
+            # superseded checkpoint block sets pile up across keys and
+            # the JVM gc cannot free them (py4j still pins them;
+            # tools/probe_r10_batch_soak_before.log).
             spark.sparkContext._jvm.java.lang.System.gc()
             used, cap = _jvm_heap_mb(spark)
             print(
@@ -142,7 +142,6 @@ _PURGE_GLOBS = (
     "zorder_layout_*",
     "sink_roundtrip_*",
     "graft_bucketed_wh_*",
-    "graft_bedges_wh_*",
 )
 
 
