@@ -9,9 +9,9 @@ Spark-first shape: classic frontier expansion. Each hop is one join
 (frontier ⋈ edges — the frontier side shrinks every round) + one distinct
 + one anti-join against the visited set; all three shuffle on vertex id,
 so consecutive hops reuse the partitioning. The driver reads only the
-frontier COUNT per round (O(1)), never rows. Hops are capped (MAX_HOPS)
-identically in both engines, so results agree even on graphs wider than
-the cap.
+frontier COUNT per round, observed on the frontier's checkpoint job, never
+rows. Hops are capped (MAX_HOPS) identically in both engines, so results
+agree even on graphs wider than the cap.
 
 Seed set: customers with c_custkey % 50 == 0 (deterministic, scale-stable
 density) in the disjoint 2c / 2s+1 vertex-id space of components.py.
@@ -19,7 +19,7 @@ density) in the disjoint 2c / 2s+1 vertex-id space of components.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
@@ -53,15 +53,17 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels = seeds.withColumn("level", F.lit(0)).localCheckpoint()
     frontier = levels
     for hop in range(1, MAX_HOPS + 1):
+        rows = Observation()
         nxt = (
             frontier.join(edges, frontier.v == edges.a)
             .select(F.col("b").alias("v"))
             .distinct()
             .join(levels, "v", "left_anti")
             .withColumn("level", F.lit(hop))
+            .observe(rows, F.count("*").alias("n"))
             .localCheckpoint()
         )
-        if nxt.count() == 0:
+        if rows.get["n"] == 0:
             break
         levels = levels.union(nxt).localCheckpoint()
         frontier = nxt

@@ -5,14 +5,18 @@ reference's A10 feedback edge).
 
 Algorithm: hash-min label propagation. Every vertex starts labeled with
 its own id; each round takes the min of its own and its neighbors' labels;
-fixpoint = every vertex carries the min vertex id of its component. Each
-round is one join + one aggregate (both shuffle on vertex id, so at scale
-consecutive rounds reuse the same hash partitioning), and the driver-side
-convergence check reads a single count — no row-level data ever reaches
-the driver. Rounds needed = graph diameter (small for this corpus's dense
-bipartite core). The accelerated variant for adversarial diameters is
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC'14) — same per-round plan shape, fewer rounds.
+fixpoint = every vertex carries the min vertex id of its component. With
+one self-loop per vertex in the adjacency, "own and neighbors'" is just
+N(v) ∪ {v}, so each round is one join + one aggregate (both shuffle on
+vertex id, so at scale consecutive rounds reuse the same hash
+partitioning) ending in the round's checkpoint. The aggregate also keeps
+the vertex's previous label (the self-loop row), and the number of
+lowered labels is observed on that same checkpoint job: the driver reads
+one scalar per round and runs no job beyond the round itself. Rounds
+needed = graph diameter (small for this corpus's dense bipartite core).
+The accelerated variant for adversarial diameters is large-star/small-star
+(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+— same per-round plan shape, fewer rounds.
 
 Vertex-id space: customer c and supplier s collide numerically, so
 customers map to 2c and suppliers to 2s+1 (disjoint evens/odds).
@@ -27,10 +31,11 @@ Union-find parity stays pinned in tests/test_components.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 MAX_ROUNDS = 25
 
@@ -42,72 +47,54 @@ def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
+@release_superseded_checkpoints
 def hash_min_cc(edges: DataFrame) -> DataFrame:
     """Hash-min label propagation over an arbitrary undirected edge frame
-    ``(a, b)`` (both directions present; self-loops harmless) — returns
-    the fixpoint ``(v, lbl)`` labels. Factored out so the streaming
-    incremental-CC operator (streaming/graphcc.py) can run the same loop
-    per micro-batch on (contracted prior state ∪ new edges)."""
-    edges = edges.localCheckpoint()
-    labels = (
-        edges.select(F.col("a").alias("v")).distinct().withColumn("lbl", F.col("v"))
+    ``(a, b)`` (both directions present; self-loops and duplicates
+    harmless) — returns the fixpoint ``(v, lbl)`` labels. Factored out so
+    the streaming incremental-CC operator (streaming/graphcc.py) can run
+    the same loop per micro-batch on (contracted prior state ∪ new edges).
+
+    One self-loop per vertex is added once, so a round is a single join
+    and a single aggregate: min over N(v) ∪ {v} is the new label, and the
+    self-loop row carries the old one. The count of lowered labels is
+    observed on the round's own checkpoint job, so convergence costs no
+    extra job."""
+    adj = edges.union(
+        edges.select("a", F.col("a").alias("b")).distinct()
     ).localCheckpoint()
+    labels = adj.filter(F.col("a") == F.col("b")).select(
+        F.col("a").alias("v"), F.col("b").alias("lbl")
+    )
     for _ in range(MAX_ROUNDS):
-        nbr_min = (
-            edges.join(labels, edges.b == labels.v)
-            .groupBy("a")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.v == nbr_min.a, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))
-                ).alias("lbl"),
+        lowered = Observation()
+        labels = (
+            adj.join(labels, adj.b == labels.v)
+            .groupBy(F.col("a").alias("v"))
+            .agg(
+                F.min("lbl").alias("lbl"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("lbl"))).alias("old"),
             )
+            .observe(lowered, F.count_if(F.col("lbl") < F.col("old")).alias("n"))
+            .select("v", "lbl")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if lowered.get["n"] == 0:
             break
-    # Free the superseded per-round checkpoints NOW instead of "eventually".
-    # localCheckpoint blocks live in the block-manager heap (local mode:
-    # the driver JVM) and are released by the ContextCleaner only once the
-    # Python DataFrame proxies are collected — and those proxies sit in
-    # reference cycles that CPython refcounting never breaks, so in a
-    # long-lived session every superseded round's |V|-row block set stays
-    # live. Measured (round-9 ×100 single-JVM soak): stream_cc_e2e left
-    # ~6.2 GiB of post-System.gc() driver heap behind; at ×10 in-process,
-    # 1113 MiB and 5 persistent RDDs after the key, dropping to 89 MiB /
-    # 0 RDDs after one gc.collect(). DataFrame.unpersist() does NOT free
-    # checkpoint blocks (CacheManager path only — probed), so the cycle
-    # collection at kernel exit is the deterministic release. The returned
-    # final labels frame stays live (the caller's data), freed the same
-    # way when the caller drops it.
-    import gc
-
-    gc.collect()
     return labels
 
 
 def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex component labels by hash-min propagation (driver loop
-    with an O(1)-size convergence read per round).
+    with one job chain per round, see ``hash_min_cc``).
 
-    Each round ends in an eager ``localCheckpoint``: every round's plan
-    references the previous labels frame TWICE (the neighbor-min join and
-    the convergence anti-comparison), and plan-tree re-analysis doubles per
-    shared reference — persist caches data but keeps the logical plan, so
-    a persist-only loop pays 2^round Catalyst analysis by late rounds
-    (measured pathologically on the HITS loop, graph/hits.py). Checkpoint
-    truncates the plan to a leaf; analysis stays O(1) per round."""
+    Each round ends in an eager ``localCheckpoint``: the round's plan
+    references the previous labels frame, and without truncation the
+    plan grows by one join + aggregate per round and Catalyst re-analyses
+    the whole chain every round (persist caches data but keeps the
+    logical plan; measured pathologically on the HITS loop,
+    graph/hits.py). Checkpoint truncates the plan to a leaf; analysis
+    stays O(1) per round."""
     return hash_min_cc(_undirected_edges(spark, sf_dir))
 
 

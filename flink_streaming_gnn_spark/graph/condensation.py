@@ -15,7 +15,8 @@ condensation edges are two broadcast-gated label joins + a distinct
 (never a closure); the level DP is one join + max-agg per round over
 the |SCCs|-sized DAG, rounds bounded by the condensation's longest
 chain (≤ MAX_OUTER, the same bound the FB-coloring peel uses), with
-the localCheckpoint lineage discipline and an O(1) convergence read.
+the localCheckpoint lineage discipline; the count of raised levels is
+observed on each round's checkpoint job, so convergence costs no job.
 
 The DuckDB oracle recomputes everything from the recursive reachability
 closure (the independent SCC formulation) + a recursive longest-path
@@ -24,7 +25,7 @@ CTE — a cross-algorithm proof, same discipline as graph_scc itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
@@ -69,19 +70,14 @@ def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("c_dst").alias("c"))
             .agg((F.max("pl") + 1).alias("nl"))
         )
-        new_lvl = (
+        raised = Observation()
+        lvl = (
             lvl.join(via, "c", "left")
+            .observe(raised, F.count_if(F.col("nl") > F.col("level")).alias("n"))
             .select("c", F.greatest("level", F.coalesce("nl", F.col("level"))).alias("level"))
             .localCheckpoint()
         )
-        changed = (
-            new_lvl.alias("n")
-            .join(lvl.alias("o"), F.col("n.c") == F.col("o.c"))
-            .filter(F.col("n.level") != F.col("o.level"))
-            .count()
-        )
-        lvl = new_lvl
-        if changed == 0:  # O(1) convergence read
+        if raised.get["n"] == 0:
             break
     n_succ = cond_edges.groupBy(F.col("c_src").alias("c")).agg(
         F.count("*").cast("long").alias("n_succ")

@@ -11,9 +11,11 @@ Spark-first round: one join (estimates onto directed neighbor lists),
 one per-vertex h-index — computed relationally as
 ``max(least(rank, est))`` over the estimate-descending row_number — and
 one element-wise ``least`` with the previous estimate. Two shuffles per
-round, both keyed on vertex id; the driver reads one O(1) changed-count
-scalar; rounds are ``localCheckpoint``-truncated (components/bfs
-discipline).
+round, both keyed on vertex id; rounds are ``localCheckpoint``-truncated
+(components/bfs discipline). The previous estimate is still in the row
+that takes the ``least``, so the count of lowered estimates is observed
+on the round's checkpoint job — the driver reads that one scalar and no
+comparison job runs.
 
 Exact oracle: monotone + idempotent ⇒ ORACLE_ROUNDS unrolled
 MATERIALIZED round CTEs with ORACLE_ROUNDS ≥ the measured sf0.01
@@ -24,7 +26,7 @@ algorithm) is pinned in tests/test_round3b.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -62,19 +64,14 @@ def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("a")
             .agg(F.max(F.least("rn", "est")).alias("h"))
         )
-        new_est = (
+        lowered = Observation()
+        est = (
             est.join(h, est.v == h.a)
+            .observe(lowered, F.count_if(F.col("h") < F.col("est")).alias("n"))
             .select("v", F.least("est", "h").alias("est"))
             .localCheckpoint()
         )
-        changed = (
-            new_est.alias("n")
-            .join(est.alias("o"), "v")
-            .filter(F.col("n.est") != F.col("o.est"))
-            .count()  # O(1) convergence scalar
-        )
-        est = new_est
-        if changed == 0:
+        if lowered.get["n"] == 0:
             break
     return est.select(
         F.col("v").cast("long").alias("v"),

@@ -7,7 +7,8 @@ Algorithm: iterative peeling — drop every vertex with degree < K, re-derive
 degrees on the induced subgraph, repeat to fixpoint. Each round is one
 hash aggregate (degrees) + two semi-joins (filter endpoints), all shuffling
 on the same vertex key so consecutive rounds reuse the partitioning. The
-fixpoint read is O(1) (a count), like components.py; rounds are bounded by
+fixpoint read is the round's row count, observed on the round's own
+checkpoint job (no second job), like components.py; rounds are bounded by
 the peeling depth, which is ≤ the degeneracy of the graph — small on
 real-world graphs.
 
@@ -21,7 +22,7 @@ reference stays pinned in tests/test_new_ops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.triangles import _supplier_edges
@@ -42,12 +43,14 @@ def kcore_vertices(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
     # the ContextCleaner reclaims out-of-scope round frames — no manual
     # persist/unpersist bookkeeping, and no driver-side materialization of
     # the (worst-case O(|V|)) core result
+    rows = Observation()
     cur = (
         e.select(F.col("a").alias("v"), F.col("b").alias("o"))
         .union(e.select(F.col("b").alias("v"), F.col("a").alias("o")))
+        .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
-    n_prev = cur.count()
+    n_prev = rows.get["n"]
     for _ in range(MAX_ROUNDS):
         keep = (
             cur.groupBy("v")
@@ -55,16 +58,16 @@ def kcore_vertices(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
             .filter(F.col("deg") >= k)
             .select("v")
         )
-        nxt = (
+        rows = Observation()
+        cur = (
             cur.join(keep, "v", "left_semi")
             .join(keep.select(F.col("v").alias("o")), "o", "left_semi")
+            .observe(rows, F.count("*").alias("n"))
             .localCheckpoint()
         )
-        n_cur = nxt.count()  # O(1) fixpoint read (rows already materialized)
-        cur = nxt
-        if n_cur == n_prev:
+        if rows.get["n"] == n_prev:
             break
-        n_prev = n_cur
+        n_prev = rows.get["n"]
     return cur.groupBy("v").agg(F.count("*").cast("long").alias("core_deg"))
 
 

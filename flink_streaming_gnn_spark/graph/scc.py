@@ -5,9 +5,9 @@ MUTUALLY reachable, so the undirected hash-min labels (which merge
 one-way-connected vertices) are wrong for directed semantics.
 
 Algorithm here: path-doubling reachability closure — R ← R ∪ (R ∘ R)
-squares the reachable path length each round, so FIXED ``DOUBLING_ROUNDS``
-= 5 covers 32 hops (≫ the fixture diameter) with a static job graph and
-no driver-side convergence read. SCC label(v) = min id over the mutual
+squares the reachable path length each round, so ``DOUBLING_ROUNDS`` = 5
+cover 32 hops (≫ the fixture diameter), stopping early once the observed
+pair count is stable. SCC label(v) = min id over the mutual
 set {v} ∪ {u : (v,u) ∈ R ∧ (u,v) ∈ R} — one self-join of the closure on
 swapped keys + one min aggregate.
 
@@ -25,7 +25,7 @@ localCheckpoint against the 2^rounds re-analysis blowup) applies to both.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
@@ -36,15 +36,17 @@ DOUBLING_ROUNDS = 5  # 2^5 = 32-hop closure, far beyond the fixture diameter
 
 @release_superseded_checkpoints
 def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rows = Observation()
     e = (
         derive_vertex_embeddings(spark, sf_dir)
         .distinct()
         .select(F.col("src_v").alias("v"), F.col("dst_v").alias("u"))
         .filter(F.col("v") != F.col("u"))
+        .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
     reach = e
-    n_prev = reach.count()
+    n_prev = rows.get["n"]
     for _ in range(DOUBLING_ROUNDS):
         hop = (
             reach.alias("r1")
@@ -55,15 +57,18 @@ def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("r1.v").alias("v"), F.col("r2.u").alias("u"))
         )
         # reach referenced twice per round (identity + composition):
-        # checkpoint keeps Catalyst analysis O(1) per round
-        reach = reach.union(hop).distinct().localCheckpoint()
-        # O(1) driver convergence read (components.py discipline): the
+        # checkpoint keeps Catalyst analysis O(1) per round. The
         # post-fixpoint doubling rounds are the most expensive joins of
-        # all, so stopping on a stable pair count saves the worst work
-        n_now = reach.count()
-        if n_now == n_prev:
+        # all, so stop on a stable pair count (observed on the checkpoint)
+        rows = Observation()
+        reach = (
+            reach.union(hop).distinct()
+            .observe(rows, F.count("*").alias("n"))
+            .localCheckpoint()
+        )
+        if rows.get["n"] == n_prev:
             break
-        n_prev = n_now
+        n_prev = rows.get["n"]
     mutual = (
         reach.alias("f")
         .join(
@@ -96,10 +101,11 @@ def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCC, one SCC peeled per color simultaneously; (3) remove peeled
     vertices and repeat on the remainder (outer rounds = longest chain in
     the condensation, not #SCCs). State is one (vertex, color) row per
-    live vertex — never a reachability closure — and every step is the
-    same join+agg round shape as graph_connected_components, with the
-    localCheckpoint lineage discipline. Equality with the exact closure
-    labels is pinned in tests/test_round2d.py."""
+    live vertex — never a reachability closure — and every step is a
+    join+agg round like graph_connected_components', with the
+    localCheckpoint lineage discipline and convergence observed on each
+    round's checkpoint job. Equality with the exact closure labels is
+    pinned in tests/test_round2d.py."""
     edges_all = (
         derive_vertex_embeddings(spark, sf_dir)
         .distinct()
@@ -125,24 +131,25 @@ def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy(F.col("u").alias("v2"))
                 .agg(F.min("c").alias("nc"))
             )
-            new_color = (
+            lowered = Observation()
+            color = (
                 color.join(nbr_min, color.v == nbr_min.v2, "left")
+                .observe(lowered, F.count_if(F.col("nc") < F.col("c")).alias("n"))
                 .select(
                     "v", F.least(F.col("c"), F.coalesce("nc", F.col("c"))).alias("c")
                 )
                 .localCheckpoint()
             )
-            changed = (
-                new_color.alias("n")
-                .join(color.alias("o"), F.col("n.v") == F.col("o.v"))
-                .filter(F.col("n.c") != F.col("o.c"))
-                .count()
-            )
-            color = new_color
-            if changed == 0:
+            if lowered.get["n"] == 0:
                 break
         # (2) backward marking within color class, from each class root
-        marked = color.filter(F.col("v") == F.col("c")).select("v", "c").localCheckpoint()
+        rows = Observation()
+        marked = (
+            color.filter(F.col("v") == F.col("c")).select("v", "c")
+            .observe(rows, F.count("*").alias("n"))
+            .localCheckpoint()
+        )
+        n_marked = rows.get["n"]
         for _ in range(MAX_INNER):
             step = (
                 edges.join(marked.select(F.col("v").alias("dst"), "c"),
@@ -155,11 +162,15 @@ def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("c") == F.col("vc"))
                 .select(F.col("mv").alias("v"), "c")
             )
-            new_marked = marked.union(step).distinct().localCheckpoint()
-            if new_marked.count() == marked.count():
-                marked = new_marked
+            rows = Observation()
+            marked = (
+                marked.union(step).distinct()
+                .observe(rows, F.count("*").alias("n"))
+                .localCheckpoint()
+            )
+            if rows.get["n"] == n_marked:
                 break
-            marked = new_marked
+            n_marked = rows.get["n"]
         done_parts.append(marked.select("v", F.col("c").alias("scc")))
         # (3) peel and continue on the remainder
         remaining = remaining.join(marked.select("v"), "v", "left_anti").localCheckpoint()

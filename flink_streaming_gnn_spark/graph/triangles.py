@@ -178,7 +178,7 @@ def _split_components(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     from flink_streaming_gnn_spark.graph.components import hash_min_cc
 
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = hash_min_cc(und).localCheckpoint()  # (v, lbl)
+    labels = hash_min_cc(und)  # (v, lbl), already checkpointed
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("vc"))
     la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("lbl_a"))
     lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("lbl_b"))

@@ -42,6 +42,7 @@ from flink_streaming_gnn_spark.graph.components import (
     hash_min_cc,
 )
 from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.sources.tables import table_path
 
 N_CHUNKS = 8
 FILES_PER_TRIGGER = 2  # -> 4 micro-batches over the fixture
@@ -72,8 +73,9 @@ def edges_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     chunk_dir = scratch_dir(
         "edge_chunks",
-        "v1-edgechunks:"
-        + fixture_fingerprint(os.path.join(sf_dir, "lineitem.parquet")),
+        fixture_fingerprint(
+            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
+        ),
         _build,
     )
     return (
@@ -143,7 +145,8 @@ def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint — block-manager heap) is unreferenced once the
     # drain ends but its py4j proxy sits in a reference cycle; collect it
     # here so the key leaves no |V|-sized residue in a long-lived JVM
-    # (see graph/components.hash_min_cc for the measured numbers).
+    # (see plans/truncate.release_superseded_checkpoints for the measured
+    # numbers).
     import gc
 
     gc.collect()

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.graph.components import (
     cc_labels,
     graph_connected_components,
+    hash_min_cc,
 )
 from flink_streaming_gnn_spark.graph.edges import derive_edges
 from tests.conftest import SF_SMOKE
@@ -67,3 +68,56 @@ def test_cc_summary_consistent(spark):
         assert row.n_vertices == len(members)
         assert row.n_customers == sum(1 for m in members if m % 2 == 0)
         assert row.n_suppliers == sum(1 for m in members if m % 2 == 1)
+
+
+def _undirected_frame(spark, pairs):
+    rows = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+    return spark.createDataFrame(rows, "a long, b long")
+
+
+def _union_find_labels(pairs):
+    uf = _UnionFind()
+    for a, b in pairs:
+        uf.union(a, b)
+    return {v: uf.find(v) for v in list(uf.parent)}
+
+
+def test_hash_min_cc_generic_edges_match_union_find(spark):
+    """Three-plus components on a generic (a, b) frame: a path whose min id
+    sits at one end (8 rounds to converge), a triangle with a duplicated
+    edge and a self-loop, a star whose centre is not the min, and a
+    vertex whose only edge is a self-loop."""
+    path = [(17 - i, 16 - i) for i in range(7)]  # 17-16-...-10
+    triangle = [(20, 21), (21, 22), (22, 20), (20, 21), (22, 22)]
+    star = [(45, 40), (45, 41), (45, 42)]
+    pairs = path + triangle + star + [(30, 30)]
+    got = {
+        int(r["v"]): int(r["lbl"])
+        for r in hash_min_cc(_undirected_frame(spark, pairs)).collect()
+    }
+    assert got == _union_find_labels(pairs)
+    assert len(set(got.values())) == 4
+
+
+def _jobs_for_path(spark, n, group):
+    """Spark jobs one hash_min_cc call runs on the path 0-1-...-(n-1),
+    which takes n rounds (n-1 that lower a label, one that confirms)."""
+    sc = spark.sparkContext
+    edges = _undirected_frame(spark, [(i, i + 1) for i in range(n - 1)])
+    sc.setJobGroup(group, "hash_min_cc job count")
+    try:
+        labels = hash_min_cc(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r["lbl"] for r in labels.collect()} == {0}
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hash_min_cc_jobs_per_round(spark):
+    """Each added round costs at most 6 Spark jobs: one join + one aggregate
+    ending in the round's checkpoint, with convergence observed on it."""
+    k = 6
+    short = _jobs_for_path(spark, 4, "cc_rounds_short")
+    long = _jobs_for_path(spark, 4 + k, "cc_rounds_long")
+    assert long - short <= 6 * k, (short, long)

@@ -6,6 +6,8 @@ the reference system never had an automated test for.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -290,3 +292,42 @@ def test_append_spool_equals_memory_sink(spark):
     memory = drained(run_append_to_completion, "parity_append_memory")
     assert spooled == memory
     assert len(spooled) > 0
+
+
+def test_cc_edge_stream_follows_orders_rewrite(spark, tmp_path):
+    """The edge stream is lineitem ⋈ orders, so its chunk cache must be
+    keyed on both files: rewriting only orders.parquet (every o_custkey
+    shifted) must make the next call stream the new edges."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flink_streaming_gnn_spark.graph.edges import derive_edges
+    from flink_streaming_gnn_spark.sources.tables import table_path
+    from flink_streaming_gnn_spark.streaming.graphcc import edges_stream
+
+    fixture = str(tmp_path / "sf")
+    os.makedirs(fixture)
+    for name in ("lineitem", "orders"):
+        shutil.copyfile(table_path(SF_SMOKE, name), table_path(fixture, name))
+
+    def streamed_srcs(query_name):
+        out = run_append_to_completion(edges_stream(spark, fixture), query_name)
+        return {r["src"] for r in out.select("src").distinct().collect()}
+
+    before = streamed_srcs("cc_edges_before_orders_rewrite")
+    assert before == {
+        r["src"] for r in derive_edges(spark, fixture).select("src").distinct().collect()
+    }
+
+    orders = pq.read_table(table_path(fixture, "orders"))
+    shift = 1_000_000
+    i = orders.schema.get_field_index("o_custkey")
+    shifted = pc.add(orders.column(i), pa.scalar(shift, orders.schema.field(i).type))
+    orders = orders.set_column(i, "o_custkey", shifted)
+    pq.write_table(orders, table_path(fixture, "orders"))
+
+    after = streamed_srcs("cc_edges_after_orders_rewrite")
+    assert after == {s + shift for s in before}

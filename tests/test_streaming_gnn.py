@@ -10,7 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.sources.tables import load_table
+from flink_streaming_gnn_spark.sources.tables import load_table, table_path
 from flink_streaming_gnn_spark.streaming.gnn import (
     edges_v_with_ts,
     graph_sage_windowed,
@@ -29,7 +29,9 @@ def _edges_stream(spark, sf_dir, files_per_trigger=2):
 
     chunk_dir = scratch_dir(
         "test_gnn_edge_chunks",
-        fixture_fingerprint(os.path.join(sf_dir, "lineitem.parquet")),
+        fixture_fingerprint(
+            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
+        ),
         lambda staging: edges_v_with_ts(spark, sf_dir)
         .repartition(8)
         .write.mode("overwrite")
