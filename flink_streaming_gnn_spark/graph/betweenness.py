@@ -38,7 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 MAX_D = 4
@@ -53,15 +58,6 @@ SEED_MOD = 1000  # a % 1000 == 0 in 2c-space ⇔ c_custkey % 500 == 0
 # verify scales (sf ≤ 0.01: 4 modulo seeds) the cap is not binding, so
 # results are unchanged there; at the ×10 probe it cuts 31 seeds → 16.
 N_LANDMARKS = 16
-
-
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 @release_superseded_checkpoints
@@ -103,7 +99,8 @@ def graph_betweenness_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _betweenness_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _undirected(spark, sf_dir).localCheckpoint()
+    pairs = bipartite_pairs(derive_edges(spark, sf_dir))
+    edges = both_directions(pairs).localCheckpoint()
     seeds = (
         edges.select("a")
         .distinct()

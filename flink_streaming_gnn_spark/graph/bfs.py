@@ -14,7 +14,7 @@ rows. Hops are capped (MAX_HOPS) identically in both engines, so results
 agree even on graphs wider than the cap.
 
 Seed set: customers with c_custkey % 50 == 0 (deterministic, scale-stable
-density) in the disjoint 2c / 2s+1 vertex-id space of components.py.
+density) in the disjoint 2c / 2s+1 vertex-id space of graph/edges.py.
 """
 
 from __future__ import annotations
@@ -22,25 +22,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 MAX_HOPS = 8
 
 
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-
-
 @release_superseded_checkpoints
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex minimum hop distance from the seed set (≤ MAX_HOPS)."""
-    edges = _undirected(spark, sf_dir).localCheckpoint()
+    pairs = bipartite_pairs(derive_edges(spark, sf_dir))
+    edges = both_directions(pairs).localCheckpoint()
     seeds = (
         edges.select("a")
         .distinct()

@@ -47,21 +47,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 MAX_HOPS = 6
 SEED_MOD = 1000  # a % 1000 == 0 in 2c-space ⇔ c_custkey % 500 == 0
 LANDMARK_CAP = 1024  # constant landmark budget → ≤16 bitmask words
-
-
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 _EXPLODE_BITS = (
@@ -75,7 +71,8 @@ _EXPLODE_BITS = (
 def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-seed: vertices reached within MAX_HOPS, total hop distance,
     closeness (reached/sum_dist) and harmonic centrality (Σ 1/d)."""
-    edges = _undirected(spark, sf_dir).localCheckpoint()
+    pairs = bipartite_pairs(derive_edges(spark, sf_dir))
+    edges = both_directions(pairs).localCheckpoint()
     seed_ids = [
         r["a"]
         for r in (

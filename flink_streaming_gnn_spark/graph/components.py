@@ -18,8 +18,7 @@ The accelerated variant for adversarial diameters is large-star/small-star
 (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
 — same per-round plan shape, fewer rounds.
 
-Vertex-id space: customer c and supplier s collide numerically, so
-customers map to 2c and suppliers to 2s+1 (disjoint evens/odds).
+Vertex-id space: customers 2c, suppliers 2s+1 (graph/edges.py).
 
 Output is the deterministic per-component summary (label = min vertex id
 in component, size, customer/supplier breakdown). Round-2 upgrade: EXACT
@@ -34,17 +33,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 MAX_ROUNDS = 25
-
-
-def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = derive_edges(spark, sf_dir).select(
-        (F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b")
-    ).distinct()
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 @release_superseded_checkpoints
@@ -95,14 +92,14 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical plan; measured pathologically on the HITS loop,
     graph/hits.py). Checkpoint truncates the plan to a leaf; analysis
     stays O(1) per round."""
-    return hash_min_cc(_undirected_edges(spark, sf_dir))
+    return hash_min_cc(both_directions(bipartite_pairs(derive_edges(spark, sf_dir))))
 
 
-def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-component summary: label (min vertex id), total size, and the
-    customer/supplier split — deterministic, so invariant tests can pin it
-    exactly against union-find."""
-    labels = cc_labels(spark, sf_dir)
+def component_summary(labels: DataFrame) -> DataFrame:
+    """Per-component summary of ``(v, lbl)`` labels: label (min vertex
+    id), total size, and the customer/supplier split (``v % 2``) —
+    deterministic, so invariant tests can pin it exactly against
+    union-find. Shared by the batch key and ``stream_cc_e2e``."""
     return (
         labels.groupBy("lbl")
         .agg(
@@ -118,11 +115,15 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("component")
     )
+
+
+def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the summary is built directly on the final checkpointed labels frame
     # (lineage-free, so no recompute risk); worst-case #components is
     # O(|V|), so the result must never be collected to the driver —
     # intermediate round frames are reclaimed by the ContextCleaner once
     # they go out of scope
+    return component_summary(cc_labels(spark, sf_dir))
 
 
 QUERIES = {"graph_connected_components": graph_connected_components}

@@ -30,27 +30,23 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ORACLE_ROUNDS = 6  # ≥ measured sf0.01 convergence (4) — idempotent beyond
 MAX_ROUNDS = 60
 
 
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-
-
 @release_superseded_checkpoints
 def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry key: (v, coreness) for every vertex — the exact core
     number, computed to fixpoint."""
-    ue = _undirected(spark, sf_dir).localCheckpoint()
+    pairs = bipartite_pairs(derive_edges(spark, sf_dir))
+    ue = both_directions(pairs).localCheckpoint()
     est = (
         ue.groupBy("a").agg(F.count("*").alias("est"))
         .select(F.col("a").alias("v"), "est")

@@ -7,11 +7,19 @@ customer→supplier multigraph from the star schema:
 
 This mirrors the reference's edge-stream ingestion (SURVEY.md §2A A1/A2):
 each lineitem row is one edge event with a weight and an event time.
+
+Vertex-id space. Customer c and supplier s collide numerically, so the
+graph kernels give every vertex one id: customers are even (``2c``) and
+suppliers odd (``2s+1``). Every derived edge runs customer → supplier,
+so every ``(a, b)`` pair has ``a < b``. ``bipartite_pairs`` is the one
+place that mapping is written; ``both_directions`` adds the reverse
+edges for the undirected kernels. The DuckDB oracles spell the same
+mapping in SQL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
@@ -39,6 +47,22 @@ def derive_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice").alias("w"),
         F.col("l_shipdate").alias("ts"),
     )
+
+
+def bipartite_pairs(edges: DataFrame, *aggs: Column) -> DataFrame:
+    """Distinct ``(a = 2·src, b = 2·dst + 1)`` vertex pairs of a
+    ``(src, dst, …)`` edge frame. With ``aggs``, the parallel edges of a
+    pair fold into those columns instead, e.g. ``F.min("w").alias("w")``."""
+    a = (F.col("src") * 2).alias("a")
+    b = (F.col("dst") * 2 + 1).alias("b")
+    if aggs:
+        return edges.select(a, b, "*").groupBy("a", "b").agg(*aggs)
+    return edges.select(a, b).distinct()
+
+
+def both_directions(e: DataFrame) -> DataFrame:
+    """An ``(a, b)`` edge frame plus its reverse ``(b, a)`` rows."""
+    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 # DuckDB CTE twin of derive_edges, reused by the graph oracle queries

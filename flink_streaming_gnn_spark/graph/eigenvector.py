@@ -27,32 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.graph.pagerank import _is_verify_scale
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ROUNDS = 8
 
 
-def _sym_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(vertices, symmetric edges) over the disjoint 2c / 2s+1 id space."""
-    directed = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    e = directed.union(directed.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    v = e.select(F.col("a").alias("v")).distinct()
-    return v, e
-
-
 @release_superseded_checkpoints
 def eigenvector_scores(
     spark: SparkSession, sf_dir: str, rounds: int = ROUNDS
 ) -> DataFrame:
-    v, e = _sym_graph(spark, sf_dir)
-    v = v.persist()
-    e = e.persist()
+    e = both_directions(bipartite_pairs(derive_edges(spark, sf_dir))).persist()
+    v = e.select(F.col("a").alias("v")).distinct().persist()
     n = v.count()  # scalar — drives the uniform start vector
     x = v.withColumn("x", F.lit(1.0 / n**0.5))
     try:

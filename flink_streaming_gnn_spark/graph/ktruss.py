@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_V_CTE,
+    both_directions,
+    derive_vertex_embeddings,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 KTRUSS_K = 60
@@ -59,7 +63,7 @@ def _canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support: count of common neighbors of (a, b)."""
-    ue = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    ue = both_directions(e)
     n1 = ue.select(F.col("a").alias("u1"), F.col("b").alias("w1"))
     n2 = ue.select(F.col("a").alias("u2"), F.col("b").alias("w2"))
     return (

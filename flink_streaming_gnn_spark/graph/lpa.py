@@ -13,7 +13,7 @@ convergence read) so the job graph is static and batch≡oracle agree
 bit-for-bit. Labels start as the vertex id; after 4 rounds on this
 corpus's dense bipartite core the big communities are stable.
 
-Vertex-id space: disjoint 2c / 2s+1 (components.py convention).
+Vertex-id space: disjoint 2c / 2s+1 (graph/edges.py).
 """
 
 from __future__ import annotations
@@ -21,24 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ROUNDS = 4
 
 
-def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-
-
 @release_superseded_checkpoints
 def lpa_labels(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
-    edges = _undirected(spark, sf_dir).persist()
+    pairs = bipartite_pairs(derive_edges(spark, sf_dir))
+    edges = both_directions(pairs).persist()
     labels = edges.select(F.col("a").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
@@ -144,7 +141,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent). At extreme scale d_c² sums approach int64 range —
     switch the two accumulators to DECIMAL(38) there; the plan shape
     (two hash aggs + two broadcast-gated label joins) is unchanged."""
-    edges = _undirected(spark, sf_dir)
+    edges = both_directions(bipartite_pairs(derive_edges(spark, sf_dir)))
     labels = lpa_labels(spark, sf_dir)
     la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("la"))
     lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("lb"))

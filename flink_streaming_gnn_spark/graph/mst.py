@@ -51,7 +51,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.truncate import fresh_frame
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
@@ -64,16 +68,7 @@ def _simple_weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical undirected simple graph in the 2c / 2s+1 id space:
     multigraph collapsed to min weight per endpoint pair (a < b always —
     customers are even, suppliers odd, and every derived edge crosses)."""
-    return (
-        derive_edges(spark, sf_dir)
-        .select(
-            (F.col("src") * 2).alias("a"),
-            (F.col("dst") * 2 + 1).alias("b"),
-            "w",
-        )
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-    )
+    return bipartite_pairs(derive_edges(spark, sf_dir), F.min("w").alias("w"))
 
 
 def _forest_cc(merge: DataFrame, max_rounds: int = CC_CAP) -> DataFrame:
@@ -107,9 +102,7 @@ def _forest_cc(merge: DataFrame, max_rounds: int = CC_CAP) -> DataFrame:
     a subset), which forces per-component-constant minimum labels — so
     the sum-unchanged exit condition matches the plain loop's.
     """
-    edges = merge.union(
-        merge.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    edges = both_directions(merge)
     verts = edges.select(F.col("a").alias("v")).distinct()
     # graph edges + per-vertex self-edges, static across rounds: the
     # self-edge keeps every vertex's own label in the aggregate pool, so

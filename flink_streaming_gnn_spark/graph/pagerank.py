@@ -8,8 +8,13 @@ out-edges) + one aggregate (sum of contributions per dst) + one map
 the partitioning. A fixed round count (no convergence read) keeps the job
 graph static; 10 rounds is within 1e-4 of the fixpoint on this corpus.
 Dangling mass (vertices with no out-edges — all suppliers in the bipartite
-derivation) is redistributed uniformly each round, per the standard
-formulation, via one scalar aggregate.
+derivation) is redistributed each round, per the standard formulation,
+via a broadcast 1-row aggregate folded into the round's own job.
+
+``power_iteration`` is the one rank loop: it takes a teleport set, and
+the start vector, the teleport term and the returned dangling mass all
+land uniformly on that set. PageRank teleports to every vertex;
+personalized PageRank (graph/ppr.py) to its seed set.
 
 Determinism note: per-vertex rank sums are floating-point and
 partition-order dependent in the last ulp, so the registry key rounds to 6
@@ -19,38 +24,32 @@ decimals and is rows-only; exactness vs a numpy power-iteration reference
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.edges import bipartite_pairs, derive_edges
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 DAMPING = 0.85
 ROUNDS = 10
 
 
-def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(vertices, directed edges) in the disjoint 2c / 2s+1 id space
-    (customers point at suppliers, the natural direction of the derived
-    purchase edges)."""
-    e = (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
+@release_superseded_checkpoints
+def power_iteration(
+    spark: SparkSession, sf_dir: str, rounds: int, teleport: Column
+) -> DataFrame:
+    """Damped power iteration over the directed purchase graph (customers
+    point at suppliers). ``teleport`` is a predicate on ``v`` naming the
+    teleport set T: ranks start at 1/|T| on T, and each round gives every
+    vertex of T ``(1−d)/|T| + d·dm/|T|``, where dm is the dangling mass."""
+    e = bipartite_pairs(derive_edges(spark, sf_dir))
     v = (
         e.select(F.col("a").alias("v"))
         .union(e.select(F.col("b").alias("v")))
         .distinct()
+        .persist()
     )
-    return v, e
-
-
-@release_superseded_checkpoints
-def pagerank_ranks(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
-    v, e = _graph(spark, sf_dir)
-    v = v.persist()
-    n = v.count()  # scalar: vertex count (drives the teleport term)
+    n = v.filter(teleport).count()  # scalar: |T| (drives the teleport term)
     out_deg = e.groupBy("a").agg(F.count("*").alias("deg"))
     # edges with the source's out-degree attached, reused every round
     e_deg = e.join(out_deg, "a").persist()
@@ -58,7 +57,9 @@ def pagerank_ranks(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> Da
     # (contribs + dangling), so an un-truncated logical plan doubles per
     # round — 2^rounds analysis blowup by round ~7. The checkpoint makes
     # every round a leaf (the _cc_over_pairs discipline).
-    ranks = v.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = v.select(
+        "v", F.when(teleport, F.lit(1.0 / n)).otherwise(F.lit(0.0)).alias("rank")
+    ).localCheckpoint()
     try:
         for _ in range(rounds):
             contribs = (
@@ -75,14 +76,16 @@ def pagerank_ranks(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> Da
             dang = ranks.join(out_deg, ranks.v == out_deg.a, "left_anti").agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
             )
+            base = F.lit((1.0 - DAMPING) / n) + (
+                F.lit(DAMPING) * F.col("dm") / F.lit(float(n))
+            )
             ranks = (
                 v.join(contribs, v.v == contribs.b, "left")
                 .crossJoin(F.broadcast(dang))
                 .select(
                     "v",
                     (
-                        F.lit((1.0 - DAMPING) / n)
-                        + F.lit(DAMPING) * F.col("dm") / F.lit(float(n))
+                        F.when(teleport, base).otherwise(F.lit(0.0))
                         + F.lit(DAMPING) * F.coalesce("in_sum", F.lit(0.0))
                     ).alias("rank"),
                 )
@@ -92,6 +95,10 @@ def pagerank_ranks(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> Da
     finally:
         e_deg.unpersist()
         v.unpersist()
+
+
+def pagerank_ranks(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
+    return power_iteration(spark, sf_dir, rounds, F.lit(True))
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,17 +133,43 @@ def _is_verify_scale(sf_dir: str) -> bool:
         return False
 
 
+def unrolled_rank_sql(rounds: int, head: str, rank_cte: str, where: str = "") -> str:
+    """DuckDB twin of ``power_iteration``: the rounds unrolled into
+    MATERIALIZED CTEs. ``head`` defines e, verts, out_deg and r0;
+    ``rank_cte`` is round {r}'s rank CTE over contrib{r} and dang{r}, a
+    template with {r} and {d} (damping) slots. Every CTE is MATERIALIZED —
+    each round references its predecessor twice (contribs + dangling), so
+    un-materialized inlining would double the plan per round."""
+    blocks = [head]
+    for r in range(1, rounds + 1):
+        blocks.append(f"""contrib{r} AS MATERIALIZED (
+            SELECT e.b, sum(p.rank / od.deg) AS in_sum
+            FROM e JOIN out_deg od ON od.a = e.a
+                   JOIN r{r - 1} p ON p.v = e.a
+            GROUP BY e.b
+        ),
+        dang{r} AS MATERIALIZED (
+            SELECT COALESCE(sum(rank), 0.0) AS dm
+            FROM r{r - 1} WHERE v NOT IN (SELECT a FROM out_deg)
+        ),
+        {rank_cte.format(r=r, d=DAMPING)}""")
+    body = ",\n        ".join(blocks)
+    return f"""
+        WITH {body}
+        SELECT CAST(v AS BIGINT) AS v, round(rank, 6) AS rank
+        FROM r{rounds}{where}
+        ORDER BY round(rank, 6) DESC, v
+        LIMIT 100
+    """
+
+
 def _pagerank_oracle_sql(rounds: int = ROUNDS // 2) -> str:
     """Round-2 upgrade from rows-only: mechanically-unrolled power
     iteration (the LPA/k-core trick). Generated for the VERIFY-scale round
-    count (oracles only ever run at sf0.01); every CTE is MATERIALIZED —
-    each round references its predecessor twice (contribs + dangling), so
-    un-materialized inlining would double the plan per round. Ranks differ
-    from Spark's only in final-ulp float accumulation order; the key
-    rounds to 6 dp at magnitudes ~1/|V|, so the hash is stable."""
-    d = DAMPING
-    blocks = [
-        """e AS MATERIALIZED (
+    count (oracles only ever run at sf0.01). Ranks differ from Spark's
+    only in final-ulp float accumulation order; the key rounds to 6 dp at
+    magnitudes ~1/|V|, so the hash is stable."""
+    head = """e AS MATERIALIZED (
             SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         ),
@@ -150,34 +183,15 @@ def _pagerank_oracle_sql(rounds: int = ROUNDS // 2) -> str:
         r0 AS MATERIALIZED (
             SELECT v, 1.0 / n.n AS rank FROM verts CROSS JOIN n
         )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""contrib{r} AS MATERIALIZED (
-            SELECT e.b, sum(p.rank / od.deg) AS in_sum
-            FROM e JOIN out_deg od ON od.a = e.a
-                   JOIN r{r - 1} p ON p.v = e.a
-            GROUP BY e.b
-        ),
-        dang{r} AS MATERIALIZED (
-            SELECT COALESCE(sum(rank), 0.0) AS dm
-            FROM r{r - 1} WHERE v NOT IN (SELECT a FROM out_deg)
-        ),
-        r{r} AS MATERIALIZED (
+    rank_cte = """r{r} AS MATERIALIZED (
             SELECT verts.v,
                    (1.0 - {d}) / n.n + {d} * dang{r}.dm / n.n
                    + {d} * COALESCE(c.in_sum, 0.0) AS rank
             FROM verts
             LEFT JOIN contrib{r} c ON c.b = verts.v
             CROSS JOIN n CROSS JOIN dang{r}
-        )""")
-    body = ",\n        ".join(blocks)
-    return f"""
-        WITH {body}
-        SELECT CAST(v AS BIGINT) AS v, round(rank, 6) AS rank
-        FROM r{rounds}
-        ORDER BY round(rank, 6) DESC, v
-        LIMIT 100
-    """
+        )"""
+    return unrolled_rank_sql(rounds, head, rank_cte)
 
 
 QUERIES = {"graph_pagerank": graph_pagerank}

@@ -6,10 +6,12 @@ GNN surface needs the personalized kernel, not just the global one).
 
 Differences from global PageRank, both standard (Jeh–Widom): the teleport
 term lands only on the seed set (uniformly over |S|), and dangling mass
-returns to the seeds instead of spreading uniformly. Same Spark shape:
-each round is one join (ranks onto out-edges) + one per-dst sum + one map,
-shuffling on vertex id both times so rounds reuse the partitioning; the
-dangling read is a 1-value scalar aggregate per round.
+returns to the seeds instead of spreading uniformly. That is PageRank with
+the seed set as its teleport set, so this module runs
+``graph/pagerank.power_iteration`` — the same round, one
+``localCheckpoint()`` per round with the dangling mass folded into the
+round's job as a broadcast 1-row frame — and keeps only the seed
+definition, the registry key and the oracle.
 
 Seeds are the ``graph/closeness.py`` landmarks (customers with
 c_custkey % 500 == 0, i.e. a % 1000 == 0 in the disjoint 2c / 2s+1 id
@@ -26,73 +28,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.pagerank import _graph, _is_verify_scale
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.graph.pagerank import (
+    DAMPING,  # noqa: F401 — PPR's damping is PageRank's; tests read it here
+    ROUNDS,
+    _is_verify_scale,
+    power_iteration,
+    unrolled_rank_sql,
+)
 
-DAMPING = 0.85
-ROUNDS = 10
 SEED_MOD = 1000  # a % 1000 == 0 ⇔ c_custkey % 500 == 0 (closeness landmarks)
 
 
-@release_superseded_checkpoints
 def ppr_ranks(
     spark: SparkSession, sf_dir: str, rounds: int = ROUNDS
 ) -> DataFrame:
-    v, e = _graph(spark, sf_dir)
-    v = v.persist()
-    seeds = v.filter((F.col("v") % SEED_MOD) == 0).persist()
-    n_seeds = seeds.count()  # scalar: |S| (teleport normalization)
-    out_deg = e.groupBy("a").agg(F.count("*").alias("deg"))
-    e_deg = e.join(out_deg, "a").persist()
-    # r0 = uniform over the seed set, 0 elsewhere
-    ranks = (
-        v.join(seeds.withColumn("is_seed", F.lit(1)), "v", "left")
-        .select(
-            "v",
-            F.when(F.col("is_seed") == 1, F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("rank"),
-        )
-        .persist()
-    )
-    try:
-        for _ in range(rounds):
-            contribs = (
-                e_deg.join(ranks, e_deg.a == ranks.v)
-                .select("b", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("b")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            dangling = (
-                ranks.join(out_deg, ranks.v == out_deg.a, "left_anti")
-                .agg(F.sum("rank"))
-                .first()[0]
-                or 0.0
-            )
-            # teleport + dangling return land ONLY on seeds
-            seed_base = (1.0 - DAMPING) / n_seeds + DAMPING * dangling / n_seeds
-            new_ranks = (
-                v.join(contribs, v.v == contribs.b, "left")
-                .join(seeds.withColumn("is_seed", F.lit(1)), "v", "left")
-                .select(
-                    "v",
-                    (
-                        F.when(F.col("is_seed") == 1, F.lit(seed_base)).otherwise(
-                            F.lit(0.0)
-                        )
-                        + F.lit(DAMPING) * F.coalesce("in_sum", F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .persist()
-            )
-            new_ranks.count()  # materialize before dropping the old cache
-            ranks.unpersist()
-            ranks = new_ranks
-        return ranks
-    finally:
-        e_deg.unpersist()
-        seeds.unpersist()
-        v.unpersist()
+    """PageRank with the seed set as its teleport set."""
+    return power_iteration(spark, sf_dir, rounds, F.col("v") % SEED_MOD == 0)
 
 
 def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,9 +65,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppr_oracle_sql(rounds: int = ROUNDS // 2) -> str:
-    d = DAMPING
-    blocks = [
-        f"""e AS MATERIALIZED (
+    head = f"""e AS MATERIALIZED (
             SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         ),
@@ -135,19 +84,7 @@ def _ppr_oracle_sql(rounds: int = ROUNDS // 2) -> str:
                    CASE WHEN s.v IS NOT NULL THEN 1.0 / ns.ns ELSE 0.0 END AS rank
             FROM verts LEFT JOIN seeds s ON s.v = verts.v CROSS JOIN ns
         )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""contrib{r} AS MATERIALIZED (
-            SELECT e.b, sum(p.rank / od.deg) AS in_sum
-            FROM e JOIN out_deg od ON od.a = e.a
-                   JOIN r{r - 1} p ON p.v = e.a
-            GROUP BY e.b
-        ),
-        dang{r} AS MATERIALIZED (
-            SELECT COALESCE(sum(rank), 0.0) AS dm
-            FROM r{r - 1} WHERE v NOT IN (SELECT a FROM out_deg)
-        ),
-        r{r} AS MATERIALIZED (
+    rank_cte = """r{r} AS MATERIALIZED (
             SELECT verts.v,
                    CASE WHEN s.v IS NOT NULL
                         THEN (1.0 - {d}) / ns.ns + {d} * dang{r}.dm / ns.ns
@@ -157,16 +94,8 @@ def _ppr_oracle_sql(rounds: int = ROUNDS // 2) -> str:
             LEFT JOIN seeds s ON s.v = verts.v
             LEFT JOIN contrib{r} c ON c.b = verts.v
             CROSS JOIN ns CROSS JOIN dang{r}
-        )""")
-    body = ",\n        ".join(blocks)
-    return f"""
-        WITH {body}
-        SELECT CAST(v AS BIGINT) AS v, round(rank, 6) AS rank
-        FROM r{rounds}
-        WHERE rank > 0
-        ORDER BY round(rank, 6) DESC, v
-        LIMIT 100
-    """
+        )"""
+    return unrolled_rank_sql(rounds, head, rank_cte, "\n        WHERE rank > 0")
 
 
 QUERIES = {"graph_ppr_seeded": graph_ppr_seeded}

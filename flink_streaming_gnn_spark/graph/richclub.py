@@ -24,24 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_CTE, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    EDGES_CTE,
+    bipartite_pairs,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 
 LADDER = (1, 2, 4, 8, 16, 32, 64)
 
 
-def _undirected_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected edges in the disjoint 2c/2s+1 id space, one row
-    per unordered pair (a < b by construction: customers are even)."""
-    return (
-        derive_edges(spark, sf_dir)
-        .select((F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b"))
-        .distinct()
-    )
-
-
 def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _undirected_ab(spark, sf_dir)
+    # one row per unordered pair: a < b in the 2c / 2s+1 id space
+    e = bipartite_pairs(derive_edges(spark, sf_dir))
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.graph.edges import both_directions
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 # dense-tier bounds: float32 adjacency ≤ 16Ki² × 4 B = 1 GiB (transient,
@@ -177,8 +178,7 @@ def _split_components(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     tier, so the dense kernel only ever sees whole induced components."""
     from flink_streaming_gnn_spark.graph.components import hash_min_cc
 
-    und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = hash_min_cc(und)  # (v, lbl), already checkpointed
+    labels = hash_min_cc(both_directions(e))  # (v, lbl), already checkpointed
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("vc"))
     la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("lbl_a"))
     lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("lbl_b"))

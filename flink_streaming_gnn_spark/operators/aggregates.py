@@ -15,14 +15,10 @@ from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shape pricing summary: 2 group keys, 8 aggregates, with
     map-side partial aggregation. The BASELINE.md headline agg query."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-01").cast("timestamp"))
@@ -42,7 +38,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_hash_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash group-by with the full basic aggregate family."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
@@ -55,7 +51,7 @@ def agg_hash_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) + a deterministic set aggregate (sorted + joined to a
     string so the cross-engine comparison is representation-stable)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").cast("long").alias("n_suppliers"),
         F.countDistinct("l_partkey").cast("long").alias("n_parts"),
@@ -68,7 +64,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver records a rows-only check). At 100 TB this replaces exact
     COUNT(DISTINCT) wherever a 2% error is acceptable: no giant shuffle of
     distinct keys, just mergeable sketches."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.02).cast("long").alias("approx_users"),
         F.count("*").cast("long").alias("n_events"),
@@ -78,7 +74,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP (returnflag, linestatus) — grouping-set aggregation with the
     GROUPING() marker distinguishing subtotal rows from real NULLs."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -91,7 +87,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER'd aggregates via sum(CASE WHEN …) — one pass, no self-joins."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_events"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).cast("long").alias("n_purchases"),
@@ -109,9 +105,9 @@ def agg_incremental_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer→supplier graph. Sum+count *is* the monoid the reference keeps
     in keyed state; Spark's partial aggregation maintains it identically.
     """
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     edges = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
@@ -132,7 +128,7 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checkable (approx sketches stay under agg_approx_distinct's
     rows-only regime). At scale the exact form is a sort-based aggregate;
     the approximate production path is percentile_approx (t-digest)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("median_price"),
         F.round(F.expr("percentile(l_extendedprice, 0.9)"), 4).alias("p90_price"),
@@ -145,7 +141,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values enumerated explicitly — at scale an un-enumerated pivot needs a
     first pass to collect the domain; the oracle twin is the equivalent
     conditional aggregation (what pivot compiles to anyway)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     kinds = ["click", "view", "purchase", "signup", "error"]
     return (
         ev.groupBy("user_id")
@@ -191,7 +187,7 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     value. Rows-only by design (sketch-algorithm-specific results); the
     error bound vs the exact interpolated percentile is pinned in
     tests/test_new_ops.py."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     q = ev.groupBy("event_type").agg(
         F.percentile_approx("value", [0.5, 0.9, 0.99], 10000).alias("q")
     )

@@ -22,14 +22,10 @@ from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi inner join orders ⋈ customer (Catalyst picks broadcast/SMJ)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
         "o_orderkey", "c_name", "c_mktsegment", F.col("o_totalprice").alias("total_price")
     )
@@ -38,9 +34,9 @@ def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast of the small dim chain supplier⋈nation onto the
     fact table — zero shuffle of lineitem for the join itself."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     dim = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select("s_suppkey", "n_name")
     return (
         li.join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey)
@@ -56,8 +52,8 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer: every customer, order count (0 for order-less ones)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -70,8 +66,8 @@ def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer: orders ⋈ customer keeping all customers (mirror of left)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(c, o.o_custkey == c.c_custkey, "right")
         .select("c_custkey", "c_nationkey", "o_orderkey", "o_totalprice")
@@ -87,12 +83,12 @@ def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of two per-nation aggregates (customer vs supplier
     account balances) — nulls where a side is missing."""
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
         .agg(F.round(F.sum("c_acctbal"), 2).alias("cust_bal"))
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy("s_nationkey")
         .agg(F.round(F.sum("s_acctbal"), 2).alias("supp_bal"))
     )
@@ -105,8 +101,8 @@ def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi: customers that have at least one open ('O') order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -115,8 +111,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti (the BASELINE ``semi_anti`` shape): customers with no
     orders at all — NOT EXISTS without the subquery materialization."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
         "c_custkey", "c_name", F.col("c_acctbal").alias("acctbal")
     )
@@ -130,10 +126,10 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     join needs when 'unknown' must match 'unknown'. Output is the
     per-key pair count (NULL key row included), keeping the result
     bounded by |nations|."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.nullif(F.col("c_nationkey"), F.lit(0)).alias("c_nat")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.nullif(F.col("s_nationkey"), F.lit(0)).alias("s_nat")
     )
     return (
@@ -157,7 +153,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates are a time slice, never the whole history. Δts is an
     exact integer microsecond difference (deterministic ordering; ties
     break toward the earlier click, then click_id)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     p_us = F.unix_micros(F.col("purchase_ts").cast("timestamp"))
     c_us = F.unix_micros(F.col("click_ts").cast("timestamp"))
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -195,8 +191,8 @@ def join_theta_nl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (theta) join: supplier pairs within a nation with an
     account-balance gap bound — equi part on nation keeps it from being a
     cross product; the theta predicate filters pairs."""
-    s1 = _t(spark, sf_dir, "supplier").alias("s1")
-    s2 = _t(spark, sf_dir, "supplier").alias("s2")
+    s1 = load_table(spark, sf_dir, "supplier").alias("s1")
+    s2 = load_table(spark, sf_dir, "supplier").alias("s2")
     return s1.join(
         s2,
         (F.col("s1.s_nationkey") == F.col("s2.s_nationkey"))
@@ -214,8 +210,8 @@ def join_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range/interval join: pairs of events by the same user within a
     15-minute forward window. Equi on user_id bounds the pair space; the
     range predicate is evaluated post-shuffle (AQE keeps partitions sane)."""
-    e1 = _t(spark, sf_dir, "events").alias("e1")
-    e2 = _t(spark, sf_dir, "events").alias("e2")
+    e1 = load_table(spark, sf_dir, "events").alias("e1")
+    e2 = load_table(spark, sf_dir, "events").alias("e2")
     return e1.join(
         e2,
         (F.col("e1.user_id") == F.col("e2.user_id"))
@@ -240,7 +236,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale: both sides shuffle once on user_id; the per-key sort is the
     same work ``pd.merge_asof`` would do, without leaving the JVM.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id"),
@@ -280,10 +276,10 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast only while Catalyst estimates it small — at 100 TB customer
     is billions of rows and AQE must be free to pick a shuffle join.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
@@ -305,10 +301,10 @@ def join_cross_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides are constant-size by schema, so the product is too. Any
     unbounded side belongs in a blocked/banded join (see llm/dedup.py);
     tools/explain_audit.py forbids CartesianProduct everywhere else."""
-    r = _t(spark, sf_dir, "region").select(
+    r = load_table(spark, sf_dir, "region").select(
         F.col("r_regionkey").alias("rk"), F.col("r_name").alias("region_name")
     )
-    n = _t(spark, sf_dir, "nation").select(
+    n = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nk"), F.col("n_name").alias("nation_name")
     )
     return r.crossJoin(n).select(

@@ -14,25 +14,21 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full columnar scan with schema inference (small dim table)."""
-    return _t(spark, sf_dir, "nation")
+    return load_table(spark, sf_dir, "nation")
 
 
 def scan_projection_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-column projection; Catalyst prunes the scan to exactly these
     columns (ReadSchema shows only l_orderkey, l_quantity)."""
-    return _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    return load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
 
 
 def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """σ with AND / OR / NOT / BETWEEN / IN / LIKE / IS NOT NULL — all
     pushed into the parquet scan as data filters."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         F.col("l_returnflag").isin("A", "R")
         & F.col("l_quantity").between(10, 45)
@@ -45,7 +41,7 @@ def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived/aliased columns: arithmetic, string concat, casts."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -60,7 +56,7 @@ def project_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional projection + aggregation over the computed buckets."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 50000, F.lit("small"))
         .when(F.col("o_totalprice") < 150000, F.lit("medium"))

@@ -8,20 +8,16 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _cust_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select(F.col("c_nationkey").cast("long").alias("nationkey"))
     )
 
 
 def _supp_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .select(F.col("s_nationkey").cast("long").alias("nationkey"))
     )
 
@@ -104,7 +100,7 @@ def set_symmetric_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sold_in(year: int) -> DataFrame:
         return (
-            _t(spark, sf_dir, "lineitem")
+            load_table(spark, sf_dir, "lineitem")
             .filter(F.year("l_shipdate") == year)
             .select(F.col("l_partkey").alias("partkey"))
             .distinct()

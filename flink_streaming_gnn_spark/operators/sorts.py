@@ -14,14 +14,10 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key ORDER BY with NULLS ordering + LIMIT (top-100 slice,
     fully tie-broken so the slice is deterministic)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select(
             "o_orderkey",
@@ -41,7 +37,7 @@ def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDER BY + LIMIT → TakeOrderedAndProject (global top-k without a
     global sort)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
             "l_orderkey",

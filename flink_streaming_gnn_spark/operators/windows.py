@@ -17,13 +17,9 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def win_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """row_number / rank / dense_rank / ntile over orders per customer."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -40,7 +36,7 @@ def win_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag / lead / first / last over each user's event timeline."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return ev.select(
@@ -57,7 +53,7 @@ def win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def win_frame_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running/frame aggregates: cumulative sum and a trailing 3-row mean."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -100,7 +96,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer (BASELINE ``window_topk_per_group``).
     Ranking window + filter — Spark pushes the rank<=k filter into the
     window node (WindowGroupLimit) so only k rows per key survive the sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -122,7 +118,7 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     imputation: error events' values are masked to NULL and each row
     reads the most recent (and the first upcoming) non-masked value.
     One per-user sort shared by both frames, all JVM."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     masked = F.when(F.col("event_type") == "error", None).otherwise(
         F.col("value")
     )

@@ -39,9 +39,15 @@ from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.components import (
     ORACLE as _BATCH_ORACLE,
+    component_summary,
     hash_min_cc,
 )
-from flink_streaming_gnn_spark.graph.edges import derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
+)
+from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 from flink_streaming_gnn_spark.sources.tables import table_path
 
 N_CHUNKS = 8
@@ -92,17 +98,18 @@ def merge_batch(prior_labels: DataFrame | None, batch_und: DataFrame) -> DataFra
     und = batch_und
     if prior_labels is not None:
         prior = prior_labels.select(F.col("v").alias("a"), F.col("lbl").alias("b"))
-        und = und.union(prior).union(
-            prior.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+        und = und.union(both_directions(prior))
     return hash_min_cc(und)
 
 
+@release_superseded_checkpoints
 def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained component labels over the streamed edge
     events; returns the per-component summary of the FINAL state — equal
     to the batch ``graph_connected_components`` answer by construction
-    (module docstring), so the batch key's exact oracle applies."""
+    (module docstring), so the batch key's exact oracle applies. The
+    last micro-batch's hash_min_cc labels checkpoint is released at exit
+    like every iterative kernel's."""
     import uuid
 
     state_root = os.path.join(
@@ -112,13 +119,7 @@ def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = {"path": None}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = (
-            batch_df.select(
-                (F.col("src") * 2).alias("a"), (F.col("dst") * 2 + 1).alias("b")
-            )
-            .distinct()
-        )
-        und = b.union(b.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        und = both_directions(bipartite_pairs(batch_df))
         # star edges both ways; root self-loops keep isolated-rooted
         # vertices alive in the endpoint-derived init set
         prior = (
@@ -141,36 +142,7 @@ def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    # The last micro-batch's final hash_min_cc labels frame (a
-    # localCheckpoint — block-manager heap) is unreferenced once the
-    # drain ends but its py4j proxy sits in a reference cycle; collect it
-    # here so the key leaves no |V|-sized residue in a long-lived JVM
-    # (see plans/truncate.release_superseded_checkpoints for the measured
-    # numbers).
-    import gc
-
-    gc.collect()
-
-    labels = spark.read.parquet(state["path"])
-    return (
-        labels.groupBy("lbl")
-        .agg(
-            F.count("*").cast("long").alias("n_vertices"),
-            F.sum(((F.col("v") % 2) == 0).cast("long")).cast("long").alias(
-                "n_customers"
-            ),
-            F.sum(((F.col("v") % 2) == 1).cast("long")).cast("long").alias(
-                "n_suppliers"
-            ),
-        )
-        .select(
-            F.col("lbl").cast("long").alias("component"),
-            "n_vertices",
-            "n_customers",
-            "n_suppliers",
-        )
-        .orderBy("component")
-    )
+    return component_summary(spark.read.parquet(state["path"]))
 
 
 QUERIES = {"stream_cc_e2e": stream_cc_e2e}

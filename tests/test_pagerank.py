@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import derive_edges
@@ -15,6 +16,7 @@ from flink_streaming_gnn_spark.graph.pagerank import (
     graph_pagerank,
     pagerank_ranks,
 )
+from flink_streaming_gnn_spark.graph.ppr import ppr_ranks
 from tests.conftest import SF_SMOKE
 
 
@@ -59,3 +61,16 @@ def test_pagerank_mass_and_summary(spark):
     n_sup = int((ranks["v"] % 2 == 1).sum())
     head = top.head(min(n_sup, 100))
     assert (head["v"] % 2 == 1).all()
+
+
+@pytest.mark.parametrize("kernel", [pagerank_ranks, ppr_ranks], ids=["pagerank", "ppr"])
+def test_rank_state_is_checkpoint_leaf(spark, kernel):
+    """The returned rank frame is a checkpoint leaf: its logical plan has
+    the same size after 2 rounds as after 6, so no round's plan embeds
+    the previous round's."""
+
+    def plan_lines(rounds: int) -> int:
+        df = kernel(spark, SF_SMOKE, rounds=rounds)
+        return len(df._jdf.queryExecution().logical().toString().splitlines())
+
+    assert plan_lines(2) == plan_lines(6)

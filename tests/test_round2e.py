@@ -15,8 +15,12 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.graph.closeness import (
     MAX_HOPS,
     SEED_MOD,
-    _undirected,
     graph_closeness_centrality,
+)
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
 )
 from flink_streaming_gnn_spark.graph.ops import graph_degree_distribution
 from flink_streaming_gnn_spark.operators.fuzzy import (
@@ -33,7 +37,8 @@ from tests.conftest import SF_SMOKE
 
 def test_closeness_matches_bfs_brute_force(spark):
     adj: dict[int, set[int]] = {}
-    for r in _undirected(spark, SF_SMOKE).collect():
+    pairs = bipartite_pairs(derive_edges(spark, SF_SMOKE))
+    for r in both_directions(pairs).collect():
         adj.setdefault(int(r.a), set()).add(int(r.b))
     seeds = [v for v in adj if v % SEED_MOD == 0]
     assert seeds, "fixture must contain at least one landmark seed"

@@ -19,8 +19,12 @@ from flink_streaming_gnn_spark.graph.betweenness import (
     MAX_D,
     N_LANDMARKS,
     SEED_MOD,
-    _undirected,
     graph_betweenness_landmark,
+)
+from flink_streaming_gnn_spark.graph.edges import (
+    bipartite_pairs,
+    both_directions,
+    derive_edges,
 )
 from flink_streaming_gnn_spark.llm.bpe import MERGES, tokenizer_bpe_train
 from flink_streaming_gnn_spark.operators.anomaly import (
@@ -121,7 +125,8 @@ def _python_brandes(adj: dict[int, set[int]], seeds: list[int], max_d: int):
 
 
 def test_betweenness_vs_python_brandes(spark):
-    edges = {(int(r.a), int(r.b)) for r in _undirected(spark, SF_ORACLE).collect()}
+    pairs = bipartite_pairs(derive_edges(spark, SF_ORACLE))
+    edges = {(int(r.a), int(r.b)) for r in both_directions(pairs).collect()}
     adj: dict[int, set[int]] = defaultdict(set)
     verts = set()
     for a, b in edges:

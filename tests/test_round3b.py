@@ -353,17 +353,16 @@ def test_bigram_pmi_matches_python(spark):
 def test_coreness_matches_exact_peeling(spark):
     import heapq
 
-    from flink_streaming_gnn_spark.graph.coreness import (
-        _undirected,
-        graph_coreness_hindex,
-    )
+    from flink_streaming_gnn_spark.graph.coreness import graph_coreness_hindex
+    from flink_streaming_gnn_spark.graph.edges import bipartite_pairs, both_directions
 
     got = {
         r["v"]: r["coreness"]
         for r in graph_coreness_hindex(spark, SF_ORACLE).collect()
     }
     adj: dict[int, set] = {}
-    for r in _undirected(spark, SF_ORACLE).collect():
+    pairs = bipartite_pairs(derive_edges(spark, SF_ORACLE))
+    for r in both_directions(pairs).collect():
         adj.setdefault(r["a"], set()).add(r["b"])
     deg = {v: len(n) for v, n in adj.items()}
     core: dict[int, int] = {}

@@ -578,9 +578,9 @@ def test_rich_club_matches_python(spark):
     from collections import Counter
 
     from flink_streaming_gnn_spark.graph.richclub import LADDER, graph_rich_club
-    from flink_streaming_gnn_spark.graph.richclub import _undirected_ab
+    from flink_streaming_gnn_spark.graph.edges import bipartite_pairs, derive_edges
 
-    e = _undirected_ab(spark, SF_SMOKE).toPandas()
+    e = bipartite_pairs(derive_edges(spark, SF_SMOKE)).toPandas()
     pairs = list(zip(e["a"].astype(int), e["b"].astype(int)))
     deg = Counter()
     for a, b in pairs:

@@ -13,7 +13,7 @@ Creates a detached worktree at <baseline-ref>, then alternates
 HEAD-arm / baseline-arm probe invocations (fresh JVM per arm per
 round, idle-gated on 1-min load), printing per-arm wall times. Each
 arm runs every key against the published ×10 blown corpus with a noop
-sink, like tools/probe_r7.py. The worktree is removed on exit.
+sink. The worktree is removed on exit.
 
 Verdict discipline: only claim a code-attributed delta when the arms
 separate beyond their own within-arm spread.
@@ -31,7 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # self-contained arm body (the baseline ref may predate any probe_r*.py):
 # import the ARM TREE's package, run each key against the published ×10
-# corpus with a noop sink, print per-key wall time — probe_r7.py's loop
+# corpus with a noop sink, print per-key wall time
 _ARM_BODY = r"""
 import glob, re, sys, time
 tree, keys = sys.argv[1], sys.argv[2:]
