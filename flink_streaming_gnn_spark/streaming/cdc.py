@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.streaming.replay import events_stream
+from flink_streaming_gnn_spark.streaming.replay import drain, events_stream
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -35,10 +35,13 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
     )
 
 
-def run_cdc_apply(spark: SparkSession, sf_dir: str, log_dir: str, ckpt_dir: str) -> None:
+def run_cdc_apply(
+    spark: SparkSession, sf_dir: str, log_dir: str, ckpt_dir: str | None = None
+) -> None:
     """Replay the events fixture as a multi-batch stream; foreachBatch
     appends each micro-batch's latest-per-user rows (plus batch_id for
-    idempotent replay) to the changelog."""
+    idempotent replay) to the changelog. ``ckpt_dir`` is kept only when
+    given (re-draining against it must add no rows)."""
     stream = events_stream(spark, sf_dir, files_per_trigger=2)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -49,13 +52,7 @@ def run_cdc_apply(spark: SparkSession, sf_dir: str, log_dir: str, ckpt_dir: str)
             .parquet(log_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, "append", apply_batch, ckpt_dir)
 
 
 def read_snapshot(spark: SparkSession, log_dir: str) -> DataFrame:

@@ -30,9 +30,6 @@ return stays valid for the session; nothing outlives the process).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_streaming_gnn_spark.sources.scratch import ephemeral_dir
@@ -42,24 +39,16 @@ from flink_streaming_gnn_spark.streaming.topk import TOP_K, run_windowed_topk
 
 def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stream to completion, return the sink as a lazy scan — no
-    driver materialization. The sink is per-call (module docstring);
-    checkpoints are deleted once drained."""
+    driver materialization. The sink is per-call (module docstring); the
+    checkpoint is the drain's temporary one (replay.drain)."""
     out = ephemeral_dir("stream_topk_out")
-    ckpt = tempfile.mkdtemp(prefix="stream_topk_ckpt_")
-    try:
-        run_windowed_topk(spark, sf_dir, out, ckpt)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_windowed_topk(spark, sf_dir, out)
     return spark.read.parquet(out)
 
 
 def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = ephemeral_dir("stream_cdc_log")
-    ckpt = tempfile.mkdtemp(prefix="stream_cdc_ckpt_")
-    try:
-        run_cdc_apply(spark, sf_dir, log, ckpt)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_cdc_apply(spark, sf_dir, log)
     return read_snapshot(spark, log)
 
 
@@ -149,36 +138,16 @@ def stream_gnn_sage_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet spool (VERDICT r8 "What's wrong" #1)."""
     from pyspark.sql import functions as F
 
-    from flink_streaming_gnn_spark.sources.scratch import (
-        fixture_fingerprint,
-        scratch_dir,
-    )
-    from flink_streaming_gnn_spark.sources.tables import load_table, table_path
-    from flink_streaming_gnn_spark.streaming.gnn import edges_v_with_ts, windowed_sage
+    from flink_streaming_gnn_spark.sources.tables import load_table
+    from flink_streaming_gnn_spark.streaming.gnn import edges_stream, windowed_sage
     from flink_streaming_gnn_spark.streaming.replay import run_complete_spooled
 
-    # chunked replay input, built once per process from the fixture and
-    # gone at exit (replay.py events_stream discipline — round 10 removed
-    # the digest-keyed cross-run cache this used to keep)
-    chunk_dir = scratch_dir(
-        "gnn_edge_chunks",
-        fixture_fingerprint(
-            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
-        ),
-        lambda staging: edges_v_with_ts(spark, sf_dir)
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-    stream = (
-        spark.readStream.schema("src_v long, dst_v long, ts timestamp")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(chunk_dir)
-    )
     features = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("feat")
     )
-    return run_complete_spooled(windowed_sage(stream, features), "gnn_sage_e2e")
+    return run_complete_spooled(
+        windowed_sage(edges_stream(spark, sf_dir), features), "gnn_sage_e2e"
+    )
 
 
 DECAY_TAU_S = 6 * 3600.0  # 6-hour memory half-life scale

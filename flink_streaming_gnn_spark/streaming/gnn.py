@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.graph.edges import EMB_MOD
 from flink_streaming_gnn_spark.graph.sage import DIM, OUT_DIM, sage_weights
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
-from flink_streaming_gnn_spark.sources.tables import load_table
+from flink_streaming_gnn_spark.sources.scratch import fixture_fingerprint, scratch_dir
+from flink_streaming_gnn_spark.sources.tables import load_table, table_path
 
 
 def edges_v_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,6 +36,28 @@ def edges_v_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod("o_custkey", F.lit(EMB_MOD)).cast("long").alias("src_v"),
         F.pmod("l_suppkey", F.lit(EMB_MOD)).cast("long").alias("dst_v"),
         F.col("l_shipdate").alias("ts"),
+    )
+
+
+def edges_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unbounded-source view of ``edges_v_with_ts``: the edge events
+    hash-chunked into 8 parquet files replayed 2 per trigger, built once
+    per process from the fixture and gone at exit (sources/scratch.py:
+    a fresh run derives everything from the fixture inputs)."""
+    chunk_dir = scratch_dir(
+        "gnn_edge_chunks",
+        fixture_fingerprint(
+            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
+        ),
+        lambda staging: edges_v_with_ts(spark, sf_dir)
+        .repartition(8)
+        .write.mode("overwrite")
+        .parquet(staging),
+    )
+    return (
+        spark.readStream.schema("src_v long, dst_v long, ts timestamp")
+        .option("maxFilesPerTrigger", 2)
+        .parquet(chunk_dir)
     )
 
 

@@ -29,10 +29,8 @@ arrival-order-invariant, so batching never changes the fixpoint.
 
 from __future__ import annotations
 
-import glob
 import os
-import tempfile
-import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,9 +46,17 @@ from flink_streaming_gnn_spark.graph.edges import (
     derive_edges,
 )
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.sources.scratch import (
+    ephemeral_dir,
+    fixture_fingerprint,
+    scratch_dir,
+)
 from flink_streaming_gnn_spark.sources.tables import table_path
+from flink_streaming_gnn_spark.streaming.replay import (
+    drain,
+    write_time_ordered_chunks,
+)
 
-N_CHUNKS = 8
 FILES_PER_TRIGGER = 2  # -> 4 micro-batches over the fixture
 
 
@@ -59,30 +65,16 @@ def edges_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders edge events re-chunked into ship-date-ordered parquet ranges,
     built once per process from the fixture and gone at exit (the
     events_stream discipline, replay.py / sources/scratch.py)."""
-    from flink_streaming_gnn_spark.sources.scratch import (
-        fixture_fingerprint,
-        scratch_dir,
-    )
-
-    def _build(staging: str) -> None:
-        (
-            derive_edges(spark, sf_dir)
-            .select("src", "dst", "ts")
-            .repartitionByRange(N_CHUNKS, "ts", "src", "dst")
-            .sortWithinPartitions("ts", "src", "dst")
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        base = int(time.time())
-        for i, p in enumerate(sorted(glob.glob(os.path.join(staging, "part-*")))):
-            os.utime(p, (base + i, base + i))
-
     chunk_dir = scratch_dir(
         "edge_chunks",
         fixture_fingerprint(
             table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
         ),
-        _build,
+        lambda staging: write_time_ordered_chunks(
+            derive_edges(spark, sf_dir).select("src", "dst", "ts"),
+            ["ts", "src", "dst"],
+            staging,
+        ),
     )
     return (
         spark.readStream.schema("src long, dst long, ts timestamp_ntz")
@@ -102,6 +94,37 @@ def merge_batch(prior_labels: DataFrame | None, batch_und: DataFrame) -> DataFra
     return hash_min_cc(und)
 
 
+def _newest_version(state_root: str, below: int | None = None) -> str | None:
+    """Path of the newest label version ``v<k>`` under ``state_root``
+    (only ``k < below`` when given), or None if there is none."""
+    ks = [int(d[1:]) for d in os.listdir(state_root) if d[:1] == "v" and d[1:].isdigit()]
+    ks = [k for k in ks if below is None or k < below]
+    return os.path.join(state_root, f"v{max(ks)}") if ks else None
+
+
+def versioned_apply(state_root: str) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch step of ``stream_cc_e2e``: micro-batch ``batch_id``
+    merges its edges into the newest version ``v<k>`` with ``k <
+    batch_id`` under ``state_root`` and writes ``v<batch_id>`` with
+    overwrite. The prior state is read from DISK, never held in Python,
+    which is what makes a restart from the checkpoint correct: a re-run
+    batch overwrites its own version and rebuilds from its true
+    predecessor."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        prior = _newest_version(state_root, below=batch_id)
+        # star edges both ways; root self-loops keep isolated-rooted
+        # vertices alive in the endpoint-derived init set
+        labels = merge_batch(
+            batch_df.sparkSession.read.parquet(prior) if prior else None,
+            both_directions(bipartite_pairs(batch_df)),
+        )
+        out = os.path.join(state_root, f"v{batch_id}")
+        labels.write.mode("overwrite").parquet(out)
+
+    return apply_batch
+
+
 @release_superseded_checkpoints
 def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained component labels over the streamed edge
@@ -109,40 +132,12 @@ def stream_cc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the batch ``graph_connected_components`` answer by construction
     (module docstring), so the batch key's exact oracle applies. The
     last micro-batch's hash_min_cc labels checkpoint is released at exit
-    like every iterative kernel's."""
-    import uuid
-
-    state_root = os.path.join(
-        tempfile.gettempdir(), f"cc_state_{uuid.uuid4().hex[:8]}"
-    )
-    os.makedirs(state_root, exist_ok=True)
-    state = {"path": None}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        und = both_directions(bipartite_pairs(batch_df))
-        # star edges both ways; root self-loops keep isolated-rooted
-        # vertices alive in the endpoint-derived init set
-        prior = (
-            spark.read.parquet(state["path"])
-            if state["path"] is not None
-            else None
-        )
-        labels = merge_batch(prior, und)
-        out = os.path.join(state_root, f"v{batch_id}")
-        labels.write.mode("overwrite").parquet(out)
-        state["path"] = out
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            edges_stream(spark, sf_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    return component_summary(spark.read.parquet(state["path"]))
+    like every iterative kernel's. The label versions live in a per-call
+    scratch dir, removed at interpreter exit."""
+    state_root = ephemeral_dir("cc_state")
+    os.makedirs(state_root)
+    drain(edges_stream(spark, sf_dir), "append", versioned_apply(state_root))
+    return component_summary(spark.read.parquet(_newest_version(state_root)))
 
 
 QUERIES = {"stream_cc_e2e": stream_cc_e2e}

@@ -1,34 +1,96 @@
-"""Deterministic stream replay of the ``events`` fixture (SURVEY.md §5.2#3).
+"""Deterministic stream replay of the ``events`` fixture (SURVEY.md §5.2#3),
+and the engine's one stream drain.
 
 Reference analogue: the bounded-rate edge/event stream sources (§2A A1).
 Spark-first: a file stream over the same parquet + ``Trigger.AvailableNow``
 gives an exactly-replayable unbounded-source simulation — every micro-batch
 boundary is deterministic, so streamed results can be asserted equal to the
 batch twin on the same fixture (the test the reference never had).
+
+The drain contract
+------------------
+``drain(stream_df, output_mode, sink, checkpoint=None)`` is the only place
+the engine starts a streaming query. It runs ``foreachBatch(sink)`` under
+``Trigger.AvailableNow`` and blocks until every input available at start
+has been processed; the sink is the terminal operator of the dataflow.
+
+* **Modes.** ``complete``, ``update`` or ``append``, passed to Spark
+  unchanged; the sink sees each micro-batch's emission in that mode.
+* **Checkpoint lifetime.** Without ``checkpoint`` the query runs on a
+  temporary checkpoint directory that is removed when ``drain`` returns.
+  A caller passes its own directory only when the checkpoint must outlive
+  the call: the restart tests (tests/test_round8.py) stop a stream after
+  one trigger and resume it from that directory, the CDC exactly-once
+  test re-drains a finished stream against it, and scd2 reads its final
+  keyed state back through the ``statestore`` data source
+  (``run_update_spooled_with_state``).
+* **Spool layout.** ``run_{append,update,complete}_spooled`` are ``drain``
+  with a parquet-spool sink in a per-call ``sources/scratch.ephemeral_dir``
+  (removed at interpreter exit; the lazily read result stays valid for the
+  session). Complete mode overwrites the spool root on every trigger, so
+  the last trigger leaves exactly the final result. Append and update
+  modes write ``b<batch_id>`` per micro-batch, with overwrite: foreachBatch
+  is exactly-once only if the sink is idempotent, and a micro-batch re-run
+  after a checkpoint restart then replaces its own output instead of
+  duplicating it (ADVICE r9). The union of the batch dirs is the stream's
+  emission; for update mode a key's final row is the one with the
+  largest value of the operator's monotone column (``running_count``,
+  ``seq``, ``last_ts_epoch``).
+* **Why a spool, not Spark's memory sink.** Every emitted row goes through
+  executor-side parquet writes, never the driver. Measured on the memory
+  sink this engine drained through until round 9:
+  - complete mode re-collects the ENTIRE result into the driver every
+    trigger — the ×100 probe killed stream_session_e2e that way
+    (TaskResultGetter blowup at ~10⁸ events);
+  - append mode pins every emitted row in a session-lifetime temp table
+    that nothing drops — the ×100 single-JVM soak measured up to ~16 GiB
+    of live driver heap after the append-drained e2e keys had finished
+    (the ×100 outer-join output alone held ~12 GiB);
+  - update mode keeps ~|keys|·|triggers| rows in the driver — the ×10
+    probe measured ~90 s of pure driver ingestion for the 10M-row scd2
+    emission.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
+import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_streaming_gnn_spark.sources.scratch import (
+    ephemeral_dir,
+    fixture_fingerprint,
+    scratch_dir,
+)
 from flink_streaming_gnn_spark.sources.tables import load_table
 
-# events schema as stored (ts = TIMESTAMP(NANOS) read as long; see tables.py)
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+
+def write_time_ordered_chunks(frame: DataFrame, order: list[str], staging: str) -> None:
+    """Write ``frame`` into ``staging`` as 8 EVENT-TIME ORDERED parquet
+    chunks: ``repartitionByRange`` on ``order`` (event time first, then
+    tiebreak columns) splits it into contiguous time ranges, and each
+    chunk file's mtime is bumped monotonically so the file source (which
+    orders by modification time) replays them in event-time order — a
+    real stream is approximately time-ordered, and only then are watermark
+    semantics deterministic (hash-chunked replay made every batch after
+    the first arrive mostly behind the watermark, so late-drop became an
+    accident of which keys hashed into the first file)."""
+    (
+        frame.repartitionByRange(8, *order)
+        .sortWithinPartitions(*order)
+        .write.mode("overwrite")
+        .parquet(staging)
+    )
+    # part-0000i corresponds to the i-th range; pin the source's
+    # processing order by giving each range a strictly increasing mtime
+    base = int(time.time())
+    for i, p in enumerate(sorted(glob.glob(os.path.join(staging, "part-*")))):
+        os.utime(p, (base + i, base + i))
 
 
 def events_stream(
@@ -36,50 +98,22 @@ def events_stream(
 ) -> DataFrame:
     """Unbounded-source view of the events fixture.
 
-    Re-chunks the single fixture parquet into several files first so the
-    file source produces multiple micro-batches (real incremental state
-    updates, not one giant batch).
-
-    Chunks are EVENT-TIME ORDERED: ``repartitionByRange`` on ts splits the
-    fixture into contiguous time ranges and each chunk file's mtime is
-    bumped monotonically so the file source (which orders by modification
-    time) replays them in event-time order — a real stream is
-    approximately time-ordered, and only then are watermark semantics
-    deterministic (hash-chunked replay made every batch after the first
-    arrive mostly behind the watermark, so late-drop became an accident of
-    which keys hashed into the first file).
+    Re-chunks the single fixture parquet into several time-ordered files
+    first (``write_time_ordered_chunks``) so the file source produces
+    multiple micro-batches (real incremental state updates, not one giant
+    batch).
 
     Chunks are built ONCE PER PROCESS from the parquet fixture and die
     with the process (sources/scratch.py — round 10 removed the
     digest-keyed cross-run /tmp cache this used to keep; a fresh run must
     derive everything from the fixture inputs).
     """
-    import glob
-    import time
-
-    from flink_streaming_gnn_spark.sources.scratch import (
-        fixture_fingerprint,
-        scratch_dir,
-    )
-
-    def _build(staging: str) -> None:
-        (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(8, "ts", "event_id")
-            .sortWithinPartitions("ts", "event_id")
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        # part-0000i corresponds to the i-th ts range; pin the source's
-        # processing order by giving each range a strictly increasing mtime
-        base = int(time.time())
-        for i, p in enumerate(sorted(glob.glob(os.path.join(staging, "part-*")))):
-            os.utime(p, (base + i, base + i))
-
     chunk_dir = scratch_dir(
         "events_chunks",
         "v2-tsorder:" + fixture_fingerprint(os.path.join(sf_dir, "events.parquet")),
-        _build,
+        lambda staging: write_time_ordered_chunks(
+            load_table(spark, sf_dir, "events"), ["ts", "event_id"], staging
+        ),
     )
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(
@@ -91,170 +125,88 @@ def events_stream(
     return reader.parquet(chunk_dir)
 
 
-def run_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Execute a streaming DataFrame with Trigger.AvailableNow into a memory
-    sink, block until drained, return the materialized result as a batch DF.
-    Output mode 'complete' (windowed aggregations).
-
-    TEST-ONLY since round 9: the memory sink re-collects the full
-    complete-mode result into the driver every trigger — fatal at ×100
-    for data-sized results. Every production ``queries()`` key drains via
-    ``run_complete_spooled``; this stays for fixture-scale pytest twins
-    where a driver collect is the point of the assertion."""
-    spark = stream_df.sparkSession
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream_df.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def run_append_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Same, for append-mode streams (dedup, watermark-closed windows).
-
-    TEST-ONLY since round 9: an append stream's RESULT is every emitted
-    row, and the memory sink pins that result in driver heap for the
-    SESSION lifetime (the sink registers a temp table named
-    ``query_name`` that nothing ever drops) — the ×100 single-JVM soak
-    measured the cumulative residue of the append-drained e2e keys at
-    up to ~16 GiB of live heap AFTER the queries finished. Every
-    production ``queries()`` key drains via ``run_append_spooled``."""
-    return _run_mode(stream_df, query_name, "append")
+def drain(
+    stream_df: DataFrame,
+    output_mode: str,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``stream_df`` to completion: ``foreachBatch(sink)`` under
+    ``Trigger.AvailableNow``, blocking until drained. The checkpoint is a
+    temporary directory removed on return unless the caller passes one
+    (module docstring)."""
+    if checkpoint is None:
+        with tempfile.TemporaryDirectory(prefix="graft_stream_ckpt_") as tmp:
+            drain(stream_df, output_mode, sink, tmp)
+        return
+    (
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def run_append_spooled(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Append-mode drain for DATA-SIZED emission streams (dedup key sets,
-    watermark-closed windows, stream–stream join output): ``foreachBatch``
-    appends each micro-batch's rows to a parquet spool — parallel
-    executor-side writes, nothing through the driver — and the result is
-    the spool read back lazily. Union-of-batches is exactly the memory
-    sink's contents for an append stream (each row emits once, on the
-    trigger that produced it), minus the session-lifetime driver-heap
-    pinning: the memory sink's temp table held the ×100 outer-join
-    output (~12 GiB) live until JVM exit."""
-    return _run_spooled(stream_df, query_name, "append", keep_state=False)
-
-
-def run_update_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Same, for update-mode streams (stateful operators emitting per-key
-    updates each micro-batch). The memory sink keeps every emitted row, so
-    a key's *last* row is its final state.
-
-    TEST-ONLY since round 9: retains ~|keys|·|triggers| rows in driver
-    memory. Production keys drain via ``run_update_spooled``."""
-    return _run_mode(stream_df, query_name, "update")
+    """Append-mode spool drain for DATA-SIZED emission streams (dedup key
+    sets, watermark-closed windows, stream–stream join output): the
+    result is the union of every micro-batch's emission, read back
+    lazily."""
+    return _spool(stream_df, query_name, "append")
 
 
 def run_complete_spooled(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Complete-mode drain whose RESULT is data-sized (e.g. per-user
-    session windows — rows grow with the corpus): ``foreachBatch``
-    OVERWRITES a parquet spool with each trigger's full re-emission, so
-    the last trigger leaves exactly the final state on disk and nothing
-    ever materializes in the driver. The memory sink this replaces
-    re-collects the ENTIRE complete-mode result into driver memory every
-    trigger — the ×100 probe killed stream_session_e2e that way
-    (TaskResultGetter blowup at ~10⁸ events). Per-trigger overwrite is
-    idempotent under replay, the same discipline as streaming/topk.py."""
-    spark = stream_df.sparkSession
-    import uuid
-
-    spool = os.path.join(
-        tempfile.gettempdir(), f"stream_cspool_{query_name}_{uuid.uuid4().hex[:8]}"
-    )
-    _cleanup_at_exit(spool)
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(spool)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream_df.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _read_spool(spark, spool, stream_df.schema)
+    """Complete-mode spool drain whose RESULT is data-sized (e.g. per-user
+    session windows — rows grow with the corpus): the last trigger's full
+    re-emission, read back lazily."""
+    return _spool(stream_df, query_name, "complete")
 
 
 def run_update_spooled(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Update-mode drain for HIGH-VOLUME emission streams (e.g. the
-    event-sized SCD2 history): ``foreachBatch`` appends each
-    micro-batch's rows to a parquet spool — parallel executor-side
-    writes — instead of materializing everything in the driver-memory
-    sink. The ×10 probe measured the memory sink at ~90 s of pure
-    driver ingestion for a 10M-row emission; the spool removes that
-    entirely. Returns the spool read back lazily (one columnar scan)."""
-    return _run_spooled(stream_df, query_name, "update", keep_state=False)
+    """Update-mode spool drain for HIGH-VOLUME emission streams (e.g. the
+    event-sized SCD2 history): every per-key update of every
+    micro-batch, read back lazily (one columnar scan)."""
+    return _spool(stream_df, query_name, "update")
 
 
 def run_update_spooled_with_state(
     stream_df: DataFrame, query_name: str
 ) -> tuple[DataFrame, str]:
-    """run_update_spooled, additionally preserving the checkpoint
-    directory until process exit (like the spool, it lives in tmp for
-    the session — both are registered for atexit cleanup) and returning
-    it alongside the result, so the caller can read the drained query's
-    FINAL keyed state back through Spark 4's ``statestore`` data source
-    — a genuine drain-time state readout (VERDICT r6 "Next round" #6).
+    """run_update_spooled, additionally keeping the checkpoint directory
+    until process exit (a per-call scratch dir, like the spool) and
+    returning it alongside the result, so the caller can read the drained
+    query's FINAL keyed state back through Spark 4's ``statestore`` data
+    source — a genuine drain-time state readout (VERDICT r6 "Next round"
+    #6).
 
     A separate function, not a flag: a flag-dependent return shape
     (DataFrame vs tuple) is easy to mis-unpack from new call sites
     (ADVICE r7)."""
-    return _run_spooled(stream_df, query_name, "update", keep_state=True)
+    ckpt = ephemeral_dir(f"stream_ckpt_{query_name}")
+    return _spool(stream_df, query_name, "update", ckpt), ckpt
 
 
-def _run_spooled(
-    stream_df: DataFrame, query_name: str, output_mode: str, keep_state: bool
-) -> DataFrame | tuple[DataFrame, str]:
-    import contextlib
-    import uuid
-
-    spark = stream_df.sparkSession
-    run_id = uuid.uuid4().hex[:8]
-    spool = os.path.join(
-        tempfile.gettempdir(), f"stream_spool_{query_name}_{run_id}"
-    )
-    _cleanup_at_exit(spool)
+def _spool(
+    stream_df: DataFrame,
+    query_name: str,
+    output_mode: str,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    spool = ephemeral_dir(f"stream_spool_{query_name}")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # One sub-directory per micro-batch, written with overwrite:
-        # foreachBatch is exactly-once only if the sink is idempotent,
-        # and a blind append would duplicate rows if a micro-batch were
-        # re-executed after a checkpoint restart (ADVICE r9). Overwrite
-        # of the batch's own dir makes replays a no-op; the union of
-        # batch dirs is read back recursively below.
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(spool, f"b{batch_id}")
-        )
+        # complete: overwrite the root with the full re-emission;
+        # append/update: overwrite this micro-batch's own dir (idempotent
+        # under a post-restart re-run, module docstring)
+        if output_mode == "complete":
+            batch_df.write.mode("overwrite").parquet(spool)
+        else:
+            batch_df.write.mode("overwrite").parquet(os.path.join(spool, f"b{batch_id}"))
 
-    if keep_state:
-        kept = os.path.join(
-            tempfile.gettempdir(), f"stream_ckpt_{query_name}_{run_id}"
-        )
-        _cleanup_at_exit(kept)
-        ckpt_ctx = contextlib.nullcontext(kept)
-    else:
-        ckpt_ctx = tempfile.TemporaryDirectory()
-    with ckpt_ctx as ckpt:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if keep_state:
-        return _read_spool(spark, spool, stream_df.schema), kept
-    return _read_spool(spark, spool, stream_df.schema)
+    drain(stream_df, output_mode, sink, checkpoint)
+    return _read_spool(stream_df.sparkSession, spool, stream_df.schema)
 
 
 def _read_spool(spark: SparkSession, spool: str, schema: T.StructType) -> DataFrame:
@@ -266,10 +218,10 @@ def _read_spool(spark: SparkSession, spool: str, schema: T.StructType) -> DataFr
     The stream's own schema is passed explicitly (the spool was written
     from exactly this stream, so it matches by construction) and the
     lookup is recursive: append/update spools hold one ``b<batch_id>``
-    sub-dir per micro-batch (idempotent overwrite-per-batch, ADVICE r9),
-    complete spools are flat — one reader covers both, with no
-    footer-inference job and no partition-column misparse of the ``bN``
-    names (recursiveFileLookup disables partition discovery)."""
+    sub-dir per micro-batch, complete spools are flat — one reader covers
+    both, with no footer-inference job and no partition-column misparse
+    of the ``bN`` names (recursiveFileLookup disables partition
+    discovery)."""
     if not os.path.isdir(spool):
         return spark.createDataFrame([], schema)
     return (
@@ -277,29 +229,3 @@ def _read_spool(spark: SparkSession, spool: str, schema: T.StructType) -> DataFr
         .option("recursiveFileLookup", "true")
         .parquet(spool)
     )
-
-
-def _cleanup_at_exit(path: str) -> None:
-    """Register a tmp artifact dir (spool / kept checkpoint) for removal
-    at interpreter exit — lazily-read results stay valid for the whole
-    session, but repeated bench/probe loops no longer accumulate
-    event-sized parquet spools in /tmp forever."""
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-
-
-def _run_mode(stream_df: DataFrame, query_name: str, mode: str) -> DataFrame:
-    spark = stream_df.sparkSession
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -172,16 +172,14 @@ def rate_events_stream(
 def source_rate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked drain of the rate source: one availableNow trigger
     of ``rate_events_stream`` (200 rows, all derived from the 0..199
-    sequence) into a memory sink. The DuckDB twin regenerates the same
-    rows from generate_series — a hash match proves the rate source's
-    event mapping end to end. Ignores ``sf_dir`` (the source is
-    synthetic by nature)."""
-    from flink_streaming_gnn_spark.streaming.replay import (
-        run_append_to_completion,
-    )
+    sequence) through the append-mode parquet spool. The DuckDB twin
+    regenerates the same rows from generate_series — a hash match proves
+    the rate source's event mapping end to end. Ignores ``sf_dir`` (the
+    source is synthetic by nature)."""
+    from flink_streaming_gnn_spark.streaming.replay import run_append_spooled
 
     ev = rate_events_stream(spark, rows_per_batch=200, num_partitions=8)
-    return run_append_to_completion(ev, "source_rate_ingest")
+    return run_append_spooled(ev, "source_rate_ingest")
 
 
 def source_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,14 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.streaming.replay import events_stream
+from flink_streaming_gnn_spark.streaming.replay import drain, events_stream
 
 TOP_K = 3
 
 
-def run_windowed_topk(
-    spark: SparkSession, sf_dir: str, out_dir: str, ckpt_dir: str
-) -> None:
+def run_windowed_topk(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Replay events as a multi-batch stream; per trigger, re-rank the
     complete windowed-count state and overwrite the top-k sink."""
     ev = events_stream(spark, sf_dir, files_per_trigger=2)
@@ -52,14 +50,7 @@ def run_windowed_topk(
             .parquet(out_dir)
         )
 
-    q = (
-        agg.writeStream.foreachBatch(rerank)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(agg, "complete", rerank)
 
 
 def batch_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

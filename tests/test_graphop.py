@@ -11,7 +11,7 @@ from flink_streaming_gnn_spark.graph.graphop import graphop_materialize, graphop
 from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.streaming.replay import (
     events_stream,
-    run_update_to_completion,
+    run_update_spooled,
 )
 from flink_streaming_gnn_spark.streaming.stateful import incremental_mean, latest_state
 from tests.conftest import SF_SMOKE
@@ -40,11 +40,12 @@ def test_streaming_latest_state_equals_batch_materialize(spark):
         F.col("user_id").alias("vertex"),
         F.col("value").alias("feat_value"),
     )
-    out = run_update_to_completion(
+    out = run_update_spooled(
         latest_state(stream_ops, "vertex", "seq"), "graphop_lww"
     ).toPandas()
-    # last emitted row per vertex = final state
-    final = out.sort_index().groupby("vertex").last().reset_index()
+    # final state per vertex = its emitted row with the largest seq (the
+    # operator's monotone column; spool rows carry no emission order)
+    final = out.sort_values("seq").drop_duplicates("vertex", keep="last")
     live = final[final.op != "REMOVE"]
 
     batch = graphop_materialize(spark, SF_SMOKE).toPandas()
@@ -64,10 +65,10 @@ def test_streaming_neighbor_agg_pipeline(spark):
         .join(F.broadcast(c), F.col("user_id") == F.col("c_custkey"))
         .select(F.col("user_id").alias("key"), F.col("c_acctbal").alias("value"))
     )
-    streamed = run_update_to_completion(
+    streamed = run_update_spooled(
         incremental_mean(msgs, "key", "value"), "nbr_agg_stream"
     ).toPandas()
-    final = streamed.groupby("key").last().reset_index()
+    final = streamed.sort_values("running_count").drop_duplicates("key", keep="last")
 
     batch = (
         load_table(spark, SF_SMOKE, "events")

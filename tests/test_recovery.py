@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.streaming.metrics import recorded_progress
-from flink_streaming_gnn_spark.streaming.replay import events_stream, run_to_completion
+from flink_streaming_gnn_spark.streaming.replay import events_stream, run_complete_spooled
 from tests.conftest import SF_SMOKE
 
 
@@ -73,7 +73,7 @@ def test_listener_accounts_all_rows(spark):
             .groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n"))
         )
-        result = run_to_completion(agg, "metrics_probe").toPandas()
+        result = run_complete_spooled(agg, "metrics_probe").toPandas()
         # bus delivery is async — catch up before the listener detaches
         seen = rec.await_rows(n_events)
     assert seen == n_events

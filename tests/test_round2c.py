@@ -38,7 +38,7 @@ def test_hll_sketch_estimates_within_bound(spark):
 def test_decayed_sum_stream_equals_batch(spark):
     from flink_streaming_gnn_spark.streaming.replay import (
         events_stream,
-        run_update_to_completion,
+        run_update_spooled,
     )
     from flink_streaming_gnn_spark.streaming.stateful import incremental_decayed_sum
 
@@ -46,7 +46,7 @@ def test_decayed_sum_stream_equals_batch(spark):
     stream = events_stream(spark, SF_SMOKE, files_per_trigger=2).select(
         "user_id", "ts", "value"
     )
-    out = run_update_to_completion(
+    out = run_update_spooled(
         incremental_decayed_sum(stream, "user_id", "value", "ts", tau),
         "decayed_stream",
     ).toPandas()

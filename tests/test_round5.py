@@ -136,9 +136,7 @@ def _ttl_dedup_sink(spark, tmp_path, rows):
     file) and drain dropDuplicatesWithinWatermark(30 min) to a sink."""
     import uuid
 
-    from flink_streaming_gnn_spark.streaming.replay import (
-        run_append_to_completion,
-    )
+    from flink_streaming_gnn_spark.streaming.replay import run_append_spooled
 
     import glob
     import os
@@ -169,7 +167,7 @@ def _ttl_dedup_sink(spark, tmp_path, rows):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
     name = "ttl_" + uuid.uuid4().hex[:8]
-    return run_append_to_completion(stream, name).collect()
+    return run_append_spooled(stream, name).collect()
 
 
 def test_ttl_dedup_drops_within_ttl(spark, tmp_path):

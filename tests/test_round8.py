@@ -154,6 +154,7 @@ def test_scd2_crash_resume_identical(spark):
     from pyspark.sql import functions as F
 
     from flink_streaming_gnn_spark.streaming.replay import (
+        drain,
         events_stream,
         run_update_spooled_with_state,
     )
@@ -195,23 +196,19 @@ def test_scd2_crash_resume_identical(spark):
                 os.path.join(spool, f"batch={batch_id}")
             )
 
-        def writer(trigger_kwargs):
-            return lambda: (
-                scd2_state_machine(stream())
-                .writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(**trigger_kwargs)
-                .start()
-            )
-
         # phase 1: exactly one committed trigger, then hard stop
-        _run_one_trigger_then_stop(writer({"processingTime": "100 seconds"}))
+        _run_one_trigger_then_stop(
+            lambda: scd2_state_machine(stream())
+            .writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="100 seconds")
+            .start()
+        )
         n_partial = spark.read.parquet(spool).count()
 
         # phase 2: resume from the same checkpoint, drain the rest
-        q2 = writer({"availableNow": True})()
-        q2.awaitTermination()
+        drain(scd2_state_machine(stream()), "update", sink, ckpt)
 
         closed = spark.read.parquet(spool)
         closed_rows = sorted(
@@ -247,14 +244,17 @@ def test_cc_crash_resume_identical(spark):
     registry key's. The drill's foreachBatch derives its prior state
     from DISK (latest committed version < batch_id), which is exactly
     what makes the resume correct: a re-run batch overwrites its own
-    version directory and rebuilds from its true predecessor."""
+    version directory and rebuilds from its true predecessor. The drill
+    drives the registry key's own batch function
+    (``graphcc.versioned_apply``)."""
     from pyspark.sql import functions as F
 
     from flink_streaming_gnn_spark.streaming.graphcc import (
         edges_stream,
-        merge_batch,
         stream_cc_e2e,
+        versioned_apply,
     )
+    from flink_streaming_gnn_spark.streaming.replay import drain
     from tests.conftest import SF_SMOKE
 
     def summarize(labels):
@@ -270,48 +270,18 @@ def test_cc_crash_resume_identical(spark):
         state_root = os.path.join(work, "state")
         os.makedirs(state_root)
 
-        def latest_version_below(batch_id):
-            versions = [
-                int(d[1:])
-                for d in os.listdir(state_root)
-                if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < batch_id
-            ]
-            return max(versions) if versions else None
+        apply_batch = versioned_apply(state_root)
 
-        def apply_batch(batch_df, batch_id):
-            b = (
-                batch_df.select(
-                    (F.col("src") * 2).alias("a"),
-                    (F.col("dst") * 2 + 1).alias("b"),
-                )
-                .distinct()
-            )
-            und = b.union(b.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            v = latest_version_below(batch_id)
-            prior = (
-                spark.read.parquet(os.path.join(state_root, f"v{v}"))
-                if v is not None
-                else None
-            )
-            labels = merge_batch(prior, und)
-            labels.write.mode("overwrite").parquet(
-                os.path.join(state_root, f"v{batch_id}")
-            )
-
-        def writer(trigger_kwargs):
-            return lambda: (
-                edges_stream(spark, SF_SMOKE)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(**trigger_kwargs)
-                .start()
-            )
-
-        _run_one_trigger_then_stop(writer({"processingTime": "100 seconds"}))
+        _run_one_trigger_then_stop(
+            lambda: edges_stream(spark, SF_SMOKE)
+            .writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="100 seconds")
+            .start()
+        )
         versions_after_phase1 = sorted(os.listdir(state_root))
 
-        q2 = writer({"availableNow": True})()
-        q2.awaitTermination()
+        drain(edges_stream(spark, SF_SMOKE), "append", apply_batch, ckpt)
 
         final_v = max(int(d[1:]) for d in os.listdir(state_root))
         assert f"v{final_v}" not in versions_after_phase1  # resume advanced

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
-from flink_streaming_gnn_spark.streaming.replay import run_to_completion
+from flink_streaming_gnn_spark.streaming.replay import run_complete_spooled
 from flink_streaming_gnn_spark.streaming.sources import (
     decode_events,
     encode_events_wire,
@@ -73,7 +73,7 @@ def test_same_windowed_plan_on_wire_double_equals_batch(spark):
     the Kafka wire double equals its batch evaluation: the source swap
     changes nothing downstream."""
     stream = wire_events_stream(spark, SF_SMOKE, files_per_trigger=2)
-    streamed = run_to_completion(
+    streamed = run_complete_spooled(
         _windowed_agg(stream.withWatermark("ts", "1 hour")), "kafka_double_win"
     ).toPandas()
     batch = _windowed_agg(load_table(spark, SF_SMOKE, "events")).toPandas()

@@ -10,7 +10,7 @@ from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.streaming.joins import _sides, interval_join
 from flink_streaming_gnn_spark.streaming.replay import (
     events_stream,
-    run_append_to_completion,
+    run_append_spooled,
 )
 from tests.conftest import SF_SMOKE
 
@@ -35,7 +35,7 @@ def test_interval_join_batch_equals_stream(spark):
     joined = interval_join(
         p_s.withWatermark("p_ts", "90 days"), c_s.withWatermark("c_ts", "90 days")
     ).select("p_id", "c_id")
-    streamed = run_append_to_completion(joined, "interval_join_stream").toPandas()
+    streamed = run_append_spooled(joined, "interval_join_stream").toPandas()
     stream_pairs = {(int(r.p_id), int(r.c_id)) for r in streamed.itertuples()}
 
     assert stream_pairs == batch_pairs

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.streaming.replay import (
     events_stream,
-    run_append_to_completion,
-    run_to_completion,
-    run_update_to_completion,
+    run_append_spooled,
+    run_complete_spooled,
+    run_update_spooled,
 )
 from flink_streaming_gnn_spark.streaming.stateful import incremental_mean
 from tests.conftest import SF_SMOKE
@@ -36,7 +36,7 @@ def test_stream_tumbling_equals_batch(spark):
             "v",
         )
     )
-    streamed = run_to_completion(agg, "tumbling_stream").toPandas()
+    streamed = run_complete_spooled(agg, "tumbling_stream").toPandas()
 
     batch = (
         load_table(spark, SF_SMOKE, "events")
@@ -61,7 +61,7 @@ def test_stream_dedup_within_watermark(spark):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    streamed = run_append_to_completion(dedup, "dedup_stream").toPandas()
+    streamed = run_append_spooled(dedup, "dedup_stream").toPandas()
     batch = (
         load_table(spark, SF_SMOKE, "events")
         .select("user_id", "event_type")
@@ -82,10 +82,12 @@ def test_incremental_mean_equals_batch(spark):
         F.col("user_id").alias("key"), F.col("value")
     )
     result = incremental_mean(stream, "key", "value")
-    streamed = run_update_to_completion(result, "incmean_stream").toPandas()
-    # keep only each key's final (last emitted) state
+    streamed = run_update_spooled(result, "incmean_stream").toPandas()
+    # keep only each key's final state: its emitted row with the largest
+    # running_count (monotone; spool rows carry no emission order)
     final = (
-        streamed.groupby("key").last().reset_index()[["key", "running_count", "running_mean"]]
+        streamed.sort_values("running_count")
+        .drop_duplicates("key", keep="last")[["key", "running_count", "running_mean"]]
     )
     batch = (
         load_table(spark, SF_SMOKE, "events")
@@ -114,8 +116,8 @@ def test_incremental_mean_retraction(spark):
         spark.createDataFrame(pdf).write.mode("overwrite").parquet(d)
         stream = spark.readStream.schema("key long, value double, delta_old double").parquet(d)
         result = incremental_mean(stream, "key", "value")
-        out = run_update_to_completion(result, "incmean_retract").toPandas()
-    final = out.groupby("key").last().reset_index()
+        out = run_update_spooled(result, "incmean_retract").toPandas()
+    final = out.sort_values("running_count").drop_duplicates("key", keep="last")
     k1 = final[final.key == 1].iloc[0]
     # key 1: 10 + 20 + (40 replacing 20) -> sum 50, count 2, mean 25
     assert k1.running_sum == 50.0 and k1.running_count == 2 and k1.running_mean == 25.0
@@ -140,9 +142,10 @@ def test_incremental_mean_tws_equals_batch(spark):
         F.col("user_id").alias("key"), F.col("value")
     )
     result = incremental_mean_tws(stream, "key", "value")
-    streamed = run_update_to_completion(result, "incmean_tws_stream").toPandas()
+    streamed = run_update_spooled(result, "incmean_tws_stream").toPandas()
     final = (
-        streamed.groupby("key").last().reset_index()[["key", "running_count", "running_mean"]]
+        streamed.sort_values("running_count")
+        .drop_duplicates("key", keep="last")[["key", "running_count", "running_mean"]]
     )
     batch = (
         load_table(spark, SF_SMOKE, "events")
@@ -178,7 +181,7 @@ def test_stream_sliding_equals_batch(spark):
             )
         )
 
-    streamed = run_to_completion(
+    streamed = run_complete_spooled(
         plan(events_stream(spark, SF_SMOKE, files_per_trigger=2)), "sliding_stream"
     ).toPandas()
     batch = plan(load_table(spark, SF_SMOKE, "events")).toPandas()
@@ -228,7 +231,7 @@ def test_windowed_topk_foreachbatch_equals_batch(spark):
 
     with tempfile.TemporaryDirectory() as root:
         out = f"{root}/topk"
-        run_windowed_topk(spark, SF_SMOKE, out, f"{root}/ckpt")
+        run_windowed_topk(spark, SF_SMOKE, out)
         got = spark.read.parquet(out).toPandas()
     want = batch_windowed_topk(spark, SF_SMOKE).toPandas()
     key = ["win_start", "rank"]
@@ -243,12 +246,6 @@ def test_spooled_drain_zero_batches_returns_empty(spark, tmp_path):
     never writes the parquet spool; the spooled drains must return an
     empty frame with the stream schema instead of raising
     path-not-found."""
-    from flink_streaming_gnn_spark.streaming.replay import (
-        run_append_spooled,
-        run_complete_spooled,
-        run_update_spooled,
-    )
-
     empty_dir = tmp_path / "no_files"
     empty_dir.mkdir()
     stream = spark.readStream.schema("k long, v double").parquet(str(empty_dir))
@@ -274,12 +271,23 @@ def test_append_spool_equals_memory_sink(spark):
     exactly the memory sink's row set (union of per-trigger emissions —
     each append-mode row emits once, on the trigger that produced it).
     Pinned on the real replay source with multi-batch triggering, the
-    same shape the four switched e2e keys use."""
-    from flink_streaming_gnn_spark.streaming.replay import (
-        events_stream,
-        run_append_spooled,
-        run_append_to_completion,
-    )
+    same shape the four switched e2e keys use. The reference is Spark's
+    own memory sink, written out here: the engine drains only through
+    replay.drain."""
+    import tempfile
+
+    def memory_sink(stream_df, name):
+        with tempfile.TemporaryDirectory() as ckpt:
+            (
+                stream_df.writeStream.outputMode("append")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.sql(f"SELECT * FROM {name}")
 
     def drained(runner, name):
         stream = events_stream(spark, SF_SMOKE, files_per_trigger=2).select(
@@ -289,7 +297,7 @@ def test_append_spool_equals_memory_sink(spark):
         return sorted(map(tuple, out.collect()))
 
     spooled = drained(run_append_spooled, "parity_append_spool")
-    memory = drained(run_append_to_completion, "parity_append_memory")
+    memory = drained(memory_sink, "parity_append_memory")
     assert spooled == memory
     assert len(spooled) > 0
 
@@ -314,7 +322,7 @@ def test_cc_edge_stream_follows_orders_rewrite(spark, tmp_path):
         shutil.copyfile(table_path(SF_SMOKE, name), table_path(fixture, name))
 
     def streamed_srcs(query_name):
-        out = run_append_to_completion(edges_stream(spark, fixture), query_name)
+        out = run_append_spooled(edges_stream(spark, fixture), query_name)
         return {r["src"] for r in out.select("src").distinct().collect()}
 
     before = streamed_srcs("cc_edges_before_orders_rewrite")
@@ -331,3 +339,49 @@ def test_cc_edge_stream_follows_orders_rewrite(spark, tmp_path):
 
     after = streamed_srcs("cc_edges_after_orders_rewrite")
     assert after == {s + shift for s in before}
+
+
+def test_finished_process_leaves_no_stream_artifacts(tmp_path):
+    """Every per-call stream artifact — spools, sinks, kept and temporary
+    checkpoints, the CC label versions — lives in process scratch: a
+    fresh process that runs the streaming keys and exits normally leaves
+    none of them in its temp dir."""
+    import subprocess
+    import sys
+
+    script = f"""
+from flink_streaming_gnn_spark.session import get_spark
+from flink_streaming_gnn_spark.streaming.e2e import (
+    stream_cdc_snapshot,
+    stream_windowed_topk,
+)
+from flink_streaming_gnn_spark.streaming.graphcc import stream_cc_e2e
+from flink_streaming_gnn_spark.streaming.scd2 import stream_scd2_e2e
+from flink_streaming_gnn_spark.streaming.sources import source_rate_ingest
+
+spark = get_spark(app_name="no_leftovers", cpus=2)
+for key in (
+    stream_cc_e2e,
+    stream_windowed_topk,
+    stream_cdc_snapshot,
+    stream_scd2_e2e,
+    source_rate_ingest,
+):
+    assert key(spark, {SF_SMOKE!r}).count() > 0, key.__name__
+"""
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="2g",
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env, check=True, timeout=900
+    )
+    left = sorted(
+        p.name
+        for p in tmp_path.iterdir()
+        if p.name.startswith(("graft_", "stream_", "cc_state_"))
+    )
+    assert left == []

@@ -10,46 +10,24 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.sources.tables import load_table, table_path
+from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.streaming.gnn import (
+    edges_stream,
     edges_v_with_ts,
     graph_sage_windowed,
     windowed_sage,
 )
-from flink_streaming_gnn_spark.streaming.replay import run_to_completion
+from flink_streaming_gnn_spark.streaming.replay import run_complete_spooled
 from tests.conftest import SF_SMOKE
 from tests.oracle_compare import compare_frames
-
-
-def _edges_stream(spark, sf_dir, files_per_trigger=2):
-    from flink_streaming_gnn_spark.sources.scratch import (
-        fixture_fingerprint,
-        scratch_dir,
-    )
-
-    chunk_dir = scratch_dir(
-        "test_gnn_edge_chunks",
-        fixture_fingerprint(
-            table_path(sf_dir, "lineitem"), table_path(sf_dir, "orders")
-        ),
-        lambda staging: edges_v_with_ts(spark, sf_dir)
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(staging),
-    )
-    return (
-        spark.readStream.schema("src_v long, dst_v long, ts timestamp")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(chunk_dir)
-    )
 
 
 def test_windowed_sage_stream_equals_batch(spark):
     features = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", F.col("embedding").alias("feat")
     )
-    streamed_plan = windowed_sage(_edges_stream(spark, SF_SMOKE), features)
-    streamed = run_to_completion(streamed_plan, "windowed_sage_stream").toPandas()
+    streamed_plan = windowed_sage(edges_stream(spark, SF_SMOKE), features)
+    streamed = run_complete_spooled(streamed_plan, "windowed_sage_stream").toPandas()
     batch = graph_sage_windowed(spark, SF_SMOKE).toPandas()
     assert len(batch) > 0
     assert not compare_frames(streamed, batch, "windowed sage batch≡stream")
@@ -130,9 +108,9 @@ def test_late_edge_dropped_from_vertex_window(spark):
             .agg(F.avg("f").alias("nbr_mean"), F.count("*").cast("long").alias("n"))
             .select(F.date_format("win.start", "HH:mm").alias("ws"), "dst_v", "nbr_mean", "n")
         )
-        from flink_streaming_gnn_spark.streaming.replay import run_append_to_completion
+        from flink_streaming_gnn_spark.streaming.replay import run_append_spooled
 
-        out = run_append_to_completion(agg, "late_edge_gnn").toPandas()
+        out = run_append_spooled(agg, "late_edge_gnn").toPandas()
 
     first = out[(out.ws == "00:00") & (out.dst_v == 1)]
     assert len(first) == 1

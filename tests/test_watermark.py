@@ -15,7 +15,7 @@ import time
 import pandas as pd
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.streaming.replay import run_append_to_completion
+from flink_streaming_gnn_spark.streaming.replay import run_append_spooled
 
 
 def _write_ordered_chunks(spark, watch_dir: str, *chunks: pd.DataFrame) -> None:
@@ -80,7 +80,7 @@ def test_late_event_dropped_beyond_watermark(spark):
                 F.date_format("win.start", "HH:mm").alias("ws"), "user_id", "total", "n"
             )
         )
-        out = run_append_to_completion(agg, "late_drop").toPandas()
+        out = run_append_spooled(agg, "late_drop").toPandas()
 
     first = out[out.ws == "00:00"]
     assert len(first) == 1
@@ -123,7 +123,7 @@ def test_late_event_within_watermark_included(spark):
                 F.date_format("win.start", "HH:mm").alias("ws"), "user_id", "total", "n"
             )
         )
-        out = run_append_to_completion(agg, "late_keep").toPandas()
+        out = run_append_spooled(agg, "late_keep").toPandas()
 
     first = out[out.ws == "00:00"]
     assert len(first) == 1

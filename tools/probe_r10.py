@@ -126,6 +126,11 @@ _PURGE_GLOBS = (
     "graft_events_chunks_*",
     "graft_gnn_edge_chunks_*",
     "graft_edge_chunks_*",
+    # per-call stream spools, sinks, kept checkpoints and CC label
+    # versions (sources/scratch.ephemeral_dir names)
+    "graft_stream_*",
+    "graft_cc_state_*",
+    # leftovers of the pre-scratch stream drains from earlier rounds
     "stream_spool_*",
     "stream_cspool_*",
     "stream_ckpt_*",
