@@ -21,10 +21,11 @@ Per seed s (same landmark density as ``graph/closeness.py``:
 Scale posture: state is (seed, vertex) rows like closeness — |seeds|
 bounded by the modulo density (cap at a constant landmark count at
 100 TB); every round shuffles on vertex id; the only driver reads are
-O(1) frontier counts; the result returns lazily (no collect). Depth is
-capped at ``MAX_D`` identically in both engines, so results agree on
-graphs wider than the cap (truncated/landmark betweenness is the
-documented semantic, as usual for this family at scale).
+O(1) frontier counts, each observed on its frontier's checkpoint job;
+the result returns lazily (no collect). Depth is capped at ``MAX_D``
+identically in both engines, so results agree on graphs wider than the
+cap (truncated/landmark betweenness is the documented semantic, as usual
+for this family at scale).
 
 Determinism: σ is an exact integer carried in doubles; δ is a sum of
 positive rationals (no cancellation), round-6 stable across engines —
@@ -35,7 +36,7 @@ The DuckDB oracle computes dist via a recursive CTE, then unrolls σ and
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
@@ -115,6 +116,7 @@ def _betweenness_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited = levels[0].select("s", "v").localCheckpoint()
     for _ in range(1, MAX_D + 1):
         frontier = levels[-1]
+        rows = Observation()
         nxt = (
             frontier.join(edges.hint("shuffle_hash"), frontier.v == edges.a)
             .select("s", F.col("b").alias("v"), "sigma")
@@ -127,9 +129,10 @@ def _betweenness_body(spark: SparkSession, sf_dir: str) -> DataFrame:
             # shuffle_hash on the visited side: SMJ would re-sort both
             # multi-million-row sides every depth
             .join(visited.hint("shuffle_hash"), ["s", "v"], "left_anti")
+            .observe(rows, F.count("*").alias("n"))
             .localCheckpoint()
         )
-        if nxt.count() == 0:  # O(1) convergence read
+        if rows.get["n"] == 0:  # O(1) convergence read, observed on nxt's job
             break
         levels.append(nxt)
         visited = visited.union(nxt.select("s", "v")).localCheckpoint()

@@ -5,14 +5,10 @@ HITS round is exactly "authority = Σ hub of buyers; hub = Σ authority of
 suppliers bought from" — two joins + two aggregates per round, both
 shuffling on vertex id.
 
-Spark-first shape mirrors graph/pagerank.py's driver loop, with one
-refinement: the per-round L2 normalization constant is computed INSIDE the
-plan via an empty-window sum (``sum(x²) over ()``) rather than a driver
-``.first()`` read, so each half-round is exactly one job and the driver
-never sees a row. The empty window single-reduces the |V|-sized score
-table — the standard shape for a global scalar over an already-aggregated
-frame (the raw |E|-sized data never passes through it). One persist+count
-per round bounds lineage depth.
+Spark-first shape mirrors graph/pagerank.py's driver loop. Each half-round
+is one join + one aggregate ending in an eager ``localCheckpoint``; its L2
+norm ``sqrt(sum(x²))`` is observed on that same job, so the driver reads
+one scalar per half-round and runs no extra job.
 
 Rows-only (float fixpoint; per-vertex sums are partition-order dependent
 in the last ulp); exactness vs a numpy power iteration (same rounds) is
@@ -21,7 +17,7 @@ pinned in tests/test_new_ops.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import derive_edges
@@ -41,26 +37,31 @@ def hits_scores(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataF
     persist-only variant of this loop was measured spinning the driver in
     Catalyst re-analysis (round times 9s → 31s → hung) because each round's
     double self-referential join doubled the analyzed tree. The L2 norm is
-    read as a driver scalar off the checkpointed raw sums (one tiny agg
-    job over a |V|-sized leaf — pagerank's O(1)-driver-read contract).
+    observed on the checkpoint job of the raw sums (pagerank's
+    O(1)-driver-read contract, with no extra job).
     """
     e = derive_edges(spark, sf_dir).select("src", "dst").distinct().localCheckpoint()
     hubs = e.select("src").distinct().withColumn("h", F.lit(1.0)).localCheckpoint()
     auths = None
     for _ in range(rounds):
+        norm_a = Observation()
         a_raw = (
-            e.join(hubs, "src").groupBy("dst").agg(F.sum("h").alias("a_raw")).localCheckpoint()
+            e.join(hubs, "src")
+            .groupBy("dst")
+            .agg(F.sum("h").alias("a_raw"))
+            .observe(norm_a, F.sqrt(F.sum(F.col("a_raw") * F.col("a_raw"))).alias("n"))
+            .localCheckpoint()
         )
-        norm_a = a_raw.agg(F.sqrt(F.sum(F.col("a_raw") * F.col("a_raw")))).first()[0]
-        new_auths = a_raw.select("dst", (F.col("a_raw") / norm_a).alias("a"))
+        new_auths = a_raw.select("dst", (F.col("a_raw") / norm_a.get["n"]).alias("a"))
+        norm_h = Observation()
         h_raw = (
             e.join(new_auths, "dst")
             .groupBy("src")
             .agg(F.sum("a").alias("h_raw"))
+            .observe(norm_h, F.sqrt(F.sum(F.col("h_raw") * F.col("h_raw"))).alias("n"))
             .localCheckpoint()
         )
-        norm_h = h_raw.agg(F.sqrt(F.sum(F.col("h_raw") * F.col("h_raw")))).first()[0]
-        new_hubs = h_raw.select("src", (F.col("h_raw") / norm_h).alias("h"))
+        new_hubs = h_raw.select("src", (F.col("h_raw") / norm_h.get["n"]).alias("h"))
         hubs, auths = new_hubs, new_auths
     return (
         hubs.select(

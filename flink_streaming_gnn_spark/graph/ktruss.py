@@ -9,9 +9,10 @@ undirected simple edges. Spark-first round: edge support = triangle
 count through each edge, computed as edges ⋈ directed-neighbors ⋈
 directed-neighbors (two equi-joins + one hash agg, all on vertex keys —
 the standard relational triangle join), then a filter. The driver loop
-reads one O(1) edge-count scalar per round and stops at the fixpoint;
-every round frame is ``localCheckpoint``-truncated (the
-components/bfs/scc plan-growth discipline).
+reads one O(1) edge-count scalar per round, observed on the job that
+checkpoints the round's edges, and stops at the fixpoint; every round
+frame is ``localCheckpoint``-truncated (the components/bfs/scc
+plan-growth discipline).
 
 Exact oracle: the peel is monotone (edge sets only shrink) and
 idempotent past the fixpoint, so a mechanically-unrolled
@@ -24,7 +25,7 @@ support, so the hash pins the whole peeling computation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
@@ -105,15 +106,25 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry key: the K-truss of the projected graph — surviving
     edges with their converged support (support ≥ K−2 within the truss).
     """
-    e = _canonical_edges(spark, sf_dir).localCheckpoint()
-    n_edges = e.count()
+    rows = Observation()
+    e = (
+        _canonical_edges(spark, sf_dir)
+        .observe(rows, F.count("*").alias("n"))
+        .localCheckpoint()
+    )
+    n_edges = rows.get["n"]
     if n_edges <= LOCAL_PEEL_EDGES:
         return _local_peel(spark, e)
     for _ in range(MAX_ROUNDS):
         sup = _support(e)
         kept = sup.filter(F.col("s") >= KTRUSS_K - 2)
-        e2 = kept.select("a", "b").localCheckpoint()
-        n2 = e2.count()  # O(1) convergence scalar
+        rows = Observation()
+        e2 = (
+            kept.select("a", "b")
+            .observe(rows, F.count("*").alias("n"))
+            .localCheckpoint()
+        )
+        n2 = rows.get["n"]  # O(1) convergence scalar
         if n2 == n_edges or n2 == 0:
             # converged (or empty): `kept` was computed on the final edge
             # set, so its support values are the truss's final supports

@@ -8,9 +8,9 @@ Per round, entirely relationally:
    component graph (the composite order makes the choice deterministic
    under weight ties, so the resulting forest is the unique MSF of the
    perturbed order and a valid MSF of the raw weights);
-2. the chosen edges form a forest over components; label it with a
-   hash-min propagation over that (component-count-sized, ≪ |E|) merge
-   graph;
+2. the chosen edges form a forest over components; label it with
+   ``graph/components.hash_min_cc`` over that (component-count-sized,
+   ≪ |E|) merge graph;
 3. CONTRACT: re-key the working edges to the new component endpoints,
    drop intra-component edges, and collapse parallel component-pair
    edges to their (w, a, b)-minimal original edge — |E| shrinks
@@ -19,7 +19,8 @@ Per round, entirely relationally:
 
 Component count at least halves per round (every component picks an
 edge), so the driver loop runs ≤ log₂|V| rounds; per-round driver reads
-are O(1) scalars (chosen-edge sum/count + convergence checks), never
+are O(1) scalars (the working edge count and the chosen-edge sum/count/
+max), each observed on the job that checkpoints its frame, never
 data-sized. Every round frame is ``localCheckpoint``-truncated — same
 plan-growth discipline as ``graph/components.py``.
 
@@ -48,9 +49,10 @@ under the same (w, a, b) order stays pinned in tests/test_round3.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.graph.components import hash_min_cc
 from flink_streaming_gnn_spark.graph.edges import (
     bipartite_pairs,
     both_directions,
@@ -60,7 +62,6 @@ from flink_streaming_gnn_spark.plans.truncate import fresh_frame
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ROUND_CAP = 48  # components halve per round: covers 2^48 vertices
-CC_CAP = 30  # merge-forest label-propagation cap per round
 LOCAL_TAIL_EDGES = 65536  # constant local-tail bound (module docstring)
 
 
@@ -69,82 +70,6 @@ def _simple_weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     multigraph collapsed to min weight per endpoint pair (a < b always —
     customers are even, suppliers odd, and every derived edge crosses)."""
     return bipartite_pairs(derive_edges(spark, sf_dir), F.min("w").alias("w"))
-
-
-def _forest_cc(merge: DataFrame, max_rounds: int = CC_CAP) -> DataFrame:
-    """Hash-min connected components WITH POINTER-JUMPING SHORTCUT EDGES
-    over the (small) per-round merge forest; returns (v, lbl).
-
-    Each round augments the neighbor lookup with the label map itself as
-    edges — (v ↔ lbl(v)) both directions — so one join+agg computes
-    ``min(lbl(v), min_nbr lbl, lbl(lbl(v)))``: the hash-min step AND the
-    ``lbl ← lbl[lbl]`` shortcut of pointer-jumping in a single round.
-    The shortcut halves remaining label-chain length per round, so
-    convergence is O(log diameter) instead of O(diameter). That matters
-    precisely here: a Borůvka merge forest is built from min-edge parent
-    pointers and can be a CHAIN of length ≈ #components (ADVICE r3) —
-    hash-min alone needs one full round per hop (measured: a 63-chain
-    converges in 7 rounds with shortcuts vs 63 without).
-
-    Loop mechanics (both measured — see ``plans/truncate.py``): the
-    evolving ``labels`` frame is referenced exactly TWICE per generation
-    (the shortcut union + the lookup join; a self-join formulation makes
-    Spark's driver-side planning cost grow ~3×/generation even across
-    localCheckpoint), the per-vertex self-edges that replace the outer
-    join are static and checkpointed once, each generation passes through
-    ``fresh_frame`` to sever accumulated analyzer state, and convergence
-    is a sum scalar — labels only decrease, so an unchanged (exact
-    decimal) label sum ⟺ no label changed, with no extra join.
-
-    Correctness of the combined operator: labels only decrease, shortcut
-    edges stay inside the component (v and lbl(v) share one), and a state
-    fixed under this step is fixed under plain hash-min (its updates are
-    a subset), which forces per-component-constant minimum labels — so
-    the sum-unchanged exit condition matches the plain loop's.
-    """
-    edges = both_directions(merge)
-    verts = edges.select(F.col("a").alias("v")).distinct()
-    # graph edges + per-vertex self-edges, static across rounds: the
-    # self-edge keeps every vertex's own label in the aggregate pool, so
-    # no outer join against labels is needed per round
-    base = edges.union(
-        verts.select(F.col("v").alias("a"), F.col("v").alias("b"))
-    ).localCheckpoint()
-    labels = verts.withColumn("lbl", F.col("v")).localCheckpoint()
-    prev_sum = None
-    converged = False
-    for _ in range(max_rounds):
-        # pointer-jump shortcut edges v → lbl(v): the neighbor lookup then
-        # retrieves lbl(lbl(v)) alongside the graph neighbors' labels
-        aug = base.union(
-            labels.select(F.col("v").alias("a"), F.col("lbl").alias("b"))
-        )
-        new_labels = fresh_frame(
-            aug.join(labels, F.col("b") == labels.v)
-            .groupBy("a")
-            .agg(F.min("lbl").alias("nl"))
-            .select(F.col("a").alias("v"), F.col("nl").alias("lbl"))
-            .localCheckpoint()
-        )
-        lbl_sum = new_labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]  # O(1) convergence scalar (exact — no int64 overflow)
-        labels = new_labels
-        if prev_sum is not None and lbl_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = lbl_sum
-    if not converged:
-        # A merge forest can be a chain whose diameter exceeds the cap;
-        # returning partial labels would leave already-counted forest edges
-        # uncontracted in e_cur, letting them be chosen again later and
-        # double-counting total_weight/n_mst_edges in a plausible-looking
-        # summary. Fail loudly instead (same discipline as ROUND_CAP).
-        raise RuntimeError(
-            f"_forest_cc did not converge within {max_rounds} rounds; "
-            "raise CC_CAP (merge-forest diameter exceeded the cap)"
-        )
-    return labels
 
 
 def _kruskal_tail(e_cur: DataFrame) -> tuple[float, int, float]:
@@ -193,9 +118,12 @@ def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge (w, a, b) realizing that component pair. Checkpoint FIRST so
     # the vertex count below reads the materialized frame instead of
     # re-deriving the edge list (was a second full corpus pass).
-    e_cur = e0.select(
-        F.col("a").alias("u"), F.col("b").alias("v"), "w", "a", "b"
-    ).localCheckpoint()
+    rows = Observation()
+    e_cur = (
+        e0.select(F.col("a").alias("u"), F.col("b").alias("v"), "w", "a", "b")
+        .observe(rows, F.count("*").alias("n"))
+        .localCheckpoint()
+    )
     n_vertices = (
         e_cur.select(F.col("u").alias("v"))
         .union(e_cur.select("v"))
@@ -209,7 +137,7 @@ def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(ROUND_CAP):
         # constant-bounded local tail: finish the remaining (contracted)
         # forest with a driver union-find under the same (w, a, b) order
-        if e_cur.count() <= LOCAL_TAIL_EDGES:
+        if rows.get["n"] <= LOCAL_TAIL_EDGES:
             s, n, m = _kruskal_tail(e_cur)
             total_w += s
             n_edges += n
@@ -220,28 +148,35 @@ def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = e_cur.select(F.col("u").alias("comp"), ed).union(
             e_cur.select(F.col("v").alias("comp"), ed)
         )
+        chosen_stats = Observation()
         chosen = (
             cand.groupBy("comp")
             .agg(F.min("ed").alias("ed"))
             .select("ed.*")
             .distinct()
+            .observe(
+                chosen_stats,
+                F.sum("w").alias("s"),
+                F.count("*").alias("n"),
+                F.max("w").alias("m"),
+            )
             .localCheckpoint()
         )
-        stats = chosen.agg(
-            F.sum("w").alias("s"), F.count("*").alias("n"), F.max("w").alias("m")
-        ).first()  # O(1) scalar read per round (doubles as the empty check:
-        # e_cur empty ⟺ no chosen edges, saving the separate isEmpty job)
+        # O(1) scalar read per round (doubles as the empty check: e_cur
+        # empty ⟺ no chosen edges, saving the separate isEmpty job)
+        stats = chosen_stats.get
         if int(stats["n"]) == 0:
             converged = True
             break
         total_w += float(stats["s"])
         n_edges += int(stats["n"])
         max_w = max(max_w, float(stats["m"]))
-        lbl = _forest_cc(chosen.select("u", "v").toDF("a", "b"))
+        lbl = hash_min_cc(both_directions(chosen.select("u", "v").toDF("a", "b")))
         lu = lbl.select(F.col("v").alias("ku"), F.col("lbl").alias("lu"))
         lv = lbl.select(F.col("v").alias("kv"), F.col("lbl").alias("lv"))
         # refresh component endpoints, drop intra-component edges, contract
         # parallel component-pair edges to their (w, a, b)-minimal one
+        rows = Observation()
         e_cur = (
             e_cur.join(lu, e_cur.u == lu.ku, "left")
             .join(lv, e_cur.v == lv.kv, "left")
@@ -261,6 +196,7 @@ def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("u", "v")
             .agg(F.min("ed").alias("ed"))
             .select("u", "v", "ed.w", "ed.a", "ed.b")
+            .observe(rows, F.count("*").alias("n"))
             .localCheckpoint()
         )
         # sever analyzer-state accumulation across outer generations too

@@ -56,7 +56,7 @@ def power_iteration(
     # localCheckpoint, not persist: each round references `ranks` TWICE
     # (contribs + dangling), so an un-truncated logical plan doubles per
     # round — 2^rounds analysis blowup by round ~7. The checkpoint makes
-    # every round a leaf (the _cc_over_pairs discipline).
+    # every round a leaf (the components.hash_min_cc discipline).
     ranks = v.select(
         "v", F.when(teleport, F.lit(1.0 / n)).otherwise(F.lit(0.0)).alias("rank")
     ).localCheckpoint()

@@ -167,43 +167,28 @@ _component_tri = _make_component_tri_kernel()  # module alias for pytest
 
 def _split_components(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split the a<b edge list into (dense_e, sparse_e): dense_e carries a
-    component label and contains exactly the edges of SAFE small
-    components (≤ DENSE_COMPONENT_V_BOUND vertices AND edge-closed under
-    the labeling); sparse_e is everything else.
-
-    Correctness does not depend on hash_min_cc converging: if the label
-    propagation stopped early, some true component is split across
-    labels and its boundary edges CROSS labels — any label touched by a
-    crossing edge is marked unsafe and its edges fall back to the join
-    tier, so the dense kernel only ever sees whole induced components."""
+    component label and contains exactly the edges of the small components
+    (≤ DENSE_COMPONENT_V_BOUND vertices); sparse_e is everything else.
+    ``hash_min_cc`` runs to its fixpoint, so both endpoints of an edge
+    share a label and a label's edges are its whole induced component."""
     from flink_streaming_gnn_spark.graph.components import hash_min_cc
 
     labels = hash_min_cc(both_directions(e))  # (v, lbl), already checkpointed
-    sizes = labels.groupBy("lbl").agg(F.count("*").alias("vc"))
-    la = labels.select(F.col("v").alias("a"), F.col("lbl").alias("lbl_a"))
-    lb = labels.select(F.col("v").alias("b"), F.col("lbl").alias("lbl_b"))
-    tagged = e.join(la, "a").join(lb, "b").localCheckpoint()
-    unsafe = (
-        tagged.filter(F.col("lbl_a") != F.col("lbl_b"))
-        .select(F.explode(F.array("lbl_a", "lbl_b")).alias("lbl"))
-        .distinct()
+    small = (
+        labels.groupBy("lbl")
+        .agg(F.count("*").alias("vc"))
+        .filter(F.col("vc") <= DENSE_COMPONENT_V_BOUND)
+        .select("lbl")
     )
-    safe_small = (
-        sizes.filter(F.col("vc") <= DENSE_COMPONENT_V_BOUND)
-        .join(unsafe, "lbl", "left_anti")
-        .select(F.col("lbl").alias("lbl_a"))
-    )
-    dense_e = (
-        tagged.filter(F.col("lbl_a") == F.col("lbl_b"))
-        .join(safe_small, "lbl_a")
-        .select(F.col("lbl_a").alias("lbl"), "a", "b")
-    )
-    sparse_e = tagged.join(safe_small, "lbl_a", "left_anti").select("a", "b")
+    la = labels.select(F.col("v").alias("a"), "lbl")
+    tagged = e.join(la, "a").localCheckpoint()
+    dense_e = tagged.join(small, "lbl").select("lbl", "a", "b")
+    sparse_e = tagged.join(small, "lbl", "left_anti").select("a", "b")
     return dense_e, sparse_e
 
 
 def _dense_component_pv(dense_e: DataFrame) -> DataFrame:
-    """Per-vertex (v, degree, tri) over the safe small components — one
+    """Per-vertex (v, degree, tri) over the small components — one
     Arrow task per component, the BLAS kernel above."""
     kernel = _make_component_tri_kernel()
     return dense_e.groupBy("lbl").applyInPandas(
@@ -292,7 +277,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri = _count_dense(pdf["a"].to_numpy(), pdf["b"].to_numpy())
     else:
         # component-blocked distributed tier (module comment above):
-        # executor-side BLAS for safe small components (Σtri = 3T per
+        # executor-side BLAS for small components (Σtri = 3T per
         # component), oriented joins only for the sparse remainder
         dense_e, sparse_e = _split_components(e)
         dense_tri = (

@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.functions.arrays import dot_expr
+from flink_streaming_gnn_spark.graph.components import hash_min_cc
+from flink_streaming_gnn_spark.graph.edges import both_directions
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 
@@ -592,60 +593,6 @@ def dedup_embedding_cosine_planted(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@release_superseded_checkpoints
-def _cc_over_pairs(pairs: DataFrame, max_rounds: int = 15) -> DataFrame:
-    """Connected components over an undirected pair list ``(doc_a, doc_b)``
-    by hash-min label propagation (same driver-loop shape as
-    graph/components.py, specialized to the near-dup graph). Returns
-    ``(node, canonical)`` where canonical = min doc_id of the component.
-
-    Scale posture: the dup graph is orders of magnitude smaller than the
-    corpus (only docs that share an LSH bucket AND verified), so each
-    round's join+agg shuffles pair-list-sized frames, never the corpus;
-    near-dup clusters have tiny diameter (most are cliques), so the loop
-    converges in 2-3 rounds.
-    """
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    edges = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    labels = (
-        edges.select(F.col("u").alias("node")).distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
-    )
-    # per-round eager localCheckpoint (not persist): the plan references
-    # the previous labels twice per round, and checkpointing truncates the
-    # analyzed tree so Catalyst cost stays O(1) per round (see
-    # graph/components.py docstring for the measured failure mode)
-    for _ in range(max_rounds):
-        nbr_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.u, "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select("node", F.col("lbl").alias("canonical"))
-
-
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The step real pipelines need after pair generation: turn near-dup
     PAIRS into a deduplicated CORPUS. LSH candidates → exact trigram-Jaccard
@@ -667,6 +614,12 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     clone exists through its representative, and cluster canonical = min
     doc_id either way — which is why the all-pairs recursive-CTE oracle
     still hash-matches.
+
+    Scale of step (3): the dup graph is orders of magnitude smaller than
+    the corpus (only docs that share an LSH bucket AND verify), so each
+    ``hash_min_cc`` round shuffles pair-list-sized frames, never the
+    corpus; near-dup clusters have tiny diameter (most are cliques), so
+    the loop converges in 2-3 rounds.
     """
     keyed = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.xxhash64("text").alias("th")
@@ -678,14 +631,14 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") == F.col("rep_id"))
         .select("doc_id", "text")
     )
-    pairs = _near_dup_pairs(rep_docs).select("doc_a", "doc_b")
-    comp = _cc_over_pairs(pairs)
+    # checkpointed: hash_min_cc reads its edge frame four times, and each
+    # read would rerun the LSH + verify plan
+    pairs = _near_dup_pairs(rep_docs).select("doc_a", "doc_b").localCheckpoint()
+    comp = hash_min_cc(both_directions(pairs.toDF("a", "b"))).toDF(
+        "rep_id", "canonical"
+    )
     out = (
-        rep_map.join(
-            maybe_broadcast(comp.withColumnRenamed("node", "rep_id")),
-            "rep_id",
-            "left",
-        )
+        rep_map.join(maybe_broadcast(comp), "rep_id", "left")
         .select(
             "doc_id",
             F.coalesce("canonical", F.col("rep_id")).cast("long").alias("canonical_id"),

@@ -117,7 +117,7 @@ def _jobs_for_path(spark, n, group):
 def test_hash_min_cc_jobs_per_round(spark):
     """Each added round costs at most 6 Spark jobs: one join + one aggregate
     ending in the round's checkpoint, with convergence observed on it."""
-    k = 6
+    k = 28
     short = _jobs_for_path(spark, 4, "cc_rounds_short")
     long = _jobs_for_path(spark, 4 + k, "cc_rounds_long")
     assert long - short <= 6 * k, (short, long)
