@@ -7,7 +7,7 @@ propagate-only architecture:
     Z^0 = H,   Z^{k+1} = (1-α)·Â·Z^k + α·H
 
 with Â the GCN symmetric normalization with self-loops (shared with
-``graph/gcn.py``: d̂out(u)=dout(u)+1, d̂in(v)=din(v)+1,
+``graph/gcn.normalized_edges``: d̂out(u)=dout(u)+1, d̂in(v)=din(v)+1,
 norm_uv = 1/sqrt(d̂out(u)·d̂in(v))) and teleport α. Feature propagation
 is column-independent, so surfacing the first ``TRACK_DIMS`` feature
 channels is EXACT for those channels — the oracle checks the real
@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
-from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
+from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
+from flink_streaming_gnn_spark.graph.gcn import normalized_edges
 from flink_streaming_gnn_spark.sources.tables import load_table
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
@@ -42,11 +42,6 @@ TRACK_DIMS = 4
 
 @release_superseded_checkpoints
 def gnn_appnp_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_vertex_embeddings(spark, sf_dir)
-        .distinct()
-        .filter(F.col("src_v") != F.col("dst_v"))
-    )
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("v"),
         *[
@@ -54,35 +49,7 @@ def gnn_appnp_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(1, TRACK_DIMS + 1)
         ],
     )
-    verts = emb.select("v")
-
-    endpoints = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src_v").alias("v"), F.lit(1).alias("is_out")),
-                F.struct(F.col("dst_v").alias("v"), F.lit(0).alias("is_out")),
-            )
-        ).alias("p")
-    ).select("p.v", "p.is_out")
-    deg_counts = endpoints.groupBy("v").agg(
-        F.sum("is_out").alias("dout"), F.sum(1 - F.col("is_out")).alias("din")
-    )
-    deg = verts.join(deg_counts, "v", "left").select(
-        "v",
-        (F.coalesce(F.col("dout"), F.lit(0)) + 1).alias("dhout"),
-        (F.coalesce(F.col("din"), F.lit(0)) + 1).alias("dhin"),
-    )
-    self_loops = verts.select(F.col("v").alias("src_v"), F.col("v").alias("dst_v"))
-    norm_edges = (
-        e.unionByName(self_loops)
-        .join(maybe_broadcast(deg.select(F.col("v").alias("src_v"), "dhout")), "src_v")
-        .join(maybe_broadcast(deg.select(F.col("v").alias("dst_v"), "dhin")), "dst_v")
-        .select(
-            "src_v",
-            "dst_v",
-            (F.lit(1.0) / F.sqrt(F.col("dhout") * F.col("dhin"))).alias("norm"),
-        )
-    )
+    norm_edges = normalized_edges(spark, sf_dir)
 
     h = emb  # teleport target, broadcast-joined back in every round
     z = emb

@@ -2,7 +2,8 @@
 iterative graph operator the relational engine must also express
 (SURVEY.md §2B GNN/graph rows; same driver-loop iteration shape as the
 reference's A10 feedback edge). ``hash_min_cc`` is the engine's one CC
-loop: streaming CC, the triangle split, dedup and Borůvka call it too.
+loop: streaming CC, the triangle split, dedup and Borůvka call it too,
+and in its seeded mode it is SCC's forward and backward pass.
 
 Algorithm: hash-min label propagation. Every vertex starts labeled with
 its own id; each round takes the min of its own and its neighbors' labels;
@@ -58,24 +59,38 @@ from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoi
 
 
 @release_superseded_checkpoints
-def hash_min_cc(edges: DataFrame) -> DataFrame:
-    """Hash-min label propagation over an arbitrary undirected edge frame
-    ``(a, b)`` (both directions present; self-loops and duplicates
-    harmless) — returns the fixpoint ``(v, lbl)`` labels.
+def hash_min_cc(edges: DataFrame, labels: DataFrame | None = None) -> DataFrame:
+    """Hash-min label propagation over an edge frame ``(a, b)``: each
+    round, a takes the min of its own label and the labels of every b
+    with an edge ``(a, b)``. Returns the fixpoint ``(v, lbl)`` labels.
 
-    One self-loop per vertex is added once, so a round is a single join
-    and a single aggregate: min over N(v) ∪ {v} is the new label, and the
-    self-loop row carries the old one. The count of lowered labels is
-    observed on the round's own checkpoint job, so convergence costs no
-    extra job; the loop ends when it is 0 (at most diameter + 1 rounds)."""
-    adj = edges.union(
-        edges.select("a", F.col("a").alias("b")).distinct()
-    ).localCheckpoint()
-    labels = adj.filter(F.col("a") == F.col("b")).select(
-        F.col("a").alias("v"), F.col("b").alias("lbl")
-    )
+    ``labels=None`` is connected components: ``edges`` is undirected
+    (both directions present; self-loops and duplicates harmless) and
+    every vertex of ``a`` starts with its own id. Given ``labels``
+    ``(v, lbl)``, labels flow along the directed edges ``b → a`` from
+    those seeds, and a null label means "no label yet" (SCC's passes,
+    graph/scc.py). Precondition: ``edges`` only joins vertices of
+    ``labels``; a vertex outside it has no old label and never settles.
+
+    One self-loop per vertex is added once, so a round is one join and
+    one aggregate: min over N(v) ∪ {v} is the new label, and the
+    self-loop row carries the old one. ``count_if(NOT lbl <=> old)``
+    (null-safe; ``lbl < old`` without nulls) is observed on the round's
+    own checkpoint job, and the loop ends when it is 0 (at most
+    diameter + 1 rounds). Observe only the rows a round checkpoints:
+    AQE may prune a side subtree as empty, and ``Observation.get`` then
+    raises."""
+    if labels is None:
+        loops = edges.select("a", F.col("a").alias("b")).distinct()
+    else:
+        loops = labels.select(F.col("v").alias("a"), F.col("v").alias("b"))
+    adj = edges.union(loops).localCheckpoint()
+    if labels is None:
+        labels = adj.filter(F.col("a") == F.col("b")).select(
+            F.col("a").alias("v"), F.col("b").alias("lbl")
+        )
     while True:
-        lowered = Observation()
+        changed = Observation()
         labels = (
             adj.join(labels, adj.b == labels.v)
             .groupBy(F.col("a").alias("v"))
@@ -83,11 +98,14 @@ def hash_min_cc(edges: DataFrame) -> DataFrame:
                 F.min("lbl").alias("lbl"),
                 F.min(F.when(F.col("a") == F.col("b"), F.col("lbl"))).alias("old"),
             )
-            .observe(lowered, F.count_if(F.col("lbl") < F.col("old")).alias("n"))
+            .observe(
+                changed,
+                F.count_if(~F.col("lbl").eqNullSafe(F.col("old"))).alias("n"),
+            )
             .select("v", "lbl")
             .localCheckpoint()
         )
-        if lowered.get["n"] == 0:
+        if changed.get["n"] == 0:
             return labels
 
 

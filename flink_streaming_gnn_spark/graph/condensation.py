@@ -13,10 +13,10 @@ Spark-first shape: SCC labels come from the closure-free
 forward–backward coloring (``scc_labels_fb`` — the 100 TB SCC path);
 condensation edges are two broadcast-gated label joins + a distinct
 (never a closure); the level DP is one join + max-agg per round over
-the |SCCs|-sized DAG, rounds bounded by the condensation's longest
-chain (≤ MAX_OUTER, the same bound the FB-coloring peel uses), with
-the localCheckpoint lineage discipline; the count of raised levels is
-observed on each round's checkpoint job, so convergence costs no job.
+the |SCCs|-sized DAG, uncapped: levels only rise, so rounds are the
+DAG's longest chain + 1, with the localCheckpoint lineage discipline;
+the count of raised levels is observed on each round's checkpoint job,
+so convergence costs no job.
 
 The DuckDB oracle recomputes everything from the recursive reachability
 closure (the independent SCC formulation) + a recursive longest-path
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
-from flink_streaming_gnn_spark.graph.scc import MAX_OUTER, scc_labels_fb
+from flink_streaming_gnn_spark.graph.scc import scc_labels_fb
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
@@ -61,7 +61,7 @@ def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # longest-path-from-source DP over the (tiny vs |V|) condensation DAG
     lvl = comps.select("c", F.lit(0).alias("level")).localCheckpoint()
-    for _ in range(MAX_OUTER):
+    while True:
         via = (
             cond_edges.join(
                 lvl.select(F.col("c").alias("c_src"), F.col("level").alias("pl")),

@@ -15,7 +15,8 @@ round, both keyed on vertex id; rounds are ``localCheckpoint``-truncated
 (components/bfs discipline). The previous estimate is still in the row
 that takes the ``least``, so the count of lowered estimates is observed
 on the round's checkpoint job — the driver reads that one scalar and no
-comparison job runs.
+comparison job runs. No round cap: an n-vertex path takes about n/2
+rounds, as the fall travels inward from both ends.
 
 Exact oracle: monotone + idempotent ⇒ ORACLE_ROUNDS unrolled
 MATERIALIZED round CTEs with ORACLE_ROUNDS ≥ the measured sf0.01
@@ -38,7 +39,6 @@ from flink_streaming_gnn_spark.graph.edges import (
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ORACLE_ROUNDS = 6  # ≥ measured sf0.01 convergence (4) — idempotent beyond
-MAX_ROUNDS = 60
 
 
 @release_superseded_checkpoints
@@ -53,7 +53,7 @@ def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     w = Window.partitionBy("a").orderBy(F.col("est").desc())
-    for _ in range(MAX_ROUNDS):
+    while True:
         nb = ue.join(est, ue.b == est.v).select("a", "est")
         h = (
             nb.withColumn("rn", F.row_number().over(w))

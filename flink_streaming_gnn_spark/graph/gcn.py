@@ -43,17 +43,16 @@ def gcn_weights(out_dim: int = OUT_DIM, in_dim: int = DIM) -> np.ndarray:
     return np.round(np.random.RandomState(46).randn(out_dim, in_dim) * 0.1, 6)
 
 
-def graph_gcn_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = gcn_weights()
+def normalized_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(src_v, dst_v, norm)`` over E ∪ self-loops, with
+    ``norm = 1/sqrt(d̂out(src_v) · d̂in(dst_v))`` — the symmetric-normalized
+    adjacency Â shared by the GCN layer and APPNP (graph/appnp.py)."""
     e = (
         derive_vertex_embeddings(spark, sf_dir)
         .distinct()
         .filter(F.col("src_v") != F.col("dst_v"))
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("feat")
-    )
-    verts = emb.select(F.col("vec_id").alias("v"))
+    verts = load_table(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("v"))
 
     # both degrees from ONE pass over one edge subtree (explode each edge
     # into an out-endpoint and an in-endpoint record, then a single hash
@@ -83,15 +82,25 @@ def graph_gcn_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     self_loops = verts.select(F.col("v").alias("src_v"), F.col("v").alias("dst_v"))
-    edges_all = e.unionByName(self_loops)
+    return (
+        e.unionByName(self_loops)
+        .join(maybe_broadcast(deg.select(F.col("v").alias("src_v"), "dhout")), "src_v")
+        .join(maybe_broadcast(deg.select(F.col("v").alias("dst_v"), "dhin")), "dst_v")
+        .select(
+            "src_v",
+            "dst_v",
+            (F.lit(1.0) / F.sqrt(F.col("dhout") * F.col("dhin"))).alias("norm"),
+        )
+    )
 
-    deg_src = maybe_broadcast(deg.select(F.col("v").alias("src_v"), "dhout"))
-    deg_dst = maybe_broadcast(deg.select(F.col("v").alias("dst_v"), "dhin"))
-    msgs = (
-        edges_all.join(deg_src, "src_v")
-        .join(deg_dst, "dst_v")
-        .withColumn("norm", F.lit(1.0) / F.sqrt(F.col("dhout") * F.col("dhin")))
-        .join(maybe_broadcast(emb), F.col("src_v") == F.col("vec_id"))
+
+def graph_gcn_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    w = gcn_weights()
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("feat")
+    )
+    msgs = normalized_edges(spark, sf_dir).join(
+        maybe_broadcast(emb), F.col("src_v") == F.col("vec_id")
     )
     agg = msgs.groupBy("dst_v").agg(
         *[

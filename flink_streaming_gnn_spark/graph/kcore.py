@@ -8,9 +8,9 @@ degrees on the induced subgraph, repeat to fixpoint. Each round is one
 hash aggregate (degrees) + two semi-joins (filter endpoints), all shuffling
 on the same vertex key so consecutive rounds reuse the partitioning. The
 fixpoint read is the round's row count, observed on the round's own
-checkpoint job (no second job), like components.py; rounds are bounded by
-the peeling depth, which is ≤ the degeneracy of the graph — small on
-real-world graphs.
+checkpoint job (no second job), like components.py; rounds are the
+peeling depth + 1, uncapped (an n-vertex path peels one vertex from
+each end per round: about n/2 rounds).
 
 Round-2 upgrade: EXACT oracle via mechanically-unrolled peel rounds
 (the LPA trick) — peeling is monotone, so once the fixpoint is reached
@@ -29,7 +29,6 @@ from flink_streaming_gnn_spark.graph.triangles import _supplier_edges
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 K = 5
-MAX_ROUNDS = 30
 
 
 @release_superseded_checkpoints
@@ -51,7 +50,7 @@ def kcore_vertices(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
         .localCheckpoint()
     )
     n_prev = rows.get["n"]
-    for _ in range(MAX_ROUNDS):
+    while True:
         keep = (
             cur.groupBy("v")
             .agg(F.count("*").alias("deg"))

@@ -8,11 +8,11 @@ bounded graph ``graph_triangle_count`` uses, canonicalized to a < b
 undirected simple edges. Spark-first round: edge support = triangle
 count through each edge, computed as edges ⋈ directed-neighbors ⋈
 directed-neighbors (two equi-joins + one hash agg, all on vertex keys —
-the standard relational triangle join), then a filter. The driver loop
-reads one O(1) edge-count scalar per round, observed on the job that
-checkpoints the round's edges, and stops at the fixpoint; every round
-frame is ``localCheckpoint``-truncated (the components/bfs/scc
-plan-growth discipline).
+the standard relational triangle join), checkpointed as ``(a, b, s)``.
+The driver loop reads one O(1) scalar per round, the count of s < k−2
+observed on that checkpoint job, and returns the supports once it is
+0, uncapped; every round frame is ``localCheckpoint``-truncated (the
+components/bfs/scc plan-growth discipline).
 
 Exact oracle: the peel is monotone (edge sets only shrink) and
 idempotent past the fixpoint, so a mechanically-unrolled
@@ -37,7 +37,6 @@ from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoi
 
 KTRUSS_K = 60
 ORACLE_ROUNDS = 7  # ≥ measured sf0.01 convergence (6) — idempotent beyond
-MAX_ROUNDS = 40
 # Constant-bounded local peel (the graph/mst.py LOCAL_TAIL_EDGES
 # discipline): at or below this edge count the whole peel runs as a
 # driver-side set-intersection loop — the collect is bounded by the
@@ -80,8 +79,7 @@ def _local_peel(spark: SparkSession, e: DataFrame) -> DataFrame:
     identical fixpoint (the peel is a monotone function of the edge set,
     independent of execution strategy)."""
     edges = {(int(r["a"]), int(r["b"])) for r in e.collect()}
-    sup: dict[tuple[int, int], int] = {}
-    for _ in range(MAX_ROUNDS):
+    while True:
         adj: dict[int, set[int]] = {}
         for a, b in edges:
             adj.setdefault(a, set()).add(b)
@@ -91,10 +89,6 @@ def _local_peel(spark: SparkSession, e: DataFrame) -> DataFrame:
         if kept == edges:
             break
         edges = kept
-        if not edges:
-            break
-    else:
-        raise RuntimeError("k-truss peel did not converge within MAX_ROUNDS")
     out = [(a, b, sup[(a, b)]) for a, b in sorted(edges)]
     return spark.createDataFrame(out, "a long, b long, support long").orderBy(
         "a", "b"
@@ -112,29 +106,24 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
-    n_edges = rows.get["n"]
-    if n_edges <= LOCAL_PEEL_EDGES:
+    if rows.get["n"] <= LOCAL_PEEL_EDGES:
         return _local_peel(spark, e)
-    for _ in range(MAX_ROUNDS):
-        sup = _support(e)
-        kept = sup.filter(F.col("s") >= KTRUSS_K - 2)
-        rows = Observation()
-        e2 = (
-            kept.select("a", "b")
-            .observe(rows, F.count("*").alias("n"))
+    while True:
+        below = Observation()
+        sup = (
+            _support(e)
+            .observe(below, F.count_if(F.col("s") < KTRUSS_K - 2).alias("n"))
             .localCheckpoint()
         )
-        n2 = rows.get["n"]  # O(1) convergence scalar
-        if n2 == n_edges or n2 == 0:
-            # converged (or empty): `kept` was computed on the final edge
-            # set, so its support values are the truss's final supports
-            return kept.select(
+        if below.get["n"] == 0:
+            # no edge falls below the bar: the supports were computed on
+            # the final edge set, so they are the truss's final supports
+            return sup.select(
                 F.col("a").cast("long").alias("a"),
                 F.col("b").cast("long").alias("b"),
                 F.col("s").cast("long").alias("support"),
             ).orderBy("a", "b")
-        e, n_edges = e2, n2
-    raise RuntimeError("k-truss peel did not converge within MAX_ROUNDS")
+        e = sup.filter(F.col("s") >= KTRUSS_K - 2).select("a", "b")
 
 
 def _ktruss_oracle_sql(rounds: int = ORACLE_ROUNDS) -> str:

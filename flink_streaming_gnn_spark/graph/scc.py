@@ -5,9 +5,9 @@ MUTUALLY reachable, so the undirected hash-min labels (which merge
 one-way-connected vertices) are wrong for directed semantics.
 
 Algorithm here: path-doubling reachability closure — R ← R ∪ (R ∘ R)
-squares the reachable path length each round, so ``DOUBLING_ROUNDS`` = 5
-cover 32 hops (≫ the fixture diameter), stopping early once the observed
-pair count is stable. SCC label(v) = min id over the mutual
+doubles the covered path length each round, so about log₂(diameter) + 1
+rounds reach the closure; the loop stops once the pair count, observed
+on the round's checkpoint, is stable. SCC label(v) = min id over the mutual
 set {v} ∪ {u : (v,u) ∈ R ∧ (u,v) ∈ R} — one self-join of the closure on
 swapped keys + one min aggregate.
 
@@ -16,8 +16,9 @@ and cheap in the 500-id embedding-vertex space (≤ 250k pairs), and
 exactly what makes the recursive-CTE oracle viable, but NOT the 100 TB
 path. The REGISTERED ``graph_scc`` plan therefore runs the scale-safe
 forward-backward coloring (Orzan / FB-trim, ``scc_labels_fb``): iterated
-forward-min + backward-min label passes — the same join+agg round shape
-as ``graph/components.py``, ~|V| state per round instead of the closure.
+forward-min + backward-min label passes, both run by the CC kernel
+``graph/components.hash_min_cc`` in its seeded mode, ~|V| state per
+round instead of the closure.
 ``scc_labels`` (the closure) remains as the independent test twin; label
 equality is pinned in tests. The plan-shape lesson (per-round
 localCheckpoint against the 2^rounds re-analysis blowup) applies to both.
@@ -28,11 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.graph.components import hash_min_cc
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
-
-DOUBLING_ROUNDS = 5  # 2^5 = 32-hop closure, far beyond the fixture diameter
-
 
 @release_superseded_checkpoints
 def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +46,7 @@ def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reach = e
     n_prev = rows.get["n"]
-    for _ in range(DOUBLING_ROUNDS):
+    while True:
         hop = (
             reach.alias("r1")
             .join(
@@ -57,9 +56,9 @@ def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("r1.v").alias("v"), F.col("r2.u").alias("u"))
         )
         # reach referenced twice per round (identity + composition):
-        # checkpoint keeps Catalyst analysis O(1) per round. The
-        # post-fixpoint doubling rounds are the most expensive joins of
-        # all, so stop on a stable pair count (observed on the checkpoint)
+        # checkpoint keeps Catalyst analysis O(1) per round. The closure
+        # is complete once a doubling adds no pair, so stop on a stable
+        # pair count (observed on the checkpoint)
         rows = Observation()
         reach = (
             reach.union(hop).distinct()
@@ -86,95 +85,63 @@ def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_OUTER = 12  # condensation-chain bound for the fixture graph
-MAX_INNER = 25  # propagation fixpoint bound (graph diameter)
-
-
 @release_superseded_checkpoints
 def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE 100 TB SCC path — forward-backward coloring (Orzan-style), the
-    closure-free algorithm ``scc_labels``' docstring promises: per outer
-    round, (1) propagate min-reaching-id forward to fixpoint — color(v) =
-    min u that reaches v — so color classes partition the graph with the
-    class min as root; (2) mark vertices that reach their root BACKWARD
-    within their own color class — marked = FW ∩ BW = the root's whole
-    SCC, one SCC peeled per color simultaneously; (3) remove peeled
-    vertices and repeat on the remainder (outer rounds = longest chain in
-    the condensation, not #SCCs). State is one (vertex, color) row per
-    live vertex — never a reachability closure — and every step is a
-    join+agg round like graph_connected_components', with the
-    localCheckpoint lineage discipline and convergence observed on each
-    round's checkpoint job. Equality with the exact closure labels is
-    pinned in tests/test_round2d.py."""
-    edges_all = (
+    closure-free algorithm ``scc_labels``' docstring promises. Per outer
+    round: (1) forward pass — color(v) = min u that reaches v, so color
+    classes partition the graph with the class min as root; (2) backward
+    pass within each color class from its root — the vertices that reach
+    their root, FW ∩ BW, are the root's whole SCC, one SCC peeled per
+    color at once; (3) remove the peeled vertices and repeat on the
+    remainder. Both passes are ``hash_min_cc`` in its seeded mode, so
+    each runs to its fixpoint with one join + aggregate per round. Every
+    outer round peels at least the roots, so the loop ends; it ends when
+    the remainder's row count, observed on its checkpoint, is 0 (outer
+    rounds = the longest chain of the condensation, not #SCCs). State is
+    one (vertex, color) row per live vertex — never a reachability
+    closure. Equality with the exact closure labels is pinned in
+    tests/test_round2d.py."""
+    edges = (
         derive_vertex_embeddings(spark, sf_dir)
         .distinct()
         .select(F.col("src_v").alias("v"), F.col("dst_v").alias("u"))
         .filter(F.col("v") != F.col("u"))
         .localCheckpoint()
     )
-    verts = (
-        edges_all.select("v")
-        .union(edges_all.select(F.col("u").alias("v")))
+    remaining = (
+        edges.select("v")
+        .union(edges.select(F.col("u").alias("v")))
         .distinct()
         .localCheckpoint()
     )
     done_parts: list[DataFrame] = []
-    remaining, edges = verts, edges_all
-    for _ in range(MAX_OUTER):
-        # (1) forward min-reaching-id to fixpoint
-        color = remaining.withColumn("c", F.col("v")).localCheckpoint()
-        for _ in range(MAX_INNER):
-            nbr_min = (
-                edges.join(color.select(F.col("v").alias("src"), "c"),
-                           edges.v == F.col("src"))
-                .groupBy(F.col("u").alias("v2"))
-                .agg(F.min("c").alias("nc"))
-            )
-            lowered = Observation()
-            color = (
-                color.join(nbr_min, color.v == nbr_min.v2, "left")
-                .observe(lowered, F.count_if(F.col("nc") < F.col("c")).alias("n"))
-                .select(
-                    "v", F.least(F.col("c"), F.coalesce("nc", F.col("c"))).alias("c")
-                )
-                .localCheckpoint()
-            )
-            if lowered.get["n"] == 0:
-                break
-        # (2) backward marking within color class, from each class root
+    while True:
+        # (1) forward: labels flow along v → u, seeded with each vertex's id
+        color = hash_min_cc(
+            edges.select(F.col("u").alias("a"), F.col("v").alias("b")),
+            remaining.select("v", F.col("v").alias("lbl")),
+        )
+        # (2) backward within each color class, seeded at the class root
+        intra = (
+            edges.join(color.select("v", F.col("lbl").alias("cv")), "v")
+            .join(color.select(F.col("v").alias("u"), F.col("lbl").alias("cu")), "u")
+            .filter(F.col("cv") == F.col("cu"))
+            .select(F.col("v").alias("a"), F.col("u").alias("b"))
+        )
+        roots = color.select(
+            "v", F.when(F.col("v") == F.col("lbl"), F.col("lbl")).alias("lbl")
+        )
+        marked = hash_min_cc(intra, roots).filter(F.col("lbl").isNotNull())
+        done_parts.append(marked.select("v", F.col("lbl").alias("scc")))
+        # (3) peel and continue on the remainder
         rows = Observation()
-        marked = (
-            color.filter(F.col("v") == F.col("c")).select("v", "c")
+        remaining = (
+            remaining.join(marked.select("v"), "v", "left_anti")
             .observe(rows, F.count("*").alias("n"))
             .localCheckpoint()
         )
-        n_marked = rows.get["n"]
-        for _ in range(MAX_INNER):
-            step = (
-                edges.join(marked.select(F.col("v").alias("dst"), "c"),
-                           edges.u == F.col("dst"))
-                .select(F.col("v").alias("mv"), "c")
-                .join(
-                    color.select(F.col("v").alias("mv"), F.col("c").alias("vc")),
-                    "mv",
-                )
-                .filter(F.col("c") == F.col("vc"))
-                .select(F.col("mv").alias("v"), "c")
-            )
-            rows = Observation()
-            marked = (
-                marked.union(step).distinct()
-                .observe(rows, F.count("*").alias("n"))
-                .localCheckpoint()
-            )
-            if rows.get["n"] == n_marked:
-                break
-            n_marked = rows.get["n"]
-        done_parts.append(marked.select("v", F.col("c").alias("scc")))
-        # (3) peel and continue on the remainder
-        remaining = remaining.join(marked.select("v"), "v", "left_anti").localCheckpoint()
-        if remaining.isEmpty():
+        if rows.get["n"] == 0:
             break
         live = remaining.select("v")
         edges = (

@@ -121,3 +121,36 @@ def test_hash_min_cc_jobs_per_round(spark):
     short = _jobs_for_path(spark, 4, "cc_rounds_short")
     long = _jobs_for_path(spark, 4 + k, "cc_rounds_long")
     assert long - short <= 6 * k, (short, long)
+
+
+def _seeded_reference(edges, seeds):
+    """Python fixpoint of seeded hash-min: along each edge (a, b) the
+    label of b flows to a; a null label is "no label yet"."""
+    lbl = dict(seeds)
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            if lbl[b] is not None and (lbl[a] is None or lbl[b] < lbl[a]):
+                lbl[a] = lbl[b]
+                changed = True
+    return lbl
+
+
+def test_hash_min_cc_seeded_directed_matches_python(spark):
+    """Seeded mode on directed edges (a, b) = b → a: a cycle 2 → 3 → 5 →
+    4 → 2 with null seeds on 2, 3 and 5, vertex 6 with out-edges only
+    (it only appears as b), a null-seeded vertex that no label reaches
+    (7), and one that is reached only through the cycle (8)."""
+    seeds = {1: 5, 2: None, 3: None, 4: 9, 5: None, 6: 2, 7: None, 8: None}
+    edges = [(2, 4), (3, 2), (5, 3), (4, 5), (3, 1), (1, 6), (8, 5)]
+    got = {
+        int(r["v"]): r["lbl"]
+        for r in hash_min_cc(
+            spark.createDataFrame(edges, "a long, b long"),
+            spark.createDataFrame(list(seeds.items()), "v long, lbl long"),
+        ).collect()
+    }
+    want = _seeded_reference(edges, seeds)
+    assert got == want
+    assert want[7] is None and want[6] == 2 and want[4] == 2

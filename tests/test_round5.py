@@ -242,6 +242,23 @@ def test_ktruss_local_peel_equals_distributed(spark, monkeypatch):
     assert local == dist
 
 
+def test_ktruss_distributed_peel_reaches_empty(spark, monkeypatch):
+    """A 5-clique has support 3 < K−2 on every edge: the first round
+    removes all of them, and the next round observes its count on an
+    empty support frame and returns it."""
+    from flink_streaming_gnn_spark.graph import ktruss
+
+    clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    monkeypatch.setattr(
+        ktruss,
+        "_canonical_edges",
+        lambda spark, sf_dir: spark.createDataFrame(clique, "a long, b long"),
+    )
+    assert ktruss.graph_ktruss(spark, SF_SMOKE).collect() == []
+    monkeypatch.setattr(ktruss, "LOCAL_PEEL_EDGES", 0)
+    assert ktruss.graph_ktruss(spark, SF_SMOKE).collect() == []
+
+
 # ---------------------------------------------------------------------------
 # streaming/scd2.py — the streamed SCD2 history must equal the batch
 # twin row-for-row (closed intervals are immutable facts; the final
