@@ -1,7 +1,6 @@
 """Local clustering coefficient on the supplier co-order projection
-(SURVEY.md §2B graph ops; completes the triangle family started by
-``graph/triangles.py`` — the same ordered a<b<c enumeration, read out
-per-vertex instead of as one global count).
+(SURVEY.md §2B graph ops; completes the triangle family of
+``graph/triangles.py``).
 
 Semantics: for each projected vertex v with degree ≥ 2,
 
@@ -11,26 +10,10 @@ where T(v) counts triangles incident to v. The structural signal a GNN
 cannot learn from 1-hop aggregation alone (triangles are 2-hop cycles),
 and the classic "is this neighborhood a clique or a star" feature.
 
-Spark-first shape: the triangle enumeration is the two-equi-join ascending
-path extension from ``graph/triangles.py`` (each triangle emitted exactly
-once); the per-vertex readout explodes each triangle into its three
-incident vertices — one array explode, |T|×3 rows — and hash-aggregates.
-Degrees are one explode + one hash agg over the oriented edge list. All
-shuffles key on supplier ids; the deterministic edge subtrees are
-identical, so AQE reuses the exchange instead of rescanning lineitem.
-
-Scale posture (round 6 — shared with ``graph/triangles.py``, whose ×10
-probe measured wedge ENUMERATION on the quasi-clique projection at
-268–334 s): the per-vertex readout rides the same two tiers. In the
-dense small-V regime (V ≤ 16Ki, E ≤ 32Mi — geometry-bounded driver
-read), T(v) is the v-th diagonal entry of A³/2 = row-sum of (A² ∘ A)/2
-over the float32 adjacency: ONE BLAS matmul replaces ~4·10⁹ wedge join
-rows, 334 → ~35 s at ×10. Larger graphs keep the ordered two-equi-join
-enumeration (each triangle once, exploded to its three vertices), the
-regime where the projection is sparse and the join shape performs —
-with degree-based orientation as the documented refinement. The final
-``2T/(d(d−1))`` division and rounding happen JVM-side in BOTH tiers, so
-the emitted doubles are bit-identical regardless of tier.
+The key is a readout of ``triangles.per_vertex_triangles``, which
+computes (degree, T(v)) for every vertex and chooses its own tier. The
+division and rounding run JVM-side on that frame, so the emitted doubles
+are the same whichever tier counted.
 """
 
 from __future__ import annotations
@@ -38,108 +21,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.triangles import (
-    DENSE_E_BOUND,
-    DENSE_V_BOUND,
-    _masked_a2_rowsums,
-    _supplier_edges,
-)
-
-
-def _per_vertex_dense(a_arr, b_arr):
-    """Driver BLAS kernel: (degree, per-vertex triangle count) for every
-    vertex — deg = row-sum of A, T(v) = row-sum of (A² ∘ A)/2 via the
-    shared slabbed kernel (peak = adjacency + one slab, not 3 full V×V
-    matrices — ADVICE r6), both exact (A² entries are integers < 2²⁴ in
-    float32; sums accumulate in float64)."""
-    import numpy as np
-
-    a = np.asarray(a_arr, dtype=np.int64)
-    b = np.asarray(b_arr, dtype=np.int64)
-    verts, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ai, bi = inv[: len(a)], inv[len(a) :]
-    n = len(verts)
-    adj = np.zeros((n, n), dtype=np.float32)
-    adj[ai, bi] = 1.0
-    adj[bi, ai] = 1.0
-    deg = adj.sum(axis=1, dtype=np.float64).astype(np.int64)
-    tv2 = _masked_a2_rowsums(adj)
-    tv = np.rint(tv2 / 2.0).astype(np.int64)
-    return [
-        (int(verts[i]), int(deg[i]), int(tv[i])) for i in range(n)
-    ]
+from flink_streaming_gnn_spark.graph.edges import SUPPLIER_PAIRS_CTE, supplier_edges
+from flink_streaming_gnn_spark.graph.triangles import per_vertex_triangles
 
 
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the projection feeds FOUR subtrees (degree + three wedge-join arms):
-    # materialize once so no arm recomputes the lineitem self-join
-    e = _supplier_edges(spark, sf_dir).localCheckpoint()
-    n_edges = e.count()
-    n_verts = (
-        e.select(F.col("a").alias("v"))
-        .unionAll(e.select(F.col("b").alias("v")))
-        .distinct()
-        .count()
-    )
-    if n_verts <= DENSE_V_BOUND and n_edges <= DENSE_E_BOUND:
-        pdf = e.toPandas()  # geometry-bounded by the guard; Arrow transfer
-        rows = _per_vertex_dense(pdf["a"].to_numpy(), pdf["b"].to_numpy())
-        counted = spark.createDataFrame(
-            rows, schema="supplier long, degree long, n_triangles long"
-        )
-        # division + rounding JVM-side: bit-identical to the join tier
-        return counted.filter(F.col("degree") >= 2).select(
-            "supplier",
-            "degree",
-            "n_triangles",
-            F.round(
-                2.0
-                * F.col("n_triangles")
-                / (F.col("degree") * (F.col("degree") - 1)),
-                6,
-            ).alias("clustering"),
-        )
-    # component-blocked distributed tier (round 8 — shared with
-    # graph/triangles.py, whose module comment has the ×100 story):
-    # executor-side per-component BLAS for the safe small components,
-    # degree-ordered oriented joins for the sparse remainder. Per-vertex
-    # (degree, tri) rows union cleanly because components partition the
-    # vertex set; the ascending-id enumeration this replaces had Θ(V³)
-    # wedge fan-out per quasi-clique component at ×100.
-    from flink_streaming_gnn_spark.graph.triangles import (
-        _dense_component_pv,
-        _per_vertex_joins,
-        _split_components,
-    )
-
-    dense_e, sparse_e = _split_components(e)
-    per_vertex = _dense_component_pv(dense_e).unionByName(
-        _per_vertex_joins(sparse_e)
-    )
-    return (
-        per_vertex.filter(F.col("degree") >= 2)
-        .select(
-            F.col("v").cast("long").alias("supplier"),
-            "degree",
-            F.col("tri").cast("long").alias("n_triangles"),
-            F.round(
-                2.0 * F.col("tri") / (F.col("degree") * (F.col("degree") - 1)),
-                6,
-            ).alias("clustering"),
-        )
+    pv = per_vertex_triangles(supplier_edges(spark, sf_dir))
+    return pv.filter(F.col("degree") >= 2).select(
+        F.col("v").alias("supplier"),
+        "degree",
+        F.col("tri").alias("n_triangles"),
+        F.round(
+            2.0 * F.col("tri") / (F.col("degree") * (F.col("degree") - 1)), 6
+        ).alias("clustering"),
     )
 
 
 QUERIES = {"graph_clustering_coefficient": graph_clustering_coefficient}
 
 ORACLE = {
-    "graph_clustering_coefficient": """
-        WITH pairs AS (
-            SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-            FROM lineitem l1
-            JOIN lineitem l2
-              ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey < l2.l_suppkey
-        ),
+    "graph_clustering_coefficient": f"""
+        WITH {SUPPLIER_PAIRS_CTE},
         deg AS (
             SELECT supplier, CAST(count(*) AS BIGINT) AS degree
             FROM (SELECT a AS supplier FROM pairs

@@ -9,8 +9,9 @@ what, how deep is the dependency chain). Per component this emits:
 * ``level`` — LONGEST path from any source of the DAG (topological
   depth; sources are level 0) via bounded max-propagation DP.
 
-Spark-first shape: SCC labels come from the closure-free
-forward–backward coloring (``scc_labels_fb`` — the 100 TB SCC path);
+Spark-first shape: the directed edges are derived and checkpointed
+once; SCC labels come from them by the closure-free forward–backward
+coloring (``scc_labels_fb`` — the 100 TB SCC path), and the
 condensation edges are two broadcast-gated label joins + a distinct
 (never a closure); the level DP is one join + max-agg per round over
 the |SCCs|-sized DAG, uncapped: levels only rise, so rounds are the
@@ -28,21 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
-from flink_streaming_gnn_spark.graph.scc import scc_labels_fb
+from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
+from flink_streaming_gnn_spark.graph.scc import directed_edges, scc_labels_fb
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 
 @release_superseded_checkpoints
 def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        derive_vertex_embeddings(spark, sf_dir)
-        .distinct()
-        .select(F.col("src_v").alias("v"), F.col("dst_v").alias("u"))
-        .filter(F.col("v") != F.col("u"))
-    )
-    labels = scc_labels_fb(spark, sf_dir).localCheckpoint()
+    # one edge derivation: SCC and the condensation edges share it
+    e = directed_edges(spark, sf_dir).localCheckpoint()
+    labels = scc_labels_fb(e).localCheckpoint()
     lab_src = maybe_broadcast(labels.select(F.col("v"), F.col("scc").alias("c_src")))
     lab_dst = maybe_broadcast(
         labels.select(F.col("v").alias("u"), F.col("scc").alias("c_dst"))

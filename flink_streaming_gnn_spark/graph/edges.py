@@ -75,6 +75,32 @@ EDGES_CTE = """
 """
 
 
+def supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier co-order projection: distinct undirected supplier
+    pairs ``(a, b)``, ``a < b``, of suppliers that ship lineitems of the
+    same order (the bipartite graph has no odd cycles, so the triangle
+    family and k-core read this one-mode projection). Ids are plain
+    supplier keys, not the bipartite id space."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    l2 = li.select(F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2"))
+    return (
+        li.join(l2, (li.l_orderkey == l2.o2) & (li.l_suppkey < l2.s2))
+        .select(F.col("l_suppkey").alias("a"), F.col("s2").alias("b"))
+        .distinct()
+    )
+
+
+# DuckDB CTE twin of supplier_edges
+SUPPLIER_PAIRS_CTE = """
+    pairs AS (
+        SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
+        FROM lineitem l1
+        JOIN lineitem l2
+          ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey < l2.l_suppkey
+    )
+"""
+
+
 def derive_vertex_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tensor-fixture edge list in embedding-id space: both endpoints mapped
     by pmod(id, 500) onto embeddings.vec_id (FIXTURES.md)."""

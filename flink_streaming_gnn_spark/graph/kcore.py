@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.triangles import _supplier_edges
+from flink_streaming_gnn_spark.graph.edges import SUPPLIER_PAIRS_CTE, supplier_edges
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 K = 5
@@ -35,7 +35,7 @@ K = 5
 def kcore_vertices(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
     """Vertices of the k-core with their degree inside the core."""
     # undirected: materialize both directions once, peel on (v, other)
-    e = _supplier_edges(spark, sf_dir)
+    e = supplier_edges(spark, sf_dir)
     # eager localCheckpoint per round (components.py discipline): each
     # round references the previous frame twice (degree agg + semi-join
     # filters), the checkpoint is lineage-free so nothing recomputes, and
@@ -100,12 +100,7 @@ def _kcore_oracle_sql(k: int = K, rounds: int = ORACLE_ROUNDS) -> str:
         )""")
     body = ",\n        ".join(blocks)
     return f"""
-        WITH pairs AS (
-            SELECT DISTINCT l1.l_suppkey AS a, l2.l_suppkey AS b
-            FROM lineitem l1
-            JOIN lineitem l2
-              ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey < l2.l_suppkey
-        ),
+        WITH {SUPPLIER_PAIRS_CTE},
         {body}
         SELECT CAST(v AS BIGINT) AS v, CAST(count(*) AS BIGINT) AS core_deg
         FROM e{rounds}

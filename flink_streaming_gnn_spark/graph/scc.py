@@ -33,14 +33,23 @@ from flink_streaming_gnn_spark.graph.components import hash_min_cc
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
 from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
-@release_superseded_checkpoints
-def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows = Observation()
-    e = (
+
+def directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The directed vertex-fixture graph as distinct ``(v, u)`` edges
+    ``v → u``, self-loops dropped (they join no two vertices)."""
+    return (
         derive_vertex_embeddings(spark, sf_dir)
         .distinct()
         .select(F.col("src_v").alias("v"), F.col("dst_v").alias("u"))
         .filter(F.col("v") != F.col("u"))
+    )
+
+
+@release_superseded_checkpoints
+def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rows = Observation()
+    e = (
+        directed_edges(spark, sf_dir)
         .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
@@ -86,9 +95,11 @@ def scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @release_superseded_checkpoints
-def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE 100 TB SCC path — forward-backward coloring (Orzan-style), the
-    closure-free algorithm ``scc_labels``' docstring promises. Per outer
+def scc_labels_fb(edges: DataFrame) -> DataFrame:
+    """``(v, scc)`` labels of ``edges``, a checkpointed
+    ``directed_edges`` frame (the caller may reuse it). THE 100 TB SCC
+    path — forward-backward coloring (Orzan-style), the closure-free
+    algorithm ``scc_labels``' docstring promises. Per outer
     round: (1) forward pass — color(v) = min u that reaches v, so color
     classes partition the graph with the class min as root; (2) backward
     pass within each color class from its root — the vertices that reach
@@ -102,13 +113,6 @@ def scc_labels_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (vertex, color) row per live vertex — never a reachability
     closure. Equality with the exact closure labels is pinned in
     tests/test_round2d.py."""
-    edges = (
-        derive_vertex_embeddings(spark, sf_dir)
-        .distinct()
-        .select(F.col("src_v").alias("v"), F.col("dst_v").alias("u"))
-        .filter(F.col("v") != F.col("u"))
-        .localCheckpoint()
-    )
     remaining = (
         edges.select("v")
         .union(edges.select(F.col("u").alias("v")))
@@ -164,7 +168,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability closure. The closure variant (``scc_labels``) stays as
     the test twin; label equality between the two is pinned in
     tests/test_round2d.py, so the oracle hash-match carries over."""
-    labels = scc_labels_fb(spark, sf_dir)
+    labels = scc_labels_fb(directed_edges(spark, sf_dir).localCheckpoint())
     return labels.groupBy(F.col("scc").cast("long").alias("scc")).agg(
         F.count("*").cast("long").alias("n_vertices")
     )

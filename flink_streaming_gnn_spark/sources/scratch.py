@@ -39,6 +39,10 @@ import uuid
 from typing import Callable
 
 _MEMO: dict[str, str] = {}
+# one lock per memo key, held across that key's build: a key builds once,
+# while other keys (also ones a build callback asks for) build alongside.
+# _LOCK only guards creating the per-key locks, never a build.
+_KEY_LOCKS: dict[str, threading.Lock] = {}
 _LOCK = threading.Lock()
 
 
@@ -67,6 +71,8 @@ def scratch_dir(kind: str, fingerprint: str, build: Callable[[str], None]) -> st
     """
     key = f"{kind}|{fingerprint}"
     with _LOCK:
+        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+    with key_lock:
         path = _MEMO.get(key)
         if path is not None and os.path.isdir(path):
             return path

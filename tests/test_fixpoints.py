@@ -21,7 +21,6 @@ def test_condensation_of_transitive_tournament_has_every_level(spark, monkeypatc
         return spark.createDataFrame(tournament, "src_v long, dst_v long")
 
     monkeypatch.setattr(scc, "derive_vertex_embeddings", edges)
-    monkeypatch.setattr(condensation, "derive_vertex_embeddings", edges)
     got = [
         tuple(r)
         for r in condensation.graph_condensation_dag(spark, SF_SMOKE).collect()
@@ -37,7 +36,7 @@ def test_kcore_of_long_path_is_empty(spark, monkeypatch):
     path = [(i, i + 1) for i in range(65)]
     monkeypatch.setattr(
         kcore,
-        "_supplier_edges",
+        "supplier_edges",
         lambda spark, sf_dir: spark.createDataFrame(path, "a long, b long"),
     )
     assert kcore.kcore_vertices(spark, SF_SMOKE, k=2).collect() == []

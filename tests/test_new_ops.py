@@ -5,8 +5,6 @@ test_oracle_differential.py: brute-force / numpy references at smoke scale.
 
 from __future__ import annotations
 
-from itertools import combinations
-
 import numpy as np
 import pandas as pd
 
@@ -23,7 +21,6 @@ from flink_streaming_gnn_spark.graph.sampling import (
     graph_neighbor_sample,
     graph_negative_sample,
 )
-from flink_streaming_gnn_spark.graph.triangles import graph_triangle_count
 from flink_streaming_gnn_spark.operators.timeseries import cdc_latest_snapshot
 from flink_streaming_gnn_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -99,36 +96,12 @@ def test_gat_layer_matches_numpy(spark):
         np.testing.assert_allclose(have, np.round(want, 4), atol=2e-4)
 
 
-def test_triangle_count_matches_bruteforce(spark):
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .toPandas()
-    )
-    edges = set()
-    for _, grp in li.groupby("l_orderkey"):
-        for a, b in combinations(sorted(set(grp.l_suppkey)), 2):
-            edges.add((int(a), int(b)))
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-    n_tri = sum(
-        1
-        for a, b in edges
-        for c in adj.get(b, ())
-        if c in adj.get(a, ())
-    )
-    row = graph_triangle_count(spark, SF_SMOKE).collect()[0]
-    assert row.n_edges == len(edges)
-    assert row.n_triangles == n_tri
-
-
 def test_kcore_matches_sequential_peel(spark):
     from flink_streaming_gnn_spark.graph.kcore import K, kcore_vertices
-    from flink_streaming_gnn_spark.graph.triangles import _supplier_edges
+    from flink_streaming_gnn_spark.graph.edges import supplier_edges
 
     pairs = {
-        (int(r.a), int(r.b)) for r in _supplier_edges(spark, SF_SMOKE).collect()
+        (int(r.a), int(r.b)) for r in supplier_edges(spark, SF_SMOKE).collect()
     }
     adj: dict[int, set[int]] = {}
     for a, b in pairs:

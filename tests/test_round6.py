@@ -118,67 +118,6 @@ def test_embedding_cosine_group_contract_planted(spark, tmp_path):
     assert len(cross_rows) >= 1 and (cross_rows.cos >= 0.9).all()
 
 
-def test_triangle_tiers_agree(spark):
-    # graph_triangle_count round-6 two-tier shape: the distributed
-    # degree-ordered-orientation join path must count exactly what the
-    # dense driver bit-kernel counts (the fixture rides the dense tier;
-    # this pins distributed ≡ dense, the graph_mst_boruvka discipline)
-    from flink_streaming_gnn_spark.graph.triangles import (
-        _count_dense,
-        _count_distributed,
-        _supplier_edges,
-    )
-
-    e = _supplier_edges(spark, SF_SMOKE).persist()
-    pdf = e.toPandas()
-    dense = _count_dense(pdf["a"].to_numpy(), pdf["b"].to_numpy())
-    distributed = int(_count_distributed(e).collect()[0][0])
-    e.unpersist()
-    assert dense == distributed
-    assert dense > 0  # fixture must actually contain triangles
-
-
-def test_clustering_dense_kernel_vs_join_tier(spark):
-    # graph_clustering_coefficient round-6 dense tier: the BLAS
-    # (degree, per-vertex triangle) kernel must agree exactly with the
-    # ordered two-join enumeration it replaces
-    from pyspark.sql import functions as F
-
-    from flink_streaming_gnn_spark.graph.clustering import _per_vertex_dense
-    from flink_streaming_gnn_spark.graph.triangles import _supplier_edges
-
-    e = _supplier_edges(spark, SF_SMOKE).persist()
-    pdf = e.toPandas()
-    dense = {
-        s: (d, t) for s, d, t in _per_vertex_dense(
-            pdf["a"].to_numpy(), pdf["b"].to_numpy()
-        )
-    }
-    deg = {
-        int(r.supplier): int(r.degree)
-        for r in e.select(F.explode(F.array("a", "b")).alias("supplier"))
-        .groupBy("supplier")
-        .agg(F.count("*").alias("degree"))
-        .collect()
-    }
-    e2 = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tris = (
-        e.join(e2, e.b == e2.b2)
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-    )
-    tri_v = {
-        int(r.supplier): int(r.n)
-        for r in tris.select(F.explode(F.array("a", "b", "c")).alias("supplier"))
-        .groupBy("supplier")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    e.unpersist()
-    assert {s: d for s, (d, _) in dense.items()} == deg
-    assert {s: t for s, (_, t) in dense.items() if t} == tri_v
-
-
 def test_null_rows_actually_present(spark, nullable_events_dir):
     # guard: the fixture must really contain NULL values for the two
     # compared types, or the tests above prove nothing

@@ -310,120 +310,3 @@ def test_source_rate_ingest_deterministic(spark):
     assert a.loc[a.event_id == 7, "event_type"].iloc[0] == "type_2"
     assert a.loc[a.event_id == 7, "value"].iloc[0] == 3.5
     assert a.loc[a.event_id == 7, "props"].iloc[0] == '{"seq":7}'
-
-
-# ---------------------------------------------------------------------------
-# Component-blocked triangle tiers (round 8 — the ×100 probe killed the
-# oriented-join tier on quasi-clique components; see graph/triangles.py).
-
-
-def _pv_truth(spark, e):
-    """Whole-graph dense-kernel truth: {v: (degree, tri)}."""
-    from flink_streaming_gnn_spark.graph.clustering import _per_vertex_dense
-
-    pdf = e.toPandas()
-    return {
-        v: (d, t)
-        for v, d, t in _per_vertex_dense(
-            pdf["a"].to_numpy(), pdf["b"].to_numpy()
-        )
-    }
-
-
-def test_component_split_invariants(spark):
-    """dense_e edges are label-closed, vertex sets are disjoint between
-    tiers, and no edge is lost."""
-    from pyspark.sql import functions as F
-
-    from flink_streaming_gnn_spark.graph.triangles import (
-        _split_components,
-        _supplier_edges,
-    )
-    from tests.conftest import SF_SMOKE
-
-    e = _supplier_edges(spark, SF_SMOKE).localCheckpoint()
-    dense_e, sparse_e = _split_components(e)
-    n_e = e.count()
-    n_dense, n_sparse = dense_e.count(), sparse_e.count()
-    assert n_dense + n_sparse == n_e
-    dv = {
-        r["v"]
-        for r in dense_e.select(
-            F.explode(F.array("a", "b")).alias("v")
-        ).distinct().collect()
-    }
-    sv = {
-        r["v"]
-        for r in sparse_e.select(
-            F.explode(F.array("a", "b")).alias("v")
-        ).distinct().collect()
-    }
-    assert not (dv & sv)  # a vertex lives in exactly one tier
-
-
-def test_component_tiers_match_dense_truth(spark):
-    """The component-blocked union (executor BLAS + sparse joins) must
-    reproduce the whole-graph dense kernel exactly — at the natural
-    component bound, with everything FORCED sparse, and with everything
-    forced dense."""
-    import flink_streaming_gnn_spark.graph.triangles as tri_mod
-    from flink_streaming_gnn_spark.graph.triangles import (
-        _dense_component_pv,
-        _per_vertex_joins,
-        _split_components,
-        _supplier_edges,
-    )
-    from tests.conftest import SF_SMOKE
-
-    e = _supplier_edges(spark, SF_SMOKE).localCheckpoint()
-    truth = _pv_truth(spark, e)
-
-    def run_split():
-        dense_e, sparse_e = _split_components(e)
-        got = {}
-        for r in _dense_component_pv(dense_e).collect():
-            got[r["v"]] = (r["degree"], r["tri"])
-        for r in _per_vertex_joins(sparse_e).collect():
-            got[r["v"]] = (r["degree"], r["tri"])
-        return got
-
-    assert run_split() == truth  # natural bound
-    old = tri_mod.DENSE_COMPONENT_V_BOUND
-    try:
-        tri_mod.DENSE_COMPONENT_V_BOUND = 0  # force all-sparse
-        assert run_split() == truth
-        tri_mod.DENSE_COMPONENT_V_BOUND = 1 << 30  # force all-dense
-        assert run_split() == truth
-    finally:
-        tri_mod.DENSE_COMPONENT_V_BOUND = old
-
-
-def test_triangle_keys_forced_distributed_tier(spark, monkeypatch):
-    """Both registry keys, FORCED onto the distributed component path
-    (global dense bounds patched to 0), must equal their dense-tier
-    fixture answers row for row."""
-    import flink_streaming_gnn_spark.graph.clustering as clu_mod
-    import flink_streaming_gnn_spark.graph.triangles as tri_mod
-    from tests.conftest import SF_SMOKE
-
-    def tri_rows():
-        return sorted(
-            tuple(r)
-            for r in tri_mod.graph_triangle_count(spark, SF_SMOKE).collect()
-        )
-
-    def clu_rows():
-        return sorted(
-            tuple(r)
-            for r in clu_mod.graph_clustering_coefficient(
-                spark, SF_SMOKE
-            ).collect()
-        )
-
-    want_tri, want_clu = tri_rows(), clu_rows()
-    monkeypatch.setattr(tri_mod, "DENSE_V_BOUND", 0)
-    monkeypatch.setattr(tri_mod, "DENSE_E_BOUND", 0)
-    monkeypatch.setattr(clu_mod, "DENSE_V_BOUND", 0)
-    monkeypatch.setattr(clu_mod, "DENSE_E_BOUND", 0)
-    assert tri_rows() == want_tri
-    assert clu_rows() == want_clu
