@@ -21,8 +21,11 @@ import shutil
 import sys
 import tempfile
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import functions as F  # noqa: E402
 
 from flink_streaming_gnn_spark import registry  # noqa: E402
 from flink_streaming_gnn_spark.session import get_spark  # noqa: E402
@@ -83,232 +86,163 @@ def _time_best(fn, runs: int = 2, spark=None) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Amortization evidence (round-1 VERDICT, next-round #7): at sf0.1 most
-# per-query ratios are Spark's fixed ~0.3 s/query floor doing ~10 ms of
-# work; the claim "the overhead amortizes with volume" needs a measurement.
-# We replicate the corpus REPLICAS× with per-replica key shifts (each copy's
-# keys live in a disjoint range, so joins stay shard-local and the data has
-# sf~1 structure, not multiplicity-inflated join blowup), then time the same
-# headline queries in BOTH engines on the SAME blown-up parquet — DuckDB
-# runs the registry's own oracle SQL, so both sides execute the same
-# algorithm (notably graph_2hop's O(E) pre-aggregation rewrite).
+# Scaled corpora: the one builder, used by the ×10/×100 sections below and by
+# every rung of ``tools/probe.py ladder``.
 
-_KEY_SHIFT = 100_000_000  # larger than any key at sf<=1
-
-# The non-TPC-H tables are tiny at sf0.1 (documents 5k, embeddings 2k,
-# events 100k rows) — at 10× they still never amortize Spark's fixed
-# ~0.3 s/query floor, so their ratios would measure overhead, not the
-# engine. Boost them 10× further (→100 copies: documents 500k,
-# embeddings 200k, events 10M rows) so both engines do real work. Safe
-# because no headline query joins across the boosted/unboosted groups
-# (TPC-H ⊥ events ⊥ documents ⊥ embeddings — see oracle SQL table sets).
-_REPLICA_BOOST = {"events": 10, "documents": 10, "embeddings": 10}
-
-_SHIFT_COLS = {
+# The key columns of each table that a copy shifts. Tables not named here
+# (region, nation, supplier, part) are dimensions: a scaled corpus links them.
+SHIFT_COLS = {
     "customer": ("c_custkey",),
     "orders": ("o_orderkey", "o_custkey"),
     "lineitem": ("l_orderkey", "l_suppkey", "l_partkey"),
     "events": ("event_id", "user_id"),
     "documents": ("doc_id",),
     "embeddings": ("vec_id",),
-    # nation/region/supplier/part: true dims — copied verbatim
 }
+# the prefix of a scaled corpus's directory name; a build in progress (or
+# one whose process was killed) is named "." + SCALED_PREFIX + ...
+SCALED_PREFIX = "scaled_"
 
 
-def _build_blownup(spark, sf_dir: str, replicas: int) -> str:
-    """Materialize the replicas×-replicated corpus once (cached in tmp,
-    keyed on fixture content + replica count, atomic-renamed into place)."""
-    from pyspark.sql import functions as F
+class Rung(NamedTuple):
+    copies: dict[str, int]  # copies of each table of the source corpus
+    shift: int  # key shift per copy: above every key of the source corpus
+    partitions: int  # files per copied table
 
-    sig_parts = [f"x{replicas}", f"boost{sorted(_REPLICA_BOOST.items())}"]
+
+def x10_rung(replicas: int = 10) -> Rung:
+    """``replicas`` copies of the fact tables, ten times as many of events,
+    documents and embeddings: at sf0.1 those hold 100k, 5k and 2k rows, so
+    ten copies would still time only Spark's fixed per-query cost. No query
+    joins a table of the second group to one of the first, so the two
+    copy counts never meet in a join."""
+    boosted = ("events", "documents", "embeddings")
+    return Rung(
+        {t: replicas * (10 if t in boosted else 1) for t in SHIFT_COLS}, 10**8, 16
+    )
+
+
+def _file_stats(path: str):
+    """(path, size, mtime_ns) of the file at ``path`` or of every file under it."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        yield path, st.st_size, st.st_mtime_ns
+        return
+    for dirpath, dirnames, files in os.walk(path):
+        dirnames.sort()
+        for f in sorted(files):
+            st = os.stat(os.path.join(dirpath, f))
+            yield os.path.join(dirpath, f), st.st_size, st.st_mtime_ns
+
+
+def scale_corpus(spark, src: str, rung: Rung, root: str | None = None) -> str:
+    """A corpus directory holding ``rung.copies[t]`` copies of each named
+    table ``t`` of the corpus ``src``, with a link to ``src``'s file for every
+    other table. Copy ``i`` adds ``i * rung.shift`` to the table's key
+    columns (``SHIFT_COLS``), so the copies' keys are disjoint and a join
+    between two copied tables stays within one copy.
+
+    The directory, under ``root`` (default: TMPDIR), is named after ``rung``
+    and the content of ``src``: the path, size and mtime of every file. A
+    call reuses it until the source changes. It is built under a staging
+    name and renamed into place, so a reader never sees half a corpus."""
+    root = root or tempfile.gettempdir()
+    sig = [repr(tuple(rung))]
     for t in TABLES:
-        st = os.stat(table_path(sf_dir, t))
-        sig_parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
-    digest = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), f"graft_blown_{digest}")
-    if os.path.isdir(out_dir):
-        return out_dir
-    staging = tempfile.mkdtemp(prefix=f"graft_blown_{digest}_", dir=tempfile.gettempdir())
-    for t in TABLES:
-        df = load_table(spark, sf_dir, t)
-        cols = _SHIFT_COLS.get(t)
-        if cols:
-            n_copies = replicas * _REPLICA_BOOST.get(t, 1)
-            copies = []
-            for i in range(n_copies):
-                d = df
-                for c in cols:
-                    d = d.withColumn(c, (F.col(c) + F.lit(i * _KEY_SHIFT)).cast("long"))
-                copies.append(d)
-            out = copies[0]
-            for p in copies[1:]:
-                out = out.unionByName(p)
-            if n_copies > replicas:
-                # a union of 100 single-partition scans would write 100
-                # splinter files; compact to a handful of full ones
-                out = out.repartition(16)
-        else:
-            out = df
-        out.write.mode("overwrite").parquet(os.path.join(staging, f"{t}.parquet"))
+        sig.extend(repr(f) for f in _file_stats(os.path.realpath(table_path(src, t))))
+    digest = hashlib.sha256("\n".join(sig).encode()).hexdigest()[:16]
+    out = os.path.join(root, f"{SCALED_PREFIX}{digest}")
+    if os.path.isdir(out):
+        return out
+    staging = tempfile.mkdtemp(prefix=f".{SCALED_PREFIX}{digest}_", dir=root)
     try:
-        os.rename(staging, out_dir)
-    except OSError:
+        for t in TABLES:
+            if t not in rung.copies:
+                os.symlink(os.path.realpath(table_path(src, t)), table_path(staging, t))
+                continue
+            df = load_table(spark, src, t)
+            copies = [
+                df.withColumns(
+                    {c: (F.col(c) + i * rung.shift).cast("long") for c in SHIFT_COLS[t]}
+                )
+                for i in range(rung.copies[t])
+            ]
+            scaled = copies[0]
+            for c in copies[1:]:
+                scaled = scaled.unionByName(c)
+            scaled.repartition(rung.partitions).write.parquet(table_path(staging, t))
+    except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
-    return out_dir
-
-
-def _bench_blownup(spark, queries, sf_dir: str, replicas: int) -> dict:
-    import duckdb
-
-    blown = _build_blownup(spark, sf_dir, replicas)
-    oracle = registry.all_oracle_sql()
-
-    for name in HEADLINE:  # warm both engines symmetrically (see main())
-        _materialize(queries[name](spark, blown))
-    spark_t: dict[str, float] = {}
-    for name in HEADLINE:
-        spark_t[name] = _time_best(
-            lambda: _materialize(queries[name](spark, blown)), spark=spark
-        )
-
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
-        files = sorted(glob.glob(os.path.join(blown, f"{t}.parquet", "*.parquet")))
-        flist = ", ".join(f"'{f}'" for f in files)
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet([{flist}])")
-    for name in HEADLINE:  # warm
-        con.execute(oracle[name]).fetchall()
-    duck_t: dict[str, float] = {}
-    for name in HEADLINE:
-        duck_t[name] = _time_best(lambda: con.execute(oracle[name]).fetchall())
-    con.close()
-
-    total_s, total_d = sum(spark_t.values()), sum(duck_t.values())
-    return {
-        "replicas": replicas,
-        "replica_boost": dict(_REPLICA_BOOST),
-        "note": "same blown-up parquet, same algorithm both engines (oracle SQL)",
-        "spark": spark_t,
-        "duckdb": duck_t,
-        "ratio": {
-            n: (round(spark_t[n] / duck_t[n], 3) if duck_t[n] > 0 else None)
-            for n in HEADLINE
-        },
-        "total_spark": round(total_s, 4),
-        "total_duckdb": round(total_d, 4),
-        "total_ratio": round(total_s / total_d, 3) if total_d > 0 else None,
-    }
+        raise
+    try:
+        os.rename(staging, out)
+    except OSError:  # another builder published the same corpus first
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.isdir(out):
+            raise
+    return out
 
 
 # ---------------------------------------------------------------------------
-# ×100 amortization probe (round-2 VERDICT, next-round #4): one more decade
-# on the THREE worst-ratio ×10 queries (semi_anti 18.9×, dedup_exact 8.9×,
+# Amortization evidence (round-1 VERDICT, next-round #7): at sf0.1 most
+# per-query ratios are Spark's fixed ~0.3 s/query floor doing ~10 ms of
+# work; the claim "the overhead amortizes with volume" needs a measurement.
+# The ×10 corpus (x10_rung) replicates the fact tables with
+# per-replica key shifts (each copy's keys live in a disjoint range, so joins
+# stay shard-local and the data has sf~1 structure, not multiplicity-inflated
+# join blowup); the same headline queries are then timed in BOTH engines on
+# the SAME parquet — DuckDB runs the registry's own oracle SQL, so both sides
+# execute the same algorithm (notably graph_2hop's O(E) pre-aggregation
+# rewrite).
+#
+# ×100 (round-2 VERDICT, next-round #4): one more decade on the THREE
+# worst-ratio ×10 queries (semi_anti 18.9×, dedup_exact 8.9×,
 # text_tokenize_tf 8.2× — all fixed-overhead-dominated: their Spark times
 # grew sublinearly with 10× data). Only the tables those queries touch are
-# re-replicated (customer/orders for the NOT-IN anti-join; documents for the
-# two text queries), built FROM the ×10 corpus with a second-decade key
-# stride — 10 union branches instead of a 1000-branch plan.
+# copied again, from the ×10 corpus with a key shift above its key space.
 
 PROBE100 = ("semi_anti", "dedup_exact", "text_tokenize_tf")
-_PROBE100_TABLES = {
-    "customer": ("c_custkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "documents": ("doc_id",),
-}
-# x10 keys reach 100 copies × 1e8 = 1e10; the second decade shifts above that
-_KEY_SHIFT2 = 100_000_000_000
+X100_RUNG = Rung({"customer": 10, "orders": 10, "documents": 10}, 10**11, 32)
 
 
-def _build_blownup100(spark, blown10: str, factor: int = 10) -> str:
-    from pyspark.sql import functions as F
-
-    digest = os.path.basename(blown10.rstrip("/")).rsplit("_", 1)[-1]
-    out_dir = os.path.join(tempfile.gettempdir(), f"graft_blown100_{digest}")
-    if os.path.isdir(out_dir):
-        return out_dir
-    staging = tempfile.mkdtemp(
-        prefix=f"graft_blown100_{digest}_", dir=tempfile.gettempdir()
-    )
-    for t, cols in _PROBE100_TABLES.items():
-        df = spark.read.parquet(os.path.join(blown10, f"{t}.parquet"))
-        copies = []
-        for i in range(factor):
-            d = df
-            for c in cols:
-                d = d.withColumn(c, (F.col(c) + F.lit(i * _KEY_SHIFT2)).cast("long"))
-            copies.append(d)
-        out = copies[0]
-        for p in copies[1:]:
-            out = out.unionByName(p)
-        out.repartition(32).write.mode("overwrite").parquet(
-            os.path.join(staging, f"{t}.parquet")
-        )
-    try:
-        os.rename(staging, out_dir)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-    return out_dir
+def _parquet_files(path: str) -> list[str]:
+    if os.path.isfile(path):
+        return [path]
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
-def _bench_blownup100(spark, queries, sf_dir: str, replicas: int) -> dict:
-    """Time PROBE100 in both engines on the ×(replicas×10) corpus. The
-    sf_dir handed to the Spark queries mixes ×100 probe tables with ×10
-    leftovers, which is safe: each probe query touches only its own
-    re-replicated tables (see _PROBE100_TABLES)."""
+def _bench_scaled(spark, queries, corpus: str, keys) -> dict:
+    """Best-of-2 warm times of ``keys`` in both engines on ``corpus``."""
     import duckdb
 
-    blown10 = _build_blownup(spark, sf_dir, replicas)
-    blown100 = _build_blownup100(spark, blown10)
-    # Spark side reads per-table paths via load_table(sf_dir=...): build a
-    # merged view dir with symlinks so probe tables resolve to ×100 and the
-    # rest to ×10.
-    merged = blown100 + "_merged"
-    if not os.path.isdir(merged):
-        staging = tempfile.mkdtemp(prefix="graft_merged_", dir=tempfile.gettempdir())
-        for t in TABLES:
-            src = os.path.join(
-                blown100 if t in _PROBE100_TABLES else blown10, f"{t}.parquet"
-            )
-            os.symlink(src, os.path.join(staging, f"{t}.parquet"))
-        try:
-            os.rename(staging, merged)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
     oracle = registry.all_oracle_sql()
-
-    for name in PROBE100:  # warm
-        _materialize(queries[name](spark, merged))
+    for name in keys:  # warm both engines symmetrically (see main())
+        _materialize(queries[name](spark, corpus))
     spark_t: dict[str, float] = {}
-    for name in PROBE100:
+    for name in keys:
         spark_t[name] = _time_best(
-            lambda: _materialize(queries[name](spark, merged)), spark=spark
+            lambda: _materialize(queries[name](spark, corpus)), spark=spark
         )
 
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
-    for t in ("customer", "orders", "documents"):
-        files = sorted(glob.glob(os.path.join(blown100, f"{t}.parquet", "*.parquet")))
-        flist = ", ".join(f"'{f}'" for f in files)
+    for t in TABLES:
+        flist = ", ".join(f"'{f}'" for f in _parquet_files(table_path(corpus, t)))
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet([{flist}])")
-    for name in PROBE100:  # warm
+    for name in keys:  # warm
         con.execute(oracle[name]).fetchall()
     duck_t: dict[str, float] = {}
-    for name in PROBE100:
+    for name in keys:
         duck_t[name] = _time_best(lambda: con.execute(oracle[name]).fetchall())
     con.close()
 
     total_s, total_d = sum(spark_t.values()), sum(duck_t.values())
     return {
-        "replicas": replicas * 10,
-        "tables": sorted(_PROBE100_TABLES),
-        "note": "x100 probe on the 3 worst x10-ratio queries; same parquet, "
-        "same algorithm both engines (oracle SQL)",
         "spark": spark_t,
         "duckdb": duck_t,
         "ratio": {
             n: (round(spark_t[n] / duck_t[n], 3) if duck_t[n] > 0 else None)
-            for n in PROBE100
+            for n in keys
         },
         "total_spark": round(total_s, 4),
         "total_duckdb": round(total_d, 4),
@@ -355,12 +289,28 @@ def main() -> None:
 
     replicas = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICAS", "10"))
     if replicas > 1:
+        # the scaled sections are additive evidence: a failure is recorded,
+        # and the headline line still prints
+        rung10 = x10_rung(replicas)
         try:
-            payload["sf1x10"] = _bench_blownup(spark, queries, sf_dir, replicas)
-        except Exception as exc:  # amortization section is additive evidence
+            x10 = scale_corpus(spark, sf_dir, rung10)
+            payload["sf1x10"] = {
+                "replicas": replicas,
+                "copies": rung10.copies,
+                "note": "same scaled parquet, same algorithm both engines (oracle SQL)",
+                **_bench_scaled(spark, queries, x10, HEADLINE),
+            }
+        except Exception as exc:
             payload["sf1x10"] = {"error": str(exc)[:500]}
         try:
-            payload["sf1x100"] = _bench_blownup100(spark, queries, sf_dir, replicas)
+            x100 = scale_corpus(spark, scale_corpus(spark, sf_dir, rung10), X100_RUNG)
+            payload["sf1x100"] = {
+                "replicas": replicas * 10,
+                "tables": sorted(X100_RUNG.copies),
+                "note": "x100 probe on the 3 worst x10-ratio queries; same parquet, "
+                "same algorithm both engines (oracle SQL)",
+                **_bench_scaled(spark, queries, x100, PROBE100),
+            }
         except Exception as exc:
             payload["sf1x100"] = {"error": str(exc)[:500]}
 

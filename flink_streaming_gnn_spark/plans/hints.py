@@ -61,8 +61,24 @@ def maybe_broadcast(
     The caller asserts ``|df| ≤ |size_of|`` rows; the gate then scales
     with the data exactly like every other maybe_broadcast site — at a
     scale where the domain outgrows the threshold, no hint is applied
-    and the engine falls back to the shuffle join."""
-    size = plan_size_bytes(size_of if size_of is not None else df)
+    and the engine falls back to the shuffle join.
+
+    The proxy's estimate is in the proxy's bytes per row, and a one-key
+    domain table is often several times narrower than the frame that is
+    broadcast. So the estimate is scaled by the ratio of the two schemas'
+    row widths, counted as Catalyst counts them for a projection: 8 bytes
+    of row header plus each column type's ``defaultSize``. Both schemas
+    come from the analyzed plans; the driver optimizes no extra plan."""
+    if size_of is None:
+        size = plan_size_bytes(df)
+    else:
+        size = plan_size_bytes(size_of)
+        if size is not None:
+            size = size * _row_bytes(df) // _row_bytes(size_of)
     if size is not None and 0 <= size <= max_bytes:
         return F.broadcast(df)
     return df
+
+
+def _row_bytes(df: DataFrame) -> int:
+    return 8 + df._jdf.schema().defaultSize()

@@ -36,23 +36,27 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def _content_sig(path: str) -> int:
     """Content signature for memo invalidation. For a single-file table
-    the file's mtime_ns suffices. For a DIRECTORY table (blown-up
-    corpora, Spark-written fixtures) the directory mtime only changes
-    when entries are added/removed — an in-place rewrite of a part
-    file's CONTENT would not bump it (ADVICE r9), and a stale memo
+    the file's mtime_ns suffices. For a DIRECTORY table (scaled corpora,
+    Spark-written fixtures, partitioned layouts) a directory's mtime only
+    changes when entries are added/removed — an in-place rewrite of a
+    part file's CONTENT would not bump it (ADVICE r9), and a stale memo
     would serve a stale file index (wrong lengths → truncated reads).
-    Fold each entry's (name, size, mtime_ns) into the signature so any
-    rewrite invalidates. One scandir of ≤ a few dozen entries — cheap
-    metadata, never data."""
+    Fold every entry's (relative path, size, mtime_ns) into the
+    signature, at every depth, so any rewrite invalidates. Metadata of a
+    few dozen to a few hundred entries, never data."""
     st = os.stat(path)
     if not stat_mod.S_ISDIR(st.st_mode):
         return st.st_mtime_ns
-    entries = []
+    return hash((st.st_mtime_ns, tuple(sorted(_tree_entries(path)))))
+
+
+def _tree_entries(path: str, prefix: str = ""):
     with os.scandir(path) as it:
         for e in it:
             es = e.stat()
-            entries.append((e.name, es.st_size, es.st_mtime_ns))
-    return hash((st.st_mtime_ns, tuple(sorted(entries))))
+            yield prefix + e.name, es.st_size, es.st_mtime_ns
+            if e.is_dir():
+                yield from _tree_entries(e.path, f"{prefix}{e.name}/")
 
 
 # Inferred-schema memo, keyed on (realpath, content signature). Schema

@@ -14,8 +14,6 @@ Design split:
   plus last-writer-wins GraphOp materialization.
 - ``gnn.py`` — the windowed GNN forward (A8): per-(window, vertex)
   coalescing aggregate + one batched tensor forward, batch≡stream.
-- ``metrics.py`` — listener-bus per-micro-batch throughput/latency
-  recording (A15), zero touch on the data path.
 - ``sources.py`` — Kafka source builder + wire codec with a file-backed
   test double (same downstream plan on either source).
 - ``joins.py`` — watermarked stream–stream interval join.

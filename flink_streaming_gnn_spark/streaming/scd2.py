@@ -35,9 +35,9 @@ codec discipline); formatting back to the oracle's string form happens
 JVM-side after the sink, so the Python path never touches datetime
 objects.
 
-MEASURED MACHINERY FLOOR (tools/probe_r6_scd2_floor.py, ×10 corpus =
-10M events): an ingest-ONLY state fn (state update, zero emission,
-empty yield) costs **56.4 s**; this full query costs **62.8 s** — 90%
+MEASURED MACHINERY FLOOR (commit d190e41, ×10 corpus = 10M events):
+an ingest-ONLY state fn (state update, zero emission, empty yield)
+costs **56.4 s**; this full query costs **62.8 s** — 90%
 of wall-clock is the irreducible Arrow round-trip of every event
 through ``applyInPandasWithState`` itself, which no emission shape can
 reduce. Unlike CEP's funnel (where most events are non-matching and

@@ -385,3 +385,24 @@ def test_maybe_broadcast_gates_on_estimate(spark):
     unhinted = maybe_broadcast(big, max_bytes=1)  # force the over-threshold path
     plan_big = unhinted._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in plan_big  # engine keeps strategy freedom
+
+
+def test_maybe_broadcast_size_of_is_width_safe(spark):
+    """A ``size_of`` proxy gates in its own bytes per row: a frame several
+    times wider than its proxy must get no hint when the proxy alone is
+    just under the gate, while a frame as narrow as the proxy still does."""
+    from flink_streaming_gnn_spark.plans.hints import maybe_broadcast, plan_size_bytes
+
+    nation = load_table(spark, SF_SMOKE, "nation")
+    proxy = nation.select("n_nationkey")
+    gate = plan_size_bytes(proxy) + 1
+    narrow = nation.selectExpr("n_regionkey AS k")
+    width = lambda df: df._jdf.schema().defaultSize()  # noqa: E731
+    assert width(nation) >= 3 * width(proxy)  # key, name, region key
+
+    def hinted(df):
+        plan = maybe_broadcast(df, max_bytes=gate, size_of=proxy)
+        return "ResolvedHint" in plan._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(narrow)
+    assert not hinted(nation)

@@ -13,8 +13,8 @@ import time
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
-from flink_streaming_gnn_spark.streaming.metrics import recorded_progress
 from flink_streaming_gnn_spark.streaming.replay import events_stream, run_complete_spooled
+from perfbench.tracing import StreamRecorder
 from tests.conftest import SF_SMOKE
 
 
@@ -67,15 +67,21 @@ def test_checkpoint_recovery_exactly_once(spark):
 
 def test_listener_accounts_all_rows(spark):
     n_events = load_table(spark, SF_SMOKE, "events").count()
-    with recorded_progress(spark) as rec:
+    rec = StreamRecorder()
+    spark.streams.addListener(rec)
+    try:
+        mark = rec.mark()
         agg = (
             events_stream(spark, SF_SMOKE, files_per_trigger=4)
             .groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n"))
         )
         result = run_complete_spooled(agg, "metrics_probe").toPandas()
-        # bus delivery is async — catch up before the listener detaches
-        seen = rec.await_rows(n_events)
-    assert seen == n_events
-    assert len(rec.batches) >= 2  # multi-micro-batch replay
+        # bus delivery is async: a stream's record is complete once its
+        # terminated event has arrived
+        batches = [b for run in rec.wait_closed(mark) for b in rec.progress.get(run, [])]
+    finally:
+        spark.streams.removeListener(rec)
+    assert sum(b["rows"] for b in batches) == n_events
+    assert len(batches) >= 2  # multi-micro-batch replay
     assert result["n"].sum() == n_events

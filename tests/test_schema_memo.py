@@ -119,6 +119,38 @@ def test_directory_table_content_rewrite_invalidates(spark, tmp_path):
     assert n2.count() == 5 != n_rows1
 
 
+def test_nested_part_file_rewrite_invalidates(spark, tmp_path):
+    """ADVICE r10: the signature must reach part files one level down (a
+    partitioned layout). Rewriting one in place changes no entry of the
+    top directory, so a top-level-only signature would keep serving the
+    memoized frame and its stale file index."""
+    sf_dir = str(tmp_path)
+    dst = os.path.join(sf_dir, "nation.parquet")
+    src = load_table(spark, SF_SMOKE, "nation")
+    src.write.partitionBy("n_regionkey").parquet(dst)
+    tables._SCHEMA_CACHE.clear()
+    _clear_df_memo(spark)
+    n1 = load_table(spark, sf_dir, "nation")
+    n_rows1 = n1.count()
+    # one partition's part file, rewritten in place with two of its rows
+    part_dir = os.path.join(dst, "n_regionkey=0")
+    (part,) = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
+    new_dir = os.path.join(sf_dir, "new")
+    src.filter("n_regionkey = 0").drop("n_regionkey").limit(2).coalesce(1).write.parquet(
+        new_dir
+    )
+    (new_part,) = [f for f in os.listdir(new_dir) if f.endswith(".parquet")]
+    dir_stat = os.stat(part_dir)
+    shutil.copyfile(os.path.join(new_dir, new_part), os.path.join(part_dir, part))
+    crc = os.path.join(part_dir, f".{part}.crc")  # the local FS would check it
+    if os.path.exists(crc):
+        os.remove(crc)
+    os.utime(part_dir, ns=(dir_stat.st_mtime_ns, dir_stat.st_mtime_ns))
+    n2 = load_table(spark, sf_dir, "nation")
+    assert n2 is not n1, "memo served a frame over a rewritten part file"
+    assert n2.count() == n_rows1 - 3  # region 0 holds 5 of the 25 nations
+
+
 def test_df_memo_returns_same_object(spark):
     """E5: a repeat load on the same session IS the first DataFrame (the
     memo's whole point — zero relation re-construction), and a different
@@ -156,5 +188,15 @@ def test_df_memo_dies_with_session_wrapper(spark):
     ref = weakref.ref(df)
     del df, s2
     spark.newSession()  # displace pyspark's RDD.toDF pin on s2
-    gc.collect()
-    assert ref() is None, "memoized DataFrame must die with its session wrapper"
+    # a py4j callback or a finalizer can hold the cycle through one
+    # collection; a retained memo survives any number of them
+    for _ in range(5):
+        gc.collect()
+        if ref() is None:
+            break
+    assert ref() is None, (
+        "memoized DataFrame outlived its session wrapper. If the memo holds no "
+        "reference, check pyspark's RDD.toDF session pin: _monkey_patch_RDD "
+        "closes over the most recently constructed session, and this test "
+        "displaces it with one more newSession()"
+    )
