@@ -33,14 +33,12 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
 from flink_streaming_gnn_spark.graph.gcn import normalized_edges
 from flink_streaming_gnn_spark.sources.tables import load_table
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ALPHA = 0.15
 ROUNDS = 3
 TRACK_DIMS = 4
 
 
-@release_superseded_checkpoints
 def gnn_appnp_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("v"),

@@ -5,12 +5,13 @@ recursive CTE, so the driver hash-matches the whole iterative computation
 (unlike components' |V|²-reachability blowup, BFS states are bounded by
 |V| × max_hops).
 
-Spark-first shape: classic frontier expansion. Each hop is one join
-(frontier ⋈ edges — the frontier side shrinks every round) + one distinct
-+ one anti-join against the visited set; all three shuffle on vertex id,
-so consecutive hops reuse the partitioning. The driver reads only the
-frontier COUNT per round, observed on the frontier's checkpoint job, never
-rows. Hops are capped (MAX_HOPS) identically in both engines, so results
+Spark-first shape: classic frontier expansion over one ``levels`` frame
+whose ``frontier`` flag marks the last hop's vertices. Each hop is one
+join (frontier ⋈ edges — the frontier side shrinks every round) + one
+min-level aggregate over ``levels`` ∪ the reached vertices, both keyed
+on vertex id. ``truncate.iterate`` checkpoints it once per hop and reads
+the new frontier's size, never rows, stopping when it is 0.
+Hops are capped (MAX_HOPS) identically in both engines, so results
 agree even on graphs wider than the cap.
 
 Seed set: customers with c_custkey % 50 == 0 (deterministic, scale-stable
@@ -19,7 +20,7 @@ density) in the disjoint 2c / 2s+1 vertex-id space of graph/edges.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
@@ -28,48 +29,48 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 MAX_HOPS = 8
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex minimum hop distance from the seed set (≤ MAX_HOPS)."""
     pairs = bipartite_pairs(derive_edges(spark, sf_dir))
     edges = both_directions(pairs).localCheckpoint()
-    seeds = (
+    levels = (
         edges.select("a")
         .distinct()
         .filter((F.col("a") % 100) == 0)  # a = 2c even ⇒ c % 50 == 0
-        .select(F.col("a").alias("v"))
-    )
-    # eager localCheckpoint per hop (not persist): levels is referenced
-    # twice per round (visited anti-join + union), so checkpointing keeps
-    # Catalyst's per-round analysis O(1) — see graph/components.py
-    levels = seeds.withColumn("level", F.lit(0)).localCheckpoint()
-    frontier = levels
-    for hop in range(1, MAX_HOPS + 1):
-        rows = Observation()
-        nxt = (
-            frontier.join(edges, frontier.v == edges.a)
-            .select(F.col("b").alias("v"))
-            .distinct()
-            .join(levels, "v", "left_anti")
-            .withColumn("level", F.lit(hop))
-            .observe(rows, F.count("*").alias("n"))
-            .localCheckpoint()
+        .select(
+            F.col("a").alias("v"),
+            F.lit(0).alias("level"),
+            F.lit(True).alias("frontier"),
         )
-        if rows.get["n"] == 0:
-            break
-        levels = levels.union(nxt).localCheckpoint()
-        frontier = nxt
-    # return the final checkpointed frame directly: it is already
-    # lineage-free (localCheckpoint) and data-sized, so it must NEVER
-    # round-trip through the driver (an O(|V|) collect is a driver OOM at
-    # 100 TB); intermediate round frames go out of scope here and the
-    # ContextCleaner reclaims their blocks without materializing anything
-    return levels.select(
+        .localCheckpoint()
+    )
+
+    def hop(levels, observe):
+        reached = (
+            levels.filter("frontier")
+            .join(edges, levels.v == edges.a)
+            .select(
+                F.col("b").alias("v"),
+                (F.col("level") + 1).alias("level"),
+                F.lit(True).alias("frontier"),
+            )
+        )
+        # a vertex seen before keeps its level and leaves the frontier
+        return observe(
+            levels.withColumn("frontier", F.lit(False))
+            .union(reached)
+            .groupBy("v")
+            .agg(F.min("level").alias("level"), F.min("frontier").alias("frontier")),
+            F.count_if("frontier"),
+        )
+
+    return truncate.iterate(levels, hop, MAX_HOPS).select(
         F.col("v").cast("long").alias("v"), F.col("level").cast("long").alias("level")
     )
 

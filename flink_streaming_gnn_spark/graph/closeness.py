@@ -10,9 +10,9 @@ one): the round-3 implementation carried the BFS state as explicit
 frontier ⋈ edges emitted Σ_frontier deg(v) rows PER SEED — ~72 billion
 join-emit rows at ×100 (3 000 seeds × 1.2 M-customer frontier × deg 20),
 which local mode survives only when memory pressure cooperates
-(tools/probe_r8_x100.log: one run died at 186 s, the rerun passed at
-446 s — no task retries in local mode, so one pressure-induced task
-failure kills the job). This version is the textbook MS-BFS (Then et
+(tools/probe_r8_x100.log at 16bffd4: one run died at 186 s, the rerun
+passed at 446 s — no task retries in local mode, so one pressure-induced
+task failure kills the job). This version is the textbook MS-BFS (Then et
 al., "The More the Merrier: Efficient Multi-Source BFS", VLDB 2014),
 relationalized:
 

@@ -46,7 +46,7 @@ Union-find parity stays pinned in tests/test_components.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
@@ -55,10 +55,10 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def hash_min_cc(edges: DataFrame, labels: DataFrame | None = None) -> DataFrame:
     """Hash-min label propagation over an edge frame ``(a, b)``: each
     round, a takes the min of its own label and the labels of every b
@@ -74,12 +74,9 @@ def hash_min_cc(edges: DataFrame, labels: DataFrame | None = None) -> DataFrame:
 
     One self-loop per vertex is added once, so a round is one join and
     one aggregate: min over N(v) ∪ {v} is the new label, and the
-    self-loop row carries the old one. ``count_if(NOT lbl <=> old)``
-    (null-safe; ``lbl < old`` without nulls) is observed on the round's
-    own checkpoint job, and the loop ends when it is 0 (at most
-    diameter + 1 rounds). Observe only the rows a round checkpoints:
-    AQE may prune a side subtree as empty, and ``Observation.get`` then
-    raises."""
+    self-loop row carries the old one. ``truncate.iterate`` runs the
+    rounds until ``count_if(NOT lbl <=> old)`` (null-safe; ``lbl < old``
+    without nulls) is 0: at most diameter + 1 rounds."""
     if labels is None:
         loops = edges.select("a", F.col("a").alias("b")).distinct()
     else:
@@ -89,37 +86,24 @@ def hash_min_cc(edges: DataFrame, labels: DataFrame | None = None) -> DataFrame:
         labels = adj.filter(F.col("a") == F.col("b")).select(
             F.col("a").alias("v"), F.col("b").alias("lbl")
         )
-    while True:
-        changed = Observation()
-        labels = (
+
+    def step(labels, observe):
+        return observe(
             adj.join(labels, adj.b == labels.v)
             .groupBy(F.col("a").alias("v"))
             .agg(
                 F.min("lbl").alias("lbl"),
                 F.min(F.when(F.col("a") == F.col("b"), F.col("lbl"))).alias("old"),
-            )
-            .observe(
-                changed,
-                F.count_if(~F.col("lbl").eqNullSafe(F.col("old"))).alias("n"),
-            )
-            .select("v", "lbl")
-            .localCheckpoint()
-        )
-        if changed.get["n"] == 0:
-            return labels
+            ),
+            F.count_if(~F.col("lbl").eqNullSafe(F.col("old"))),
+        ).select("v", "lbl")
+
+    return truncate.iterate(labels, step)
 
 
 def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vertex component labels by hash-min propagation (driver loop
-    with one job chain per round, see ``hash_min_cc``).
-
-    Each round ends in an eager ``localCheckpoint``: the round's plan
-    references the previous labels frame, and without truncation the
-    plan grows by one join + aggregate per round and Catalyst re-analyses
-    the whole chain every round (persist caches data but keeps the
-    logical plan; measured pathologically on the HITS loop,
-    graph/hits.py). Checkpoint truncates the plan to a leaf; analysis
-    stays O(1) per round."""
+    """Per-vertex component labels by hash-min propagation (see
+    ``hash_min_cc``)."""
     return hash_min_cc(both_directions(bipartite_pairs(derive_edges(spark, sf_dir))))
 
 

@@ -14,10 +14,9 @@ once; SCC labels come from them by the closure-free forward–backward
 coloring (``scc_labels_fb`` — the 100 TB SCC path), and the
 condensation edges are two broadcast-gated label joins + a distinct
 (never a closure); the level DP is one join + max-agg per round over
-the |SCCs|-sized DAG, uncapped: levels only rise, so rounds are the
-DAG's longest chain + 1, with the localCheckpoint lineage discipline;
-the count of raised levels is observed on each round's checkpoint job,
-so convergence costs no job.
+the |SCCs|-sized DAG on ``truncate.iterate``, uncapped: levels only
+rise, so rounds are the DAG's longest chain + 1, and the count of raised
+levels is the round's observed count, so convergence costs no job.
 
 The DuckDB oracle recomputes everything from the recursive reachability
 closure (the independent SCC formulation) + a recursive longest-path
@@ -26,16 +25,16 @@ CTE — a cross-algorithm proof, same discipline as graph_scc itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
 from flink_streaming_gnn_spark.graph.scc import directed_edges, scc_labels_fb
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one edge derivation: SCC and the condensation edges share it
     e = directed_edges(spark, sf_dir).localCheckpoint()
@@ -58,7 +57,8 @@ def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # longest-path-from-source DP over the (tiny vs |V|) condensation DAG
     lvl = comps.select("c", F.lit(0).alias("level")).localCheckpoint()
-    while True:
+
+    def step(lvl, observe):
         via = (
             cond_edges.join(
                 lvl.select(F.col("c").alias("c_src"), F.col("level").alias("pl")),
@@ -67,15 +67,11 @@ def graph_condensation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("c_dst").alias("c"))
             .agg((F.max("pl") + 1).alias("nl"))
         )
-        raised = Observation()
-        lvl = (
-            lvl.join(via, "c", "left")
-            .observe(raised, F.count_if(F.col("nl") > F.col("level")).alias("n"))
-            .select("c", F.greatest("level", F.coalesce("nl", F.col("level"))).alias("level"))
-            .localCheckpoint()
-        )
-        if raised.get["n"] == 0:
-            break
+        return observe(
+            lvl.join(via, "c", "left"), F.count_if(F.col("nl") > F.col("level"))
+        ).select("c", F.greatest("level", F.coalesce("nl", "level")).alias("level"))
+
+    lvl = truncate.iterate(lvl, step)
     n_succ = cond_edges.groupBy(F.col("c_src").alias("c")).agg(
         F.count("*").cast("long").alias("n_succ")
     )

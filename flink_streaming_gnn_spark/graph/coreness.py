@@ -11,10 +11,9 @@ Spark-first round: one join (estimates onto directed neighbor lists),
 one per-vertex h-index — computed relationally as
 ``max(least(rank, est))`` over the estimate-descending row_number — and
 one element-wise ``least`` with the previous estimate. Two shuffles per
-round, both keyed on vertex id; rounds are ``localCheckpoint``-truncated
-(components/bfs discipline). The previous estimate is still in the row
-that takes the ``least``, so the count of lowered estimates is observed
-on the round's checkpoint job — the driver reads that one scalar and no
+round, both keyed on vertex id; ``truncate.iterate`` runs the rounds.
+The previous estimate is still in the row that takes the ``least``, so
+the count of lowered estimates is the round's observed count and no
 comparison job runs. No round cap: an n-vertex path takes about n/2
 rounds, as the fall travels inward from both ends.
 
@@ -27,7 +26,7 @@ algorithm) is pinned in tests/test_round3b.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -36,12 +35,12 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 ORACLE_ROUNDS = 6  # ≥ measured sf0.01 convergence (4) — idempotent beyond
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry key: (v, coreness) for every vertex — the exact core
     number, computed to fixpoint."""
@@ -53,23 +52,20 @@ def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     w = Window.partitionBy("a").orderBy(F.col("est").desc())
-    while True:
-        nb = ue.join(est, ue.b == est.v).select("a", "est")
+
+    def step(est, observe):
         h = (
-            nb.withColumn("rn", F.row_number().over(w))
+            ue.join(est, ue.b == est.v)
+            .select("a", "est")
+            .withColumn("rn", F.row_number().over(w))
             .groupBy("a")
             .agg(F.max(F.least("rn", "est")).alias("h"))
         )
-        lowered = Observation()
-        est = (
-            est.join(h, est.v == h.a)
-            .observe(lowered, F.count_if(F.col("h") < F.col("est")).alias("n"))
-            .select("v", F.least("est", "h").alias("est"))
-            .localCheckpoint()
-        )
-        if lowered.get["n"] == 0:
-            break
-    return est.select(
+        return observe(
+            est.join(h, est.v == h.a), F.count_if(F.col("h") < F.col("est"))
+        ).select("v", F.least("est", "h").alias("est"))
+
+    return truncate.iterate(est, step).select(
         F.col("v").cast("long").alias("v"),
         F.col("est").cast("long").alias("coreness"),
     ).orderBy("v")

@@ -35,8 +35,9 @@ def derive_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout makes the join exchange-free (operators/bucketing.py shows the
     plan), but building that layout inside a run costs 8–15 s at ×10
     while each later graph key saves only 0–7 s
-    (tools/ab_r10_bucketed_edges_inrun.log). It is an ingest-time choice
-    for a deployment that persists the layout, not a per-run one."""
+    (tools/ab_r10_bucketed_edges_inrun.log at 2e2da82). It is an
+    ingest-time choice for a deployment that persists the layout, not a
+    per-run one."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate"
     )

@@ -5,12 +5,12 @@ hub/authority pair).
 
 Spark-first shape: the symmetrized derived graph (purchase edges, both
 directions) is built once and persisted; each power-iteration round is
-one join (scores onto edges) + one per-vertex sum + one L2
-renormalization — two shuffles, both keyed on vertex id, so consecutive
-rounds reuse the partitioning. The per-round norm is a single scalar
-aggregate read on the driver (O(1), bounded), matching the convergence-
-read discipline of the other fixpoint operators. A fixed round count
-keeps the job graph static.
+one L2 normalization + one join (scores onto edges) + one per-vertex
+sum — two shuffles, both keyed on vertex id, so consecutive rounds reuse
+the partitioning. ``truncate.iterate`` checkpoints the unnormalized sum
+y each round; its norm rides lazily into the next round's job (and into
+the caller's read) as a broadcast 1-row crossJoin, so the driver reads
+no scalar. A fixed round count keeps the job graph static.
 
 Every vertex of the symmetrized graph has degree ≥ 1 (vertices are
 derived from the edge list), so no dangling-mass correction is needed —
@@ -33,41 +33,35 @@ from flink_streaming_gnn_spark.graph.edges import (
     derive_edges,
 )
 from flink_streaming_gnn_spark.graph.pagerank import _is_verify_scale
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 ROUNDS = 8
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def eigenvector_scores(
     spark: SparkSession, sf_dir: str, rounds: int = ROUNDS
 ) -> DataFrame:
     e = both_directions(bipartite_pairs(derive_edges(spark, sf_dir))).persist()
     v = e.select(F.col("a").alias("v")).distinct().persist()
-    n = v.count()  # scalar — drives the uniform start vector
-    x = v.withColumn("x", F.lit(1.0 / n**0.5))
+
+    def normalized(y: DataFrame) -> DataFrame:
+        nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
+        return y.crossJoin(F.broadcast(nrm)).select(
+            "v", (F.col("y") / F.col("nrm")).alias("x")
+        )
+
+    def step(y, observe):
+        x = normalized(y)
+        return (
+            e.join(x, e.a == x.v)
+            .groupBy(F.col("b").alias("v"))
+            .agg(F.sum("x").alias("y"))
+        )
+
     try:
-        # ONE job per round (the round-6 pagerank discipline): the
-        # unnormalized propagation is checkpointed (leaf), and the L2
-        # normalization rides lazily into the NEXT round's job as a
-        # broadcast 1-row crossJoin — the round-5 version paid a separate
-        # driver .first() for the norm plus a materialize count, i.e.
-        # two extra full-|V| actions per round. `x` references its
-        # checkpointed `y` twice (norm + values), which is plan-safe
-        # precisely because y is a leaf.
-        for _ in range(rounds):
-            y = (
-                e.join(x, e.a == x.v)
-                .select("b", "x")
-                .groupBy("b")
-                .agg(F.sum("x").alias("y"))
-                .localCheckpoint()
-            )
-            nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-            x = y.crossJoin(F.broadcast(nrm)).select(
-                F.col("b").alias("v"), (F.col("y") / F.col("nrm")).alias("x")
-            )
-        return x.localCheckpoint()
+        y = v.withColumn("y", F.lit(1.0)).localCheckpoint()
+        return normalized(truncate.iterate(y, step, rounds))
     finally:
         e.unpersist()
         v.unpersist()

@@ -24,50 +24,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import derive_vertex_embeddings
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 ALPHA = 0.1
 ROUNDS = 6
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def katz_scores(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
-    # localCheckpoint, NOT persist: each round references `state` TWICE
-    # (step join + accumulate join), so an uncheckpointed lineage doubles
-    # per round — 2^rounds × the edge-derivation tree, which OOMs the
-    # driver at ANALYSIS time before a single row moves (the SURVEY
-    # "iterative-loop lineage rule"; graph/components.py measured the same
-    # failure). PageRank gets away with persist because its rank frame is
-    # referenced once per round (linear growth); any twice-referenced loop
-    # state must truncate.
     e = derive_vertex_embeddings(spark, sf_dir).distinct().localCheckpoint()
-    v = (
-        e.select(F.col("src_v").alias("v"))
-        .union(e.select(F.col("dst_v").alias("v")))
-        .distinct()
-    )
+
     # walk[k](v) = number of length-k walks ending at v, attenuated: the
     # per-round carrier; katz accumulates the series
-    state = v.select(
-        "v", F.lit(1.0).alias("walk"), F.lit(0.0).alias("katz")
-    ).localCheckpoint()
-    for _ in range(rounds):
+    def step(state, observe):
         stepped = (
             e.join(state, e.src_v == state.v)
             .select(F.col("dst_v").alias("b"), (F.col("walk") * ALPHA).alias("w"))
             .groupBy("b")
             .agg(F.sum("w").alias("new_walk"))
         )
-        state = (
-            state.join(stepped, state.v == stepped.b, "left")
-            .select(
-                "v",
-                F.coalesce("new_walk", F.lit(0.0)).alias("walk"),
-                (F.col("katz") + F.coalesce("new_walk", F.lit(0.0))).alias("katz"),
-            )
-            .localCheckpoint()
+        return state.join(stepped, state.v == stepped.b, "left").select(
+            "v",
+            F.coalesce("new_walk", F.lit(0.0)).alias("walk"),
+            (F.col("katz") + F.coalesce("new_walk", F.lit(0.0))).alias("katz"),
         )
-    return state.select("v", "katz")
+
+    state = (
+        e.select(F.col("src_v").alias("v"))
+        .union(e.select(F.col("dst_v").alias("v")))
+        .distinct()
+        .select("v", F.lit(1.0).alias("walk"), F.lit(0.0).alias("katz"))
+        .localCheckpoint()
+    )
+    return truncate.iterate(state, step, rounds).select("v", "katz")
 
 
 def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,10 +5,10 @@ dataflow shape this driver loop re-expresses).
 
 Algorithm: iterative peeling — drop every vertex with degree < K, re-derive
 degrees on the induced subgraph, repeat to fixpoint. Each round is one
-hash aggregate (degrees) + two semi-joins (filter endpoints), all shuffling
-on the same vertex key so consecutive rounds reuse the partitioning. The
-fixpoint read is the round's row count, observed on the round's own
-checkpoint job (no second job), like components.py; rounds are the
+hash aggregate (degrees) joined onto both endpoints of every directed
+edge, then a filter, all shuffling on the same vertex key so consecutive
+rounds reuse the partitioning. ``truncate.iterate`` runs the rounds and
+reads the edges a round drops, counted below the filter. Rounds are the
 peeling depth + 1, uncapped (an n-vertex path peels one vertex from
 each end per round: about n/2 rounds).
 
@@ -22,52 +22,40 @@ reference stays pinned in tests/test_new_ops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import SUPPLIER_PAIRS_CTE, supplier_edges
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 K = 5
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def kcore_vertices(spark: SparkSession, sf_dir: str, k: int = K) -> DataFrame:
     """Vertices of the k-core with their degree inside the core."""
-    # undirected: materialize both directions once, peel on (v, other)
     e = supplier_edges(spark, sf_dir)
-    # eager localCheckpoint per round (components.py discipline): each
-    # round references the previous frame twice (degree agg + semi-join
-    # filters), the checkpoint is lineage-free so nothing recomputes, and
-    # the ContextCleaner reclaims out-of-scope round frames — no manual
-    # persist/unpersist bookkeeping, and no driver-side materialization of
-    # the (worst-case O(|V|)) core result
-    rows = Observation()
     cur = (
         e.select(F.col("a").alias("v"), F.col("b").alias("o"))
         .union(e.select(F.col("b").alias("v"), F.col("a").alias("o")))
-        .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
-    n_prev = rows.get["n"]
-    while True:
-        keep = (
-            cur.groupBy("v")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("v")
+
+    def peel(cur, observe):
+        deg = cur.groupBy("v").agg(F.count("*").alias("deg"))
+        return (
+            observe(
+                cur.join(deg, "v").join(
+                    deg.select(F.col("v").alias("o"), F.col("deg").alias("o_deg")), "o"
+                ),
+                F.count_if((F.col("deg") < k) | (F.col("o_deg") < k)),
+            )
+            .filter((F.col("deg") >= k) & (F.col("o_deg") >= k))
+            .select("v", "o")
         )
-        rows = Observation()
-        cur = (
-            cur.join(keep, "v", "left_semi")
-            .join(keep.select(F.col("v").alias("o")), "o", "left_semi")
-            .observe(rows, F.count("*").alias("n"))
-            .localCheckpoint()
-        )
-        if rows.get["n"] == n_prev:
-            break
-        n_prev = rows.get["n"]
-    return cur.groupBy("v").agg(F.count("*").cast("long").alias("core_deg"))
+
+    core = truncate.iterate(cur, peel)
+    return core.groupBy("v").agg(F.count("*").cast("long").alias("core_deg"))
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

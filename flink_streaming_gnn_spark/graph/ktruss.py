@@ -9,10 +9,10 @@ undirected simple edges. Spark-first round: edge support = triangle
 count through each edge, computed as edges ⋈ directed-neighbors ⋈
 directed-neighbors (two equi-joins + one hash agg, all on vertex keys —
 the standard relational triangle join), checkpointed as ``(a, b, s)``.
-The driver loop reads one O(1) scalar per round, the count of s < k−2
-observed on that checkpoint job, and returns the supports once it is
-0, uncapped; every round frame is ``localCheckpoint``-truncated (the
-components/bfs/scc plan-growth discipline).
+``truncate.iterate`` runs the rounds on that frame, from the edges with
+a placeholder support of k−2: round r drops the edges below k−2, counts
+supports on the rest, and observes how many fall below k−2. Once that
+count is 0 the supports are final; no round cap.
 
 Exact oracle: the peel is monotone (edge sets only shrink) and
 idempotent past the fixpoint, so a mechanically-unrolled
@@ -33,7 +33,7 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_vertex_embeddings,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 KTRUSS_K = 60
 ORACLE_ROUNDS = 7  # ≥ measured sf0.01 convergence (6) — idempotent beyond
@@ -95,7 +95,7 @@ def _local_peel(spark: SparkSession, e: DataFrame) -> DataFrame:
     )
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry key: the K-truss of the projected graph — surviving
     edges with their converged support (support ≥ K−2 within the truss).
@@ -103,27 +103,26 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = Observation()
     e = (
         _canonical_edges(spark, sf_dir)
+        .select("a", "b", F.lit(KTRUSS_K - 2).alias("s"))
         .observe(rows, F.count("*").alias("n"))
         .localCheckpoint()
     )
     if rows.get["n"] <= LOCAL_PEEL_EDGES:
         return _local_peel(spark, e)
-    while True:
-        below = Observation()
-        sup = (
-            _support(e)
-            .observe(below, F.count_if(F.col("s") < KTRUSS_K - 2).alias("n"))
-            .localCheckpoint()
+
+    def peel(sup, observe):
+        return observe(
+            _support(sup.filter(F.col("s") >= KTRUSS_K - 2).select("a", "b")),
+            F.count_if(F.col("s") < KTRUSS_K - 2),
         )
-        if below.get["n"] == 0:
-            # no edge falls below the bar: the supports were computed on
-            # the final edge set, so they are the truss's final supports
-            return sup.select(
-                F.col("a").cast("long").alias("a"),
-                F.col("b").cast("long").alias("b"),
-                F.col("s").cast("long").alias("support"),
-            ).orderBy("a", "b")
-        e = sup.filter(F.col("s") >= KTRUSS_K - 2).select("a", "b")
+
+    # once no edge falls below the bar, the supports were computed on the
+    # final edge set, so they are the truss's final supports
+    return truncate.iterate(e, peel).select(
+        F.col("a").cast("long").alias("a"),
+        F.col("b").cast("long").alias("b"),
+        F.col("s").cast("long").alias("support"),
+    ).orderBy("a", "b")
 
 
 def _ktruss_oracle_sql(rounds: int = ORACLE_ROUNDS) -> str:

@@ -27,15 +27,13 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
 
 ROUNDS = 4
 
 
-@release_superseded_checkpoints
 def lpa_labels(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
     pairs = bipartite_pairs(derive_edges(spark, sf_dir))
-    edges = both_directions(pairs).persist()
+    edges = both_directions(pairs)
     labels = edges.select(F.col("a").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
@@ -52,9 +50,7 @@ def lpa_labels(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFr
             .filter(F.col("rn") == 1)
             .select("v", "lbl")
         )
-    out = labels
-    edges.unpersist()
-    return out
+    return labels
 
 
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,13 +28,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import bipartite_pairs, derive_edges
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 DAMPING = 0.85
 ROUNDS = 10
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def power_iteration(
     spark: SparkSession, sf_dir: str, rounds: int, teleport: Column
 ) -> DataFrame:
@@ -53,45 +53,40 @@ def power_iteration(
     out_deg = e.groupBy("a").agg(F.count("*").alias("deg"))
     # edges with the source's out-degree attached, reused every round
     e_deg = e.join(out_deg, "a").persist()
-    # localCheckpoint, not persist: each round references `ranks` TWICE
-    # (contribs + dangling), so an un-truncated logical plan doubles per
-    # round — 2^rounds analysis blowup by round ~7. The checkpoint makes
-    # every round a leaf (the components.hash_min_cc discipline).
+    base = F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.col("dm") / F.lit(float(n))
+
+    def step(ranks, observe):
+        contribs = (
+            e_deg.join(ranks, e_deg.a == ranks.v)
+            .select("b", (F.col("rank") / F.col("deg")).alias("c"))
+            .groupBy("b")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        # dangling mass (rank held by vertices with no out-edges) as a
+        # broadcast 1-row frame folded into the SAME job — the round-5
+        # version pulled it to the driver with a per-round .first(),
+        # which made every iteration pay an extra full-graph action
+        # (the ×10 probe split ~40% of PageRank's 76 s on those jobs)
+        dang = ranks.join(out_deg, ranks.v == out_deg.a, "left_anti").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
+        )
+        return (
+            v.join(contribs, v.v == contribs.b, "left")
+            .crossJoin(F.broadcast(dang))
+            .select(
+                "v",
+                (
+                    F.when(teleport, base).otherwise(F.lit(0.0))
+                    + F.lit(DAMPING) * F.coalesce("in_sum", F.lit(0.0))
+                ).alias("rank"),
+            )
+        )
+
     ranks = v.select(
         "v", F.when(teleport, F.lit(1.0 / n)).otherwise(F.lit(0.0)).alias("rank")
     ).localCheckpoint()
     try:
-        for _ in range(rounds):
-            contribs = (
-                e_deg.join(ranks, e_deg.a == ranks.v)
-                .select("b", (F.col("rank") / F.col("deg")).alias("c"))
-                .groupBy("b")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            # dangling mass (rank held by vertices with no out-edges) as a
-            # broadcast 1-row frame folded into the SAME job — the round-5
-            # version pulled it to the driver with a per-round .first(),
-            # which made every iteration pay an extra full-graph action
-            # (the ×10 probe split ~40% of PageRank's 76 s on those jobs)
-            dang = ranks.join(out_deg, ranks.v == out_deg.a, "left_anti").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-            )
-            base = F.lit((1.0 - DAMPING) / n) + (
-                F.lit(DAMPING) * F.col("dm") / F.lit(float(n))
-            )
-            ranks = (
-                v.join(contribs, v.v == contribs.b, "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "v",
-                    (
-                        F.when(teleport, base).otherwise(F.lit(0.0))
-                        + F.lit(DAMPING) * F.coalesce("in_sum", F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint()  # eager: materializes the round's one job
-            )
-        return ranks
+        return truncate.iterate(ranks, step, rounds)
     finally:
         e_deg.unpersist()
         v.unpersist()

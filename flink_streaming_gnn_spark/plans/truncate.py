@@ -1,4 +1,6 @@
-"""Hard plan-state truncation for long iterative driver loops.
+"""The engine's one iteration driver, ``iterate`` (the Pregel shape of
+the reference's A10 iteration head/tail), and the plan-state rules of
+driver loops.
 
 ``localCheckpoint(eager=True)`` truncates the logical plan (LogicalRDD)
 and the RDD lineage — but measured on this Spark build, a loop that
@@ -26,11 +28,55 @@ from __future__ import annotations
 
 import functools
 import gc
+import itertools
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _F = TypeVar("_F", bound=Callable)
+
+Observe = Callable[[DataFrame, Column], DataFrame]
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, Observe], DataFrame],
+    rounds: int | None = None,
+) -> DataFrame:
+    """Run ``step`` round after round and return the last state.
+
+    Each round calls ``step(state, observe)``, ``localCheckpoint()``s the
+    frame it returns, and reads the one count the step tagged with
+    ``observe(frame, count)``. The loop stops at the first round whose
+    count is 0, or after ``rounds`` rounds. With ``rounds=None`` it runs
+    to the fixpoint, uncapped, and a step that tags no count raises.
+
+    The rules every step keeps:
+
+    - Observe in the round's checkpoint pipeline, never on a side
+      subtree: the count then rides the checkpoint job, and no other job
+      runs. AQE may prune a side subtree it finds empty, and
+      ``Observation.get`` on a pruned node raises.
+    - The state is checkpointed every round because a step references it
+      twice or more (a join and a self-loop row, a dangling-mass side, an
+      anti-join): untruncated, the plan doubles per round (2^rounds
+      copies of the tree to analyse). The checkpoint makes it a leaf.
+    """
+    for _ in range(rounds) if rounds is not None else itertools.count():
+        tag = Observation()
+        tagged: list[Column] = []
+
+        def observe(frame: DataFrame, count: Column) -> DataFrame:
+            tagged.append(count)
+            return frame.observe(tag, count.alias("n"))
+
+        out = step(state, observe)
+        if rounds is None and not tagged:
+            raise ValueError("iterate: a step with no round cap must observe a count")
+        state = out.localCheckpoint()
+        if tagged and tag.get["n"] == 0:
+            break
+    return state
 
 
 def release_superseded_checkpoints(fn: _F) -> _F:

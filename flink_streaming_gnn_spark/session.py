@@ -16,6 +16,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """Half the machine's memory, at most 24g: a local-mode heap ceiling
+    above physical memory grows until the OOM killer ends the JVM."""
+    return f"{max(1, min(24, physical_bytes // 2**31))}g"
+
+
+DEFAULT_DRIVER_MEM = default_driver_memory(
+    os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+)
+
+
 def get_spark(
     app_name: str = "flink_streaming_gnn_spark",
     cpus: int | None = None,
@@ -46,10 +57,10 @@ def get_spark(
         # scheduler, not the split size, is the parallelism source there).
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         # ContextCleaner only releases per-query broadcast/shuffle state
-        # after a driver GC processes the weak references; with a 24g heap
-        # a session can go MANY queries between collections and later
-        # queries slow 10× under the accumulated state (measured in
-        # bench.py — see _time_best). The default periodicGC.interval of
+        # after a driver GC processes the weak references; with a heap of
+        # several GiB a session can go MANY queries between collections,
+        # and later queries slow 10× under the accumulated state (measured
+        # in bench.py — see _time_best). The default periodicGC.interval of
         # 30min is tuned for clusters, not a 200-query single-JVM session;
         # 2min keeps the cleaner fed with negligible pause cost.
         .config("spark.cleaner.periodicGC.interval", "2min")
@@ -72,19 +83,23 @@ def get_spark(
         # No timed headline query writes parquet (noop sink); results are
         # codec-independent. The SHUFFLE codec stays Spark's lz4: shuffle
         # bytes sit in page cache here, and an order-reversed ×10 A/B
-        # (tools/ab_r9_zstd_reversed.log) had lz4 win or tie every pairing
-        # (pagerank lz4 29.6/31.6 s vs zstd 39.5/33.1 s).
+        # (tools/ab_r9_zstd_reversed.log at e924de5) had lz4 win or tie
+        # every pairing (pagerank lz4 29.6/31.6 s vs zstd 39.5/33.1 s).
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Single-JVM large-state robustness: at 10⁸-row streaming state a
-        # >10 s full GC (24g heap) or a host stall missed the 10s default
-        # executor heartbeat (RpcTimeout → executor declared dead →
-        # SparkContext shut down mid-stream; tools/probe_r9_soak_x100.log,
-        # first attempt). 30s/600s are the standard large-heap settings;
-        # timeouts change no plan.
+        # >10 s full GC of a large heap (measured with 24g) or a host stall
+        # missed the 10s default executor heartbeat (RpcTimeout → executor
+        # declared dead → SparkContext shut down mid-stream;
+        # tools/probe_r9_soak_x100.log at eaf89d2, first attempt).
+        # 30s/600s are the standard large-heap settings; timeouts change
+        # no plan.
         .config("spark.executor.heartbeatInterval", "30s")
         .config("spark.network.timeout", "600s")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", DEFAULT_DRIVER_MEM),
+        )
         # ANSI mode off: engine follows classic Spark SQL null-on-error
         # semantics, matching the permissive oracle comparisons.
         .config("spark.sql.ansi.enabled", "false")

@@ -1,11 +1,65 @@
 """Iterative kernels run to their fixpoint, whatever its depth: each
 graph below needs more rounds than the round caps these loops once had
 (condensation: 12 peels, k-core: 30 rounds, coreness: 60 rounds), and a
-capped loop returned its unfinished state without a word."""
+capped loop returned its unfinished state without a word. The loops run
+on ``truncate.iterate``, whose stop rule is pinned on tiny frames first."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
+from flink_streaming_gnn_spark.plans.truncate import iterate
 from tests.conftest import SF_SMOKE
+
+
+def _countdown(spark, calls, tag=True):
+    """A step that lowers every value by one, down to 0, and tags the
+    count of values still above 0: from [3, 1] it stops after round 3."""
+
+    def step(state, observe):
+        calls.append(1)
+        out = state.select(F.greatest(F.col("x") - 1, F.lit(0)).alias("x"))
+        return observe(out, F.count_if(F.col("x") > 0)) if tag else out
+
+    return spark.createDataFrame([(3,), (1,)], "x long"), step
+
+
+def test_iterate_stops_at_first_zero_count(spark):
+    calls = []
+    state, step = _countdown(spark, calls)
+    assert sorted(r["x"] for r in iterate(state, step).collect()) == [0, 0]
+    assert len(calls) == 3
+
+
+def test_iterate_fixed_rounds_run_one_checkpoint_job_each(spark):
+    sc = spark.sparkContext
+    state = spark.range(4).select(F.col("id").alias("x"))
+
+    def step(s, observe):
+        return s.select((F.col("x") + 1).alias("x"))
+
+    sc.setJobGroup("iterate_fixed_rounds", "iterate job count")
+    try:
+        out = iterate(state, step, 5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("iterate_fixed_rounds")) == 5
+    assert sorted(r["x"] for r in out.collect()) == [5, 6, 7, 8]
+
+
+def test_iterate_tagged_count_stops_before_round_cap(spark):
+    calls = []
+    state, step = _countdown(spark, calls)
+    iterate(state, step, rounds=10)
+    assert len(calls) == 3
+
+
+def test_iterate_uncapped_step_must_observe(spark):
+    state, step = _countdown(spark, [], tag=False)
+    with pytest.raises(ValueError):
+        iterate(state, step)
 
 
 def test_condensation_of_transitive_tournament_has_every_level(spark, monkeypatch):

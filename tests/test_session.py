@@ -38,3 +38,14 @@ def test_engine_reads_only_deployment_env_vars():
     for path in PKG.rglob("*.py"):
         found.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", path.read_text()))
     assert found == DEPLOYMENT_VARS
+
+
+def test_default_driver_memory_is_half_the_machine_up_to_24g():
+    from flink_streaming_gnn_spark.session import default_driver_memory
+
+    gib = 2**30
+    assert default_driver_memory(16 * gib) == "8g"
+    assert default_driver_memory(15 * gib + gib // 2) == "7g"
+    assert default_driver_memory(48 * gib) == "24g"
+    assert default_driver_memory(256 * gib) == "24g"
+    assert default_driver_memory(gib) == "1g"

@@ -269,14 +269,16 @@ EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
     # OLS: one mergeable agg pass after the equi-join
     "agg_linear_regression": ([r"HashAggregate", r"partial_regr"], [r"CartesianProduct"]),
     "graph_assortativity": ([r"HashAggregate"], [r"CartesianProduct"]),
-    # round-6 two-tier triangle readout: at audit scale the dense tier
-    # fires (BLAS kernel on a geometry-bounded driver read), so the
-    # returned plan is the JVM division/rounding over the kernel's
-    # local relation — still no cartesian and no Python in the plan
+    # two-tier triangle readout: at audit scale the driver tier fires
+    # (BLAS kernel on a geometry-bounded driver read) and returns its
+    # per-vertex rows as a local relation (createDataFrame of a pandas
+    # frame), so Catalyst's ConvertToLocalRelation folds the degree
+    # filter and the JVM division/rounding into it: the plan is one
+    # LocalTableScan — still no cartesian and no Python in the plan
     # (the join tier's explode→hash-agg shape is pinned by the
     # tier-parity pytest instead)
     "graph_clustering_coefficient": (
-        [r"Project"],
+        [r"LocalTableScan"],
         [r"CartesianProduct", r"BroadcastNestedLoopJoin", r"EvalPython"],
     ),
     # max-pool layer: mergeable partial_max before the one dst shuffle; all JVM
@@ -417,9 +419,14 @@ EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
     # --- round 4b ---
     # window funnel: windows + ONE equi self-join (the chain assembly);
     # never a theta join, never Python. The scan must prune down to the
-    # three columns the funnel touches.
+    # three columns the funnel touches. ts scans as bigint on a corpus
+    # with nanosecond event times (perfbench's generator), which
+    # load_table reads with nanosAsLong.
     "cep_window_funnel": (
-        [r"Window", r"ReadSchema: struct<ts:timestamp_ntz,user_id:bigint,event_type:string"],
+        [
+            r"Window",
+            r"ReadSchema: struct<ts:(timestamp_ntz|bigint),user_id:bigint,event_type:string",
+        ],
         [r"CartesianProduct", r"BroadcastNestedLoopJoin", r"EvalPython"],
     ),
     "cep_pattern_vshape": ([r"Window", r"HashAggregate"], [r"Join", r"EvalPython"]),
