@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
 from flink_streaming_gnn_spark.graph.gcn import normalized_edges
+from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 ALPHA = 0.15
@@ -93,33 +94,17 @@ def _appnp_oracle_sql() -> str:
         f"round(CAST(embedding[{i}] AS DOUBLE), 6) AS f{i}"
         for i in range(1, TRACK_DIMS + 1)
     )
-    rounds = []
-    prev = "z0"
-    for k in range(1, ROUNDS + 1):
-        a_cols = ",\n                   ".join(
-            f"sum(z.f{i} * ne.norm) AS a{i}" for i in range(1, TRACK_DIMS + 1)
-        )
-        z_cols = ",\n                   ".join(
-            f"round({1.0 - ALPHA!r} * COALESCE(a.a{i}, 0.0)"
-            f" + {ALPHA!r} * h.f{i}, 6) + 0.0 AS f{i}"
-            for i in range(1, TRACK_DIMS + 1)
-        )
-        rounds.append(f"""
-        agg{k} AS (
-            SELECT ne.dst_v AS v,
-                   {a_cols}
-            FROM norm_edges ne JOIN {prev} z ON z.v = ne.src_v
-            GROUP BY ne.dst_v
-        ),
-        z{k} AS (
-            SELECT h.v,
-                   {z_cols}
-            FROM z0 h LEFT JOIN agg{k} a ON a.v = h.v
-        )""")
-        prev = f"z{k}"
+    a_cols = ",\n                   ".join(
+        f"sum(z.f{i} * ne.norm) AS a{i}" for i in range(1, TRACK_DIMS + 1)
+    )
+    z_cols = ",\n                   ".join(
+        f"round({1.0 - ALPHA!r} * COALESCE(a.a{i}, 0.0)"
+        f" + {ALPHA!r} * h.f{i}, 6) + 0.0 AS f{i}"
+        for i in range(1, TRACK_DIMS + 1)
+    )
     out_cols = ", ".join(f"f{i} AS z{i}" for i in range(1, TRACK_DIMS + 1))
-    return f"""
-        WITH {EDGES_V_CTE},
+    chain = truncate.unroll(
+        f"""{EDGES_V_CTE},
         e AS (SELECT DISTINCT src_v, dst_v FROM edges_v WHERE src_v <> dst_v),
         z0 AS (SELECT vec_id AS v, {f_cols} FROM embeddings),
         dout AS (SELECT src_v AS v, count(*) AS d FROM e GROUP BY src_v),
@@ -138,9 +123,24 @@ def _appnp_oracle_sql() -> str:
                   UNION ALL SELECT v, v FROM z0) ea
             JOIN deg ds ON ds.v = ea.src_v
             JOIN deg dd ON dd.v = ea.dst_v
-        ),{",".join(rounds)}
+        )""",
+        lambda k: f"""agg{k} AS (
+            SELECT ne.dst_v AS v,
+                   {a_cols}
+            FROM norm_edges ne JOIN z{k - 1} z ON z.v = ne.src_v
+            GROUP BY ne.dst_v
+        ),
+        z{k} AS (
+            SELECT h.v,
+                   {z_cols}
+            FROM z0 h LEFT JOIN agg{k} a ON a.v = h.v
+        )""",
+        ROUNDS,
+    )
+    return f"""
+        WITH {chain}
         SELECT v AS vec_id, {out_cols}
-        FROM {prev}
+        FROM z{ROUNDS}
         ORDER BY vec_id
     """
 

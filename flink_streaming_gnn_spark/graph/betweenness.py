@@ -40,12 +40,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 MAX_D = 4
 SEED_MOD = 1000  # a % 1000 == 0 in 2c-space ⇔ c_custkey % 500 == 0
@@ -61,7 +61,7 @@ SEED_MOD = 1000  # a % 1000 == 0 in 2c-space ⇔ c_custkey % 500 == 0
 N_LANDMARKS = 16
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def graph_betweenness_landmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex landmark betweenness: v, round(Σ_s δ(s,v), 6) over every
     vertex reached at depth ≥ 1 from any seed (zeros included — no float
@@ -191,44 +191,43 @@ def _betweenness_body(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _betweenness_oracle_sql(max_d: int = MAX_D) -> str:
-    sig_blocks = [
+    sigma = truncate.unroll(
         """sig0 AS MATERIALIZED (
             SELECT s, s AS v, 1.0 AS sigma FROM seeds
-        )"""
-    ]
-    for d in range(1, max_d + 1):
-        sig_blocks.append(f"""sig{d} AS MATERIALIZED (
+        )""",
+        lambda d: f"""sig{d} AS MATERIALIZED (
             SELECT dl.s, dl.v, sum(sp.sigma) AS sigma
             FROM dist dl
             JOIN ue ON ue.b = dl.v
             JOIN sig{d - 1} sp ON sp.s = dl.s AND sp.v = ue.a
             WHERE dl.d = {d}
             GROUP BY dl.s, dl.v
-        )""")
-    del_blocks = [
+        )""",
+        max_d,
+    )
+    # the dependency pass runs from depth max_d down: round r is depth max_d − r
+    delta = truncate.unroll(
         f"""del{max_d} AS MATERIALIZED (
             SELECT s, v, 0.0 AS delta FROM sig{max_d}
-        )"""
-    ]
-    for d in range(max_d - 1, 0, -1):
-        del_blocks.append(f"""del{d} AS MATERIALIZED (
+        )""",
+        lambda r: f"""del{max_d - r} AS MATERIALIZED (
             SELECT su.s, su.v,
                    su.sigma * COALESCE(sum((1.0 + dn.delta) / sw.sigma), 0.0)
                        AS delta
-            FROM sig{d} su
+            FROM sig{max_d - r} su
             LEFT JOIN ue ON ue.a = su.v
-            LEFT JOIN sig{d + 1} sw ON sw.s = su.s AND sw.v = ue.b
-            LEFT JOIN del{d + 1} dn ON dn.s = sw.s AND dn.v = sw.v
+            LEFT JOIN sig{max_d - r + 1} sw ON sw.s = su.s AND sw.v = ue.b
+            LEFT JOIN del{max_d - r + 1} dn ON dn.s = sw.s AND dn.v = sw.v
             GROUP BY su.s, su.v, su.sigma
-        )""")
-    body = ",\n        ".join(sig_blocks + del_blocks)
+        )""",
+        max_d - 1,
+    )
     union = "\n            UNION ALL ".join(
         f"SELECT * FROM del{d}" for d in range(1, max_d + 1)
     )
     return f"""
-        WITH RECURSIVE {EDGES_CTE},
-        de AS (SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges),
-        ue AS (SELECT a, b FROM de UNION ALL SELECT b, a FROM de),
+        WITH RECURSIVE {BIPARTITE_PAIRS_CTE},
+        ue AS (SELECT a, b FROM bipartite UNION ALL SELECT b, a FROM bipartite),
         seeds AS (SELECT DISTINCT a AS s FROM ue WHERE a % {SEED_MOD} = 0
                   ORDER BY a LIMIT {N_LANDMARKS}),
         bfs(s, v, d) AS (
@@ -239,7 +238,8 @@ def _betweenness_oracle_sql(max_d: int = MAX_D) -> str:
             WHERE bfs.d < {max_d}
         ),
         dist AS MATERIALIZED (SELECT s, v, min(d) AS d FROM bfs GROUP BY s, v),
-        {body}
+        {sigma},
+        {delta}
         SELECT CAST(v AS BIGINT) AS v, round(sum(delta), 6) AS bc
         FROM ({union})
         GROUP BY v

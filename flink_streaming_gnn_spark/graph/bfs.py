@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
@@ -79,9 +79,8 @@ QUERIES = {"graph_bfs_levels": graph_bfs_levels}
 
 ORACLE = {
     "graph_bfs_levels": f"""
-        WITH RECURSIVE {EDGES_CTE},
-        de AS (SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges),
-        ue AS (SELECT a, b FROM de UNION ALL SELECT b, a FROM de),
+        WITH RECURSIVE {BIPARTITE_PAIRS_CTE},
+        ue AS (SELECT a, b FROM bipartite UNION ALL SELECT b, a FROM bipartite),
         seeds AS (SELECT DISTINCT a AS v FROM ue WHERE a % 100 = 0),
         bfs(v, lvl) AS (
             SELECT v, 0 FROM seeds

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
@@ -187,9 +187,8 @@ QUERIES = {"graph_closeness_centrality": graph_closeness_centrality}
 
 ORACLE = {
     "graph_closeness_centrality": f"""
-        WITH RECURSIVE {EDGES_CTE},
-        de AS (SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges),
-        ue AS (SELECT a, b FROM de UNION ALL SELECT b, a FROM de),
+        WITH RECURSIVE {BIPARTITE_PAIRS_CTE},
+        ue AS (SELECT a, b FROM bipartite UNION ALL SELECT b, a FROM bipartite),
         seeds AS (
             SELECT s FROM (
                 SELECT DISTINCT a AS s FROM ue WHERE a % {SEED_MOD} = 0

@@ -40,7 +40,8 @@ Output is the deterministic per-component summary (label = min vertex id
 in component, size, customer/supplier breakdown). Round-2 upgrade: EXACT
 oracle — not via the |V|²-reachability recursive CTE (still off the
 table), but by unrolling the hash-min propagation itself to fixed
-MATERIALIZED rounds (linear per round; idempotent past the fixpoint).
+MATERIALIZED rounds (linear per round), whose guard raises if the last
+round still lowered a label.
 Union-find parity stays pinned in tests/test_components.py.
 """
 
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
@@ -140,29 +141,25 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {"graph_connected_components": graph_connected_components}
 
-CC_ORACLE_ROUNDS = 20  # ≥ fixture diameter; extra rounds are no-ops at fixpoint
+CC_ORACLE_ROUNDS = 20  # converged after 3 rounds at sf0.01, 4 at sf0.1; the guard checks it
 
 
 def _cc_oracle_sql(rounds: int = CC_ORACLE_ROUNDS) -> str:
     """Round-2 upgrade from rows-only: the |V|²-reachability recursive CTE
     stays off the table, but the HASH-MIN propagation itself unrolls to
     fixed rounds of |V|-state min-joins (the LPA/k-core/PageRank trick) —
-    linear per round, exact once the unroll covers the diameter, and
-    harmless beyond it (min-propagation is idempotent at fixpoint). All
-    CTEs MATERIALIZED (each round referenced twice)."""
-    blocks = [
-        """de AS MATERIALIZED (
-            SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges
-        ),
+    linear per round, and exact once the unroll covers the diameter,
+    which the guard of ``truncate.unroll`` checks. All CTEs MATERIALIZED
+    (each round referenced twice)."""
+    chain = truncate.unroll(
+        f"""{BIPARTITE_PAIRS_CTE},
         ue AS MATERIALIZED (
-            SELECT a, b FROM de UNION ALL SELECT b AS a, a AS b FROM de
+            SELECT a, b FROM bipartite UNION ALL SELECT b AS a, a AS b FROM bipartite
         ),
         l0 AS MATERIALIZED (
             SELECT DISTINCT a AS v, a AS lbl FROM ue
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""nmin{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""nmin{r} AS MATERIALIZED (
             SELECT ue.a, min(l.lbl) AS m
             FROM ue JOIN l{r - 1} l ON l.v = ue.b
             GROUP BY ue.a
@@ -170,11 +167,12 @@ def _cc_oracle_sql(rounds: int = CC_ORACLE_ROUNDS) -> str:
         l{r} AS MATERIALIZED (
             SELECT l.v, least(l.lbl, COALESCE(n.m, l.lbl)) AS lbl
             FROM l{r - 1} l LEFT JOIN nmin{r} n ON n.a = l.v
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+        fixpoint="l{r}",
+    )
     return f"""
-        WITH {EDGES_CTE},
-        {body}
+        WITH {chain}
         SELECT CAST(lbl AS BIGINT) AS component,
                CAST(count(*) AS BIGINT) AS n_vertices,
                CAST(sum(CASE WHEN v % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -182,6 +180,7 @@ def _cc_oracle_sql(rounds: int = CC_ORACLE_ROUNDS) -> str:
                CAST(sum(CASE WHEN v % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_suppliers
         FROM l{rounds}
+        WHERE {truncate.converged("l{r}", rounds)}
         GROUP BY lbl
         ORDER BY component
     """

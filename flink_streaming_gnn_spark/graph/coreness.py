@@ -17,10 +17,10 @@ the count of lowered estimates is the round's observed count and no
 comparison job runs. No round cap: an n-vertex path takes about n/2
 rounds, as the fall travels inward from both ends.
 
-Exact oracle: monotone + idempotent ⇒ ORACLE_ROUNDS unrolled
-MATERIALIZED round CTEs with ORACLE_ROUNDS ≥ the measured sf0.01
-convergence depth (4) reproduce the fixpoint exactly; all-integer
-state, so the hash is rounding-free. Exact-peeling parity (min-heap
+Exact oracle: ORACLE_ROUNDS unrolled MATERIALIZED round CTEs
+(``truncate.unroll``) reproduce the fixpoint exactly once they reach it,
+and the unroll's guard raises if they have not; all-integer state, so
+the hash is rounding-free. Exact-peeling parity (min-heap
 algorithm) is pinned in tests/test_round3b.py.
 """
 
@@ -31,13 +31,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flink_streaming_gnn_spark.graph.edges import (
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
 )
 from flink_streaming_gnn_spark.plans import truncate
 
-ORACLE_ROUNDS = 6  # ≥ measured sf0.01 convergence (4) — idempotent beyond
+ORACLE_ROUNDS = 6  # converged after 3 rounds at sf0.01, 5 at sf0.1; the guard needs one more
 
 
 @truncate.release_superseded_checkpoints
@@ -72,37 +73,34 @@ def graph_coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coreness_oracle_sql(rounds: int = ORACLE_ROUNDS) -> str:
-    blocks = [
-        """d AS MATERIALIZED (
-            SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
+    chain = truncate.unroll(
+        f"""{BIPARTITE_PAIRS_CTE},
         ue AS MATERIALIZED (
-            SELECT a, b FROM d UNION ALL SELECT b AS a, a AS b FROM d
+            SELECT a, b FROM bipartite UNION ALL SELECT b AS a, a AS b FROM bipartite
         ),
         est0 AS MATERIALIZED (
             SELECT a AS v, count(*) AS est FROM ue GROUP BY a
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        blocks.append(f"""h{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""h{r} AS MATERIALIZED (
             SELECT a, max(least(rn, est)) AS h FROM (
                 SELECT ue.a, e.est,
                        row_number() OVER (PARTITION BY ue.a ORDER BY e.est DESC)
                            AS rn
-                FROM ue JOIN est{p} e ON e.v = ue.b
+                FROM ue JOIN est{r - 1} e ON e.v = ue.b
             ) GROUP BY a
         ),
         est{r} AS MATERIALIZED (
             SELECT e.v, least(e.est, h{r}.h) AS est
-            FROM est{p} e JOIN h{r} ON h{r}.a = e.v
-        )""")
-    body = ",\n        ".join(blocks)
+            FROM est{r - 1} e JOIN h{r} ON h{r}.a = e.v
+        )""",
+        rounds,
+        fixpoint="est{r}",
+    )
     return f"""
-        WITH {body}
+        WITH {chain}
         SELECT CAST(v AS BIGINT) AS v, CAST(est AS BIGINT) AS coreness
         FROM est{rounds}
+        WHERE {truncate.converged("est{r}", rounds)}
         ORDER BY v
     """
 

@@ -12,9 +12,9 @@ Vertex-id space. Customer c and supplier s collide numerically, so the
 graph kernels give every vertex one id: customers are even (``2c``) and
 suppliers odd (``2s+1``). Every derived edge runs customer → supplier,
 so every ``(a, b)`` pair has ``a < b``. ``bipartite_pairs`` is the one
-place that mapping is written; ``both_directions`` adds the reverse
-edges for the undirected kernels. The DuckDB oracles spell the same
-mapping in SQL.
+place that mapping is written, and ``BIPARTITE_PAIRS_CTE`` is its
+DuckDB twin; ``both_directions`` adds the reverse edges for the
+undirected kernels.
 """
 
 from __future__ import annotations
@@ -71,6 +71,15 @@ EDGES_CTE = """
     edges AS (
         SELECT o_custkey AS src, l_suppkey AS dst,
                l_extendedprice AS w, l_shipdate AS ts
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    )
+"""
+
+
+# DuckDB CTE twin of bipartite_pairs(derive_edges(...))
+BIPARTITE_PAIRS_CTE = """
+    bipartite AS MATERIALIZED (
+        SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     )
 """

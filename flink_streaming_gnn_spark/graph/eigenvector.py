@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
@@ -87,13 +88,10 @@ def _eigenvector_oracle_sql(rounds: int = ROUNDS // 2) -> str:
     """Unrolled power iteration at the verify-scale round count. Every
     CTE is MATERIALIZED — each round's scores feed both the next matvec
     and its own norm."""
-    blocks = [
-        """d AS MATERIALIZED (
-            SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
+    chain = truncate.unroll(
+        f"""{BIPARTITE_PAIRS_CTE},
         e AS MATERIALIZED (
-            SELECT a, b FROM d UNION ALL SELECT b AS a, a AS b FROM d
+            SELECT a, b FROM bipartite UNION ALL SELECT b AS a, a AS b FROM bipartite
         ),
         verts AS MATERIALIZED (
             SELECT DISTINCT a AS v FROM e
@@ -101,10 +99,8 @@ def _eigenvector_oracle_sql(rounds: int = ROUNDS // 2) -> str:
         n AS (SELECT count(*) AS n FROM verts),
         x0 AS MATERIALIZED (
             SELECT v, 1.0 / sqrt(n.n) AS x FROM verts CROSS JOIN n
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""y{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""y{r} AS MATERIALIZED (
             SELECT e.b AS v, sum(p.x) AS y
             FROM e JOIN x{r - 1} p ON p.v = e.a
             GROUP BY e.b
@@ -112,10 +108,11 @@ def _eigenvector_oracle_sql(rounds: int = ROUNDS // 2) -> str:
         nrm{r} AS (SELECT sqrt(sum(y * y)) AS nrm FROM y{r}),
         x{r} AS MATERIALIZED (
             SELECT v, y / nrm AS x FROM y{r} CROSS JOIN nrm{r}
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+    )
     return f"""
-        WITH {body}
+        WITH {chain}
         SELECT CAST(v AS BIGINT) AS v, round(x, 6) AS score
         FROM x{rounds}
         ORDER BY round(x, 6) DESC, v

@@ -21,12 +21,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import derive_edges
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 ROUNDS = 8
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def hits_scores(spark: SparkSession, sf_dir: str, rounds: int = ROUNDS) -> DataFrame:
     """(side, id, score) for customers (hubs) and suppliers (authorities).
 
@@ -99,17 +99,15 @@ def _hits_oracle_sql(rounds: int = ROUNDS) -> str:
     """Round-2 upgrade from rows-only: unrolled hub/authority half-rounds
     with the L2 normalization as a 1-row scalar CTE per half-round, all
     MATERIALIZED. Last-ulp float divergence only; round-6 stable."""
-    blocks = [
+    chain = truncate.unroll(
         """e AS MATERIALIZED (
             SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         ),
         h0 AS MATERIALIZED (
             SELECT DISTINCT src, 1.0 AS h FROM e
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""araw{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""araw{r} AS MATERIALIZED (
             SELECT e.dst, sum(h.h) AS ar
             FROM e JOIN h{r - 1} h ON h.src = e.src
             GROUP BY e.dst
@@ -126,10 +124,11 @@ def _hits_oracle_sql(rounds: int = ROUNDS) -> str:
         nh{r} AS (SELECT sqrt(sum(hr * hr)) AS s FROM hraw{r}),
         h{r} AS MATERIALIZED (
             SELECT src, hr / nh{r}.s AS h FROM hraw{r} CROSS JOIN nh{r}
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+    )
     return f"""
-        WITH {body},
+        WITH {chain},
         scores AS (
             SELECT 'hub' AS side, src AS id, h AS score FROM h{rounds}
             UNION ALL

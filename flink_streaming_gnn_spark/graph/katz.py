@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import derive_vertex_embeddings
+from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
 from flink_streaming_gnn_spark.plans import truncate
 
 ALPHA = 0.1
@@ -71,9 +71,7 @@ def _katz_oracle_sql(rounds: int = ROUNDS) -> str:
     previous state twice — inlining would double the plan per round).
     Scores differ from Spark's only in last-ulp sum order; round-6 is
     stable."""
-    from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
-
-    blocks = [
+    chain = truncate.unroll(
         f"""{EDGES_V_CTE},
         e AS MATERIALIZED (SELECT DISTINCT src_v, dst_v FROM edges_v),
         verts AS MATERIALIZED (
@@ -81,10 +79,8 @@ def _katz_oracle_sql(rounds: int = ROUNDS) -> str:
         ),
         s0 AS MATERIALIZED (
             SELECT v, 1.0 AS walk, 0.0 AS katz FROM verts
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""step{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""step{r} AS MATERIALIZED (
             SELECT e.dst_v AS b, sum(s.walk * {ALPHA}) AS nw
             FROM e JOIN s{r - 1} s ON s.v = e.src_v
             GROUP BY e.dst_v
@@ -94,10 +90,11 @@ def _katz_oracle_sql(rounds: int = ROUNDS) -> str:
                    COALESCE(st.nw, 0.0) AS walk,
                    s.katz + COALESCE(st.nw, 0.0) AS katz
             FROM s{r - 1} s LEFT JOIN step{r} st ON st.b = s.v
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+    )
     return f"""
-        WITH {body}
+        WITH {chain}
         SELECT CAST(v AS BIGINT) AS vertex, round(katz, 6) AS katz
         FROM s{rounds}
     """

@@ -13,11 +13,10 @@ peeling depth + 1, uncapped (an n-vertex path peels one vertex from
 each end per round: about n/2 rounds).
 
 Round-2 upgrade: EXACT oracle via mechanically-unrolled peel rounds
-(the LPA trick) — peeling is monotone, so once the fixpoint is reached
-every further unrolled block is a no-op, and unrolling MORE rounds than
-needed is harmless. ORACLE_ROUNDS=10 comfortably covers the fixture's
-peeling depth (1–3 at verify scales; equality vs a sequential peeling
-reference stays pinned in tests/test_new_ops.py).
+(``truncate.unroll``), ORACLE_ROUNDS deep; its guard raises if the last
+round still dropped an edge (K = 5 peels nothing at sf0.01 and sf0.1;
+equality vs a sequential peeling reference stays pinned in
+tests/test_new_ops.py).
 """
 
 from __future__ import annotations
@@ -70,14 +69,13 @@ def _kcore_oracle_sql(k: int = K, rounds: int = ORACLE_ROUNDS) -> str:
     # inlines un-materialized CTEs per reference, so the plan doubles per
     # round (2^rounds base scans — manifested as fd exhaustion at round
     # 10). AS MATERIALIZED pins every round to ONE evaluation.
-    blocks = [
-        """e0 AS MATERIALIZED (
+    chain = truncate.unroll(
+        f"""{SUPPLIER_PAIRS_CTE},
+        e0 AS MATERIALIZED (
             SELECT a AS v, b AS o FROM pairs
             UNION ALL SELECT b AS v, a AS o FROM pairs
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""keep{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""keep{r} AS MATERIALIZED (
             SELECT v FROM (SELECT v, count(*) AS deg FROM e{r - 1} GROUP BY v)
             WHERE deg >= {k}
         ),
@@ -85,13 +83,15 @@ def _kcore_oracle_sql(k: int = K, rounds: int = ORACLE_ROUNDS) -> str:
             SELECT e.v, e.o FROM e{r - 1} e
             WHERE e.v IN (SELECT v FROM keep{r})
               AND e.o IN (SELECT v FROM keep{r})
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+        fixpoint="e{r}",
+    )
     return f"""
-        WITH {SUPPLIER_PAIRS_CTE},
-        {body}
+        WITH {chain}
         SELECT CAST(v AS BIGINT) AS v, CAST(count(*) AS BIGINT) AS core_deg
         FROM e{rounds}
+        WHERE {truncate.converged("e{r}", rounds)}
         GROUP BY v
         ORDER BY v
     """

@@ -14,13 +14,12 @@ a placeholder support of k−2: round r drops the edges below k−2, counts
 supports on the rest, and observes how many fall below k−2. Once that
 count is 0 the supports are final; no round cap.
 
-Exact oracle: the peel is monotone (edge sets only shrink) and
-idempotent past the fixpoint, so a mechanically-unrolled
-ORACLE_ROUNDS-deep CTE chain with ORACLE_ROUNDS ≥ the measured
-convergence depth at the sf0.01 verify scale (6 rounds at K=60)
-reproduces the converged truss exactly — the same trick the CC/LPA/
-k-core oracles use. Output is the surviving edges with their final
-support, so the hash pins the whole peeling computation.
+Exact oracle: the peel is monotone (edge sets only shrink), so an
+ORACLE_ROUNDS-deep CTE chain (``truncate.unroll``) reproduces the
+converged truss exactly once it reaches the fixpoint (5 peeling rounds
+at K=60 on sf0.01, none at sf0.1), and the unroll's guard raises if it
+has not. Output is the surviving edges with their final support, so the
+hash pins the whole peeling computation.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ from flink_streaming_gnn_spark.graph.edges import (
 from flink_streaming_gnn_spark.plans import truncate
 
 KTRUSS_K = 60
-ORACLE_ROUNDS = 7  # ≥ measured sf0.01 convergence (6) — idempotent beyond
+ORACLE_ROUNDS = 7  # sf0.01 peels for 5 rounds; the unroll's guard needs one more
 # Constant-bounded local peel (the graph/mst.py LOCAL_TAIL_EDGES
 # discipline): at or below this edge count the whole peel runs as a
 # driver-side set-intersection loop — the collect is bounded by the
@@ -126,37 +125,37 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ktruss_oracle_sql(rounds: int = ORACLE_ROUNDS) -> str:
-    blocks = [
+    # ue stays un-MATERIALIZED: inlining the two directed copies into the
+    # support join lets DuckDB plan one fused pipeline per round
+    # (measured 38 s → 10 s for the 7-round chain at sf0.01)
+    chain = truncate.unroll(
         f"""{EDGES_V_CTE.strip().rstrip(',')},
         e0 AS MATERIALIZED (
             SELECT DISTINCT least(src_v, dst_v) AS a, greatest(src_v, dst_v) AS b
             FROM edges_v WHERE src_v <> dst_v
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        # ue stays un-MATERIALIZED: inlining the two directed copies into
-        # the support join lets DuckDB plan one fused pipeline per round
-        # (measured 38 s → 10 s for the 7-round chain at sf0.01)
-        blocks.append(f"""ue{p} AS (
-            SELECT a, b FROM e{p} UNION ALL SELECT b AS a, a AS b FROM e{p}
+        )""",
+        lambda r: f"""ue{r - 1} AS (
+            SELECT a, b FROM e{r - 1} UNION ALL SELECT b AS a, a AS b FROM e{r - 1}
         ),
         sup{r} AS MATERIALIZED (
             SELECT e.a, e.b, count(*) AS s
-            FROM e{p} e
-            JOIN ue{p} n1 ON n1.a = e.a
-            JOIN ue{p} n2 ON n2.a = e.b AND n2.b = n1.b
+            FROM e{r - 1} e
+            JOIN ue{r - 1} n1 ON n1.a = e.a
+            JOIN ue{r - 1} n2 ON n2.a = e.b AND n2.b = n1.b
             GROUP BY e.a, e.b
         ),
         e{r} AS MATERIALIZED (
             SELECT a, b FROM sup{r} WHERE s >= {KTRUSS_K} - 2
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        rounds,
+        fixpoint="e{r}",
+    )
     return f"""
-        WITH {body}
+        WITH {chain}
         SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
                CAST(s AS BIGINT) AS support
         FROM sup{rounds} WHERE s >= {KTRUSS_K} - 2
+          AND {truncate.converged("e{r}", rounds)}
         ORDER BY a, b
     """
 

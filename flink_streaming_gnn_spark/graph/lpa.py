@@ -22,11 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     both_directions,
     derive_edges,
 )
+from flink_streaming_gnn_spark.plans import truncate
 
 ROUNDS = 4
 
@@ -76,19 +77,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_oracle_sql(rounds: int = ROUNDS) -> str:
-    """Generate the fixed-round LPA oracle: one (votes, ranked, labels)
-    CTE block per round — mechanically the same plan DuckDB-side."""
-    blocks = [
-        f"""WITH {EDGES_CTE},
-        de AS (SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges),
-        ue AS (SELECT a, b FROM de UNION ALL SELECT b, a FROM de),
-        l0 AS (SELECT DISTINCT a AS v, a AS lbl FROM ue)"""
-    ]
-    for r in range(1, rounds + 1):
-        blocks.append(
-            f""",
-        v{r} AS (
+def _lpa_chain(rounds: int) -> str:
+    """The fixed-round LPA oracle's CTE chain: one (votes, labels) CTE
+    pair per round — mechanically the same plan DuckDB-side."""
+    return truncate.unroll(
+        f"""{BIPARTITE_PAIRS_CTE},
+        ue AS (SELECT a, b FROM bipartite UNION ALL SELECT b, a FROM bipartite),
+        l0 AS (SELECT DISTINCT a AS v, a AS lbl FROM ue)""",
+        lambda r: f"""v{r} AS (
             SELECT ue.a AS v, l{r - 1}.lbl, count(*) AS cnt
             FROM ue JOIN l{r - 1} ON l{r - 1}.v = ue.b
             GROUP BY ue.a, l{r - 1}.lbl
@@ -101,10 +97,13 @@ def _lpa_oracle_sql(rounds: int = ROUNDS) -> str:
                        ) AS rn
                 FROM v{r}
             ) WHERE rn = 1
-        )"""
-        )
-    blocks.append(
-        f"""
+        )""",
+        rounds,
+    )
+
+
+def _lpa_oracle_sql(rounds: int = ROUNDS) -> str:
+    return f"""WITH {_lpa_chain(rounds)}
         SELECT CAST(lbl AS BIGINT) AS community,
                CAST(count(*) AS BIGINT) AS n_vertices,
                CAST(sum(CASE WHEN v % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_customers,
@@ -112,8 +111,6 @@ def _lpa_oracle_sql(rounds: int = ROUNDS) -> str:
         FROM l{rounds}
         GROUP BY lbl
         HAVING count(*) >= 2"""
-    )
-    return "".join(blocks)
 
 
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,11 +171,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_oracle_sql(rounds: int = ROUNDS) -> str:
-    lpa_blocks = _lpa_oracle_sql(rounds)
-    # reuse the mechanically-generated LPA CTEs; strip the final SELECT
-    head = lpa_blocks[: lpa_blocks.rindex("SELECT CAST(lbl AS BIGINT)")]
-    return f"""{head}
-        , lab AS (SELECT v, lbl FROM l{rounds}),
+    return f"""WITH {_lpa_chain(rounds)},
+        lab AS (SELECT v, lbl FROM l{rounds}),
         tagged AS (
             SELECT ue.a, ue.b, la.lbl AS la, lb.lbl AS lb
             FROM ue JOIN lab la ON la.v = ue.a

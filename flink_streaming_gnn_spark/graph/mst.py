@@ -58,8 +58,7 @@ from flink_streaming_gnn_spark.graph.edges import (
     both_directions,
     derive_edges,
 )
-from flink_streaming_gnn_spark.plans.truncate import fresh_frame
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 ROUND_CAP = 48  # components halve per round: covers 2^48 vertices
 LOCAL_TAIL_EDGES = 65536  # constant local-tail bound (module docstring)
@@ -101,7 +100,7 @@ def _kruskal_tail(e_cur: DataFrame) -> tuple[float, int, float]:
     return s, n, m
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Borůvka WITH EDGE CONTRACTION: the working edge set is re-keyed to
     component endpoints AND collapsed to the lightest original edge per
@@ -201,7 +200,7 @@ def mst_forest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # sever analyzer-state accumulation across outer generations too
         # (e_cur references lbl twice per round — see plans/truncate.py)
-        e_cur = fresh_frame(e_cur)
+        e_cur = truncate.fresh_frame(e_cur)
     if not converged:
         # a silent partial forest would be wrong-but-plausible output;
         # fail loudly instead (components halve per round, so hitting the
@@ -230,21 +229,20 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     (w, a, b) total order, so any correct MSF algorithm yields the
     identical edge set — the oracle runs a mechanically-unrolled
     UNCONTRACTED Borůvka (per-round min crossing edge per component +
-    pointer-jumped hash-min CC over the accumulated forest, the
-    pagerank/LPA unroll trick) sized for the verify scale. Kruskal parity
+    pointer-jumped hash-min CC over the accumulated forest, both chains
+    guarded by ``truncate.unroll``) sized for sf0.1. Kruskal parity
     + the n_mst_edges == n_vertices − n_components invariant stay pinned
     in tests."""
     return mst_forest_summary(spark, sf_dir)
 
 
-# Verify-scale unroll budget (oracles only ever run at sf0.01: ~1.6k
-# vertices). Components at least halve per Borůvka round → 12 rounds
-# cover 2^12 vertices; 13 pointer-jump iterations cover label chains of
-# 2^13. Both are idempotent beyond convergence (no crossing edges → no
-# chosen edges → forest and labels are fixed points), the ktruss
-# ORACLE_ROUNDS discipline.
-ORACLE_BORUVKA_ROUNDS = 12
-ORACLE_CC_ITERS = 13
+# Unroll depths, measured: the forest stops growing after 4 Borůvka
+# rounds at sf0.01 and 6 at sf0.1, and a round's forest CC is stable
+# after 25 and 43 iterations (the label shortcut is logarithmic only on
+# id-sorted chains, graph/components.py). Each chain needs one round
+# more than its depth, for its guard to see the fixpoint.
+ORACLE_BORUVKA_ROUNDS = 8
+ORACLE_CC_ITERS = 44
 
 
 def _mst_oracle_sql(
@@ -257,7 +255,29 @@ def _mst_oracle_sql(
     vertex-bounded, never edge-bounded), picks each component's minimal
     crossing edge, and accumulates. Every CTE is MATERIALIZED (each round
     references its predecessor multiple times — pagerank.py discipline)."""
-    blocks = [
+
+    def forest_cc(r: int) -> str:
+        labels = f"l_{r}_{{r}}"
+        chain = truncate.unroll(
+            f"l_{r}_0 AS (SELECT v, v AS lbl FROM verts)",
+            lambda k: f"""l_{r}_{k} AS MATERIALIZED (
+            SELECT g.s AS v, min(l2.lbl) AS lbl FROM (
+                SELECT fa AS s, fb AS t FROM f_{r}
+                UNION ALL SELECT fb AS s, fa AS t FROM f_{r}
+                UNION ALL SELECT v AS s, v AS t FROM verts
+                UNION ALL SELECT v AS s, lbl AS t FROM l_{r}_{k - 1}
+            ) g JOIN l_{r}_{k - 1} l2 ON g.t = l2.v
+            GROUP BY g.s
+        )""",
+            cc_iters,
+            fixpoint=labels,
+        )
+        return f"""{chain},
+        l_{r}_f AS MATERIALIZED (
+            SELECT * FROM l_{r}_{cc_iters} WHERE {truncate.converged(labels, cc_iters)}
+        )"""
+
+    chain = truncate.unroll(
         """e0 AS MATERIALIZED (
             SELECT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b,
                    min(l_extendedprice) AS w
@@ -272,15 +292,12 @@ def _mst_oracle_sql(
                    CAST(NULL AS DOUBLE) AS fw
             WHERE false
         ),
-        l_0_f AS MATERIALIZED (SELECT v, v AS lbl FROM verts)"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        blocks.append(f"""cand_{r} AS MATERIALIZED (
+        l_0_f AS MATERIALIZED (SELECT v, v AS lbl FROM verts)""",
+        lambda r: f"""cand_{r} AS MATERIALIZED (
             SELECT lu.lbl AS cu, lv.lbl AS cv, e.w, e.a, e.b
             FROM e0 e
-            JOIN l_{p}_f lu ON e.a = lu.v
-            JOIN l_{p}_f lv ON e.b = lv.v
+            JOIN l_{r - 1}_f lu ON e.a = lu.v
+            JOIN l_{r - 1}_f lv ON e.b = lv.v
             WHERE lu.lbl <> lv.lbl
         ),
         chosen_{r} AS MATERIALIZED (
@@ -297,26 +314,17 @@ def _mst_oracle_sql(
         ),
         f_{r} AS MATERIALIZED (
             SELECT DISTINCT fa, fb, fw FROM (
-                SELECT fa, fb, fw FROM f_{p}
+                SELECT fa, fb, fw FROM f_{r - 1}
                 UNION ALL
                 SELECT a, b, w FROM chosen_{r}
             )
         ),
-        l_{r}_0 AS (SELECT v, v AS lbl FROM verts)""")
-        for k in range(1, cc_iters + 1):
-            blocks.append(f"""l_{r}_{k} AS MATERIALIZED (
-            SELECT g.s AS v, min(l2.lbl) AS lbl FROM (
-                SELECT fa AS s, fb AS t FROM f_{r}
-                UNION ALL SELECT fb AS s, fa AS t FROM f_{r}
-                UNION ALL SELECT v AS s, v AS t FROM verts
-                UNION ALL SELECT v AS s, lbl AS t FROM l_{r}_{k - 1}
-            ) g JOIN l_{r}_{k - 1} l2 ON g.t = l2.v
-            GROUP BY g.s
-        )""")
-        blocks.append(f"l_{r}_f AS MATERIALIZED (SELECT * FROM l_{r}_{cc_iters})")
-    ctes = ",\n        ".join(blocks)
+        {forest_cc(r)}""",
+        rounds,
+        fixpoint="f_{r}",
+    )
     return f"""
-        WITH {ctes}
+        WITH {chain}
         SELECT CAST((SELECT count(*) FROM verts) AS BIGINT) AS n_vertices,
                CAST((SELECT count(*) FROM verts)
                     - (SELECT count(*) FROM f_{rounds}) AS BIGINT)
@@ -327,6 +335,7 @@ def _mst_oracle_sql(
                    AS total_weight,
                round((SELECT coalesce(max(fw), 0.0) FROM f_{rounds}), 2)
                    AS bottleneck_weight
+        WHERE {truncate.converged("f_{r}", rounds)}
     """
 
 

@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import bipartite_pairs, derive_edges
+from flink_streaming_gnn_spark.graph.edges import (
+    BIPARTITE_PAIRS_CTE,
+    bipartite_pairs,
+    derive_edges,
+)
 from flink_streaming_gnn_spark.plans import truncate
 
 DAMPING = 0.85
@@ -130,27 +134,36 @@ def _is_verify_scale(sf_dir: str) -> bool:
 
 def unrolled_rank_sql(rounds: int, head: str, rank_cte: str, where: str = "") -> str:
     """DuckDB twin of ``power_iteration``: the rounds unrolled into
-    MATERIALIZED CTEs. ``head`` defines e, verts, out_deg and r0;
-    ``rank_cte`` is round {r}'s rank CTE over contrib{r} and dang{r}, a
-    template with {r} and {d} (damping) slots. Every CTE is MATERIALIZED —
-    each round references its predecessor twice (contribs + dangling), so
-    un-materialized inlining would double the plan per round."""
-    blocks = [head]
-    for r in range(1, rounds + 1):
-        blocks.append(f"""contrib{r} AS MATERIALIZED (
+    MATERIALIZED CTEs. ``head`` defines r0 over the ``bipartite`` pairs,
+    their ``verts`` and ``out_deg``; ``rank_cte`` is round {r}'s rank CTE over
+    contrib{r} and dang{r}, a template with {r} and {d} (damping) slots.
+    Every CTE is MATERIALIZED — each round references its predecessor
+    twice (contribs + dangling), so un-materialized inlining would double
+    the plan per round."""
+    chain = truncate.unroll(
+        f"""{BIPARTITE_PAIRS_CTE},
+        verts AS MATERIALIZED (
+            SELECT a AS v FROM bipartite UNION SELECT b AS v FROM bipartite
+        ),
+        out_deg AS MATERIALIZED (
+            SELECT a, count(*) AS deg FROM bipartite GROUP BY a
+        ),
+        {head}""",
+        lambda r: f"""contrib{r} AS MATERIALIZED (
             SELECT e.b, sum(p.rank / od.deg) AS in_sum
-            FROM e JOIN out_deg od ON od.a = e.a
-                   JOIN r{r - 1} p ON p.v = e.a
+            FROM bipartite e JOIN out_deg od ON od.a = e.a
+                             JOIN r{r - 1} p ON p.v = e.a
             GROUP BY e.b
         ),
         dang{r} AS MATERIALIZED (
             SELECT COALESCE(sum(rank), 0.0) AS dm
             FROM r{r - 1} WHERE v NOT IN (SELECT a FROM out_deg)
         ),
-        {rank_cte.format(r=r, d=DAMPING)}""")
-    body = ",\n        ".join(blocks)
+        {rank_cte.format(r=r, d=DAMPING)}""",
+        rounds,
+    )
     return f"""
-        WITH {body}
+        WITH {chain}
         SELECT CAST(v AS BIGINT) AS v, round(rank, 6) AS rank
         FROM r{rounds}{where}
         ORDER BY round(rank, 6) DESC, v
@@ -164,17 +177,7 @@ def _pagerank_oracle_sql(rounds: int = ROUNDS // 2) -> str:
     count (oracles only ever run at sf0.01). Ranks differ from Spark's
     only in final-ulp float accumulation order; the key rounds to 6 dp at
     magnitudes ~1/|V|, so the hash is stable."""
-    head = """e AS MATERIALIZED (
-            SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        verts AS MATERIALIZED (
-            SELECT a AS v FROM e UNION SELECT b AS v FROM e
-        ),
-        n AS (SELECT count(*) AS n FROM verts),
-        out_deg AS MATERIALIZED (
-            SELECT a, count(*) AS deg FROM e GROUP BY a
-        ),
+    head = """n AS (SELECT count(*) AS n FROM verts),
         r0 AS MATERIALIZED (
             SELECT v, 1.0 / n.n AS rank FROM verts CROSS JOIN n
         )"""

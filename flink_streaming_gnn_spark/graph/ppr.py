@@ -65,20 +65,10 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppr_oracle_sql(rounds: int = ROUNDS // 2) -> str:
-    head = f"""e AS MATERIALIZED (
-            SELECT DISTINCT o_custkey * 2 AS a, l_suppkey * 2 + 1 AS b
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        verts AS MATERIALIZED (
-            SELECT a AS v FROM e UNION SELECT b AS v FROM e
-        ),
-        seeds AS MATERIALIZED (
+    head = f"""seeds AS MATERIALIZED (
             SELECT v FROM verts WHERE v % {SEED_MOD} = 0
         ),
         ns AS (SELECT count(*) AS ns FROM seeds),
-        out_deg AS MATERIALIZED (
-            SELECT a, count(*) AS deg FROM e GROUP BY a
-        ),
         r0 AS MATERIALIZED (
             SELECT verts.v,
                    CASE WHEN s.v IS NOT NULL THEN 1.0 / ns.ns ELSE 0.0 END AS rank

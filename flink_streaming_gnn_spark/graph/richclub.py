@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import (
-    EDGES_CTE,
+    BIPARTITE_PAIRS_CTE,
     bipartite_pairs,
     derive_edges,
 )
@@ -102,17 +102,16 @@ def _rich_club_oracle_sql() -> str:
         for k in LADDER
     )
     return f"""
-        WITH {EDGES_CTE},
-        ue AS (SELECT DISTINCT src * 2 AS a, dst * 2 + 1 AS b FROM edges),
+        WITH {BIPARTITE_PAIRS_CTE},
         deg AS (
             SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT a AS v FROM ue UNION ALL SELECT b AS v FROM ue
+                SELECT a AS v FROM bipartite UNION ALL SELECT b AS v FROM bipartite
             ) GROUP BY v
         ),
         ej AS (
             SELECT dda.deg AS da, ddb.deg AS db
-            FROM ue JOIN deg dda ON dda.v = ue.a
-                    JOIN deg ddb ON ddb.v = ue.b
+            FROM bipartite e JOIN deg dda ON dda.v = e.a
+                          JOIN deg ddb ON ddb.v = e.b
         ),
         ec AS (SELECT {e_cols} FROM ej),
         nc AS (SELECT {n_cols} FROM deg),

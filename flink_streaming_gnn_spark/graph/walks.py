@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
+from flink_streaming_gnn_spark.plans import truncate
 
 SEED_MOD = 50  # seeds = vertices with v % SEED_MOD == 0
 WALK_LEN = 3  # steps taken after the seed
@@ -66,39 +67,38 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return walks.select("seed", *[f"v{s}" for s in range(1, WALK_LEN + 1)])
 
 
-def _walk_oracle_sql() -> str:
-    ctes = []
-    prev_rel, prev_col = "seeds", "seed"
-    for step in range(1, WALK_LEN + 1):
-        carry = ", ".join(
-            ["seed"] + [f"v{s}" for s in range(1, step)]
-        )
-        ctes.append(
-            f"""s{step} AS (
-            SELECT {carry}, v{step} FROM (
-                SELECT f.*, e.dst_v AS v{step},
-                       row_number() OVER (
-                           PARTITION BY f.seed
-                           ORDER BY md5(CAST(f.{prev_col} AS VARCHAR) || '|' ||
-                                        CAST(e.dst_v AS VARCHAR) || '|' || '{step}')
-                                    NULLS LAST,
-                                    e.dst_v NULLS LAST
-                       ) AS rn
-                FROM {prev_rel} f LEFT JOIN e ON e.src_v = f.{prev_col}
-            ) WHERE rn = 1
-        )"""
-        )
-        prev_rel, prev_col = f"s{step}", f"v{step}"
-    cols = ", ".join(["seed"] + [f"v{s}" for s in range(1, WALK_LEN + 1)])
-    joined_ctes = ",\n        ".join(ctes)
-    return f"""
-        WITH {EDGES_V_CTE},
+# the walk twins' head: s0 holds each seed as the walk's vertex 0
+_WALK_HEAD = f"""{EDGES_V_CTE},
         e AS (SELECT DISTINCT src_v, dst_v FROM edges_v),
         seeds AS (
             SELECT DISTINCT src_v AS seed FROM e WHERE src_v % {SEED_MOD} = 0
         ),
-        {joined_ctes}
-        SELECT {cols} FROM {prev_rel}
+        s0 AS (SELECT seed, seed AS v0 FROM seeds)"""
+_WALK_COLS = ", ".join(["seed"] + [f"v{s}" for s in range(1, WALK_LEN + 1)])
+
+
+def _uniform_step_sql(step: int) -> str:
+    """Walk step ``step``: each walk's min-hash draw over its last
+    vertex's out-edges."""
+    return f"""s{step} AS (
+            SELECT * EXCLUDE (rn) FROM (
+                SELECT f.*, e.dst_v AS v{step},
+                       row_number() OVER (
+                           PARTITION BY f.seed
+                           ORDER BY md5(CAST(f.v{step - 1} AS VARCHAR) || '|' ||
+                                        CAST(e.dst_v AS VARCHAR) || '|' || '{step}')
+                                    NULLS LAST,
+                                    e.dst_v NULLS LAST
+                       ) AS rn
+                FROM s{step - 1} f LEFT JOIN e ON e.src_v = f.v{step - 1}
+            ) WHERE rn = 1
+        )"""
+
+
+def _walk_oracle_sql() -> str:
+    return f"""
+        WITH {truncate.unroll(_WALK_HEAD, _uniform_step_sql, WALK_LEN)}
+        SELECT {_WALK_COLS} FROM s{WALK_LEN}
     """
 
 
@@ -176,70 +176,52 @@ def graph_node2vec_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return walks.select("seed", *[f"v{s}" for s in range(1, WALK_LEN + 1)])
 
 
-def _n2v_oracle_sql() -> str:
-    # step 1: uniform (identical to graph_random_walk's first step)
-    ctes = [
-        f"""s1 AS (
-            SELECT seed, v1 FROM (
-                SELECT f.seed, e.dst_v AS v1,
+def _biased_step_sql(step: int) -> str:
+    """Walk step ``step`` ≥ 2: the min-hash draw over the last vertex's
+    out-edges, each replicated by its node2vec weight."""
+    prev, cur = f"v{step - 2}", f"v{step - 1}"
+    return f"""s{step} AS (
+            SELECT * EXCLUDE (r, rn) FROM (
+                SELECT f.*, c.v{step}, r.r,
                        row_number() OVER (
                            PARTITION BY f.seed
-                           ORDER BY md5(CAST(f.seed AS VARCHAR) || '|' ||
-                                        CAST(e.dst_v AS VARCHAR) || '|' || '1')
-                                    NULLS LAST,
-                                    e.dst_v NULLS LAST
-                       ) AS rn
-                FROM seeds f LEFT JOIN e ON e.src_v = f.seed
-            ) WHERE rn = 1
-        )"""
-    ]
-    prev_rel, prev_col, cur_col = "s1", "seed", "v1"
-    for step in range(2, WALK_LEN + 1):
-        carry = ", ".join(["f.seed"] + [f"f.v{s}" for s in range(1, step)])
-        out_cols = ", ".join(["seed"] + [f"v{s}" for s in range(1, step + 1)])
-        ctes.append(
-            f"""s{step} AS (
-            SELECT {out_cols} FROM (
-                SELECT {carry}, c.v{step}, r.r,
-                       row_number() OVER (
-                           PARTITION BY f.seed
-                           ORDER BY md5(CAST(f.{prev_col} AS VARCHAR) || '|' ||
-                                        CAST(f.{cur_col} AS VARCHAR) || '|' ||
+                           ORDER BY md5(CAST(f.{prev} AS VARCHAR) || '|' ||
+                                        CAST(f.{cur} AS VARCHAR) || '|' ||
                                         CAST(c.v{step} AS VARCHAR) || '|' ||
                                         '{step}' || '|' ||
                                         CAST(r.r AS VARCHAR))
                                     NULLS LAST,
                                     c.v{step} NULLS LAST
                        ) AS rn
-                FROM {prev_rel} f
+                FROM s{step - 1} f
                 LEFT JOIN LATERAL (
                     SELECT e.dst_v AS v{step},
-                           CASE WHEN e.dst_v = f.{prev_col}
+                           CASE WHEN e.dst_v = f.{prev}
                                     THEN {N2V_REPLICAS_RETURN}
                                 WHEN EXISTS (SELECT 1 FROM e pe
-                                             WHERE pe.src_v = f.{prev_col}
+                                             WHERE pe.src_v = f.{prev}
                                                AND pe.dst_v = e.dst_v)
                                     THEN {N2V_REPLICAS_COMMON}
                                 ELSE {N2V_REPLICAS_EXPLORE} END AS k
-                    FROM e WHERE e.src_v = f.{cur_col}
+                    FROM e WHERE e.src_v = f.{cur}
                 ) c ON TRUE
                 LEFT JOIN LATERAL (
                     SELECT unnest(generate_series(0, c.k - 1)) AS r
                 ) r ON TRUE
             ) WHERE rn = 1
         )"""
-        )
-        prev_rel, prev_col, cur_col = f"s{step}", cur_col, f"v{step}"
-    cols = ", ".join(["seed"] + [f"v{s}" for s in range(1, WALK_LEN + 1)])
-    joined = ",\n        ".join(ctes)
+
+
+def _n2v_oracle_sql() -> str:
+    # step 1 is uniform (graph_random_walk's first step); round r is step r + 1
+    chain = truncate.unroll(
+        f"{_WALK_HEAD},\n        {_uniform_step_sql(1)}",
+        lambda r: _biased_step_sql(r + 1),
+        WALK_LEN - 1,
+    )
     return f"""
-        WITH {EDGES_V_CTE},
-        e AS (SELECT DISTINCT src_v, dst_v FROM edges_v),
-        seeds AS (
-            SELECT DISTINCT src_v AS seed FROM e WHERE src_v % {SEED_MOD} = 0
-        ),
-        {joined}
-        SELECT {cols} FROM {prev_rel}
+        WITH {chain}
+        SELECT {_WALK_COLS} FROM s{WALK_LEN}
     """
 
 

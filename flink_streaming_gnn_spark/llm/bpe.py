@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 
 MERGES = 8
 
@@ -75,7 +75,7 @@ def _pair_counts(dict_df: DataFrame) -> DataFrame:
     )
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first MERGES BPE merge rules: (merge_rank, left_tok, right_tok,
     merged, pair_freq)."""
@@ -161,8 +161,10 @@ def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_oracle_sql(merges: int = MERGES) -> str:
-    blocks = [
+def _bpe_chain(merges: int) -> str:
+    """The training twin's CTE chain: merge rule r is t{r}, and w{r} is
+    every word's sequence after rules 1..r."""
+    return truncate.unroll(
         r"""wf AS MATERIALIZED (
             SELECT word, CAST(count(*) AS BIGINT) AS freq
             FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -172,10 +174,8 @@ def _bpe_oracle_sql(merges: int = MERGES) -> str:
         w0 AS MATERIALIZED (
             SELECT trim(regexp_replace(word, '(.)', '\1 ', 'g')) AS seq, freq
             FROM wf
-        )"""
-    ]
-    for r in range(1, merges + 1):
-        blocks.append(f"""p{r} AS MATERIALIZED (
+        )""",
+        lambda r: f"""p{r} AS MATERIALIZED (
             SELECT parts[i] || ' ' || parts[i + 1] AS pair,
                    CAST(sum(freq) AS BIGINT) AS cnt
             FROM (
@@ -199,13 +199,17 @@ def _bpe_oracle_sql(merges: int = MERGES) -> str:
                                     || ' ')) AS seq,
                    freq
             FROM w{r - 1}
-        )""")
-    body = ",\n        ".join(blocks)
+        )""",
+        merges,
+    )
+
+
+def _bpe_oracle_sql(merges: int = MERGES) -> str:
     union = "\n            UNION ALL ".join(
         f"SELECT * FROM t{r}" for r in range(1, merges + 1)
     )
     return f"""
-        WITH {body}
+        WITH {_bpe_chain(merges)}
         SELECT merge_rank,
                split_part(pair, ' ', 1) AS left_tok,
                split_part(pair, ' ', 2) AS right_tok,
@@ -216,10 +220,8 @@ def _bpe_oracle_sql(merges: int = MERGES) -> str:
 
 
 def _bpe_encode_oracle_sql(merges: int = MERGES) -> str:
-    # training CTE blocks (w0..wN, t1..tN) reused verbatim, then the
-    # nested-replace application of the derived rules to every word
-    train_body = _bpe_oracle_sql(merges)
-    # extract the WITH body up to the final SELECT (the blocks string)
+    # the training chain's rules t1..tN, then the nested-replace
+    # application of the derived rules to every word
     expr = "' ' || trim(regexp_replace(word, '(.)', '\\1 ', 'g')) || ' '"
     for r in range(1, merges + 1):
         for _ in range(2):  # double replace per rule (module docstring)
@@ -227,10 +229,8 @@ def _bpe_encode_oracle_sql(merges: int = MERGES) -> str:
                 f"replace({expr}, ' ' || (SELECT pair FROM t{r}) || ' ', "
                 f"' ' || (SELECT replace(pair, ' ', '') FROM t{r}) || ' ')"
             )
-    blocks = train_body.split("WITH", 1)[1].rsplit("SELECT merge_rank", 1)[0]
-    blocks = blocks.rstrip().rstrip(",")  # the training SELECT is replaced
     return f"""
-        WITH {blocks},
+        WITH {_bpe_chain(merges)},
         dwords AS (
             SELECT doc_id, unnest(string_split(text, ' ')) AS word
             FROM documents

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.llm.simsearch import ivf_centroids
+from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 K_CLUSTERS = 8
@@ -105,7 +106,23 @@ def _kmeans_oracle_sql(rounds: int = ROUNDS) -> str:
         f"SELECT {c} AS cl, [{', '.join(repr(float(v)) for v in cents[c])}]::DOUBLE[] AS cent"
         for c in range(K_CLUSTERS)
     )
-    blocks = [
+
+    def assignment(r: int) -> str:
+        """dist{r} and assign{r}: each vector's nearest centroid of c{r - 1}."""
+        return f"""dist{r} AS MATERIALIZED (
+            SELECT ex.vec_id, c.cl, sum((ex.x - c.v) * (ex.x - c.v)) AS d2
+            FROM ex JOIN c{r - 1} c ON c.d = ex.d
+            GROUP BY ex.vec_id, c.cl
+        ),
+        assign{r} AS MATERIALIZED (
+            SELECT vec_id, cl FROM (
+                SELECT vec_id, cl,
+                       row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rn
+                FROM dist{r}
+            ) WHERE rn = 1
+        )"""
+
+    chain = truncate.unroll(
         f"""emb AS MATERIALIZED (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
         ),
@@ -117,22 +134,8 @@ def _kmeans_oracle_sql(rounds: int = ROUNDS) -> str:
         c0 AS MATERIALIZED (
             SELECT cl, gs.i AS d, cent[gs.i] AS v
             FROM c0arr CROSS JOIN (SELECT unnest(range(1, {dim} + 1)) AS i) gs
-        )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        blocks.append(f"""dist{r} AS MATERIALIZED (
-            SELECT ex.vec_id, c.cl, sum((ex.x - c.v) * (ex.x - c.v)) AS d2
-            FROM ex JOIN c{p} c ON c.d = ex.d
-            GROUP BY ex.vec_id, c.cl
-        ),
-        assign{r} AS MATERIALIZED (
-            SELECT vec_id, cl FROM (
-                SELECT vec_id, cl,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rn
-                FROM dist{r}
-            ) WHERE rn = 1
-        ),
+        )""",
+        lambda r: f"""{assignment(r)},
         mean{r} AS MATERIALIZED (
             SELECT a.cl, ex.d, round(avg(ex.x), 6) AS mv
             FROM assign{r} a JOIN ex ON ex.vec_id = a.vec_id
@@ -140,36 +143,25 @@ def _kmeans_oracle_sql(rounds: int = ROUNDS) -> str:
         ),
         c{r} AS MATERIALIZED (
             SELECT p.cl, p.d, COALESCE(m.mv, p.v) AS v
-            FROM c{p} p LEFT JOIN mean{r} m ON m.cl = p.cl AND m.d = p.d
-        )"""
-        )
-    R = rounds
-    blocks.append(f"""distF AS MATERIALIZED (
-            SELECT ex.vec_id, c.cl, sum((ex.x - c.v) * (ex.x - c.v)) AS d2
-            FROM ex JOIN c{R} c ON c.d = ex.d
-            GROUP BY ex.vec_id, c.cl
-        ),
-        assignF AS MATERIALIZED (
-            SELECT vec_id, cl FROM (
-                SELECT vec_id, cl,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rn
-                FROM distF
-            ) WHERE rn = 1
-        ),
-        counts AS (
-            SELECT cl, CAST(count(*) AS BIGINT) AS n FROM assignF GROUP BY cl
-        )""")
+            FROM c{r - 1} p LEFT JOIN mean{r} m ON m.cl = p.cl AND m.d = p.d
+        )""",
+        rounds,
+    )
     lead = ",\n               ".join(
         f"max(CASE WHEN c.d = {d + 1} THEN c.v END) AS c{d + 1}"
         for d in range(OUT_DIMS)
     )
-    body = ",\n        ".join(blocks)
     return f"""
-        WITH {body}
+        WITH {chain},
+        {assignment(rounds + 1)},
+        counts AS (
+            SELECT cl, CAST(count(*) AS BIGINT) AS n
+            FROM assign{rounds + 1} GROUP BY cl
+        )
         SELECT c.cl AS cluster,
                COALESCE(any_value(counts.n), 0) AS n,
                {lead}
-        FROM c{R} c LEFT JOIN counts ON counts.cl = c.cl
+        FROM c{rounds} c LEFT JOIN counts ON counts.cl = c.cl
         GROUP BY c.cl
         ORDER BY c.cl
     """

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.functions.arrays import cosine_expr
+from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 QUERY_ID = 0
@@ -108,30 +109,27 @@ def _cos_sql(a: str, b: str) -> str:
 
 
 def _mmr_oracle() -> str:
-    steps = [
-        """
-        sel1 AS MATERIALIZED (
+    # pick 1 is the most relevant candidate; round r is pick r + 1
+    picks = truncate.unroll(
+        """sel1 AS MATERIALIZED (
             SELECT CAST(1 AS BIGINT) AS rank, vec_id, rel,
                    rel AS mmr
             FROM cand ORDER BY rel DESC, vec_id LIMIT 1
         ),
-        all1 AS MATERIALIZED (SELECT * FROM sel1)
-        """
-    ]
-    for k in range(2, K + 1):
-        steps.append(f"""
-        sel{k} AS MATERIALIZED (
-            SELECT CAST({k} AS BIGINT) AS rank, c.vec_id, c.rel,
+        all1 AS MATERIALIZED (SELECT * FROM sel1)""",
+        lambda r: f"""sel{r + 1} AS MATERIALIZED (
+            SELECT CAST({r + 1} AS BIGINT) AS rank, c.vec_id, c.rel,
                    {LAM} * c.rel - {MU} * max(s.s) AS mmr
             FROM cand c
             JOIN sims s ON s.ia = c.vec_id
-                       AND s.ib IN (SELECT vec_id FROM all{k - 1})
-            WHERE c.vec_id NOT IN (SELECT vec_id FROM all{k - 1})
+                       AND s.ib IN (SELECT vec_id FROM all{r})
+            WHERE c.vec_id NOT IN (SELECT vec_id FROM all{r})
             GROUP BY c.vec_id, c.rel
             ORDER BY mmr DESC, c.vec_id LIMIT 1
         ),
-        all{k} AS MATERIALIZED (SELECT * FROM all{k - 1} UNION ALL SELECT * FROM sel{k})
-        """)
+        all{r + 1} AS MATERIALIZED (SELECT * FROM all{r} UNION ALL SELECT * FROM sel{r + 1})""",
+        K - 1,
+    )
     cos_q = _cos_sql("CAST(c.embedding AS DOUBLE[])", "q.v")
     cos_ab = _cos_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
     return f"""
@@ -149,7 +147,7 @@ def _mmr_oracle() -> str:
             SELECT a.vec_id AS ia, b.vec_id AS ib, {cos_ab} AS s
             FROM cand a JOIN cand b ON a.vec_id <> b.vec_id
         ),
-        {",".join(steps)}
+        {picks}
         SELECT rank, vec_id, rel AS relevance, round(mmr, 6) AS mmr_score
         FROM all{K}
         ORDER BY rank

@@ -57,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.plans.truncate import release_superseded_checkpoints
+from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 SEED_MAX_LEN = 4
@@ -164,7 +164,7 @@ def _em_round(wf: DataFrame, vocab: dict[str, float]) -> list[tuple[str, float]]
     return out_rows
 
 
-@release_superseded_checkpoints
+@truncate.release_superseded_checkpoints
 def _train(spark: SparkSession, sf_dir: str) -> list[tuple[str, float]]:
     wf = _word_freqs(spark, sf_dir).localCheckpoint()
     seed = _seed_vocab(wf)
@@ -330,9 +330,9 @@ def _beta_terms() -> str:
     return " + ".join(terms)
 
 
-def _em_round_sql(r: int, prev: str) -> str:
-    return f"""
-    pm{r} AS MATERIALIZED (
+def _em_round_sql(r: int) -> str:
+    prev = f"voc{r - 1}"
+    return f"""pm{r} AS MATERIALIZED (
         SELECT map(list(piece ORDER BY piece), list(prob ORDER BY piece))
                AS pm
         FROM {prev}
@@ -405,14 +405,8 @@ def _viterbi_bcnt() -> str:
 
 def _unigram_oracle_sql(mode: str) -> str:
     """mode='train' → (rank, piece, prob); mode='encode' → per-doc stats."""
-    rounds = "".join(
-        "," + _em_round_sql(r, f"voc{r - 1}" if r > 1 else "voc0")
-        for r in range(1, EM_ROUNDS + 1)
-    )
     final_voc = f"voc{EM_ROUNDS}"
-    prelude = f"""
-    WITH RECURSIVE
-    wf AS MATERIALIZED (
+    head = f"""wf AS MATERIALIZED (
         SELECT word, CAST(count(*) AS DOUBLE) AS freq, length(word) AS n
         FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
         WHERE word <> '' GROUP BY word
@@ -444,7 +438,9 @@ def _unigram_oracle_sql(mode: str) -> str:
     voc0 AS MATERIALIZED (
         SELECT piece, cnt / (SELECT sum(cnt) FROM picked) AS prob
         FROM picked
-    ){rounds}"""
+    )"""
+    prelude = f"""
+    WITH RECURSIVE {truncate.unroll(head, _em_round_sql, EM_ROUNDS)}"""
     if mode == "train":
         return f"""{prelude}
     SELECT row_number() OVER (ORDER BY prob DESC, piece ASC) AS rank,

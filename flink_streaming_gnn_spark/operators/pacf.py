@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 K_LAGS = 5
@@ -118,17 +119,19 @@ def _pacf_oracle() -> str:
         f"sum(d * d{k}) AS c{k}" for k in range(1, K_LAGS + 1)
     )
     r_cols = ", ".join(f"c{k} / c0 AS r{k}" for k in range(1, K_LAGS + 1))
-    ctes = ["lvl0 AS (SELECT {} FROM covs)".format(r_cols)]
-    for i, level in enumerate(_dl_steps(K_LAGS), start=1):
-        cols = ", ".join(f"{sql} AS {name}" for name, sql in level)
-        ctes.append(f"lvl{i} AS (SELECT *, {cols} FROM lvl{i - 1})")
-    last = f"lvl{len(ctes) - 1}"
+    levels = _dl_steps(K_LAGS)
+
+    def level(i: int) -> str:
+        cols = ", ".join(f"{sql} AS {name}" for name, sql in levels[i - 1])
+        return f"lvl{i} AS (SELECT *, {cols} FROM lvl{i - 1})"
+
+    chain = truncate.unroll(f"lvl0 AS (SELECT {r_cols} FROM covs)", level, len(levels))
+    last = f"lvl{len(levels)}"
     selects = " UNION ALL ".join(
         f"SELECT CAST({k} AS BIGINT) AS lag, round(r{k}, 6) AS acf,"
         f" round(phi_{k}_{k}, 6) AS pacf FROM {last}"
         for k in range(1, K_LAGS + 1)
     )
-    joined = ",\n        ".join(ctes)
     return f"""
         WITH daily AS (
             SELECT date_trunc('day', l_shipdate) AS day, sum(l_quantity) AS x
@@ -144,7 +147,7 @@ def _pacf_oracle() -> str:
                    {cov_cols}
             FROM centered
         ),
-        {joined}
+        {chain}
         {selects}
         ORDER BY lag
     """

@@ -1,6 +1,6 @@
 """The engine's one iteration driver, ``iterate`` (the Pregel shape of
-the reference's A10 iteration head/tail), and the plan-state rules of
-driver loops.
+the reference's A10 iteration head/tail), its DuckDB twin ``unroll``,
+and the plan-state rules of driver loops.
 
 ``localCheckpoint(eager=True)`` truncates the logical plan (LogicalRDD)
 and the RDD lineage — but measured on this Spark build, a loop that
@@ -77,6 +77,38 @@ def iterate(
         if tagged and tag.get["n"] == 0:
             break
     return state
+
+
+def unroll(
+    head: str,
+    round_ctes: Callable[[int], str],
+    rounds: int,
+    fixpoint: str | None = None,
+) -> str:
+    """DuckDB twin of ``iterate``: ``head`` (round 0's CTEs) and
+    ``round_ctes(r)`` for r = 1..``rounds``, joined into one CTE chain
+    that the caller puts between ``WITH`` and its final SELECT.
+
+    A monotone fixpoint twin names its state CTE ``fixpoint`` (a template
+    with an ``{r}`` slot). The chain then ends with a guard that raises
+    ``oracle not converged`` when the last round's state differs from
+    the one before it, and the final SELECT filters on ``converged(…)``
+    so that DuckDB cannot prune the guard. Without ``fixpoint`` the round
+    count is query semantics.
+    """
+    ctes = [head, *(round_ctes(r) for r in range(1, rounds + 1))]
+    if fixpoint is not None:
+        last, prev = fixpoint.format(r=rounds), fixpoint.format(r=rounds - 1)
+        ctes.append(f"""{last}_converged AS MATERIALIZED (SELECT CASE WHEN EXISTS (
+            (SELECT * FROM {last} EXCEPT SELECT * FROM {prev}) UNION ALL
+            (SELECT * FROM {prev} EXCEPT SELECT * FROM {last})
+        ) THEN error('oracle not converged') ELSE true END AS ok)""")
+    return ",\n        ".join(ctes)
+
+
+def converged(fixpoint: str, rounds: int) -> str:
+    """The final SELECT's predicate on the guard of ``unroll``."""
+    return f"(SELECT ok FROM {fixpoint.format(r=rounds)}_converged)"
 
 
 def release_superseded_checkpoints(fn: _F) -> _F:

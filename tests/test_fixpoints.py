@@ -2,13 +2,17 @@
 graph below needs more rounds than the round caps these loops once had
 (condensation: 12 peels, k-core: 30 rounds, coreness: 60 rounds), and a
 capped loop returned its unfinished state without a word. The loops run
-on ``truncate.iterate``, whose stop rule is pinned on tiny frames first."""
+on ``truncate.iterate``, whose stop rule is pinned on tiny frames first.
+Their DuckDB twins are unrolled to a fixed depth by ``truncate.unroll``,
+and a twin unrolled too shallow raises instead of returning rows."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.graph import components, coreness, kcore, ktruss, mst
 from flink_streaming_gnn_spark.plans.truncate import iterate
 from tests.conftest import SF_SMOKE
 
@@ -113,3 +117,48 @@ def test_coreness_of_long_path_is_one(spark, monkeypatch):
         for r in coreness.graph_coreness_hindex(spark, SF_SMOKE).collect()
     }
     assert got == {v: 1 for v in range(130)}
+
+
+@pytest.fixture(scope="module")
+def path_duck():
+    """The 130-vertex path c0 – s0 – c1 – s1 – … – c64 – s64 as DuckDB
+    tables: order i is customer i's and holds lineitems of suppliers i − 1
+    and i, each edge with its own weight. Its supplier projection is the
+    65-vertex path s0 – … – s64, and its mod-500 projection the path
+    0 – … – 64 (the c_i – s_i edges fold into self-loops)."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE orders AS SELECT range AS o_orderkey, range AS o_custkey FROM range(65)"
+    )
+    con.execute("""
+        CREATE TABLE lineitem AS
+        SELECT o_orderkey AS l_orderkey, o_orderkey - d AS l_suppkey,
+               CAST(2 * o_orderkey + d AS DOUBLE) AS l_extendedprice,
+               DATE '2024-01-01' AS l_shipdate
+        FROM orders, (VALUES (0), (1)) t(d)
+        WHERE o_orderkey - d >= 0
+    """)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "twin",
+    [
+        lambda: components._cc_oracle_sql(),
+        lambda: kcore._kcore_oracle_sql(k=2),
+        lambda: coreness._coreness_oracle_sql(),
+        lambda: ktruss._ktruss_oracle_sql(rounds=1),
+        lambda: mst._mst_oracle_sql(rounds=1),
+        lambda: mst._mst_oracle_sql(cc_iters=1),
+    ],
+    ids=["cc", "kcore", "coreness", "ktruss", "mst_boruvka", "mst_forest_cc"],
+)
+def test_fixpoint_twin_unrolled_too_shallow_raises(path_duck, twin):
+    """Each twin is unrolled short of its fixpoint on the path: CC needs
+    about 130 rounds, 2-core peeling 33 and coreness 65, one k-truss
+    round drops every edge, and one Borůvka round or one forest-CC round
+    leaves work undone. The guard sees the last round differ from the one
+    before it and DuckDB raises instead of returning the unfinished state."""
+    with pytest.raises(duckdb.InvalidInputException, match="oracle not converged"):
+        path_duck.execute(twin()).fetchall()

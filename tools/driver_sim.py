@@ -1,10 +1,12 @@
-"""Simulates the grading driver: imports the repo's __spark_entry__ from a
-foreign cwd, smoke-runs entry(), then runs every queries() entry at sf0.01
+"""Simulates the grading driver: imports this checkout's __spark_entry__ from
+a foreign cwd, smoke-runs entry(), then runs every queries() entry at sf0.01
 and compares against oracle_sql() via DuckDB (count + schema + sorted-value
 hash)."""
-import hashlib, importlib.util, sys, time
+import hashlib, importlib.util, os, sys, time
 import duckdb
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+# the entry of the checkout this script belongs to, whatever the cwd
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 
 from pyspark.sql import SparkSession

@@ -13,13 +13,11 @@ starts and the Python workers the JVM forks. Each key is called a fixed
 number of times in a row and its readout line gives:
 
 * the median wall and CPU seconds of the calls;
-* the median count of persistent RDDs after a call and a ``System.gc()``
-  (one count is noisy: Spark's ContextCleaner unpersists dropped RDDs
-  asynchronously, after a GC has found them);
-* the driver heap after ``System.gc()``, read before and after a
-  ``gc.collect()`` in the harness. Python-side cycles of py4j proxies pin
-  JVM objects until a collection, so the first reading is what a session
-  that never collects holds, and the second is what the engine retains;
+* the median count of persistent RDDs after a call;
+* the driver heap, read before and after a ``gc.collect()`` in the
+  harness. Python-side cycles of py4j proxies pin JVM objects until a
+  collection, so the first reading is what a session that never collects
+  holds, and the second is what the engine retains;
 * the bytes of engine scratch under TMPDIR.
 
 soak    the keys in one JVM on the base corpus, three calls each. The
@@ -35,6 +33,11 @@ ab      checks REF out in a detached worktree and runs ``--rounds`` pairs of
         and waiting for the machine to go idle before each arm. Prints each
         arm's per-key median CPU and wall seconds, and how many pairs this
         tree won on CPU seconds. The default keys are ``bench.HEADLINE``.
+
+Each JVM readout calls ``System.gc()`` and reads, again and again a second
+apart, until the value stops falling (at most ``SETTLE_S``): Spark's
+ContextCleaner removes the RDDs and checkpoint blocks a GC found dropped on
+its own thread, after the GC has returned.
 
 Only readouts go to stdout; Spark's logs and progress bars go to stderr, so
 ``python tools/probe.py soak > ledger.log`` keeps a clean ledger. A wall time
@@ -55,6 +58,7 @@ import subprocess
 import sys
 import tempfile
 import time
+from typing import Callable
 
 TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
@@ -88,6 +92,7 @@ CALLS = 3  # per key in soak and in each ab arm; the median drops the cold call
 # (bench.SCALED_PREFIX) are not scratch
 SCRATCH_PREFIX = "graft_"
 SCALES = (10, 100, 1000)  # the ladder's rungs; build_rung says what each holds
+SETTLE_S = 10.0  # the longest a JVM readout waits for the ContextCleaner
 
 
 def _bytes_under(path: str) -> int:
@@ -154,9 +159,26 @@ def run_keys(tree: str, sf_dir: str, calls: str, *keys: str) -> None:
     runtime = jvm.java.lang.Runtime.getRuntime()
     queries = registry.all_queries()
 
-    def heap_mib() -> float:
+    def settled(read: Callable[[], float]) -> float:
+        """``read()`` after ``System.gc()``, repeated a second apart until
+        it stops falling or ``SETTLE_S`` has passed."""
+        deadline = time.monotonic() + SETTLE_S
         jvm.System.gc()
+        value = read()
+        while time.monotonic() < deadline:
+            time.sleep(1.0)
+            jvm.System.gc()
+            again = read()
+            if again >= value:
+                return again
+            value = again
+        return value
+
+    def heap_mib() -> float:
         return (runtime.totalMemory() - runtime.freeMemory()) / 2**20
+
+    def persistent_rdds() -> float:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     for key in keys:
         rec: dict = {"key": key}
@@ -167,8 +189,7 @@ def run_keys(tree: str, sf_dir: str, calls: str, *keys: str) -> None:
                 queries[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
                 cpus.append(cpu.sample() - c0)
-                jvm.System.gc()  # the ContextCleaner unpersists what a GC finds dropped
-                rdds.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+                rdds.append(settled(persistent_rdds))
         except Exception as exc:  # noqa: BLE001 — the ledger records it and goes on
             # no heap readout: the failure can have taken the JVM down with it
             rec["error"] = f"{type(exc).__name__}: {str(exc)[:300]}"
@@ -179,9 +200,9 @@ def run_keys(tree: str, sf_dir: str, calls: str, *keys: str) -> None:
             cpu_s=statistics.median(cpus),
             persistent_rdds=statistics.median(rdds),
         )
-        rec["heap_mib"] = heap_mib()
+        rec["heap_mib"] = settled(heap_mib)
         gc.collect()
-        rec["heap_collected_mib"] = heap_mib()
+        rec["heap_collected_mib"] = settled(heap_mib)
         tmp = tempfile.gettempdir()
         rec["scratch_bytes"] = sum(
             _bytes_under(os.path.join(tmp, n))
