@@ -7,7 +7,8 @@ propagate-only architecture:
     Z^0 = H,   Z^{k+1} = (1-α)·Â·Z^k + α·H
 
 with Â the GCN symmetric normalization with self-loops (shared with
-``graph/gcn.normalized_edges``: d̂out(u)=dout(u)+1, d̂in(v)=din(v)+1,
+the GCN layer as ``graph/layers.normalized_edges`` and its twin CTE:
+d̂out(u)=dout(u)+1, d̂in(v)=din(v)+1,
 norm_uv = 1/sqrt(d̂out(u)·d̂in(v))) and teleport α. Feature propagation
 is column-independent, so surfacing the first ``TRACK_DIMS`` feature
 channels is EXACT for those channels — the oracle checks the real
@@ -30,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE
-from flink_streaming_gnn_spark.graph.gcn import normalized_edges
+from flink_streaming_gnn_spark.graph.layers import NORMALIZED_EDGES_CTE, normalized_edges
 from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -68,9 +68,9 @@ def gnn_appnp_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "v",
                 *[
-                    # "+ 0.0" normalizes IEEE -0.0 after rounding (gin.py
-                    # discipline) so both engines carry the same sign of
-                    # zero into the next round
+                    # "+ 0.0": the negative-zero rule of graph/layers.py,
+                    # so both engines carry the same sign of zero into the
+                    # next round
                     (
                         F.round(
                             F.lit(1.0 - ALPHA) * F.coalesce(F.col(f"a{i}"), F.lit(0.0))
@@ -104,26 +104,8 @@ def _appnp_oracle_sql() -> str:
     )
     out_cols = ", ".join(f"f{i} AS z{i}" for i in range(1, TRACK_DIMS + 1))
     chain = truncate.unroll(
-        f"""{EDGES_V_CTE},
-        e AS (SELECT DISTINCT src_v, dst_v FROM edges_v WHERE src_v <> dst_v),
-        z0 AS (SELECT vec_id AS v, {f_cols} FROM embeddings),
-        dout AS (SELECT src_v AS v, count(*) AS d FROM e GROUP BY src_v),
-        din  AS (SELECT dst_v AS v, count(*) AS d FROM e GROUP BY dst_v),
-        deg AS (
-            SELECT z0.v,
-                   COALESCE(dout.d, 0) + 1 AS dhout,
-                   COALESCE(din.d, 0) + 1 AS dhin
-            FROM z0 LEFT JOIN dout ON dout.v = z0.v
-                    LEFT JOIN din  ON din.v = z0.v
-        ),
-        norm_edges AS (
-            SELECT ea.src_v, ea.dst_v,
-                   1.0 / sqrt(ds.dhout * dd.dhin) AS norm
-            FROM (SELECT src_v, dst_v FROM e
-                  UNION ALL SELECT v, v FROM z0) ea
-            JOIN deg ds ON ds.v = ea.src_v
-            JOIN deg dd ON dd.v = ea.dst_v
-        )""",
+        f"""{NORMALIZED_EDGES_CTE},
+        z0 AS (SELECT vec_id AS v, {f_cols} FROM embeddings)""",
         lambda k: f"""agg{k} AS (
             SELECT ne.dst_v AS v,
                    {a_cols}

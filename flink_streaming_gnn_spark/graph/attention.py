@@ -17,7 +17,8 @@ Spark-first shape — the whole layer is one declarative plan, no Python:
      pattern, one shuffle on dst shared by both.
   3. the weighted combine is a hash aggregate with per-element
      sum(α·f_u[i]) expressions, same shuffle key, so AQE coalesces the
-     exchanges.
+     exchanges. Steps 2–3 are the kit's ``layers.softmax_combine``,
+     shared with GATv2.
 
 Scale posture: no step materializes anything bigger than the edge list +
 O(1) columns; a hot vertex costs one window partition O(deg). The feature
@@ -30,9 +31,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
+from flink_streaming_gnn_spark.graph.layers import (
+    dot,
+    softmax_combine,
+    softmax_combine_sql,
+    sql_list,
+    weights,
+)
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -41,21 +48,9 @@ OUT_DIMS = 4  # elements of h_v surfaced as flat oracle-checked columns
 LEAK = 0.2
 
 
-def gat_weights(dim: int = DIM) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic attention vectors (rounded so SQL literals match)."""
-    a_src = np.round(np.random.RandomState(46).randn(dim) * 0.1, 6)
-    a_dst = np.round(np.random.RandomState(47).randn(dim) * 0.1, 6)
-    return a_src, a_dst
-
-
-def _dot_lit(feat_col: str, vec: np.ndarray):
-    """JVM-side dot(feat, literal vector) via zip_with + aggregate."""
-    arr = F.array(*[F.lit(float(x)) for x in vec])
-    return F.aggregate(
-        F.zip_with(F.col(feat_col).cast("array<double>"), arr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def gat_weights() -> tuple[np.ndarray, np.ndarray]:
+    """The attention vectors (a_src, a_dst)."""
+    return weights(46, DIM), weights(47, DIM)
 
 
 def graph_gat_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,11 +60,12 @@ def graph_gat_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").alias("feat")
     )
     # per-vertex halves of the additive attention score (|V| dot products)
+    feat = F.col("feat").cast("array<double>")
     scored = emb.select(
         "vec_id",
-        F.col("feat").cast("array<double>").alias("feat"),
-        _dot_lit("feat", a_src).alias("s_half"),
-        _dot_lit("feat", a_dst).alias("d_half"),
+        feat.alias("feat"),
+        dot(feat, a_src).alias("s_half"),
+        dot(feat, a_dst).alias("d_half"),
     )
     src_side = maybe_broadcast(
         scored.select(
@@ -87,42 +83,19 @@ def graph_gat_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score", F.when(raw > 0, raw).otherwise(F.lit(LEAK) * raw)
         )
     )
-    w = Window.partitionBy("dst_v")
-    e_soft = e_scored.withColumn(
-        "ex", F.exp(F.col("score") - F.max("score").over(w))
-    ).withColumn("alpha", F.col("ex") / F.sum("ex").over(w))
-    return (
-        e_soft.groupBy("dst_v")
-        .agg(
-            *[
-                F.round(
-                    F.sum(F.col("alpha") * F.element_at("src_feat", i)), 4
-                ).alias(f"h{i}")
-                for i in range(1, OUT_DIMS + 1)
-            ]
-        )
-        .select(F.col("dst_v").alias("vec_id"), *[f"h{i}" for i in range(1, OUT_DIMS + 1)])
-    )
-
-
-def _vec_literal(vec: np.ndarray) -> str:
-    return "[" + ", ".join(repr(float(x)) for x in vec) + "]"
+    return softmax_combine(e_scored, OUT_DIMS)
 
 
 def _gat_oracle_sql() -> str:
     a_src, a_dst = gat_weights()
-    h_cols = ",\n               ".join(
-        f"round(sum(alpha * CAST(src_feat[{i}] AS DOUBLE)), 4) AS h{i}"
-        for i in range(1, OUT_DIMS + 1)
-    )
     return f"""
         WITH {EDGES_V_CTE},
         de AS (SELECT DISTINCT src_v, dst_v FROM edges_v),
         scored AS (
             SELECT vec_id,
                    embedding AS feat,
-                   list_dot_product(CAST(embedding AS DOUBLE[]), {_vec_literal(a_src)}) AS s_half,
-                   list_dot_product(CAST(embedding AS DOUBLE[]), {_vec_literal(a_dst)}) AS d_half
+                   list_dot_product(CAST(embedding AS DOUBLE[]), {sql_list(a_src)}) AS s_half,
+                   list_dot_product(CAST(embedding AS DOUBLE[]), {sql_list(a_dst)}) AS d_half
             FROM embeddings
         ),
         es AS (
@@ -134,19 +107,7 @@ def _gat_oracle_sql() -> str:
             JOIN scored s ON s.vec_id = e.src_v
             JOIN scored d ON d.vec_id = e.dst_v
         ),
-        soft AS (
-            SELECT dst_v, src_feat,
-                   exp(score - max(score) OVER (PARTITION BY dst_v)) AS ex
-            FROM es
-        ),
-        norm AS (
-            SELECT dst_v, src_feat,
-                   ex / sum(ex) OVER (PARTITION BY dst_v) AS alpha
-            FROM soft
-        )
-        SELECT dst_v AS vec_id,
-               {h_cols}
-        FROM norm GROUP BY dst_v
+        {softmax_combine_sql("es", OUT_DIMS)}
     """
 
 

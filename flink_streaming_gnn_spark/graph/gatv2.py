@@ -18,8 +18,9 @@ Spark-first shape:
      higher-order functions, no UDF),
   2. per-edge score = Σ_j a_j · leaky(s_j + d_j) — P=8 scalar
      expressions inside whole-stage codegen, O(P) per edge not O(dim),
-  3. softmax + weighted combine identical to GATv1: two analytic
-     windows and one hash agg all riding a single dst_v exchange.
+  3. softmax + weighted combine shared with GATv1
+     (``layers.softmax_combine``): two analytic windows and one hash agg
+     all riding a single dst_v exchange.
 
 At 100 TB the per-edge cost is the irreducible part of GATv2 (the
 nonlinearity forbids factorization — that's the paper's point); keeping
@@ -33,9 +34,17 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
+from flink_streaming_gnn_spark.graph.layers import (
+    dense,
+    dense_sql,
+    dot,
+    softmax_combine,
+    softmax_combine_sql,
+    sql_list,
+    weights,
+)
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -46,21 +55,8 @@ LEAK = 0.2
 
 
 def gatv2_weights() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Deterministic projections + attention vector (6 dp so SQL literals
-    match the Spark expressions exactly)."""
-    w_src = np.round(np.random.RandomState(48).randn(PROJ, DIM) * 0.1, 6)
-    w_dst = np.round(np.random.RandomState(49).randn(PROJ, DIM) * 0.1, 6)
-    a = np.round(np.random.RandomState(50).randn(PROJ) * 0.1, 6)
-    return w_src, w_dst, a
-
-
-def _dot_lit(feat_col: str, vec: np.ndarray):
-    arr = F.array(*[F.lit(float(x)) for x in vec])
-    return F.aggregate(
-        F.zip_with(F.col(feat_col), arr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    """The projections (W_s, W_d) and the attention vector a."""
+    return weights(48, PROJ, DIM), weights(49, PROJ, DIM), weights(50, PROJ)
 
 
 def graph_gatv2_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,8 +68,8 @@ def graph_gatv2_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = emb.select(
         "vec_id",
         "feat",
-        *[_dot_lit("feat", w_src[j]).alias(f"s{j}") for j in range(PROJ)],
-        *[_dot_lit("feat", w_dst[j]).alias(f"d{j}") for j in range(PROJ)],
+        *[dot("feat", w_src[j]).alias(f"s{j}") for j in range(PROJ)],
+        *[dot("feat", w_dst[j]).alias(f"d{j}") for j in range(PROJ)],
     )
     src_side = maybe_broadcast(
         proj.select(
@@ -89,58 +85,28 @@ def graph_gatv2_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     def leaky(c):
         return F.when(c > 0, c).otherwise(F.lit(LEAK) * c)
 
-    score = sum(
-        (F.lit(float(a[j])) * leaky(F.col(f"s{j}") + F.col(f"d{j}")) for j in range(1, PROJ)),
-        F.lit(float(a[0])) * leaky(F.col("s0") + F.col("d0")),
-    )
+    score = dense(([leaky(F.col(f"s{j}") + F.col(f"d{j}")) for j in range(PROJ)], a))
     e_scored = (
         edges.join(src_side, "src_v").join(dst_side, "dst_v").withColumn("score", score)
     )
-    w = Window.partitionBy("dst_v")
-    e_soft = e_scored.withColumn(
-        "ex", F.exp(F.col("score") - F.max("score").over(w))
-    ).withColumn("alpha", F.col("ex") / F.sum("ex").over(w))
-    return (
-        e_soft.groupBy("dst_v")
-        .agg(
-            *[
-                # "+ 0.0" normalizes IEEE -0.0 after rounding (graph/gin.py
-                # discipline: no ReLU on the output, so a tiny negative can
-                # round to -0.0 in one engine and +0.0 in the other)
-                (F.round(F.sum(F.col("alpha") * F.element_at("src_feat", i)), 4) + 0.0)
-                .alias(f"h{i}")
-                for i in range(1, OUT_DIMS + 1)
-            ]
-        )
-        .select(
-            F.col("dst_v").alias("vec_id"), *[f"h{i}" for i in range(1, OUT_DIMS + 1)]
-        )
-    )
-
-
-def _vec_literal(vec: np.ndarray) -> str:
-    return "[" + ", ".join(repr(float(x)) for x in vec) + "]"
+    return softmax_combine(e_scored, OUT_DIMS)
 
 
 def _gatv2_oracle_sql() -> str:
     w_src, w_dst, a = gatv2_weights()
     s_cols = ",\n                   ".join(
-        f"list_dot_product(CAST(embedding AS DOUBLE[]), {_vec_literal(w_src[j])}) AS s{j}"
+        f"list_dot_product(CAST(embedding AS DOUBLE[]), {sql_list(w_src[j])}) AS s{j}"
         for j in range(PROJ)
     )
     d_cols = ",\n                   ".join(
-        f"list_dot_product(CAST(embedding AS DOUBLE[]), {_vec_literal(w_dst[j])}) AS d{j}"
+        f"list_dot_product(CAST(embedding AS DOUBLE[]), {sql_list(w_dst[j])}) AS d{j}"
         for j in range(PROJ)
     )
-    score = " + ".join(
-        f"({a[j]!r}) * (CASE WHEN s.s{j} + d.d{j} > 0 THEN s.s{j} + d.d{j}"
+    leaky = [
+        f"(CASE WHEN s.s{j} + d.d{j} > 0 THEN s.s{j} + d.d{j}"
         f" ELSE {LEAK} * (s.s{j} + d.d{j}) END)"
         for j in range(PROJ)
-    )
-    h_cols = ",\n               ".join(
-        f"round(sum(alpha * CAST(src_feat[{i}] AS DOUBLE)), 4) + 0.0 AS h{i}"
-        for i in range(1, OUT_DIMS + 1)
-    )
+    ]
     return f"""
         WITH {EDGES_V_CTE},
         de AS (SELECT DISTINCT src_v, dst_v FROM edges_v),
@@ -153,24 +119,12 @@ def _gatv2_oracle_sql() -> str:
         ),
         es AS (
             SELECT e.dst_v, s.feat AS src_feat,
-                   {score} AS score
+                   {dense_sql((leaky, a))} AS score
             FROM de e
             JOIN proj s ON s.vec_id = e.src_v
             JOIN proj d ON d.vec_id = e.dst_v
         ),
-        soft AS (
-            SELECT dst_v, src_feat,
-                   exp(score - max(score) OVER (PARTITION BY dst_v)) AS ex
-            FROM es
-        ),
-        norm AS (
-            SELECT dst_v, src_feat,
-                   ex / sum(ex) OVER (PARTITION BY dst_v) AS alpha
-            FROM soft
-        )
-        SELECT dst_v AS vec_id,
-               {h_cols}
-        FROM norm GROUP BY dst_v
+        {softmax_combine_sql("es", OUT_DIMS)}
     """
 
 

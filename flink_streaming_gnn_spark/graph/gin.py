@@ -11,9 +11,10 @@ a full MLP riding whole-stage codegen as literal expressions.
 Spark-first: the neighbor sum is one hash aggregate with 64 sum()
 expressions riding a single shuffle on dst_v (map-side partials absorb
 hubs); the self term joins in as a vertex-table projection; the MLP is
-8 + 4 literal dot-product expressions — zero Python end-to-end. Weights
-are seeded/rounded and inlined into the DuckDB oracle, so aggregation,
-ε-weighting, both matmuls, and the ReLU are hash-checked.
+8 + 4 literal dot-product expressions — zero Python end-to-end. The
+literal weights (``graph/layers.py``) put aggregation, ε-weighting, both
+matmuls and the ReLU under the oracle hash; the output layer has no ReLU,
+so it takes the kit's ``+ 0.0`` negative-zero rule.
 
 At 100 TB: identical shape to graph_gcn_layer — degrees aren't even
 needed (sum aggregation), so this is one edge-subtree cheaper.
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
-from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
+from flink_streaming_gnn_spark.graph.layers import agg, agg_sql, dense, dense_sql, weights
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 DIM = 64
@@ -36,9 +37,7 @@ EPS = 0.1
 
 
 def gin_weights() -> tuple[np.ndarray, np.ndarray]:
-    w1 = np.round(np.random.RandomState(47).randn(HID, DIM) * 0.1, 6)
-    w2 = np.round(np.random.RandomState(48).randn(OUT_DIM, HID) * 0.1, 6)
-    return w1, w2
+    return weights(47, HID, DIM), weights(48, OUT_DIM, HID)
 
 
 def graph_gin_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,81 +46,50 @@ def graph_gin_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("feat")
     )
-    nbr_sum = (
-        e.join(maybe_broadcast(emb), e.src_v == emb.vec_id)
-        .groupBy("dst_v")
-        .agg(
-            *[
-                F.sum(F.element_at("feat", i)).alias(f"s{i}")
-                for i in range(1, DIM + 1)
-            ]
-        )
-    )
+    nbr_sum = agg(e, emb, F.sum, DIM)
     # (1+ε)·x_v + Σ; vertices with no in-neighbors keep just the self term
-    agg = emb.join(nbr_sum, emb.vec_id == nbr_sum.dst_v, "left").select(
+    a = emb.join(nbr_sum, emb.vec_id == nbr_sum.dst_v, "left").select(
         "vec_id",
         *[
             (
                 F.lit(1.0 + EPS) * F.element_at("feat", i)
-                + F.coalesce(F.col(f"s{i}"), F.lit(0.0))
+                + F.coalesce(F.col(f"a{i}"), F.lit(0.0))
             ).alias(f"a{i}")
             for i in range(1, DIM + 1)
         ],
     )
-    hid = agg.select(
+    a_cols = [F.col(f"a{i}") for i in range(1, DIM + 1)]
+    hid = a.select(
         "vec_id",
         *[
-            F.greatest(
-                F.lit(0.0),
-                sum(
-                    (F.col(f"a{i}") * float(w1[j - 1, i - 1]) for i in range(2, DIM + 1)),
-                    F.col("a1") * float(w1[j - 1, 0]),
-                ),
-            ).alias(f"r{j}")
-            for j in range(1, HID + 1)
+            F.greatest(F.lit(0.0), dense((a_cols, w1[j]))).alias(f"r{j + 1}")
+            for j in range(HID)
         ],
     )
-    # "+ 0.0" normalizes IEEE negative zero after rounding (the output
-    # layer has no ReLU, so tiny negatives round to -0.0 in one engine and
-    # 0.0 in the other); same term in the oracle SQL
+    r_cols = [F.col(f"r{i}") for i in range(1, HID + 1)]
     return hid.select(
         "vec_id",
         *[
-            (
-                F.round(
-                    sum(
-                        (F.col(f"r{i}") * float(w2[j - 1, i - 1]) for i in range(2, HID + 1)),
-                        F.col("r1") * float(w2[j - 1, 0]),
-                    ),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias(f"h{j}")
-            for j in range(1, OUT_DIM + 1)
+            (F.round(dense((r_cols, w2[j])), 4) + F.lit(0.0)).alias(f"h{j + 1}")
+            for j in range(OUT_DIM)
         ],
     )
 
 
 def _gin_oracle_sql() -> str:
     w1, w2 = gin_weights()
-    sum_cols = ",\n               ".join(
-        f"sum(feat[{i}]) AS s{i}" for i in range(1, DIM + 1)
-    )
-    agg_cols = ",\n               ".join(
-        f"(({1.0 + EPS!r}) * feat[{i}] + COALESCE(s{i}, 0.0)) AS a{i}"
+    a_cols = [f"a{i}" for i in range(1, DIM + 1)]
+    r_cols = [f"r{i}" for i in range(1, HID + 1)]
+    self_cols = ",\n               ".join(
+        f"(({1.0 + EPS!r}) * feat[{i}] + COALESCE(a{i}, 0.0)) AS a{i}"
         for i in range(1, DIM + 1)
     )
     hid_cols = ",\n               ".join(
-        "greatest(0.0, "
-        + " + ".join(f"a{i} * ({w1[j - 1, i - 1]!r})" for i in range(1, DIM + 1))
-        + f") AS r{j}"
-        for j in range(1, HID + 1)
+        f"greatest(0.0, {dense_sql((a_cols, w1[j]))}) AS r{j + 1}" for j in range(HID)
     )
     out_cols = ",\n               ".join(
-        "(round("
-        + " + ".join(f"r{i} * ({w2[j - 1, i - 1]!r})" for i in range(1, HID + 1))
-        + f", 4) + 0.0) AS h{j}"
-        for j in range(1, OUT_DIM + 1)
+        f"(round({dense_sql((r_cols, w2[j]))}, 4) + 0.0) AS h{j + 1}"
+        for j in range(OUT_DIM)
     )
     return f"""
         WITH {EDGES_V_CTE},
@@ -129,13 +97,13 @@ def _gin_oracle_sql() -> str:
         emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS feat FROM embeddings),
         nbr AS (
             SELECT e.dst_v,
-               {sum_cols}
+               {agg_sql("sum", DIM)}
             FROM e JOIN emb ON emb.vec_id = e.src_v
             GROUP BY e.dst_v
         ),
         agg AS (
             SELECT emb.vec_id,
-               {agg_cols}
+               {self_cols}
             FROM emb LEFT JOIN nbr ON nbr.dst_v = emb.vec_id
         ),
         hid AS (

@@ -237,12 +237,13 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Unroll depths, measured: the forest stops growing after 4 Borůvka
-# rounds at sf0.01 and 6 at sf0.1, and a round's forest CC is stable
-# after 25 and 43 iterations (the label shortcut is logarithmic only on
-# id-sorted chains, graph/components.py). Each chain needs one round
-# more than its depth, for its guard to see the fixpoint.
+# rounds at sf0.01 and 6 at sf0.1, and a round's forest CC, seeded with
+# the previous round's labels, is stable after at most 20 and 33
+# iterations (the label shortcut is logarithmic only on id-sorted chains,
+# graph/components.py). Each chain needs one round more than its depth,
+# for its guard to see the fixpoint; the CC chain has two more as margin.
 ORACLE_BORUVKA_ROUNDS = 8
-ORACLE_CC_ITERS = 44
+ORACLE_CC_ITERS = 36
 
 
 def _mst_oracle_sql(
@@ -250,16 +251,18 @@ def _mst_oracle_sql(
 ) -> str:
     """DuckDB twin of the unique-(w,a,b)-MSF summary. Uncontracted
     Borůvka: each round relabels the ORIGINAL collapsed edge list by the
-    current component labels (CC of the accumulated forest, recomputed
-    from scratch — the forest is ≤|V| edges, so the per-round CC block is
-    vertex-bounded, never edge-bounded), picks each component's minimal
+    current component labels (CC of the accumulated forest, seeded with
+    the previous round's labels — each the minimum id of a sub-tree of the
+    new component, so only the merge depth is left to unroll; the forest
+    is ≤|V| edges, so the per-round CC block is vertex-bounded, never
+    edge-bounded), picks each component's minimal
     crossing edge, and accumulates. Every CTE is MATERIALIZED (each round
     references its predecessor multiple times — pagerank.py discipline)."""
 
     def forest_cc(r: int) -> str:
         labels = f"l_{r}_{{r}}"
         chain = truncate.unroll(
-            f"l_{r}_0 AS (SELECT v, v AS lbl FROM verts)",
+            f"l_{r}_0 AS (SELECT v, lbl FROM l_{r - 1}_f)",
             lambda k: f"""l_{r}_{k} AS MATERIALIZED (
             SELECT g.s AS v, min(l2.lbl) AS lbl FROM (
                 SELECT fa AS s, fb AS t FROM f_{r}

@@ -13,8 +13,8 @@ Max is the one classic aggregator that is NOT a sum — it is still
 mergeable (max of maxes), so Spark computes it with map-side partial
 aggregation exactly like the sums in the sibling layers: 64 ``F.max``
 columns in a single hash agg keyed on the receiving vertex. The linear
-heads are literal dot-product expressions (weights inlined 6 dp in both
-engines), so the whole layer stays in whole-stage codegen — no Python.
+heads are literal dot-product expressions (``graph/layers.py``), so the
+whole layer stays in whole-stage codegen — no Python.
 
 Scale posture: one shuffle on dst_v carrying 64 doubles per vertex
 (partials absorb hot receivers); the feature join is broadcast-gated.
@@ -27,18 +27,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.graph.edges import EDGES_V_CTE, derive_vertex_embeddings
-from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
+from flink_streaming_gnn_spark.graph.layers import agg, agg_sql, dense, dense_sql, weights
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 DIM = 64
 OUT_DIM = 4
 
 
-def pool_weights(out_dim: int = OUT_DIM, in_dim: int = DIM) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic (W_self, W_pool), rounded so SQL literals match."""
-    rs = np.random.RandomState(47)
-    w_self = np.round(rs.randn(out_dim, in_dim) * 0.1, 6)
-    w_pool = np.round(rs.randn(out_dim, in_dim) * 0.1, 6)
+def pool_weights() -> tuple[np.ndarray, np.ndarray]:
+    """(W_self, W_pool): one draw of both, split in half."""
+    w_self, w_pool = weights(47, 2, OUT_DIM, DIM)
     return w_self, w_pool
 
 
@@ -52,58 +50,27 @@ def graph_sage_pool_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("feat")
     )
-    pooled = (
-        e.join(maybe_broadcast(emb), F.col("src_v") == F.col("vec_id"))
-        .groupBy("dst_v")
-        .agg(
-            *[
-                F.max(F.element_at("feat", i)).alias(f"m{i}")
-                for i in range(1, DIM + 1)
-            ]
-        )
-    )
+    pooled = agg(e, emb, F.max, DIM)
     both = emb.join(pooled, emb.vec_id == pooled.dst_v, "left")
+    f = [F.element_at("feat", i) for i in range(1, DIM + 1)]
+    m = [F.coalesce(F.col(f"a{i}"), F.lit(0.0)) for i in range(1, DIM + 1)]
     h_cols = [
         F.round(
-            F.greatest(
-                F.lit(0.0),
-                sum(
-                    (
-                        F.element_at("feat", i) * float(w_self[j - 1, i - 1])
-                        + F.coalesce(F.col(f"m{i}"), F.lit(0.0))
-                        * float(w_pool[j - 1, i - 1])
-                        for i in range(2, DIM + 1)
-                    ),
-                    F.element_at("feat", 1) * float(w_self[j - 1, 0])
-                    + F.coalesce(F.col("m1"), F.lit(0.0)) * float(w_pool[j - 1, 0]),
-                ),
-            ),
-            4,
-        ).alias(f"h{j}")
-        for j in range(1, OUT_DIM + 1)
+            F.greatest(F.lit(0.0), dense((f, w_self[j]), (m, w_pool[j]))), 4
+        ).alias(f"h{j + 1}")
+        for j in range(OUT_DIM)
     ]
     return both.select(F.col("vec_id").cast("long").alias("vec_id"), *h_cols)
 
 
 def _pool_oracle_sql() -> str:
     w_self, w_pool = pool_weights()
-    max_cols = ",\n               ".join(
-        f"max(feat[{i}]) AS m{i}" for i in range(1, DIM + 1)
+    f = [f"feat[{i}]" for i in range(1, DIM + 1)]
+    m = [f"COALESCE(a{i}, 0.0)" for i in range(1, DIM + 1)]
+    h_cols = ",\n               ".join(
+        f"round(greatest(0.0, {dense_sql((f, w_self[j]), (m, w_pool[j]))}), 4) AS h{j + 1}"
+        for j in range(OUT_DIM)
     )
-    def _head(j: int) -> str:
-        # 128 summands left-nested would blow DuckDB's 128-deep binder
-        # recursion; chunk into parenthesized groups to balance the tree
-        terms = [
-            f"feat[{i}] * ({w_self[j - 1, i - 1]!r})"
-            f" + COALESCE(m{i}, 0.0) * ({w_pool[j - 1, i - 1]!r})"
-            for i in range(1, DIM + 1)
-        ]
-        chunks = [
-            "(" + " + ".join(terms[k : k + 16]) + ")" for k in range(0, len(terms), 16)
-        ]
-        return f"round(greatest(0.0, {' + '.join(chunks)}), 4) AS h{j}"
-
-    h_cols = ",\n               ".join(_head(j) for j in range(1, OUT_DIM + 1))
     return f"""
         WITH {EDGES_V_CTE},
         e AS (SELECT DISTINCT src_v, dst_v FROM edges_v WHERE src_v <> dst_v),
@@ -111,7 +78,7 @@ def _pool_oracle_sql() -> str:
                   FROM embeddings),
         pooled AS (
             SELECT e.dst_v,
-               {max_cols}
+               {agg_sql("max", DIM)}
             FROM e JOIN feats f ON f.vec_id = e.src_v
             GROUP BY e.dst_v
         )

@@ -6,16 +6,15 @@ preserves pairwise distances within (1±ε) w.h.p.
 
 The projection matrix is DETERMINISTIC (seeded, rounded to 6 dp) and
 inlined as literals into both engines, so the key is an exact oracle
-check of the real projection arithmetic — the same literal-weights
-discipline as ``graph/gcn.py``. Each output channel is one
-zip_with/aggregate dot product (JVM higher-order functions, per-row
+check of the real projection arithmetic — the literal-weight discipline
+of ``graph/layers.py``, whose ``dot``/``sql_list`` pair it uses, with the
+JL scale 1/sqrt(OUT_DIM) in place of the layers' 0.1. Each output channel
+is one zip_with/aggregate dot product (JVM higher-order functions, per-row
 codegen, no UDF, no shuffle: the operator is map-only and scales
 embarrassingly at any corpus size — the entire point of JL over PCA,
 which needs a covariance pass; cf. ``emb_pca_covariance``).
 
-Output rounded to 6 dp (sequential fold order is identical in both
-engines — Spark ``aggregate`` and DuckDB ``list_dot_product`` both
-reduce left-to-right over the 64 literal terms).
+Output rounded to 6 dp.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.graph.layers import dot, sql_list
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 DIM = 64
@@ -36,15 +36,6 @@ def jl_matrix() -> np.ndarray:
     return np.round(rs.randn(OUT_DIM, DIM) / np.sqrt(OUT_DIM), 6)
 
 
-def _dot_lit(feat_col: str, vec: np.ndarray):
-    arr = F.array(*[F.lit(float(x)) for x in vec])
-    return F.aggregate(
-        F.zip_with(F.col(feat_col), arr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = jl_matrix()
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -52,9 +43,9 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return emb.select(
         "vec_id",
-        # "+ 0.0" normalizes IEEE -0.0 after rounding (gin.py discipline)
+        # "+ 0.0": the negative-zero rule of graph/layers.py
         *[
-            (F.round(_dot_lit("feat", w[j]), 6) + 0.0).alias(f"p{j}")
+            (F.round(dot("feat", w[j]), 6) + 0.0).alias(f"p{j}")
             for j in range(OUT_DIM)
         ],
     )  # no orderBy: keeps the plan exchange-free (map-only); the driver
@@ -63,12 +54,8 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _jl_oracle_sql() -> str:
     w = jl_matrix()
-
-    def lit(vec: np.ndarray) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in vec) + "]"
-
     p_cols = ",\n               ".join(
-        f"round(list_dot_product(CAST(embedding AS DOUBLE[]), {lit(w[j])}), 6) + 0.0 AS p{j}"
+        f"round(list_dot_product(CAST(embedding AS DOUBLE[]), {sql_list(w[j])}), 6) + 0.0 AS p{j}"
         for j in range(OUT_DIM)
     )
     return f"""

@@ -136,17 +136,13 @@ def stream_gnn_sage_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     class as the session-window result that OOM'd the driver memory sink
     at the ×100 probe — so the drain goes through the complete-mode
     parquet spool (VERDICT r8 "What's wrong" #1)."""
-    from pyspark.sql import functions as F
-
-    from flink_streaming_gnn_spark.sources.tables import load_table
+    from flink_streaming_gnn_spark.graph.sage import vertex_features
     from flink_streaming_gnn_spark.streaming.gnn import edges_stream, windowed_sage
     from flink_streaming_gnn_spark.streaming.replay import run_complete_spooled
 
-    features = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").alias("feat")
-    )
     return run_complete_spooled(
-        windowed_sage(edges_stream(spark, sf_dir), features), "gnn_sage_e2e"
+        windowed_sage(edges_stream(spark, sf_dir), vertex_features(spark, sf_dir)),
+        "gnn_sage_e2e",
     )
 
 

@@ -13,11 +13,13 @@ starts and the Python workers the JVM forks. Each key is called a fixed
 number of times in a row and its readout line gives:
 
 * the median wall and CPU seconds of the calls;
-* the median count of persistent RDDs after a call;
 * the driver heap, read before and after a ``gc.collect()`` in the
   harness. Python-side cycles of py4j proxies pin JVM objects until a
   collection, so the first reading is what a session that never collects
   holds, and the second is what the engine retains;
+* the count of persistent RDDs after the calls, read after the same
+  ``gc.collect()``: before it, a round checkpoint whose DataFrame proxy
+  a cycle still holds counts too;
 * the bytes of engine scratch under TMPDIR.
 
 soak    the keys in one JVM on the base corpus, three calls each. The
@@ -182,27 +184,24 @@ def run_keys(tree: str, sf_dir: str, calls: str, *keys: str) -> None:
 
     for key in keys:
         rec: dict = {"key": key}
-        walls, cpus, rdds = [], [], []
+        walls, cpus = [], []
         try:
             for _ in range(int(calls)):
                 c0, t0 = cpu.sample(), time.perf_counter()
                 queries[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
                 cpus.append(cpu.sample() - c0)
-                rdds.append(settled(persistent_rdds))
+                jvm.System.gc()  # the next call does not pay for this one's garbage
         except Exception as exc:  # noqa: BLE001 — the ledger records it and goes on
             # no heap readout: the failure can have taken the JVM down with it
             rec["error"] = f"{type(exc).__name__}: {str(exc)[:300]}"
             _emit(rec)
             continue
-        rec.update(
-            wall_s=statistics.median(walls),
-            cpu_s=statistics.median(cpus),
-            persistent_rdds=statistics.median(rdds),
-        )
+        rec.update(wall_s=statistics.median(walls), cpu_s=statistics.median(cpus))
         rec["heap_mib"] = settled(heap_mib)
         gc.collect()
         rec["heap_collected_mib"] = settled(heap_mib)
+        rec["persistent_rdds"] = settled(persistent_rdds)
         tmp = tempfile.gettempdir()
         rec["scratch_bytes"] = sum(
             _bytes_under(os.path.join(tmp, n))
