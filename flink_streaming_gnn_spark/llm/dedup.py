@@ -1,6 +1,6 @@
 """Deduplication operators over ``documents`` (SURVEY.md §2B LLM rows).
 
-Four tiers, each one rung up the recall/cost ladder:
+Five tiers, each one rung up the recall/cost ladder:
 - exact        — hash groupBy on the raw text (one shuffle)
 - ngram_jaccard— MinHash/LSH candidates → exact trigram-Jaccard verify
 - simhash      — 64-bit bitwise fingerprint, hamming-ball candidates
@@ -9,7 +9,9 @@ Four tiers, each one rung up the recall/cost ladder:
 
 Blocking discipline (100 TB posture): no operator here ever materializes
 the full document cross product; candidates always come from an equi-join
-on a blocking key.
+on a blocking key. The near-dup keys run on the kit in ``llm.neardup``
+(clone collapse, band join, group-output contract, shingles and their
+DuckDB twins) and keep only their feature, bands and verify here.
 """
 
 from __future__ import annotations
@@ -20,6 +22,19 @@ from pyspark.sql import functions as F
 from flink_streaming_gnn_spark.functions.arrays import dot_expr
 from flink_streaming_gnn_spark.graph.components import hash_min_cc
 from flink_streaming_gnn_spark.graph.edges import both_directions
+from flink_streaming_gnn_spark.llm.neardup import (
+    band_pairs,
+    clone_groups,
+    clone_groups_sql,
+    clone_members,
+    group_pairs,
+    group_pairs_sql,
+    keyed_texts,
+    shingle_sets,
+    shingle_sets_sql,
+    shingles,
+    shingles_sql,
+)
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -50,22 +65,13 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_MINHASH = 16  # OR-ed single-row bands: P(miss) = (1-j)^16
 
-# distinct token-trigram shingles of a pre-split ``toks`` column — the
-# near-dup feature set shared by the hand-rolled band generator, the
-# Jaccard verify stage, and the pyspark.ml MinHashLSH variant
-_SHINGLES_EXPR = (
-    "array_distinct(transform(sequence(1, size(toks) - 2),"
-    " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),"
-    " element_at(toks, i + 2))))"
-)
-
 
 def minhash_candidate_pairs(d: DataFrame) -> DataFrame:
     """LSH-banded candidate pairs (doc_a < doc_b) over the SHINGLE sets the
     verify stage scores — hand-rolled, 100% JVM (no pyspark.ml fit, no
     sparse vectors): per doc, 16 min-hashes ``min_s xxhash64(k ':' s)`` in
-    ONE hash agg over the exploded shingles; candidates = self-equi-join on
-    any matching (band, signature). This is THE candidate generator for
+    ONE hash agg over the exploded shingles; candidates = ``band_pairs``
+    on any matching (band, signature). This is THE candidate generator for
     every near-dup verify stage — cost ∝ docs sharing a bucket, never a
     quadratic within-block pair join. ``d`` needs (doc_id, sh).
 
@@ -83,27 +89,8 @@ def minhash_candidate_pairs(d: DataFrame) -> DataFrame:
             for k in range(N_MINHASH)
         ]
     )
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"), F.col(f"m{k}").alias("sig")
-                    )
-                    for k in range(N_MINHASH)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.sig")
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
-    return (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    bands = [F.col(f"m{k}") for k in range(N_MINHASH)]
+    return band_pairs(sigs, "doc_id", bands).toDF("doc_a", "doc_b")
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,28 +106,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     set deterministic per dataset, so the exact-SQL oracle (which verifies
     ALL pairs) still hash-matches.
 
-    Like dedup_cluster_canonical, exact duplicates are collapsed FIRST
-    (min-doc_id representative per distinct text) so the shingle/LSH/verify
-    machinery runs once per distinct text; the full pair list is then
-    recovered exactly — clones share their representative's shingle set, so
-    a cross-group clone pair inherits its representatives' Jaccard verbatim
-    and a within-group pair is identically 1.0. On a corpus with heavy
-    exact replication this cuts the expensive stage quadratically (sf1
-    scale probe: 64 s → seconds) while emitting the identical pair table."""
-    keyed = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("toks", F.split("text", " "))
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", "text", F.xxhash64("text").alias("th"))
-    )
-    reps = keyed.groupBy("th").agg(F.min("doc_id").alias("rep_id"))
-    members = keyed.join(maybe_broadcast(reps), "th").select("doc_id", "rep_id")
-    rep_docs = (
-        keyed.join(maybe_broadcast(reps), "th")
-        .filter(F.col("doc_id") == F.col("rep_id"))
-        .select("doc_id", "text")
-    )
-    rep_pairs = _near_dup_pairs(rep_docs)
+    Exact clones are collapsed first (``llm.neardup``) and the output is
+    expanded back to the full doc-level pair list: clones share their
+    representative's shingle set, so a cross-group clone pair inherits its
+    representatives' Jaccard verbatim and a within-group pair is
+    identically 1.0. On a corpus with heavy exact replication this cuts
+    the expensive stage quadratically (sf1 scale probe: 64 s → seconds)
+    while emitting the identical pair table."""
+    keyed = keyed_texts(spark, sf_dir, min_tokens=3)
+    members, reps = clone_members(keyed, clone_groups(keyed, "doc_id", "th"), "doc_id", "th")
+    rep_pairs = _near_dup_pairs(reps)
     m_a = members.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("da"))
     m_b = members.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("db"))
     cross = (
@@ -170,19 +145,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _near_dup_pairs(d: DataFrame) -> DataFrame:
     """candidates (shingle-minhash bands) → exact trigram-Jaccard ≥ 0.5
-    verify, over any (doc_id, text) frame. Returns (doc_a, doc_b, jaccard)."""
-    d = (
-        d.withColumn("toks", F.split("text", " "))
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("sh"))
-        # pinned once: referenced 3× below (candidate generation + both
-        # verify sides), and every caller passes a clone-collapsed
-        # rep-level frame — bounded by DISTINCT content, while the
-        # unpinned lineage would re-run the corpus scan + hash-group +
-        # shingle build per reference (the dedup_containment ×10 lesson)
-        .localCheckpoint()
-    )
-    cands = minhash_candidate_pairs(d.select("doc_id", "sh"))
+    verify, over any (doc_id, text) frame (docs of fewer than 3 tokens
+    drop out). Returns (doc_a, doc_b, jaccard)."""
+    # pinned once: referenced 3× below (candidate generation + both
+    # verify sides), and every caller passes a clone-collapsed rep-level
+    # frame — bounded by DISTINCT content, while the unpinned lineage
+    # would re-run the corpus scan + hash-group + shingle build per
+    # reference (the dedup_containment ×10 lesson)
+    d = shingle_sets(d, "doc_id", 3).localCheckpoint()
+    cands = minhash_candidate_pairs(d)
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     pairs = cands.join(a, "doc_a").join(b, "doc_b")
@@ -261,63 +232,32 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a crash at the sf1 scale probe). Shingle sets stay diverse, so
     bucket sizes track true near-duplicates.
 
-    EXACT-CLONE COLLAPSE + GROUP-LEVEL OUTPUT (the ``dedup_containment``
-    / ``dedup_image_hamming_pairs`` contract, applied here after the
-    round-6 ×10 probe caught the doc-level formulation CRASHING on the
-    clone-heavy corpus): identical texts share identical shingle sets,
-    hence identical minhash signatures, hence the same bucket in every
-    hash table — so ``approxSimilarityJoin`` over raw doc_ids emits every
+    Exact clones are collapsed and the output kept at group level
+    (``llm.neardup``), after the round-6 ×10 probe caught the doc-level
+    formulation CRASHING on the clone-heavy corpus: identical texts share
+    identical minhash signatures, hence the same bucket in every hash
+    table, so ``approxSimilarityJoin`` over raw doc_ids emitted every
     within-clone-group pair with its 2^18-dim feature vectors attached,
-    Θ(clones²) candidate volume that lost executors at ×10 (500k docs,
-    ×100 clones). Clones are collapsed to their min-doc_id representative
-    BEFORE featurization; the result is one row per near-dup
-    representative pair carrying both member counts, plus one
-    jaccard_dist=0.0 self row per clone group of size ≥ 2. Rows-only
-    (randomized family; recall of planted exact dups asserted in tests
-    via the group self rows)."""
+    which lost executors at ×10 (500k docs, ×100 clones). The self rows
+    carry jaccard_dist=0.0. Rows-only (randomized family; recall of
+    planted exact dups asserted in tests via the group self rows)."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    keyed = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("toks", F.split("text", " "))
-        .filter(F.size("toks") >= 3)
-        .select("doc_id", "text", F.xxhash64("text").alias("th"))
-    )
-    groups = keyed.groupBy("th").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").cast("long").alias("n")
-    ).localCheckpoint()  # reps referenced by featurize + both join sides
-    d = (
-        keyed.join(maybe_broadcast(groups.select("th", "rep_id")), "th")
-        .filter(F.col("doc_id") == F.col("rep_id"))
-        .withColumn("toks", F.split("text", " "))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("sh"))
-    )
+    keyed = keyed_texts(spark, sf_dir, min_tokens=3)
+    # reps referenced by featurize + both join sides
+    groups = clone_groups(keyed, "doc_id", "th").localCheckpoint()
+    d = shingle_sets(clone_members(keyed, groups, "doc_id", "th")[1], "doc_id", 3)
     tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True)
     feats = tf.transform(d).localCheckpoint()
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
     model = lsh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
-    size_a = groups.select(F.col("rep_id").alias("group_a"), F.col("n").alias("n_a"))
-    size_b = groups.select(F.col("rep_id").alias("group_b"), F.col("n").alias("n_b"))
-    cross = (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("group_a"),
-            F.col("datasetB.doc_id").alias("group_b"),
-            F.round("jaccard_dist", 4).alias("jaccard_dist"),
-        )
-        .join(maybe_broadcast(size_a), "group_a")
-        .join(maybe_broadcast(size_b), "group_b")
-        .select("group_a", "group_b", "jaccard_dist", "n_a", "n_b")
+    rep_pairs = pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id")).select(
+        F.col("datasetA.doc_id").alias("group_a"),
+        F.col("datasetB.doc_id").alias("group_b"),
+        F.round("jaccard_dist", 4).alias("jaccard_dist"),
     )
-    selfp = groups.filter(F.col("n") >= 2).select(
-        F.col("rep_id").alias("group_a"),
-        F.col("rep_id").alias("group_b"),
-        F.lit(0.0).alias("jaccard_dist"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-    )
-    return cross.unionByName(selfp)
+    return group_pairs(rep_pairs, groups, "jaccard_dist", 0.0)
 
 
 # Resident-memory guard for one embedding candidate block (VERDICT r6
@@ -429,14 +369,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-6 rewrite, both halves forced by the ×10 probe (the round-2
     doc-level pair join was still grinding after an hour):
 
-    * **exact-clone collapse + group contract** (the `dedup_containment`
-      / `dedup_image_hamming_pairs` discipline): the replica corpus has
-      100 copies of every embedding, so doc-level output is Θ(clones²)
-      cos=1.0 rows by construction — 9.9M pairs whose enumeration, join
-      and write WERE the runtime. Identical (label, embedding) rows are
-      collapsed first (at 100 TB the group key would be a hash of the
-      array; the array itself is exact here and groups in one hash agg),
-      and all machinery below runs on representatives.
+    * **exact-clone collapse + group contract** (``llm.neardup``): the
+      replica corpus has 100 copies of every embedding, so doc-level
+      output was 9.9M cos=1.0 rows whose enumeration, join and write WERE
+      the runtime. The group key is (label, embedding); at 100 TB it
+      would be a hash of the array, here the array itself is exact and
+      groups in one hash agg.
     * **BLAS candidate stage + exact rescore**: per label block, an
       Arrow-batched ``applyInPandas`` (``_gram_candidates``) computes
       the representatives' row-normalized gram matrix in float32
@@ -459,11 +397,8 @@ def _embedding_cosine_groups(e: DataFrame) -> DataFrame:
     ``(vec_id, label, embedding)`` frame — shared with the planted
     variant below so both keys exercise the identical group-collapse →
     BLAS-candidates → exact-rescore plan."""
-    groups = (
-        e.groupBy("label", "embedding")
-        .agg(F.min("vec_id").alias("rep_id"), F.count("*").cast("long").alias("n"))
-        .localCheckpoint()  # referenced by candidates, rescore and sizes
-    )
+    # referenced by candidates, rescore and sizes
+    groups = clone_groups(e, "vec_id", "label", "embedding").localCheckpoint()
     reps = groups.select(
         F.col("rep_id").alias("vec_id"),
         "label",
@@ -489,40 +424,19 @@ def _embedding_cosine_groups(e: DataFrame) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("norm").alias("norm_b"),
     )
+    cos = F.expr(dot_expr("emb_a", "emb_b")) / (F.col("norm_a") * F.col("norm_b"))
     rescored = (
         cands.join(a, "vec_a")
         .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (
-                F.expr(dot_expr("emb_a", "emb_b"))
-                / (F.col("norm_a") * F.col("norm_b"))
-            ).alias("cos"),
-        )
+        .select("vec_a", "vec_b", cos.alias("cos"))
         .filter(F.col("cos") >= 0.9)
-    )
-    size_a = groups.select(F.col("rep_id").alias("vec_a"), F.col("n").alias("n_a"))
-    size_b = groups.select(F.col("rep_id").alias("vec_b"), F.col("n").alias("n_b"))
-    cross = (
-        rescored.join(maybe_broadcast(size_a), "vec_a")
-        .join(maybe_broadcast(size_b), "vec_b")
         .select(
             F.col("vec_a").alias("group_a"),
             F.col("vec_b").alias("group_b"),
             F.round("cos", 4).alias("cos"),
-            "n_a",
-            "n_b",
         )
     )
-    selfp = groups.filter(F.col("n") >= 2).select(
-        F.col("rep_id").alias("group_a"),
-        F.col("rep_id").alias("group_b"),
-        F.lit(1.0).alias("cos"),
-        F.col("n").alias("n_a"),
-        F.col("n").alias("n_b"),
-    )
-    return cross.unionByName(selfp)
+    return group_pairs(rescored, groups, "cos", 1.0)
 
 
 # dedup_embedding_cosine_planted: every PLANT_SEED_MOD-th vec_id seeds two
@@ -621,16 +535,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; near-dup clusters have tiny diameter (most are cliques), so
     the loop converges in 2-3 rounds.
     """
-    keyed = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.xxhash64("text").alias("th")
-    )
-    reps = keyed.groupBy("th").agg(F.min("doc_id").alias("rep_id"))
-    rep_map = keyed.join(maybe_broadcast(reps), "th").select("doc_id", "rep_id")
-    rep_docs = (
-        keyed.join(maybe_broadcast(reps), "th")
-        .filter(F.col("doc_id") == F.col("rep_id"))
-        .select("doc_id", "text")
-    )
+    keyed = keyed_texts(spark, sf_dir)
+    rep_map, rep_docs = clone_members(keyed, clone_groups(keyed, "doc_id", "th"), "doc_id", "th")
     # checkpointed: hash_min_cc reads its edge frame four times, and each
     # read would rerun the LSH + verify plan
     pairs = _near_dup_pairs(rep_docs).select("doc_a", "doc_b").localCheckpoint()
@@ -711,13 +617,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("toks") >= SPAN_N)
     )
     spans = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(toks) - {SPAN_N - 1}),"
-                f" i -> md5(concat_ws(' ', slice(toks, i, {SPAN_N}))))"
-            )
-        ).alias("span_hash"),
+        "doc_id", F.explode(F.transform(shingles("toks", SPAN_N), F.md5)).alias("span_hash")
     )
     return (
         spans.groupBy("span_hash")
@@ -748,6 +648,53 @@ _DUCK_COS = (
     " / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
     " * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))))"
 )
+
+
+def _embedding_cosine_sql(source: str) -> str:
+    """The embedding-cosine twin over the ``(vec_id, label, embedding)``
+    relation ``source``: clone groups, all-pairs cosine within label."""
+    return f"""
+        WITH grp AS ({clone_groups_sql(source, "vec_id", "label", "embedding")}),
+        rep_pairs AS (
+            SELECT a.rep_id AS group_a, b.rep_id AS group_b,
+                   round({_DUCK_COS}, 4) AS cos
+            FROM grp a JOIN grp b
+              ON a.label = b.label AND a.rep_id < b.rep_id
+            WHERE {_DUCK_COS} >= 0.9
+        )
+        {group_pairs_sql("rep_pairs", "grp", "cos", "1.0")}
+    """
+
+
+# all doc pairs of trigram Jaccard ≥ 0.5 (unrounded), doc_a < doc_b: the
+# ngram twin reads it as is; the cluster twins below read it both ways as
+# the dup graph, and resolve clusters with a recursive-CTE reachability
+# fixpoint — a hash match therefore proves LSH candidate recall AND the
+# distributed CC loop agree with exact transitive closure on the fixture
+_NEAR_CTE = f"""
+        sh AS ({shingle_sets_sql("documents", "doc_id", 3)}),
+        near AS (
+            SELECT * FROM (
+                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                       CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                       / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                       AS jaccard
+                FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+            ) WHERE jaccard >= 0.5
+        )"""
+_CLUSTER_CTE = f"""{_NEAR_CTE},
+        pe AS (
+            SELECT doc_a AS u, doc_b AS v FROM near
+            UNION ALL
+            SELECT doc_b, doc_a FROM near
+        ),
+        reach(node, lbl) AS (
+            SELECT DISTINCT u, u FROM pe
+            UNION
+            SELECT pe.v, reach.lbl FROM reach JOIN pe ON pe.u = reach.node
+        ),
+        comp AS (SELECT node, min(lbl) AS canonical FROM reach GROUP BY node)"""
+
 
 def _simhash_oracle_sql() -> str:
     """Nibble-decoded md5 SimHash twin: hex digit k → strpos-1, bit j →
@@ -792,9 +739,7 @@ ORACLE = {
         ),
         spans AS (
             SELECT doc_id,
-                   unnest(list_transform(
-                       generate_series(1, len(t) - {SPAN_N - 1}),
-                       i -> md5(array_to_string(t[i:i+{SPAN_N - 1}], ' '))))
+                   unnest(list_transform({shingles_sql("t", SPAN_N)}, x -> md5(x)))
                        AS span_hash
             FROM toks
         )
@@ -823,57 +768,21 @@ ORACLE = {
     # scale); the Spark side only verifies LSH candidates — a hash-match
     # therefore also proves the candidate generator's recall is total on
     # the fixture's true near-dup pairs.
-    "dedup_ngram_jaccard": """
-        WITH sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       generate_series(1, len(string_split(text, ' ')) - 2),
-                       i -> string_split(text, ' ')[i] || ' ' ||
-                            string_split(text, ' ')[i + 1] || ' ' ||
-                            string_split(text, ' ')[i + 2])) AS s
-            FROM documents
-            WHERE len(string_split(text, ' ')) >= 3
-        )
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS jaccard
-        FROM sh a JOIN sh b
-          ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
+    "dedup_ngram_jaccard": f"""
+        WITH {_NEAR_CTE}
+        SELECT doc_a, doc_b, round(jaccard, 4) AS jaccard FROM near
     """,
     # group contract: identical-(label, embedding) groups, all-pairs
     # verify over representatives (no BLAS prefilter — the margin's
     # zero-miss property is cross-checked by the hash match)
-    "dedup_embedding_cosine": f"""
-        WITH grp AS (
-            SELECT label, embedding, min(vec_id) AS rep_id,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM embeddings GROUP BY label, embedding
-        ),
-        cross_pairs AS (
-            SELECT a.rep_id AS group_a, b.rep_id AS group_b,
-                   round({_DUCK_COS}, 4) AS cos,
-                   a.n AS n_a, b.n AS n_b
-            FROM grp a JOIN grp b
-              ON a.label = b.label AND a.rep_id < b.rep_id
-            WHERE {_DUCK_COS} >= 0.9
-        ),
-        self_pairs AS (
-            SELECT rep_id AS group_a, rep_id AS group_b,
-                   1.0 AS cos, n AS n_a, n AS n_b
-            FROM grp WHERE n >= 2
-        )
-        SELECT * FROM cross_pairs UNION ALL SELECT * FROM self_pairs
-    """,
+    "dedup_embedding_cosine": _embedding_cosine_sql("embeddings"),
     # Planted variant: same all-pairs verify, over the union of the real
     # embeddings and the two deterministic plants per seed (exact clone +
     # parity-doubled near-dup; ×2 is exact in float32, so both engines
     # group and score bit-identical vectors). DuckDB lambda index i is
     # 1-based, Spark's is 0-based: `i % 2 = 1` here selects the same
     # physical positions as `i % 2 == 0` in the Spark query.
-    "dedup_embedding_cosine_planted": f"""
-        WITH emb AS (
+    "dedup_embedding_cosine_planted": _embedding_cosine_sql(f"""(
             SELECT vec_id, label, embedding FROM embeddings
             UNION ALL
             SELECT vec_id + {PLANT_CLONE_OFFSET}, label, embedding
@@ -885,82 +794,16 @@ ORACLE = {
                             * CASE WHEN i % 2 = 1 THEN 2 ELSE 1 END
                             AS FLOAT))
             FROM embeddings WHERE vec_id % {PLANT_SEED_MOD} = 0
-        ),
-        grp AS (
-            SELECT label, embedding, min(vec_id) AS rep_id,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM emb GROUP BY label, embedding
-        ),
-        cross_pairs AS (
-            SELECT a.rep_id AS group_a, b.rep_id AS group_b,
-                   round({_DUCK_COS}, 4) AS cos,
-                   a.n AS n_a, b.n AS n_b
-            FROM grp a JOIN grp b
-              ON a.label = b.label AND a.rep_id < b.rep_id
-            WHERE {_DUCK_COS} >= 0.9
-        ),
-        self_pairs AS (
-            SELECT rep_id AS group_a, rep_id AS group_b,
-                   1.0 AS cos, n AS n_a, n AS n_b
-            FROM grp WHERE n >= 2
-        )
-        SELECT * FROM cross_pairs UNION ALL SELECT * FROM self_pairs
-    """,
-    # The oracle re-derives the dup graph from ALL pairs (no LSH) and
-    # resolves clusters with a recursive-CTE reachability fixpoint — a hash
-    # match therefore proves LSH candidate recall AND the distributed CC
-    # loop agree with exact transitive closure on the fixture.
-    "dedup_cluster_canonical": """
-        WITH RECURSIVE sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       generate_series(1, len(string_split(text, ' ')) - 2),
-                       i -> string_split(text, ' ')[i] || ' ' ||
-                            string_split(text, ' ')[i + 1] || ' ' ||
-                            string_split(text, ' ')[i + 2])) AS s
-            FROM documents
-            WHERE len(string_split(text, ' ')) >= 3
-        ),
-        pe AS (
-            SELECT a.doc_id AS u, b.doc_id AS v
-            FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-        ),
-        reach(node, lbl) AS (
-            SELECT DISTINCT u, u FROM pe
-            UNION
-            SELECT pe.v, reach.lbl FROM reach JOIN pe ON pe.u = reach.node
-        ),
-        comp AS (SELECT node, min(lbl) AS canonical FROM reach GROUP BY node)
+        )"""),
+    "dedup_cluster_canonical": f"""
+        WITH RECURSIVE {_CLUSTER_CTE}
         SELECT d.doc_id,
                CAST(coalesce(c.canonical, d.doc_id) AS BIGINT) AS canonical_id,
                (coalesce(c.canonical, d.doc_id) = d.doc_id) AS is_survivor
         FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
     """,
-    "dedup_priority_survivor": """
-        WITH RECURSIVE sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       generate_series(1, len(string_split(text, ' ')) - 2),
-                       i -> string_split(text, ' ')[i] || ' ' ||
-                            string_split(text, ' ')[i + 1] || ' ' ||
-                            string_split(text, ' ')[i + 2])) AS s
-            FROM documents
-            WHERE len(string_split(text, ' ')) >= 3
-        ),
-        pe AS (
-            SELECT a.doc_id AS u, b.doc_id AS v
-            FROM sh a JOIN sh b ON a.doc_id <> b.doc_id
-            WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                  / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.5
-        ),
-        reach(node, lbl) AS (
-            SELECT DISTINCT u, u FROM pe
-            UNION
-            SELECT pe.v, reach.lbl FROM reach JOIN pe ON pe.u = reach.node
-        ),
-        comp AS (SELECT node, min(lbl) AS canonical FROM reach GROUP BY node),
+    "dedup_priority_survivor": f"""
+        WITH RECURSIVE {_CLUSTER_CTE},
         full_map AS (
             SELECT d.doc_id,
                    CAST(coalesce(c.canonical, d.doc_id) AS BIGINT) AS cluster_id,

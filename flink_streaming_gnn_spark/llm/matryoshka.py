@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.functions.arrays import dot_expr
+from flink_streaming_gnn_spark.llm.neardup import band_pairs, clone_groups, clone_groups_sql
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 N_PROBES = 50
@@ -136,14 +137,12 @@ def dedup_image_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join → exact verify), the ``dedup_simhash`` discipline
     applied to the image modality.
 
-    GROUP-LEVEL pairs, not doc-level (the clones² lesson, measured):
-    a replicated corpus holds many exact-hash clones, and doc-level
-    output is Θ(clones²) — the ×10 bench corpus gives 8.2e10 banded
-    candidates, an answer that explodes before any engine touches it.
-    So identical hashes collapse to a (min-doc exemplar, member count)
-    group FIRST — the ``dedup_cluster_canonical`` report shape — and
-    the banded join runs over DISTINCT hash values only, whose count is
-    bounded by image diversity, not corpus size.
+    GROUP-LEVEL pairs, not doc-level (the clone collapse of
+    ``llm.neardup``, measured here: the ×10 bench corpus gives 8.2e10
+    doc-level banded candidates, an answer that explodes before any engine
+    touches it). The banded join runs over DISTINCT hash values only,
+    whose count is bounded by image diversity, not corpus size. Distinct
+    hashes are never at distance 0, so there are no self rows.
 
     Zero-miss candidate generation by pigeonhole: the 64-bit hash splits
     into 4 bands of 16 bits; ``HAM_T`` (= 2) bit flips touch at most 2
@@ -158,49 +157,20 @@ def dedup_image_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-hash groups; referenced three times below (band explode +
     # both verify sides) — localCheckpoint pins ONE materialization of
     # the Python hashing pass
-    groups = (
-        multimodal_image_ahash(spark, sf_dir)
-        .groupBy("ahash_bits")
-        .agg(
-            F.min("doc_id").alias("rep"),
-            F.count("*").cast("long").alias("n_docs"),
-        )
-        .localCheckpoint()
-    )
-    bands = groups.select(
-        "rep",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.substring("ahash_bits", 1 + 16 * i, 16).alias("band"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("rep", "b.band_idx", "b.band")
-    cands = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.rep") < F.col("y.rep")),
-        )
-        .select(F.col("x.rep").alias("rep_a"), F.col("y.rep").alias("rep_b"))
-        .distinct()
-    )
+    groups = clone_groups(
+        multimodal_image_ahash(spark, sf_dir), "doc_id", "ahash_bits"
+    ).localCheckpoint()
+    bands = [F.substring("ahash_bits", 1 + 16 * i, 16) for i in range(4)]
+    cands = band_pairs(groups, "rep_id", bands).toDF("rep_a", "rep_b")
     ga = groups.select(
-        F.col("rep").alias("rep_a"),
+        F.col("rep_id").alias("rep_a"),
         F.col("ahash_bits").alias("ha"),
-        F.col("n_docs").alias("n_docs_a"),
+        F.col("n").alias("n_docs_a"),
     )
     gb = groups.select(
-        F.col("rep").alias("rep_b"),
+        F.col("rep_id").alias("rep_b"),
         F.col("ahash_bits").alias("hb"),
-        F.col("n_docs").alias("n_docs_b"),
+        F.col("n").alias("n_docs_b"),
     )
     hamming = F.expr(
         "aggregate(sequence(1, 64), 0, (acc, i) ->"
@@ -254,16 +224,13 @@ _AHASH_BITS_CTE = """
 QUERIES["dedup_image_hamming_pairs"] = dedup_image_hamming_pairs
 ORACLE["dedup_image_hamming_pairs"] = f"""
     WITH {_AHASH_BITS_CTE},
-    groups AS MATERIALIZED (
-        SELECT bits, min(doc_id) AS rep, CAST(count(*) AS BIGINT) AS n_docs
-        FROM hashes GROUP BY bits
-    )
-    SELECT a.rep AS rep_a, b.rep AS rep_b,
-           a.n_docs AS n_docs_a, b.n_docs AS n_docs_b,
+    groups AS MATERIALIZED ({clone_groups_sql("hashes", "doc_id", "bits")})
+    SELECT a.rep_id AS rep_a, b.rep_id AS rep_b,
+           a.n AS n_docs_a, b.n AS n_docs_b,
            CAST(list_sum([CASE WHEN substr(a.bits, i, 1) = substr(b.bits, i, 1)
                                THEN 0 ELSE 1 END
                           for i in range(1, 65)]) AS BIGINT) AS hamming
-    FROM groups a JOIN groups b ON a.rep < b.rep
+    FROM groups a JOIN groups b ON a.rep_id < b.rep_id
     WHERE list_sum([CASE WHEN substr(a.bits, i, 1) = substr(b.bits, i, 1)
                          THEN 0 ELSE 1 END
                     for i in range(1, 65)]) <= {HAM_T}

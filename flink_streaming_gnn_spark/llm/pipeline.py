@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.llm.neardup import shingle_sets_sql, shingles
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -57,13 +58,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingle_expr(col: str) -> str:
-    return (
-        f"array_distinct(transform(sequence(1, size({col}) - {SHINGLE_N - 1}),"
-        f" i -> concat_ws(' ', slice({col}, i, {SHINGLE_N}))))"
-    )
-
-
 def decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram decontamination: a training doc is contaminated if it shares
     any {SHINGLE_N}-token shingle with an eval-set doc (eval = doc_id %
@@ -79,10 +73,10 @@ def decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("toks") >= SHINGLE_N)
     )
     ev = d.filter(F.pmod("doc_id", F.lit(EVAL_MOD)) == 0).select(
-        F.explode(F.expr(_shingle_expr("toks"))).alias("shingle")
+        F.explode(F.array_distinct(shingles("toks", SHINGLE_N))).alias("shingle")
     ).distinct()
     train = d.filter(F.pmod("doc_id", F.lit(EVAL_MOD)) != 0).select(
-        "doc_id", F.explode(F.expr(_shingle_expr("toks"))).alias("shingle")
+        "doc_id", F.explode(F.array_distinct(shingles("toks", SHINGLE_N))).alias("shingle")
     )
     return (
         train.join(maybe_broadcast(ev), "shingle")
@@ -243,24 +237,13 @@ ORACLE = {
         WHERE doc_id % 100 < {_RATE_CASE}
     """,
     "decontam_ngram": f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS t
-            FROM documents
-            WHERE len(string_split(text, ' ')) >= {SHINGLE_N}
-        ),
-        sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       generate_series(1, len(t) - {SHINGLE_N - 1}),
-                       i -> array_to_string(t[i:i+{SHINGLE_N - 1}], ' '))) AS s
-            FROM toks
-        ),
+        WITH sets AS ({shingle_sets_sql("documents", "doc_id", SHINGLE_N)}),
         ev AS (
-            SELECT DISTINCT unnest(s) AS shingle FROM sh
+            SELECT DISTINCT unnest(sh) AS shingle FROM sets
             WHERE doc_id % {EVAL_MOD} = 0
         ),
         train AS (
-            SELECT doc_id, unnest(s) AS shingle FROM sh
+            SELECT doc_id, unnest(sh) AS shingle FROM sets
             WHERE doc_id % {EVAL_MOD} <> 0
         )
         SELECT train.doc_id, CAST(count(*) AS BIGINT) AS n_hit_shingles

@@ -1,6 +1,5 @@
-"""Construct + analyze EVERY registry key (ADVICE r9 #4: the
-ambiguous-self-join tripwire tools/analyze_all_keys.py ran only by hand;
-as a pytest it runs on every test pass).
+"""Construct + analyze EVERY registry key (ADVICE r9 #4): the
+ambiguous-self-join tripwire, run on every test pass.
 
 The class this guards: load_table's resolved-DataFrame memo makes repeat
 loads of a table share ONE relation instance, so any future key that

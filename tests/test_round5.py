@@ -446,17 +446,21 @@ def test_unigram_train_vs_python(spark):
 
 def test_containment_vs_python_bruteforce(spark):
     # doc-level expansion (bounded fixture — the registered query is
-    # group-level; this pins the zero-miss prefix filter + exact
-    # clone-recovery on the full directed pair list)
+    # group-level): every group row is expanded in Python through the
+    # clone members taken from the raw texts, and the result must equal
+    # an all-pairs brute force on the full directed doc-level pair list,
+    # containment values included — pins the zero-miss prefix filter and
+    # exact clone recovery
     from flink_streaming_gnn_spark.llm.containment import (
         CONT_DEN,
         CONT_NUM,
-        containment_doc_pairs,
+        dedup_containment,
     )
     from flink_streaming_gnn_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
     sh = {}
+    by_text: dict[str, list[int]] = {}
     for r in docs:
         toks = [t for t in r.text.split(" ")]
         if len(toks) < 3:
@@ -464,6 +468,8 @@ def test_containment_vs_python_bruteforce(spark):
         sh[int(r.doc_id)] = {
             " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
         }
+        by_text.setdefault(r.text, []).append(int(r.doc_id))
+    members = {min(ids): ids for ids in by_text.values()}
     want = {}
     for a, sa in sh.items():
         for b, sb in sh.items():
@@ -472,10 +478,13 @@ def test_containment_vs_python_bruteforce(spark):
             inter = len(sa & sb)
             if inter * CONT_DEN >= CONT_NUM * len(sa):
                 want[(a, b)] = round(inter / len(sa), 4)
-    got = {
-        (int(r.doc_a), int(r.doc_b)): r.containment
-        for r in containment_doc_pairs(spark, SF_SMOKE).collect()
-    }
+    got = {}
+    for r in dedup_containment(spark, SF_SMOKE).collect():
+        for a in members[int(r.group_a)]:
+            for b in members[int(r.group_b)]:
+                if a != b:
+                    assert (a, b) not in got, (a, b)  # each doc pair once
+                    got[(a, b)] = r.containment
     assert set(got) == set(want)
     for k in got:
         assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
