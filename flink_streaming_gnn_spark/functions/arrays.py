@@ -16,11 +16,12 @@ from pyspark.sql import functions as F
 
 from flink_streaming_gnn_spark.sources.tables import load_table
 
-# dot(a, b) after casting both arrays to double
+# dot(a, b) after casting both arrays to double, in Spark and in DuckDB
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
     " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 )
+_DUCK_DOT = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
 
 
 def dot_expr(a: str, b: str) -> str:
@@ -33,6 +34,12 @@ def cosine_expr(a: str, b: str) -> str:
     return (
         f"{dot_expr(a, b)} / (sqrt({dot_expr(a, a)}) * sqrt({dot_expr(b, b)}))"
     )
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``cosine_expr`` over the lists ``a`` and ``b``."""
+    dot = _DUCK_DOT.format
+    return f"({dot(a=a, b=b)} / (sqrt({dot(a=a, b=a)}) * sqrt({dot(a=b, b=b)})))"
 
 
 def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,8 +85,6 @@ def fn_array_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {"fn_array": fn_array, "fn_array_dot": fn_array_dot}
 
-_DUCK_DOT = "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
 ORACLE = {
     "fn_array": """
         SELECT doc_id,
@@ -99,10 +104,7 @@ ORACLE = {
         SELECT e1.vec_id AS vec_a,
                e2.vec_id AS vec_b,
                round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}, 4) AS dot_ab,
-               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
-                     / (sqrt({_DUCK_DOT.format(a='e1.embedding', b='e1.embedding')})
-                        * sqrt({_DUCK_DOT.format(a='e2.embedding', b='e2.embedding')})), 4)
-                   AS cos_ab,
+               round({cosine_sql('e1.embedding', 'e2.embedding')}, 4) AS cos_ab,
                round(sqrt({_DUCK_DOT.format(a='e1.embedding', b='e1.embedding')}), 4) AS norm_a
         FROM embeddings e1
         JOIN embeddings e2 ON e1.vec_id + 1 = e2.vec_id

@@ -8,8 +8,10 @@ Modules: ``dedup`` (exact/hash collapse, shingle-minhash LSH bands,
 SimHash, Jaccard verify, embedding cosine, cluster canonicalization into
 a survivor corpus), ``neardup`` (the near-dup kit every dedup key runs on:
 exact-clone collapse, banded candidate join, group-output contract,
-shingles, each with its DuckDB twin), ``simsearch`` (brute-force / IVF /
-LSH / PQ + label centroids), ``textstats`` (stats, TF-IDF, lang-id, quality, tokens,
+shingles, each with its DuckDB twin), ``vecsearch`` (the vector-search
+kit every similarity-search key runs on: probe set, exact partial top-k
+scorer, per-probe rank cut, each with its DuckDB twin), ``simsearch``
+(brute-force / IVF / LSH / PQ + label centroids), ``textstats`` (stats, TF-IDF, lang-id, quality, tokens,
 fingerprint, bigram-LM score, keywords), ``bm25`` (lexical relevance),
 ``curation`` (PII redaction, repetition stats), ``pipeline`` (stratified
 sampling, decontamination, packing, mixing weights, fused funnel),

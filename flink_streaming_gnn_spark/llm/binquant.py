@@ -22,14 +22,15 @@ the packed-code table is the index you keep hot: scanning 1B codes is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.functions.arrays import cosine_expr
+from flink_streaming_gnn_spark.functions.arrays import cosine_expr, cosine_sql
+from flink_streaming_gnn_spark.llm.vecsearch import top_k, topk_sql
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 DIM = 64
-N_PROBES = 20  # vec_id < N_PROBES, the simsearch bounded-probe discipline
+N_PROBES = 20  # this key's own probe set (llm.vecsearch: probe set, tie order)
 TOP_K = 10
 
 
@@ -76,10 +77,8 @@ def simsearch_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.col("hamming"), F.col("cand_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
+        top_k(scored, F.col("hamming"), TOP_K)
         .select(
             "probe_id",
             "cand_id",
@@ -102,11 +101,6 @@ def _binham_oracle_sql() -> str:
             "(acc, x) -> acc * 2 + x)"
         )
 
-    cos = (
-        "(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-        " / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[])))"
-        " * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))))"
-    )
     return f"""
         WITH coded AS (
             SELECT vec_id, embedding,
@@ -118,20 +112,13 @@ def _binham_oracle_sql() -> str:
             SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
                    CAST(bit_count(xor(p.lo, c.lo))
                         + bit_count(xor(p.hi, c.hi)) AS BIGINT) AS hamming,
-                   {cos} AS cosv
+                   {cosine_sql("p.embedding", "c.embedding")} AS cos
             FROM coded p JOIN coded c ON p.vec_id <> c.vec_id
             WHERE p.vec_id < {N_PROBES}
         ),
-        ranked AS (
-            SELECT probe_id, cand_id, hamming,
-                   CAST(row_number() OVER (
-                       PARTITION BY probe_id ORDER BY hamming, cand_id
-                   ) AS BIGINT) AS rank,
-                   round(cosv, 6) AS cos
-            FROM scored
-        )
-        SELECT probe_id, cand_id, hamming, rank, cos
-        FROM ranked WHERE rank <= {TOP_K}
+        ranked AS ({topk_sql("scored", "hamming", TOP_K)})
+        SELECT probe_id, cand_id, hamming, rank, round(cos, 6) AS cos
+        FROM ranked
         ORDER BY probe_id, rank
     """
 

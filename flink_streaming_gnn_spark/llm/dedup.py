@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.functions.arrays import dot_expr
+from flink_streaming_gnn_spark.functions.arrays import cosine_sql, dot_expr
 from flink_streaming_gnn_spark.graph.components import hash_min_cc
 from flink_streaming_gnn_spark.graph.edges import both_directions
 from flink_streaming_gnn_spark.llm.neardup import (
@@ -643,24 +643,18 @@ QUERIES = {
     "dedup_priority_survivor": dedup_priority_survivor,
 }
 
-_DUCK_COS = (
-    "(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
-    " / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))"
-    " * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))))"
-)
-
-
 def _embedding_cosine_sql(source: str) -> str:
     """The embedding-cosine twin over the ``(vec_id, label, embedding)``
     relation ``source``: clone groups, all-pairs cosine within label."""
+    cos = cosine_sql("a.embedding", "b.embedding")
     return f"""
         WITH grp AS ({clone_groups_sql(source, "vec_id", "label", "embedding")}),
         rep_pairs AS (
             SELECT a.rep_id AS group_a, b.rep_id AS group_b,
-                   round({_DUCK_COS}, 4) AS cos
+                   round({cos}, 4) AS cos
             FROM grp a JOIN grp b
               ON a.label = b.label AND a.rep_id < b.rep_id
-            WHERE {_DUCK_COS} >= 0.9
+            WHERE {cos} >= 0.9
         )
         {group_pairs_sql("rep_pairs", "grp", "cos", "1.0")}
     """
@@ -673,7 +667,7 @@ def _embedding_cosine_sql(source: str) -> str:
 # distributed CC loop agree with exact transitive closure on the fixture
 _NEAR_CTE = f"""
         sh AS ({shingle_sets_sql("documents", "doc_id", 3)}),
-        near AS (
+        near AS MATERIALIZED (
             SELECT * FROM (
                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                        CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)

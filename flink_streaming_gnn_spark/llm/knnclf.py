@@ -3,111 +3,37 @@ north-star "similarity search" applied to labeling — the
 nearest-neighbor classifier a curation pipeline uses to propagate
 labels from a seed set to an unlabeled corpus).
 
-Semantics: held-out vectors (``vec_id < N_PROBES`` — a scale-INVARIANT
-bounded probe set, the ``llm/simsearch.py`` discipline; a modulo split
-would grow the probe set linearly with the corpus and was removed for
-exactly that reason) are classified by majority label
-of their K=5 nearest reference vectors (everything else) by cosine,
-with fully deterministic tie-breaks (neighbor cut: cos DESC, cand ASC;
-vote: count DESC, label ASC).
+Semantics: the probes of the vector-search kit (``llm.vecsearch``: probe
+set and tie order) are classified by majority label of their K=5 nearest
+reference vectors (every non-probe vector) by cosine; the vote breaks
+ties by count DESC, then label ASC.
 
-Spark-first shape: the scorer is the same Arrow ``mapInPandas`` exact
-partial top-K used by ``simsearch_cosine_knn`` — one BLAS matmul per
-candidate batch, each task emits only its own top-K per probe, the
-global window merges |tasks|·|probes|·K rows. Labels join in
-broadcast-gated; votes are one (probe, label) hash agg + one ranking
-window. At 100 TB the candidate generation swaps to the IVF cell-join
-tier (``simsearch_ivf``) with identical downstream voting — candidates
-from the bucketed tier, exactness semantics kept by re-scoring.
+Spark-first shape: the kit's exact partial top-K scorer runs over the
+reference rows — one BLAS matmul per candidate batch, each task emits only
+its own top-K per probe, and the ``top_k`` window merges
+|tasks|·|probes|·K rows. Labels join in broadcast-gated; votes are one
+(probe, label) hash agg + one ranking window. Classifying the whole corpus
+belongs to the IVF cell-join tier (``simsearch_ivf``) with identical
+downstream voting, not to the closure scorer.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.functions.arrays import cosine_sql
+from flink_streaming_gnn_spark.llm.vecsearch import N_PROBES, brute_topk, top_k, topk_sql
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
 K_NEIGHBORS = 5
-N_PROBES = 50  # vec_id < N_PROBES → probe; else reference. SCALE-INVARIANT
-# (the simsearch bounded-probe discipline: the probe count does not grow
-# with the corpus, so the closure stays tiny and the scorer's per-batch
-# score matrix stays n_cand × 50 at any replication — the earlier
-# modulo-split rule made probes 10% OF THE CORPUS, which at the ×10 probe
-# meant 20k-column score matrices and 154–337 s; classify-the-corpus
-# workloads belong to the IVF candidate tier, not the closure scorer)
 
 
 def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    probes_rows = (
-        emb.filter(F.col("vec_id") < N_PROBES).select("vec_id", "embedding").collect()
-    )
-    probes_rows.sort(key=lambda r: r.vec_id)
-    p_ids = [int(r.vec_id) for r in probes_rows]
-    p_mat = np.array([list(r.embedding) for r in probes_rows], dtype=np.float64)
-    p_normed = (p_mat / np.linalg.norm(p_mat, axis=1, keepdims=True)).tolist()
-    refs = emb.filter(F.col("vec_id") >= N_PROBES)
-
-    k = K_NEIGHBORS
-
-    def score(batches):
-        """Fully vectorized partial top-k (the ×10 probe measured the
-        per-probe Python loop at 154 s with 20k probes — O(n_probe) Python
-        per batch was the cost, not the BLAS): the per-column k-th-largest
-        threshold comes from ONE ``np.partition`` over the whole score
-        matrix, tie-keeping selection from ONE boolean mask, and the final
-        exact per-probe cut from ONE ``np.lexsort`` over the pooled
-        entries with rank-within-probe arithmetic — zero Python loops over
-        probes anywhere."""
-        import numpy as _np
-        import pandas as _pd
-
-        pm = _np.asarray(p_normed)
-        ids = _np.asarray(p_ids)
-        pool_p: list = []
-        pool_c: list = []
-        pool_s: list = []
-        for pdf in batches:
-            c = _np.vstack(pdf["embedding"].to_numpy()).astype(_np.float64)
-            cn = c / _np.linalg.norm(c, axis=1, keepdims=True)
-            s = cn @ pm.T  # (n_cand, n_probe)
-            cand = pdf["vec_id"].to_numpy()
-            n = s.shape[0]
-            if n > k:
-                kth = _np.partition(s, n - k, axis=0)[n - k, :]  # per column
-                rows, cols = _np.nonzero(s >= kth[None, :])  # ties kept
-                pool_p.append(ids[cols])
-                pool_c.append(cand[rows])
-                pool_s.append(s[rows, cols])
-            else:
-                nn, pp = s.shape
-                pool_p.append(_np.tile(ids, nn))
-                pool_c.append(_np.repeat(cand, pp))
-                pool_s.append(s.ravel())
-        if not pool_p:
-            return
-        P = _np.concatenate(pool_p)
-        C = _np.concatenate(pool_c)
-        S = _np.concatenate(pool_s)
-        order = _np.lexsort((C, -S, P))  # (probe, cos desc, cand asc)
-        P, C, S = P[order], C[order], S[order]
-        # rank within probe group, keep the exact first k
-        starts = _np.flatnonzero(_np.r_[True, P[1:] != P[:-1]])
-        group = _np.cumsum(_np.r_[False, P[1:] != P[:-1]])
-        rank = _np.arange(len(P)) - starts[group]
-        keep = rank < k
-        yield _pd.DataFrame({"probe_id": P[keep], "cand_id": C[keep], "cos": S[keep]})
-
-    scored = refs.select("vec_id", "embedding").mapInPandas(
-        score, schema="probe_id long, cand_id long, cos double"
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    topk = scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= K_NEIGHBORS
-    )
+    scored = brute_topk(emb, K_NEIGHBORS, cands=emb.filter(F.col("vec_id") >= N_PROBES))
+    topk = top_k(scored, F.col("cos").desc(), K_NEIGHBORS)
     labels = maybe_broadcast(
         emb.select(F.col("vec_id").alias("cand_id"), F.col("label").alias("nbr_label"))
     )
@@ -154,25 +80,10 @@ ORACLE = {
         ),
         scored AS (
             SELECT p.vec_id AS probe_id, r.vec_id AS cand_id, r.label,
-                   list_dot_product(CAST(p.embedding AS DOUBLE[]),
-                                    CAST(r.embedding AS DOUBLE[]))
-                   / (sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]),
-                                            CAST(p.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(CAST(r.embedding AS DOUBLE[]),
-                                              CAST(r.embedding AS DOUBLE[]))))
-                       AS cos
+                   {cosine_sql("p.embedding", "r.embedding")} AS cos
             FROM probes p, refs r
         ),
-        topk AS (
-            SELECT probe_id, label
-            FROM (
-                SELECT probe_id, label,
-                       row_number() OVER (
-                           PARTITION BY probe_id ORDER BY cos DESC, cand_id
-                       ) AS rk
-                FROM scored
-            ) WHERE rk <= {K_NEIGHBORS}
-        ),
+        topk AS ({topk_sql("scored", "cos DESC", K_NEIGHBORS)}),
         votes AS (
             SELECT probe_id, label AS nbr_label,
                    CAST(count(*) AS BIGINT) AS n_votes

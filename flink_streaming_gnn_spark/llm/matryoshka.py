@@ -7,14 +7,13 @@ deployment. For each probe, top-``K`` neighbors are computed under the
 full 64-dim cosine AND under the 16-dim prefix cosine; recall@K is the
 overlap fraction.
 
-Spark-first shape: the probe set is scale-invariant (``vec_id <
-N_PROBES``, the ``ml_knn_classify`` discipline), probes broadcast, and
-BOTH cosines are computed in the SAME corpus pass (one scan, two
-ranking windows partitioned by probe — no second scan for the truncated
-tier). The overlap count is an equi-join of the two rank-≤K row sets on
-(probe, neighbor) — integer-exact, so recall is a deterministic
-rational. Rank cuts use rounded-cosine + vec_id total order (the
-repo-wide knn tie discipline).
+Spark-first shape: the probes and the tie order are the vector-search
+kit's (``llm.vecsearch``), ranked on the rounded cosines; probes
+broadcast, and BOTH cosines are computed in the SAME corpus pass (one
+scan, two ranking windows partitioned by probe in one select — no second
+scan for the truncated tier). The overlap count is an equi-join of the
+two rank-≤K row sets on (probe, neighbor) — integer-exact, so recall is a
+deterministic rational.
 """
 
 from __future__ import annotations
@@ -22,11 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.functions.arrays import dot_expr
+from flink_streaming_gnn_spark.functions.arrays import cosine_sql, dot_expr
 from flink_streaming_gnn_spark.llm.neardup import band_pairs, clone_groups, clone_groups_sql
+from flink_streaming_gnn_spark.llm.vecsearch import N_PROBES
 from flink_streaming_gnn_spark.sources.tables import load_table
 
-N_PROBES = 50
 K = 5
 TRUNC_DIMS = 16
 
@@ -85,14 +84,6 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos(a: str, b: str) -> str:
-    return (
-        f"round(list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-
-
 ORACLE_SQL = f"""
     WITH probes AS MATERIALIZED (
         SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv
@@ -100,8 +91,9 @@ ORACLE_SQL = f"""
     ),
     scored AS MATERIALIZED (
         SELECT p.pid, e.vec_id,
-               {_cos("CAST(e.embedding AS DOUBLE[])", "p.pv")} AS c_full,
-               {_cos(f"CAST(e.embedding AS DOUBLE[])[1:{TRUNC_DIMS}]", f"p.pv[1:{TRUNC_DIMS}]")} AS c_tr
+               round({cosine_sql("e.embedding", "p.pv")}, 6) AS c_full,
+               round({cosine_sql(f"e.embedding[1:{TRUNC_DIMS}]", f"p.pv[1:{TRUNC_DIMS}]")}, 6)
+                   AS c_tr
         FROM embeddings e JOIN probes p ON e.vec_id <> p.pid
     ),
     ranked AS MATERIALIZED (

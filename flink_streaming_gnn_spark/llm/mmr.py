@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_streaming_gnn_spark.functions.arrays import cosine_expr
+from flink_streaming_gnn_spark.functions.arrays import cosine_expr, cosine_sql
 from flink_streaming_gnn_spark.plans import truncate
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -100,14 +100,6 @@ def simsearch_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"round(list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b}))), 6)"
-    )
-
-
 def _mmr_oracle() -> str:
     # pick 1 is the most relevant candidate; round r is pick r + 1
     picks = truncate.unroll(
@@ -130,21 +122,20 @@ def _mmr_oracle() -> str:
         all{r + 1} AS MATERIALIZED (SELECT * FROM all{r} UNION ALL SELECT * FROM sel{r + 1})""",
         K - 1,
     )
-    cos_q = _cos_sql("CAST(c.embedding AS DOUBLE[])", "q.v")
-    cos_ab = _cos_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
     return f"""
         WITH q AS (
             SELECT CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings WHERE vec_id = {QUERY_ID}
         ),
         cand AS MATERIALIZED (
-            SELECT c.vec_id, c.embedding, {cos_q} AS rel
+            SELECT c.vec_id, c.embedding, round({cosine_sql("c.embedding", "q.v")}, 6) AS rel
             FROM embeddings c, q
             WHERE c.vec_id <> {QUERY_ID}
             ORDER BY rel DESC, c.vec_id LIMIT {POOL}
         ),
         sims AS MATERIALIZED (
-            SELECT a.vec_id AS ia, b.vec_id AS ib, {cos_ab} AS s
+            SELECT a.vec_id AS ia, b.vec_id AS ib,
+                   round({cosine_sql("a.embedding", "b.embedding")}, 6) AS s
             FROM cand a JOIN cand b ON a.vec_id <> b.vec_id
         ),
         {picks}

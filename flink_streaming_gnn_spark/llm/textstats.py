@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_streaming_gnn_spark.llm.neardup import shingles
 from flink_streaming_gnn_spark.plans.hints import maybe_broadcast
 from flink_streaming_gnn_spark.sources.tables import load_table
 
@@ -128,17 +129,14 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: md5 of normalized text (exact-dup key) plus a
     winnowing-lite shingle fingerprint (min md5 over token 5-grams —
-    stable under small edits outside the minimal shingle)."""
+    stable under small edits outside the minimal shingle). A document of
+    fewer than 5 tokens has no 5-gram, so its ``winnow_min`` is NULL."""
     d = load_table(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
-    shingle = (
-        "transform(sequence(1, greatest(size(toks) - 4, 0)),"
-        " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1),"
-        " element_at(toks, i + 2), element_at(toks, i + 3), element_at(toks, i + 4)))"
-    )
+    winnow = F.array_min(F.transform(shingles("toks", 5), F.md5))
     return d.select(
         "doc_id",
         F.md5(F.lower(F.trim("text"))).alias("md5_full"),
-        F.array_min(F.expr(f"transform({shingle}, s -> md5(s))")).alias("winnow_min"),
+        F.when(F.size("toks") >= 5, winnow).alias("winnow_min"),
     )
 
 

@@ -156,3 +156,74 @@ def test_pq_recall_vs_bruteforce(spark):
     ]
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall > 0.25, f"PQ mean recall too low: {mean_recall:.2f}"
+
+
+def test_topk_kernel_ties_match_full_ranking():
+    """The vector kit's per-task top-k kernel against one full lexsort
+    ranking, on inputs where it can go wrong: every non-probe vector occurs
+    about six times under different ids (value ties), duplicates straddle
+    batch boundaries, batches are smaller than, equal to and larger than
+    k + 1, and each probe is a candidate too (its self-pair is the unique
+    best of its batch). Vectors are ±1 in 16 dims, so unit rows are ±0.25
+    and every score is exact whatever the batch shape of the matmul."""
+    import itertools
+
+    import numpy as np
+
+    from flink_streaming_gnn_spark.llm.vecsearch import topk_kernel
+
+    probe_ids = np.arange(4, dtype=np.int64)
+    cuts = np.cumsum([2, 6, 13, 4, 35])[:-1]  # batch sizes 2, 6, 13, 4, 35
+    for seed, k in itertools.product(range(4), (1, 5, 20)):
+        rs = np.random.RandomState(seed)
+        signs = rs.choice([-1.0, 1.0], (14, 16))  # 4 probe vectors, 10 shared
+        vecs = np.vstack([signs[:4], signs[4 + rs.randint(0, 10, 56)]])
+        shuffle = rs.permutation(60)  # ids 0..3, the probes, land anywhere
+        vecs, ids = vecs[shuffle], shuffle.astype(np.int64)
+        pm = signs[:4] / 4.0
+        scores = (vecs / 4.0) @ pm.T
+        batches = [
+            pd.DataFrame({"vec_id": i, "embedding": list(v)})
+            for i, v in zip(np.split(ids, cuts), np.split(vecs, cuts))
+        ]
+        got = pd.concat(list(topk_kernel(iter(batches), probe_ids, pm, k)))
+        for j, p in enumerate(probe_ids):
+            keep = ids != p
+            order = np.lexsort((ids[keep], -scores[keep, j]))[:k]
+            mine = got[got.probe_id == p]
+            assert list(mine.cand_id) == list(ids[keep][order]), (seed, k, p)
+            assert list(mine.cos) == list(scores[keep, j][order]), (seed, k, p)
+
+
+def test_text_fingerprint_short_document_matches_twin(spark, tmp_path, monkeypatch):
+    """A document of fewer than 5 tokens has no 5-gram: Spark returns a
+    NULL ``winnow_min`` for it, as the DuckDB twin does, next to a
+    10-token document, and both hash alike under the driver's canon."""
+    import os
+
+    import duckdb
+
+    from flink_streaming_gnn_spark import registry
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench")
+    )
+    from oracle import canon
+
+    path = str(tmp_path / "documents.parquet")
+    texts = ["a b c d", "one two three four five six seven eight nine ten"]
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2],
+            "text": texts,
+            "lang": ["en", "en"],
+            "source": ["src1", "src1"],
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(path, index=False)
+    got = registry.all_queries()["text_fingerprint"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(registry.all_oracle_sql()["text_fingerprint"]).fetchdf()
+    assert got.set_index("doc_id").winnow_min.isna().tolist() == [True, False]
+    assert canon(got) == canon(want)
